@@ -1131,19 +1131,9 @@ object SparkEntry {
       Curation.chunk(Tables.documents(s, dir), chunkSize = 32, stride = 24)
         .orderBy("doc_id", "chunk_id")),
 
-    // the UNSUFFIXED name tracks the PRODUCTION DEFAULT (star-contraction
-    // CC, the skew-immune form that became the default in r16 after the
-    // 1M-skew smoke caught label propagation's hub hot-task) so the
-    // driver's round-over-round trend line benchmarks what users run
+    // bucket-star edges → large-star/small-star CC
     "q_dedup_cluster" -> ((s, dir) =>
-      Curation.clusterComponents(Tables.documents(s, dir), star = true)
-        .orderBy("doc_id")),
-
-    // tracking twin: plain min-label propagation (O(diameter) rounds,
-    // hub-skew-vulnerable) kept for A/B next to the default above —
-    // identical components, so it shares q_dedup_cluster's oracle
-    "q_dedup_cluster_labelprop" -> ((s, dir) =>
-      Curation.clusterComponents(Tables.documents(s, dir), star = false)
+      Curation.clusterComponents(Tables.documents(s, dir))
         .orderBy("doc_id")),
 
     // n-gram LM frequency table with the count floor applied at the
@@ -1737,10 +1727,6 @@ object SparkEntry {
         .orderBy("check")
     }),
 
-    "q_winnow" -> ((s, dir) =>
-      TextPipeline.winnowFingerprints(Tables.documents(s, dir), k = 5, w = 4)
-        .orderBy("doc_id", "pos")),
-
     "q_winnow_native" -> ((s, dir) =>
       TextPipeline.winnowFingerprintsNative(Tables.documents(s, dir), k = 5, w = 4)
         .orderBy("doc_id", "pos")),
@@ -1810,7 +1796,7 @@ object SparkEntry {
 
   /** Headline queries Bench runs at sf0.1. The last four are the heavy
     * tier — the queries that actually exercise scale shapes (iterative
-    * label propagation, banded candidate joins, the composed curation
+    * connected components, banded candidate joins, the composed curation
     * pipeline, IVF-PQ ADC) — kept in the headline set so round-over-round
     * regressions there are visible, not just the ~1 s floor-dominated
     * queries. */
@@ -1823,10 +1809,6 @@ object SparkEntry {
     "q_embed_ann_ivf", "q_media_features",
     "q_dedup_cluster", "q_simhash_candidates", "q_curate",
     "q_embed_ann_ivfpq",
-    // O(diameter) label propagation vs q_dedup_cluster's O(log²)-round
-    // star contraction (the production default) — same result,
-    // round-count/skew tradeoff tracked side by side
-    "q_dedup_cluster_labelprop",
     // capped twin of q_simhash_candidates: tracks what the hot-bucket
     // skew guard saves (the 100 TB configuration)
     "q_simhash_candidates_capped",
@@ -1846,10 +1828,9 @@ object SparkEntry {
     // round-11: hybrid dedup — semantic clusters gate, n-gram Jaccard
     // confirms (real pairwise volume through the cluster-scoped join)
     "q_hybrid_dedup",
-    // round-11: winnowing — per-doc window min over the posexploded
-    // gram stream (MOSS local fingerprinting), a corpus-linear pass,
-    // and its zero-shuffle native-expression twin
-    "q_winnow", "q_winnow_native",
+    // round-11: winnowing — MOSS local fingerprinting, a corpus-linear
+    // zero-shuffle pass in the native expression
+    "q_winnow_native",
     // round-12: content-defined chunking — the native boundary scan vs
     // DuckDB's per-position explode (the CDC storage-dedup pass)
     "q_media_cdc",
@@ -1913,8 +1894,9 @@ object SparkEntry {
   private def fpSql(expr: String) =
     s"""list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(range(1, length($expr) + 1), i -> CAST(ascii(substr($expr, CAST(i AS INT), 1)) AS BIGINT))), (acc, c) -> (acc * 31 + c) % 140737488355213)"""
   /** Winnowing fingerprint CTE chain (k-gram size, window w) — the SQL
-    * twin of [[TextPipeline.winnowFingerprints]], sharing its arithmetic
-    * rightmost-min encoding (hash·2¹⁶ + (2¹⁶-1-pos), plain window min). */
+    * twin of [[TextPipeline.winnowFingerprintsNative]], sharing its
+    * arithmetic rightmost-min encoding (hash·2¹⁶ + (2¹⁶-1-pos), plain
+    * window min). */
   private def winnowFpSql(k: Int, w: Int): String =
     s"""t AS (SELECT doc_id, $toksSql AS toks FROM documents),
        |sh AS (
@@ -2346,10 +2328,6 @@ object SparkEntry {
   }
 
   def oracleSql: Map[String, String] = baseOracles +
-    // identical components from a different distributed algorithm
-    // (label propagation vs the default's large-star/small-star) —
-    // same recursive-closure oracle
-    ("q_dedup_cluster_labelprop" -> baseOracles("q_dedup_cluster")) +
     // bucketed-layout twin computes identical rows — same oracle
     ("q_hybrid_dedup_bucketed" -> baseOracles("q_hybrid_dedup")) +
     // production df cap: same oracle SQL at the tighter threshold (the
@@ -5452,12 +5430,6 @@ object SparkEntry {
         |       coalesce(rel_change > 0.5, FALSE) AS anomalous
         |FROM a ORDER BY chk""".stripMargin,
 
-    "q_winnow" ->
-      s"""WITH ${winnowFpSql(5, 4)}
-         |SELECT doc_id, pos, fp FROM fp ORDER BY doc_id, pos""".stripMargin,
-
-    // native-expression twin — same oracle, so the zero-shuffle path is
-    // held to the identical row set as the explode+window reference tier
     "q_winnow_native" ->
       s"""WITH ${winnowFpSql(5, 4)}
          |SELECT doc_id, pos, fp FROM fp ORDER BY doc_id, pos""".stripMargin,

@@ -424,9 +424,9 @@ object TextUtil {
 
   /** Winnowing fingerprint selection (Schleimer, Wilkes & Aiken 2003) in
     * one per-row loop: tokenize → k-gram → 47-bit hash → sliding window-w
-    * rightmost-min, emitted as the same `hash·2¹⁶ + (2¹⁶−1−pos)` encoding
-    * [[graft.pipeline.TextPipeline.winnowFingerprints]] uses — so the
-    * explode+window reference tier, this native tier, and the SQL oracle
+    * rightmost-min, emitted as the `hash·2¹⁶ + (2¹⁶−1−pos)` encoding
+    * [[graft.pipeline.TextPipeline.winnowFingerprintsNative]] decodes —
+    * the same arithmetic the SQL oracle's window `min` uses, so the two
     * are value-identical. Consecutive-dedup equals global dedup here: a
     * superseded minimum is older than its successor, leaves the window
     * first, and can never be re-selected. Documents need < 2¹⁶ grams
@@ -727,8 +727,8 @@ case class BpeEncode(child: Expression, merges: Seq[String])
 /** `winnow_fp(text)`: winnowing fingerprints as encoded
   * `hash·2¹⁶+(2¹⁶−1−pos)` longs — the whole
   * tokenize→shingle→hash→window-min chain in one codegen'd call, so
-  * fingerprinting runs INSIDE the scan stage with zero shuffle (the
-  * explode+window reference tier shuffles the full gram stream). */
+  * fingerprinting runs INSIDE the scan stage with zero shuffle (an
+  * explode+window form would shuffle the full gram stream). */
 case class WinnowFp(child: Expression, k: Int, w: Int)
     extends UnaryExpression {
 

@@ -401,7 +401,7 @@ object Curation {
   }
 
   /** Release a SPENT eager localCheckpoint's storage blocks. The CC
-    * loops checkpoint every round (lineage must not grow with rounds);
+    * loop checkpoints every round (lineage must not grow with rounds);
     * without this, a long run retains every round's blocks in
     * MEMORY_AND_DISK until ContextCleaner gets to them. Only ever call
     * it on a frame no future consumer can read — a local checkpoint has
@@ -413,92 +413,16 @@ object Curation {
       case _ => ()
     }
 
-  /** Connected components over an undirected candidate-pair graph
-    * (doc_a, doc_b) by iterative min-label propagation: each node adopts
-    * the minimum component id among itself and its neighbours until a
-    * fixpoint. Converges in (component diameter) rounds — near-dup
-    * clusters are shallow, so this is a handful of small shuffles over the
-    * EDGE set only, never the corpus. Each step `localCheckpoint`s to cut
-    * lineage (re-execution restarts the loop, acceptable for a short
-    * bounded iteration). Returns (doc_id, component), component = min
-    * doc_id reachable.
-    *
-    * If a component's diameter exceeds `maxIter` the labels are NOT a
-    * fixpoint — downstream cluster dedup would silently keep extra
-    * near-duplicates. A non-converged exit logs a warning, or throws when
-    * `requireConvergence` is set (chain-heavy graphs should raise
-    * `maxIter`: label propagation halves path length per round only on
-    * the min side, so diameter rounds is the worst case). */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
-                          requireConvergence: Boolean = false): DataFrame = {
-    // persisted PRE-PARTITIONED on dst, the loop-invariant join key: every
-    // round's edges⋈labels join then reuses this one exchange instead of
-    // re-shuffling the edge set per round once labels outgrow broadcast
-    // (REPARTITION_BY_NUM so the cached partitioning provably satisfies
-    // the join's clustering — AQE-coalesced widths vary per round and
-    // would break the match; the count is the session's configured
-    // shuffle parallelism, not a local constant)
-    val parts = pairs.sparkSession.sessionState.conf.numShufflePartitions
-    val edges = pairs
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .repartition(parts, col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labelsCp = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("component"))
-      .localCheckpoint(true)
-    var labels = labelsCp
-    var i = 0
-    var converged = false
-    while (!converged && i < maxIter) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("component").as("dst_comp")),
-          Seq("dst"))
-        .groupBy(col("src")).agg(min("dst_comp").as("nbr_comp"))
-      // the convergence test rides the checkpoint job as an observed
-      // metric (count of changed labels) instead of a second per-round
-      // driver action over the materialized frame — exact: converged
-      // iff NO label changed, the same predicate the former
-      // filter(_changed).isEmpty action evaluated
-      val nextObs = labels
-        .join(nbrMin.withColumnRenamed("src", "id"), Seq("id"), "left")
-        .select(col("id"),
-          least(col("component"), coalesce(col("nbr_comp"), col("component")))
-            .as("component"),
-          (coalesce(col("nbr_comp"), col("component")) < col("component"))
-            .as("_changed"))
-        .observe(s"cc_lp_$i",
-          coalesce(sum(col("_changed").cast("long")), lit(0L)).as("changed"))
-      val next = nextObs.localCheckpoint(true)
-      converged =
-        nextObs.queryExecution.observedMetrics(s"cc_lp_$i").getLong(0) == 0L
-      // the previous round's checkpoint blocks are now unreachable by
-      // any future consumer (next is materialized) — release them
-      // instead of holding 1 RDD/round until ContextCleaner GC
-      unpersistCheckpoint(labelsCp)
-      labelsCp = next
-      labels = next.drop("_changed")
-      i += 1
-    }
-    edges.unpersist()
-    if (!converged) {
-      val msg = s"connectedComponents did not converge within maxIter=$maxIter " +
-        "iterations; component labels are not a fixpoint (raise maxIter)"
-      if (requireConvergence) throw new IllegalStateException(msg)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
-    }
-    labels
-  }
-
   /** Connected components by alternating large-star / small-star rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC 2014) — the O(log² n)-round alternative to
-    * [[connectedComponents]]'s O(diameter) label propagation. On shallow
-    * near-dup clusters both are a handful of rounds; on chain-heavy
-    * graphs (consecutive-id duplicate runs, transitive boilerplate
-    * chains) label propagation needs diameter rounds while this stays
-    * logarithmic — the difference between 10 and 10 000 shuffles on a
-    * pathological 100 TB corpus.
+    * SoCC 2014): O(log² n) rounds where min-label propagation needs
+    * O(diameter). On chain-heavy graphs (consecutive-id duplicate runs,
+    * transitive boilerplate chains) that is the difference between 10
+    * and 10 000 shuffles on a pathological 100 TB corpus, and on a
+    * mega duplicate class the alternating rounds rebalance the hub's
+    * neighborhood where propagation concentrates it in single tasks
+    * (1M-doc adversarial-skew smoke, 100k-member class: propagation's
+    * skew wall 3.54× benign with max task 6.37×, star 0.78×, flat).
     *
     * Each round is two agg+join passes over the EDGE set:
     *   large-star: every node links its LARGER neighbors to the minimum
@@ -512,9 +436,13 @@ object Curation {
     * count. Fixpoint = the canonical edge set is unchanged by a full
     * round (exact check: count + one-sided except). At fixpoint the
     * edges form a star forest (member → component-min), which IS the
-    * label table. Same contract as [[connectedComponents]]: returns
-    * (id, component) for every node in `pairs`, component = min node id
-    * reachable. */
+    * label table. Returns (id, component) for every node with at least
+    * one non-self edge in `pairs`, component = min node id reachable.
+    *
+    * If the graph is not at a fixpoint after `maxIter` rounds the labels
+    * are NOT final — downstream cluster dedup would silently keep extra
+    * near-duplicates. A non-converged exit logs a warning, or throws
+    * when `requireConvergence` is set. */
   def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 20,
                               requireConvergence: Boolean = false): DataFrame = {
     // canonical undirected edges (hi > lo), self-loops dropped. The
@@ -612,38 +540,20 @@ object Curation {
     * (its own id if unpaired). Pairwise dedup keeps B when A~B, B~C but
     * A≁C; clustering removes the whole chain, keeping one canonical
     * (min-id) survivor per component — the standard corpus-dedup
-    * semantics. Edges are the LINEAR per-bucket star form by default —
-    * provably the same components as the all-pairs candidate graph
-    * ([[TextPipeline.minhashBucketStarEdges]]). The component map holds
-    * only docs with ≥1 same-bucket neighbor — usually a small fraction,
-    * but on a duplicate-heavy corpus it can approach corpus size, so the
-    * join strategy is left to AQE rather than a forced broadcast.
-    *
-    * `star = true` (the DEFAULT since r16) runs star-contraction CC
-    * (O(log²) rounds) instead of plain min-label propagation
-    * (O(diameter) rounds). Components are identical; the difference is
-    * skew behavior, measured on the 1M adversarial-skew smoke: with a
-    * 100k-member mega duplicate class, label propagation concentrates
-    * the hub's neighborhood in single tasks (skew wall 3.54× benign,
-    * max task 6.37×) while star contraction's alternating
-    * large/small-star rounds rebalance every round (0.78×, flat).
-    * `star = false` keeps the propagation form for A/B tracking
-    * (q_dedup_cluster_labelprop vs the default q_dedup_cluster in the
-    * bench). */
+    * semantics. Edges are the LINEAR per-bucket star form — provably
+    * the same components as the all-pairs candidate graph
+    * ([[TextPipeline.minhashBucketStarEdges]]) at d-1 edges per bucket
+    * instead of d², the form that survives a mega duplicate class (one
+    * 50k-doc boilerplate family owes 1.25 B all-pairs edges; star owes
+    * 50k). Components come from [[connectedComponentsStar]]. The
+    * component map holds only docs with ≥1 same-bucket neighbor —
+    * usually a small fraction, but on a duplicate-heavy corpus it can
+    * approach corpus size, so the join strategy is left to AQE rather
+    * than a forced broadcast. */
   def clusterComponents(docs: DataFrame, n: Int = 3, k: Int = 16,
-                        bands: Int = 4, star: Boolean = true,
-                        pairEdges: Boolean = false): DataFrame = {
-    // default: bucket-star edges — connectivity-identical to the
-    // all-pairs candidate graph (see minhashBucketStarEdges) at d-1
-    // edges per bucket instead of d², the form that survives a mega
-    // duplicate class (one 50k-doc boilerplate family owes 1.25 B
-    // all-pairs edges; star owes 50k). `pairEdges` keeps the legacy
-    // quadratic-edge form for A/B measurement.
-    val pairs =
-      if (pairEdges) TextPipeline.minhashCandidates(docs, n, k, bands)
-      else TextPipeline.minhashBucketStarEdges(docs, n, k, bands)
-    val comp =
-      if (star) connectedComponentsStar(pairs) else connectedComponents(pairs)
+                        bands: Int = 4): DataFrame = {
+    val comp = connectedComponentsStar(
+      TextPipeline.minhashBucketStarEdges(docs, n, k, bands))
     docs.select(col("doc_id"))
       .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -671,9 +581,8 @@ object Curation {
     * is identical to [[clusterDedup]] plus one slim join to attach the
     * score. */
   def clusterDedupBest(docs: DataFrame, score: org.apache.spark.sql.Column,
-                       n: Int = 3, k: Int = 16, bands: Int = 4,
-                       star: Boolean = true): DataFrame =
-    bestByComponent(clusterComponents(docs, n, k, bands, star), docs, score)
+                       n: Int = 3, k: Int = 16, bands: Int = 4): DataFrame =
+    bestByComponent(clusterComponents(docs, n, k, bands), docs, score)
 
   /** Max-`score` member (ties → min id) of every component — the shared
     * keep rule of [[clusterDedupBest]] and [[curate]]'s `keepBest`. */
@@ -842,7 +751,6 @@ object Curation {
              ratesPpm: Map[String, Long] = Map.empty,
              defaultPpm: Long = 1000000L,
              chunkSize: Int = 64, stride: Int = 48,
-             star: Boolean = true,
              keepBest: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     // keptIds is referenced from TWO branches (the dedup subtree and the
     // final re-join); persisting the id column makes the repetition
@@ -858,7 +766,7 @@ object Curation {
     // keepBest swaps the min-id survivor rule for the max-score member
     // of each cluster ("keep the canonical copy") at the cost of one
     // extra slim join — the component map is computed either way
-    val comp = clusterComponents(kept, n, k, bands, star)
+    val comp = clusterComponents(kept, n, k, bands)
     val survivors = keepBest match {
       case None => comp.filter(col("doc_id") === col("component"))
         .select("doc_id")

@@ -416,10 +416,10 @@ object Projection {
   }
 
   /** Loud eval inputs at zero extra jobs: the checks ride the corpus
-    * pass as in-plan raise_error branches (the trainLogistic-refusal /
-    * winnowFingerprints-cap convention) — a null score or a label
-    * outside {0,1} would otherwise silently count as a negative and
-    * bias every metric in this tier. */
+    * pass as in-plan raise_error branches (the trainLogistic-refusal
+    * convention) — a null score or a label outside {0,1} would
+    * otherwise silently count as a negative and bias every metric in
+    * this tier. */
   private def checkedScore(scoreCol: String, op: String): Column =
     when(col(scoreCol).isNotNull, col(scoreCol))
       .otherwise(raise_error(lit(

@@ -73,8 +73,7 @@ object TextPipeline {
     * side's attributes and the cached hashpartitioning loses identity —
     * the same failure class as editDistancePairsCached's aliased
     * self-join. SpanProbe at sf0.1/32c: pre-partitioned ran 5→8
-    * executed exchanges (1.50→1.94 s); labelprop's edge cache wins the
-    * same trick only because it joins a DIFFERENT frame. */
+    * executed exchanges (1.50→1.94 s). */
   def dupSpansCached(docs: DataFrame, k: Int = 3): graft.core.Cached[DataFrame] = {
     val grams = spanGramsOf(docs, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -904,7 +903,7 @@ object TextPipeline {
     * instead of an iteration-deep lineage chain, so analysis cost and
     * checkpoint pressure stay constant. The only driver-side data is one
     * (pair, count) row per iteration — the argmax, same scalar-per-round
-    * pattern as [[Curation.connectedComponents]]'s convergence probe.
+    * pattern as [[Curation.connectedComponentsStar]]'s convergence probe.
     * Training stops early when the best pair's count drops below
     * `minPairCount` (merging noise pairs hurts downstream tokenization).
     *
@@ -1099,57 +1098,24 @@ object TextPipeline {
     * shared token run of length ≥ w + k - 1 between two documents shares
     * at least one fingerprint, at an expected density of 2/(w+1) of the
     * grams — the standard local, position-aware document fingerprint for
-    * plagiarism/overlap detection.
+    * plagiarism/overlap detection. Returns (doc_id, pos, fp), one row per
+    * selected gram.
     *
-    * The rightmost-min tie rule is encoded arithmetically so both Spark
-    * and the SQL oracle compute it with a plain `min` window: `combined =
-    * hash · 2¹⁶ + (2¹⁶ - 1 - pos)` is strictly decreasing in pos for
-    * equal hashes, so `min(combined)` over the trailing w-row window IS
-    * (min hash, rightmost pos). The 47-bit hash · 2¹⁶ fits in 63 bits;
-    * the encoding requires per-doc positions < 65 536 — chunk longer
-    * documents first ([[graft.pipeline.Curation.chunk]]), which a 100 TB
-    * pipeline does anyway. Violations fail loudly (filter + runtime
-    * check), never silently corrupt.
+    * The rightmost-min tie rule is encoded arithmetically so the SQL
+    * oracle computes it with a plain `min` window: `combined = hash · 2¹⁶
+    * + (2¹⁶ - 1 - pos)` is strictly decreasing in pos for equal hashes,
+    * so `min(combined)` over the trailing w-gram window IS (min hash,
+    * rightmost pos). The 47-bit hash · 2¹⁶ fits in 63 bits; the encoding
+    * requires per-doc positions < 65 536 — chunk longer documents first
+    * ([[graft.pipeline.Curation.chunk]]), which a 100 TB pipeline does
+    * anyway. Violations fail loudly, never silently corrupt.
     *
-    * Shape at scale: tokenize + shingle + hash in one codegen'd
-    * projection, a posexplode, and ONE per-doc window min over w rows —
-    * partitioned by doc_id, so it parallelizes across documents with no
-    * global ordering; the final `distinct` is a hash aggregate on
-    * (doc_id, pos, hash). */
-  def winnowFingerprints(docs: DataFrame, k: Int = 5, w: Int = 4): DataFrame = {
-    require(k >= 1 && w >= 1, "winnow: k and w must be >= 1")
-    val posCap = 1 << 16
-    val g = docs
-      .select(col("doc_id"), graft.expressions.TextExpressions
-        .polyHash47(graft.expressions.TextExpressions
-          .wordShingles(col("text"), k, distinct = false)).as("hashes"))
-      .select(col("doc_id"), posexplode(col("hashes")))
-      .withColumnRenamed("pos", "gpos").withColumnRenamed("col", "h")
-    val win = Window.partitionBy("doc_id").orderBy("gpos")
-      .rowsBetween(-(w - 1), Window.currentRow)
-    val overflow = raise_error(concat(lit("winnowFingerprints: document "),
-      col("doc_id").cast("string"),
-      lit(s" has >= $posCap k-grams; chunk documents before fingerprinting")))
-    g.withColumn("h",
-        when(col("gpos") >= posCap, overflow).otherwise(col("h")))
-      .withColumn("combined",
-        col("h") * posCap + (lit(posCap - 1) - col("gpos")))
-      .withColumn("sel", min(col("combined")).over(win))
-      .filter(col("gpos") >= w - 1) // only full windows select
-      .select(col("doc_id"),
-        (lit(posCap - 1) - (col("sel") % posCap)).cast("int").as("pos"),
-        // integer decode — a double divide would lose bits above 2^53
-        shiftrightunsigned(col("sel"), 16).as("fp"))
-      .distinct()
-  }
-
-  /** [[winnowFingerprints]] via the native codegen'd
-    * [[graft.expressions.WinnowFp]] expression: the whole
-    * tokenize→shingle→hash→window-min chain runs INSIDE the scan stage —
-    * zero shuffle (the reference tier above shuffles the full gram
-    * stream through a doc-partitioned window; 41 MB at 50k docs, corpus-
-    * linear). Value-identical by construction (shared encoding) and
-    * spec-pinned; shares the SQL oracle. The 100 TB form. */
+    * The whole tokenize→shingle→hash→window-min chain runs in the native
+    * codegen'd [[graft.expressions.WinnowFp]] expression INSIDE the scan
+    * stage — zero shuffle (a doc-partitioned explode+window form would
+    * shuffle the full gram stream; 41 MB at 50k docs, corpus-linear).
+    * The encoding is decoded with integer ops — a double divide would
+    * lose bits above 2^53. */
   def winnowFingerprintsNative(docs: DataFrame, k: Int = 5, w: Int = 4): DataFrame = {
     val posCap = 1 << 16
     widenDocs(docs.select(col("doc_id"), col("text")))
@@ -1172,8 +1138,6 @@ object TextPipeline {
     * ENTIRE overlap is boilerplate. `maxDocs <= 0` disables. */
   def winnowCandidates(docs: DataFrame, k: Int = 5, w: Int = 4,
                        minShared: Long = 2L, maxDocs: Long = 0L): DataFrame = {
-    // the native tier feeds the join: fingerprinting stays in the scan
-    // stage (parity with the window form is spec-pinned)
     val fp = winnowFingerprintsNative(docs, k, w)
       .select("doc_id", "fp").distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

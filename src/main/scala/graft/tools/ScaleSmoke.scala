@@ -338,10 +338,7 @@ object ScaleSmoke {
         // serialized reducer) without shrinking it. Quadratic-in-corpus
         // work is a data property, not a plan defect — cap degenerate
         // buckets (2.5 s above) unless every pair is genuinely needed.
-        "q_dedup_cluster" -> (() =>
-          Curation.clusterComponents(docs, star = true)),
-        "q_dedup_cluster_labelprop" -> (() =>
-          Curation.clusterComponents(docs, star = false)),
+        "q_dedup_cluster" -> (() => Curation.clusterComponents(docs)),
         "q_curate" -> (() =>
           Curation.curate(docs,
             docs.filter(col("doc_id") % 50 === 0 && col("doc_id") < 5000),
@@ -447,10 +444,6 @@ object ScaleSmoke {
         // r13 single-pass source overlap: one gram shuffle; totals +
         // pair counts from the same explode (cells frame = #sources²)
         "q_source_overlap" -> (() => Curation.sourceOverlap(docs, n = 3)),
-        // r11 winnowing: corpus-linear shingle+hash pass, ONE per-doc
-        // window min — shuffle is the doc-partitioned gram stream
-        "q_winnow" -> (() =>
-          TextPipeline.winnowFingerprints(docs, k = 5, w = 4)),
         // r11 Lloyd k-means: iters × (assign scan + (cid,dim) hash agg);
         // only k·d centroid metadata crosses to the driver per round
         "q_kmeans" -> (() => Similarity.kmeansLloyd(emb, k = 32, iters = 2)),
@@ -529,8 +522,7 @@ object ScaleSmoke {
     val family = Seq(
       "q_minhash_candidates_capped", "q_simhash_candidates_capped",
       "q_simhash_candidates_wide", "q_edit_distance_capped",
-      "q_dedup_cluster", "q_dedup_cluster_labelprop", "q_hybrid_dedup",
-      "q_dup_spans")
+      "q_dedup_cluster", "q_hybrid_dedup", "q_dup_spans")
     def run(tag: String, docs: DataFrame, emb: DataFrame, n: Long): Unit = {
       val all = docQueries(docs, emb, n, scratch).toMap
       val qs = filterSet(family.map(f => f -> all(f)))

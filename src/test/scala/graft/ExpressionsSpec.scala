@@ -310,7 +310,7 @@ class ExpressionsSpec extends SparkSpec {
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     for ((k, w) <- Seq((3, 4), (5, 4), (2, 2), (1, 3))) {
       val native = TextPipeline.winnowFingerprintsNative(docs, k, w)
-      val ref = TextPipeline.winnowFingerprints(docs, k, w)
+      val ref = RefWinnow.winnowFingerprints(docs, k, w)
       assert(native.exceptAll(ref).count() == 0
         && ref.exceptAll(native).count() == 0, s"winnow k=$k w=$w")
     }

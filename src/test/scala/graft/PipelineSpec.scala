@@ -600,9 +600,12 @@ class PipelineSpec extends SparkSpec {
     }.toDF("doc_id", "text")
     val star = rowsOf(Curation.clusterComponents(corpus))
       .map(r => r("doc_id") -> r("component")).toMap
-    val pairs = rowsOf(Curation.clusterComponents(corpus, pairEdges = true))
-      .map(r => r("doc_id") -> r("component")).toMap
-    assert(star == pairs)
+    // CC straight over the all-pairs candidate graph; unpaired docs are
+    // their own component, as clusterComponents labels them
+    val pairs = rowsOf(Curation.connectedComponentsStar(
+        TextPipeline.minhashCandidates(corpus)))
+      .map(r => r("id") -> r("component")).toMap
+    assert(star == star.keys.map(d => d -> pairs.getOrElse(d, d)).toMap)
     // and the edge count is per-bucket LINEAR: the hub form never emits
     // more edges than (doc, bucket) memberships, while all-pairs owes
     // C(d,2) per bucket on the 20-member duplicate family
@@ -610,26 +613,6 @@ class PipelineSpec extends SparkSpec {
     val pairEdges = TextPipeline.minhashCandidates(corpus).count()
     assert(starEdges < pairEdges,
       s"star=$starEdges should undercut all-pairs=$pairEdges here")
-  }
-
-  test("connectedComponents: transitive chains collapse to min id") {
-    import graft.pipeline.Curation
-    val pairs = Seq((2L, 3L), (3L, 4L), (7L, 8L)).toDF("doc_a", "doc_b")
-    val comp = rowsOf(Curation.connectedComponents(pairs))
-      .map(r => r("id") -> r("component")).toMap
-    assert(comp == Map(2L -> 2L, 3L -> 2L, 4L -> 2L, 7L -> 7L, 8L -> 7L))
-  }
-
-  test("connectedComponents: non-convergence within maxIter throws when required") {
-    import graft.pipeline.Curation
-    // a 6-node path needs more than one round to reach the min-label fixpoint
-    val path = (1L to 5L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    intercept[IllegalStateException] {
-      Curation.connectedComponents(path, maxIter = 1, requireConvergence = true)
-        .collect()
-    }
-    // default is warn-only: same call yields the (non-fixpoint) labels
-    assert(Curation.connectedComponents(path, maxIter = 1).count() == 6)
   }
 
   test("IncrementalDedup: batched ingest reproduces batch candidates, no re-emission") {
@@ -1214,22 +1197,18 @@ class PipelineSpec extends SparkSpec {
     assert(comp.size == 100 && comp.values.forall(_ == 0L))
   }
 
-  test("connectedComponentsStar: equals label propagation on an arbitrary graph") {
+  test("connectedComponentsStar: equals a driver-side union-find on an arbitrary graph") {
     import graft.pipeline.Curation
     // deterministic pseudo-random multi-component graph with dup edges,
     // reversed orientation and self-loops
     val edges = (0 until 300).map { i =>
       val a = (i * 131) % 97; val b = (i * 197 + 13) % 97
       (a.toLong, b.toLong)
-    }.toDF("doc_a", "doc_b")
-    val star = rowsOf(Curation.connectedComponentsStar(edges, requireConvergence = true))
-      .map(r => r("id") -> r("component")).toMap
-    val label = rowsOf(Curation.connectedComponents(edges, maxIter = 100))
-      .map(r => r("id") -> r("component")).toMap
-    // same node set (minus pure-self-loop nodes label prop also keeps)
-    val selfOnly = label.keySet -- star.keySet
-    assert(selfOnly.forall(id => label(id) == id))
-    assert(star == label.filter { case (id, _) => star.contains(id) })
+    }
+    val star = rowsOf(Curation.connectedComponentsStar(edges.toDF("doc_a", "doc_b"),
+        requireConvergence = true))
+      .map(r => r("id").asInstanceOf[Long] -> r("component").asInstanceOf[Long]).toMap
+    assert(star == RefComponents(edges))
   }
 
   test("connectedComponentsStar: empty input, maxIter guard") {
@@ -2405,7 +2384,7 @@ class PipelineSpec extends SparkSpec {
       1L -> s"one two $run three four",
       2L -> s"nine ten eleven $run twelve",
       3L -> "completely different words everywhere in this document body")
-    val fp = TextPipeline.winnowFingerprints(d, k = 5, w = 4)
+    val fp = TextPipeline.winnowFingerprintsNative(d, k = 5, w = 4)
     val byDoc = fp.collect().groupBy(_.getLong(0))
       .map { case (id, rs) => id -> rs.map(_.getLong(2)).toSet }
     assert((byDoc(1L) & byDoc(2L)).nonEmpty, "shared run must share a fingerprint")
@@ -2414,7 +2393,7 @@ class PipelineSpec extends SparkSpec {
 
   test("winnowing: fingerprints are a subset of gram hashes, one per window") {
     val d = docs(1L -> "a b c d e f g h i j k l m n o p")
-    val fp = TextPipeline.winnowFingerprints(d, k = 3, w = 4).collect()
+    val fp = TextPipeline.winnowFingerprintsNative(d, k = 3, w = 4).collect()
     val grams = d.select(graft.expressions.TextExpressions.polyHash47(
         graft.expressions.TextExpressions.wordShingles(col("text"), 3)))
       .collect().head.getSeq[Long](0)
@@ -2428,12 +2407,12 @@ class PipelineSpec extends SparkSpec {
 
   test("winnowing tie rule: equal hashes select the rightmost position") {
     val d = docs(1L -> Seq.fill(10)("same").mkString(" "))
-    val fp = TextPipeline.winnowFingerprints(d, k = 3, w = 4).collect()
+    val fp = TextPipeline.winnowFingerprintsNative(d, k = 3, w = 4).collect()
     // all 8 gram hashes are equal; every window picks its newest position
     assert(fp.map(_.getInt(1)).sorted.toSeq == (3 to 7).toSeq)
   }
 
-  test("bm25/winnow plans: broadcast df join, doc-partitioned window, no corpus-wide window") {
+  test("bm25 plan: broadcast df join, top-k as TakeOrderedAndProject") {
     val d = docs(1L -> "spark stream a b c d e f g h i j",
                  2L -> "spark filter k l m n o p q r s t")
     val bp = TextPipeline.bm25(d, Seq("spark", "filter"), topK = 5)
@@ -2442,14 +2421,6 @@ class PipelineSpec extends SparkSpec {
       s"df/stats sides must broadcast, not shuffle:\n$bp")
     assert(bp.contains("TakeOrderedAndProject"),
       s"top-k must plan as TakeOrderedAndProject, not a global sort:\n$bp")
-    val wp = TextPipeline.winnowFingerprints(d, k = 3, w = 4)
-      .queryExecution.executedPlan.toString
-    // the window over the gram stream must be doc-partitioned — an
-    // empty partition spec (global window) would serialize the corpus
-    // through one task
-    assert(wp.contains("Window"), s"expected a Window node:\n$wp")
-    assert(!wp.contains(", [], [gpos"),
-      s"winnow window must be doc-partitioned, not global:\n$wp")
   }
 
   test("ingestWinnow: two-batch union equals batch candidates, exactly once") {

@@ -319,7 +319,7 @@ class PropertySpec extends SparkSpec {
       Gen.zip(Gen.choose(0L, 11L), Gen.choose(0L, 11L)).suchThat(p => p._1 != p._2))
     forAll(edgeGen, 8) { edges =>
       val pairs = edges.toDF("doc_a", "doc_b")
-      val comp = rowsOf(Curation.connectedComponents(pairs))
+      val comp = rowsOf(Curation.connectedComponentsStar(pairs, requireConvergence = true))
         .map(r => r("id").asInstanceOf[Long] -> r("component").asInstanceOf[Long])
         .toMap
       // both endpoints of every edge share a component
@@ -331,7 +331,7 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("property: connectedComponentsStar equals label propagation on random graphs") {
+  test("property: connectedComponentsStar equals a union-find on random graphs") {
     import spark.implicits._
     import graft.pipeline.Curation
     val edgeGen = Gen.listOfN(10,
@@ -342,10 +342,7 @@ class PropertySpec extends SparkSpec {
           Curation.connectedComponentsStar(pairs, requireConvergence = true))
         .map(r => r("id").asInstanceOf[Long] -> r("component").asInstanceOf[Long])
         .toMap
-      val label = rowsOf(Curation.connectedComponents(pairs, maxIter = 50))
-        .map(r => r("id").asInstanceOf[Long] -> r("component").asInstanceOf[Long])
-        .toMap
-      assert(star == label, s"edges=$edges")
+      assert(star == RefComponents(edges), s"edges=$edges")
     }
   }
 
@@ -390,7 +387,7 @@ class PropertySpec extends SparkSpec {
       val d = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
       val native = TextPipeline.winnowFingerprintsNative(d, k, w)
-      val ref = TextPipeline.winnowFingerprints(d, k, w)
+      val ref = RefWinnow.winnowFingerprints(d, k, w)
       assert(native.exceptAll(ref).count() == 0
         && ref.exceptAll(native).count() == 0, s"k=$k w=$w texts=$texts")
     }
