@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
 
 import graft.core.Graft
 import graft.streaming.{FlowSource, ResultSink, StreamingAnalytics}
@@ -40,7 +40,7 @@ object GraftApp {
       stateTtlMs: Long = 86400000L,   // ddos profile GC horizon (1 day)
       reflectRatio: Double = 3.0,     // reflect_ddos threshold_change (reflectdos_main.py:186)
       minReplies: Long = 10L,         // reflect_ddos minimal_replies (:185)
-      observe: Boolean = false)       // per-batch in/out counters on the stream
+      observe: Boolean = false)       // per-batch in/out counters and state on the stream
 
   /** Load the reference-format classifier CSV:
     * suites;device;os;application;browser (tls_classification.py:44-83). */
@@ -158,6 +158,22 @@ object GraftApp {
     loop(args.toList, Config())
   }
 
+  /** The `--observe` stderr line for one micro-batch: the flow-in and
+    * report-out counters, and the state stores and commit time summed over
+    * the query's stateful operators. None when the batch carries neither. */
+  def observeLine(p: StreamingQueryProgress): Option[String] = {
+    val m = p.observedMetrics
+    val counters = Seq("flows_in", "reports_out").flatMap(k =>
+      Option(m.get(k)).map(r => s"$k=${r.getAs[Long]("rows")}"))
+    val ops = p.stateOperators.toSeq
+    val state = if (ops.isEmpty) Nil else Seq(
+      s"state_stores=${ops.map(_.numStateStoreInstances).sum}",
+      s"state_commit_ms=${ops.map(_.commitTimeMs).sum}")
+    val shown = counters ++ state
+    if (shown.isEmpty) None
+    else Some(s"[observe] batch=${p.batchId} ${shown.mkString(" ")}")
+  }
+
   def main(args: Array[String]): Unit = {
     val c = parse(args)
     val spark = Graft.session(s"graft-${c.analytic}")
@@ -166,13 +182,8 @@ object GraftApp {
         import org.apache.spark.sql.streaming.StreamingQueryListener._
         override def onQueryStarted(e: QueryStartedEvent): Unit = ()
         override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(e: QueryProgressEvent): Unit = {
-          val m = e.progress.observedMetrics
-          val shown = Seq("flows_in", "reports_out").flatMap(k =>
-            Option(m.get(k)).map(r => s"$k=${r.getAs[Long]("rows")}"))
-          if (shown.nonEmpty) System.err.println(
-            s"[observe] batch=${e.progress.batchId} ${shown.mkString(" ")}")
-        }
+        override def onQueryProgress(e: QueryProgressEvent): Unit =
+          observeLine(e.progress).foreach(System.err.println)
       })
     build(spark, c).awaitTermination()
   }

@@ -10,14 +10,7 @@ object Verify {
       case Array(s, o, q) => (s, o, Some(q.split(',').toSet))
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Graft.tune(spark)
+    val spark = graft.core.Graft.session("graft-verify", s"local[$cpus]")
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries

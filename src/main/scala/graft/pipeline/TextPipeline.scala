@@ -72,8 +72,8 @@ object TextPipeline {
     * of the SAME cached frame, so DeduplicateRelations rewrites one
     * side's attributes and the cached hashpartitioning loses identity —
     * the same failure class as editDistancePairsCached's aliased
-    * self-join. SpanProbe at sf0.1/32c: pre-partitioned ran 5→8
-    * executed exchanges (1.50→1.94 s). */
+    * self-join. Measured at sf0.1/32c on the executed plan:
+    * pre-partitioned ran 5→8 exchanges (1.50→1.94 s). */
   def dupSpansCached(docs: DataFrame, k: Int = 3): graft.core.Cached[DataFrame] = {
     val grams = spanGramsOf(docs, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -302,21 +302,16 @@ object ConcurrentBench {
     val nThreads = args.headOption.map(_.toInt).getOrElse(4)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // FAIR across pools; each client thread below claims its own
-      // pool, the standard shared-SparkSession serving configuration.
-      // The allocation file weights clients over the stream drain 8:1
-      // (the r19 serving-tail fix — see inStreamPool).
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.scheduler.allocation.file",
-        allocationFile(math.max(nThreads, 16)))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Graft.tune(spark)
+    // Static confs reach the session the way spark-submit --conf does:
+    // as spark.* system properties. FAIR across pools; each client
+    // thread below claims its own pool, the standard shared-SparkSession
+    // serving configuration. The allocation file weights clients over
+    // the stream drain 8:1 (the r19 serving-tail fix — see inStreamPool).
+    sys.props("spark.sql.codegen.cache.maxEntries") = "4096"
+    sys.props("spark.scheduler.mode") = "FAIR"
+    sys.props("spark.scheduler.allocation.file") =
+      allocationFile(math.max(nThreads, 16))
+    val spark = graft.core.Graft.session("graft-concurrentbench", s"local[$cpus]")
 
     val all = SparkEntry.queries
     // default rotation = the official headline set PLUS the heavy

@@ -3,7 +3,6 @@ package graft.tools
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off stage/task anatomy probe for the IVF-PQ encode straggler
@@ -20,13 +19,7 @@ object EncodeProbe {
     val dir = args(0)
     val nlist = if (args.length > 1) args(1).toInt else 1000
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Graft.tune(spark)
+    val spark = graft.core.Graft.session("graft-encodeprobe", s"local[$cpus]")
     val tasks = ArrayBuffer.empty[(Int, Long)]   // stageId, ms
     val stages = ArrayBuffer.empty[(Int, Int, String)] // stageId, nTasks, ops
     spark.sparkContext.addSparkListener(new SparkListener {

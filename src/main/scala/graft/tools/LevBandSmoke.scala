@@ -113,11 +113,7 @@ object LevBandSmoke {
       val wordsMin = args.drop(2).headOption.map(_.toInt).getOrElse(2300)
       val wordsMax = args.drop(3).headOption.map(_.toInt).getOrElse(2600)
       val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      graft.core.Graft.tune(spark)
+      val spark = graft.core.Graft.session("graft-levband", s"local[$cpus]")
       confirmOnly(spark, nPairs, wordsMin, wordsMax)
       spark.stop()
       return
@@ -126,13 +122,7 @@ object LevBandSmoke {
     val wordsMin = args.drop(1).headOption.map(_.toInt).getOrElse(2300)
     val wordsMax = args.drop(2).headOption.map(_.toInt).getOrElse(2600)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Graft.tune(spark)
+    val spark = graft.core.Graft.session("graft-levband", s"local[$cpus]")
     val scratch = sys.env.getOrElse("SPARK_GRAFT_SMOKE_SCRATCH",
       s"/tmp/graft_levband_${System.getProperty("user.name", "u")}")
     val dir = s"$scratch/docs_long_$nDocs"

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Dump `explain formatted` for every headline query into a reviewable
@@ -18,14 +16,11 @@ object PlanDump {
       case Array(s, o) => (s, o)
       case _ => ("/root/testdata/sf0.001", "PLANS.md")
     }
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // pinned whatever the submitted conf says: the committed plan
+    // dumps were taken at width 8
+    val spark = graft.core.Graft.session("graft-plandump", "local[8]")
+    spark.conf.set("spark.sql.shuffle.partitions", 8L)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.core.Graft.tune(spark)
     val sb = new StringBuilder
     sb.append("# Headline query plans (`explain formatted`, ")
       .append(s"$sfDir, AQE initial plans)\n\n")

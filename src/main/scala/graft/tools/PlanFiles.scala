@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Dump `explain formatted` for selected queries into one file per query
@@ -23,14 +21,11 @@ object PlanFiles {
     val names =
       if (args.length > 3) args(3).split(",").toSeq.filter(_.nonEmpty)
       else SparkEntry.benchQueries
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // pinned whatever the submitted conf says: the committed plan
+    // dumps were taken at width 8
+    val spark = graft.core.Graft.session("graft-planfiles", "local[8]")
+    spark.conf.set("spark.sql.shuffle.partitions", 8L)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.core.Graft.tune(spark)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

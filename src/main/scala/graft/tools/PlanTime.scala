@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Split one SparkEntry query's warm latency into plan-side phases
   * (analysis, optimization, physical planning — driver-only, in the
   * timed window of every Bench run) vs execution. Planning cost is
@@ -17,13 +15,7 @@ object PlanTime {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Graft.tune(spark)
+    val spark = graft.core.Graft.session("graft-plantime", s"local[$cpus]")
     val fn = graft.SparkEntry.queries(name)
     fn(spark, sfDir).count() // warm: codegen, JIT, footers
     for (_ <- 1 to reps) {

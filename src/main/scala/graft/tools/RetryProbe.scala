@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.TaskContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Retry-determinism probe: at 100 TB task retries are ROUTINE (spot
@@ -90,15 +90,11 @@ object RetryProbe {
 
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(50000L)
-    val spark = SparkSession.builder()
-      // local[threads, maxFailures]: 3 attempts per task, so one
-      // injected attempt-0 failure per task still completes the job
-      .master("local[8, 3]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // local[threads, maxFailures]: 3 attempts per task, so one
+    // injected attempt-0 failure per task still completes the job
+    val spark = graft.core.Graft.session("graft-retryprobe", "local[8, 3]")
+    spark.conf.set("spark.sql.shuffle.partitions", 8L)
     spark.sparkContext.setLogLevel("ERROR") // injected failures are noisy at WARN
-    graft.core.Graft.tune(spark)
     val meter = new FailureMeter
     spark.sparkContext.addSparkListener(meter)
 

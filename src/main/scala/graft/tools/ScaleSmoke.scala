@@ -679,13 +679,7 @@ object ScaleSmoke {
         else if (embSkewMode) "1000000" else "5000,50000")
       .split(",").toSeq.filter(_.nonEmpty).map(_.toLong)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Graft.tune(spark)
+    val spark = graft.core.Graft.session("graft-scalesmoke", s"local[$cpus]")
     val meter = new ShuffleMeter
     spark.sparkContext.addSparkListener(meter)
     // SPARK_GRAFT_SMOKE_SCRATCH isolates concurrent smoke runs — two

@@ -31,13 +31,7 @@ object ShuffleBreakdown {
     val scales = args.drop(1).headOption.getOrElse("50000,500000")
       .split(",").toSeq.filter(_.nonEmpty).map(_.toLong)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Graft.tune(spark)
+    val spark = graft.core.Graft.session("graft-shufflebreakdown", s"local[$cpus]")
     val scratch = s"/tmp/graft_breakdown_${System.getProperty("user.name", "u")}"
 
     scales.foreach { n =>

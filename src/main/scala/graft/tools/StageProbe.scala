@@ -58,13 +58,7 @@ object StageProbe {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Graft.tune(spark)
+    val spark = graft.core.Graft.session("graft-stageprobe", s"local[$cpus]")
     val p = probe(spark, name, sfDir)
     println(f"query=$name rows=${p.rows} wall=${p.wallMs}%.0fms " +
       f"stages=${p.stages.size} stageSum=${p.stageSumMs}ms")

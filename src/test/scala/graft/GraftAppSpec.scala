@@ -67,7 +67,72 @@ class GraftAppSpec extends SparkSpec {
       // window's report counted on the way out — with zero extra jobs
       assert(metrics.filter(_._1 == "flows_in").map(_._2).sum == 3L, metrics)
       assert(metrics.filter(_._1 == "reports_out").map(_._2).sum >= 1L, metrics)
+      // the stderr line carries the counters and the window state's
+      // stores (one per shuffle partition) and commit time
+      val lines = q.recentProgress.toSeq.flatMap(GraftApp.observeLine)
+      assert(lines.exists(_.contains("flows_in=")), lines)
+      val slots = spark.sparkContext.defaultParallelism
+      assert(lines.exists(_.contains(s"state_stores=$slots ")), lines)
+      assert(lines.forall(_.matches(".* state_commit_ms=\\d+$")), lines)
     } finally q.stop()
+  }
+
+  test("Graft.session: shuffle width is the task slots; a submitted master and width win") {
+    assert(spark.conf.get("spark.sql.shuffle.partitions").toInt ==
+      spark.sparkContext.defaultParallelism)
+    val none = new org.apache.spark.SparkConf(false)
+    assert(graft.core.Graft.masterOf(none, "local[*]") == "local[*]")
+    assert(graft.core.Graft.widthOf(none, 6) == 6)
+    val submitted = new org.apache.spark.SparkConf(false)
+      .set("spark.master", "spark://head:7077")
+      .set("spark.sql.shuffle.partitions", "200")
+    assert(graft.core.Graft.masterOf(submitted, "local[*]") == "spark://head:7077")
+    assert(graft.core.Graft.widthOf(submitted, 6) == 200)
+  }
+
+  test("GraftApp host_stats: one state store per task slot; a restart keeps the checkpoint's width") {
+    val slots = spark.sparkContext.defaultParallelism
+    val batches = Seq(
+      Seq(flowJson(6, 11000L, 2, 100), flowJson(17, 12000L, 3, 200)),
+      Seq(flowJson(6, 16000L, 5, 300), flowJson(6, 22000L, 1, 40)),
+      Seq(flowJson(17, 100000L, 1, 50))) // closes every earlier window
+    // feed the batches one micro-batch each; `restartAfter` stops the
+    // query after that many and resumes it from its checkpoint at width 8
+    def run(restartAfter: Option[Int]): (Set[Seq[Any]], Seq[Int]) = {
+      def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+      val (in, out, ckpt) = (tmp("hsin"), tmp("hsout"), tmp("hsckpt"))
+      val cfg = GraftApp.Config(analytic = "host_stats", inputJson = Some(in),
+        output = out, checkpoint = ckpt, window = "10 seconds")
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      val stores = Seq.newBuilder[Int]
+      var q = GraftApp.build(spark, cfg)
+      try {
+        batches.zipWithIndex.foreach { case (lines, i) =>
+          if (restartAfter.contains(i)) {
+            q.stop()
+            spark.conf.set("spark.sql.shuffle.partitions", 8L)
+            q = GraftApp.build(spark, cfg)
+          }
+          java.nio.file.Files.write(java.nio.file.Paths.get(in, s"b$i.json"),
+            lines.mkString("\n").getBytes)
+          q.processAllAvailable()
+          stores ++= q.recentProgress.toSeq.flatMap(_.stateOperators)
+            .map(_.numStateStoreInstances.toInt)
+        }
+      } finally {
+        q.stop()
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+      }
+      val rows = spark.read.parquet(out).drop("timestamp", "date")
+      (rows.collect().map(_.toSeq).toSet, stores.result())
+    }
+    val (whole, wholeStores) = run(None)
+    val (resumed, resumedStores) = run(Some(1))
+    assert(whole.nonEmpty)
+    assert(wholeStores.nonEmpty && wholeStores.forall(_ == slots), wholeStores)
+    // the checkpoint froze the width at the first start
+    assert(resumedStores.nonEmpty && resumedStores.forall(_ == slots), resumedStores)
+    assert(resumed == whole)
   }
 
   test("CurateApp end-to-end: parquet corpus -> curated chunks parquet") {

@@ -17,7 +17,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession =
-    graft.core.Graft.session("graft-test", "local[4]", shufflePartitions = 4)
+    graft.core.Graft.session("graft-test", "local[4]")
 }
 
 /** Flow fixture row matching the engine's flow column contract
