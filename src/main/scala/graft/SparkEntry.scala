@@ -1087,17 +1087,6 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
 
-    // same computation through the Bloom pre-probe (scale/Bloom): every
-    // corpus shingle pays a codegen'd xxhash64 bit-probe and only hits
-    // reach the broadcast hash relation — result must be EXACTLY the
-    // un-pruned one (false negatives are impossible)
-    "q_contamination_bloom" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Curation.contamination(docs, docs.filter(col("doc_id") % 50 === 0),
-        n = 3, bloomFpp = Some(0.01))
-        .orderBy("doc_id")
-    }),
-
     // the Morton interleave behind Z-order layout — the NATIVE z_key
     // expression (the form zorderKey runs), replicated term-for-term by
     // the DuckDB oracle's bit arithmetic; the layout transform itself
@@ -2341,8 +2330,6 @@ object SparkEntry {
     ("q_pattern_finder_grouped" -> baseOracles("q_pattern_finder")) +
     // ...and so must the half-build + exactly-once batch-append path
     ("q_embed_ann_ivfpq_batch" -> baseOracles("q_embed_ann_ivfpq")) +
-    // bloom prune → exact join must equal the un-pruned contamination
-    ("q_contamination_bloom" -> baseOracles("q_contamination")) +
     // frozen-table append must search exactly like the monolithic index
     ("q_embed_ann_ivfpq_append" -> baseOracles("q_embed_ann_ivfpq")) +
     // quality gate = percent_rank cut over the unigram-NLL sub-oracle

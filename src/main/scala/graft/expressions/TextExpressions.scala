@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native expressions for the corpus-pipeline hot path.
@@ -33,19 +33,12 @@ object TextUtil {
     * is plain tokenization. Matches TextFunctions.wordShingles +
     * array_distinct exactly (trim is subsumed by the empty-token filter). */
   def shingles(text: UTF8String, n: Int, distinct: Boolean): ArrayData = {
-    val toks0 = ws.split(text.toString.toLowerCase)
-    val toks = if (toks0.length > 0 && toks0(0).isEmpty) toks0.drop(1) else toks0
+    val toks = tokens(text)
     val m = toks.length - n + 1
     if (m <= 0) return new GenericArrayData(Array.empty[Any])
     val out = new Array[Any](m)
     var i = 0
-    while (i < m) {
-      val sb = new java.lang.StringBuilder(toks(i))
-      var k = 1
-      while (k < n) { sb.append(' ').append(toks(i + k)); k += 1 }
-      out(i) = UTF8String.fromString(sb.toString)
-      i += 1
-    }
+    while (i < m) { out(i) = UTF8String.fromString(gram(toks, i, n)); i += 1 }
     if (!distinct) new GenericArrayData(out)
     else {
       val seen = new mutable.LinkedHashSet[Any]
@@ -54,6 +47,41 @@ object TextUtil {
       new GenericArrayData(seen.toArray)
     }
   }
+
+  /** How many of the document's DISTINCT word n-grams ([[shingles]]'s
+    * tokenization and join) are in `set` — the per-document overlap
+    * count of a distinct-shingle semi-join against `set`, without
+    * materializing the document's gram array. */
+  def shingleOverlap(text: UTF8String, n: Int,
+                     set: java.util.HashSet[String]): Long = {
+    if (set.isEmpty) return 0L
+    val toks = tokens(text)
+    var hits: java.util.HashSet[String] = null
+    var i = 0
+    while (i < toks.length - n + 1) {
+      val g = gram(toks, i, n)
+      if (set.contains(g)) {
+        if (hits == null) hits = new java.util.HashSet[String]
+        hits.add(g)
+      }
+      i += 1
+    }
+    if (hits == null) 0L else hits.size.toLong
+  }
+
+  private def tokens(text: UTF8String): Array[String] = {
+    val toks = ws.split(text.toString.toLowerCase)
+    if (toks.length > 0 && toks(0).isEmpty) toks.drop(1) else toks
+  }
+
+  private def gram(toks: Array[String], i: Int, n: Int): String =
+    if (n == 1) toks(i)
+    else {
+      val sb = new java.lang.StringBuilder(toks(i))
+      var k = 1
+      while (k < n) { sb.append(' ').append(toks(i + k)); k += 1 }
+      sb.toString
+    }
 
   /** Banded Levenshtein over raw ASCII bytes: the distance if ≤ `k`,
     * else −1 — the exact contract of Spark's
@@ -300,6 +328,18 @@ object TextUtil {
     val m = new java.util.HashMap[String, Integer](merges.size * 2)
     merges.zipWithIndex.foreach { case (p, i) => m.put(p, Integer.valueOf(i)) }
     m
+  }
+
+  /** Fraction of a string array's entries that repeat an earlier entry,
+    * `(size − size(array_distinct)) / size` (0.0 when empty), in one
+    * pass. */
+  def dupFraction(arr: ArrayData): Double = {
+    val n = arr.numElements()
+    if (n == 0) return 0.0
+    val seen = new java.util.HashSet[UTF8String](n * 2)
+    var i = 0
+    while (i < n) { seen.add(arr.getUTF8String(i)); i += 1 }
+    (n - seen.size).toDouble / n
   }
 
   /** k running minima under affine permutations (2i+1)·h + 31i+7 mod p —
@@ -674,6 +714,30 @@ case class DeflateLen(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** `dup_fraction(grams)`: [[TextUtil.dupFraction]]. A Column composite
+  * needs the gram array three times (size, distinct size, denominator),
+  * and a filter — unlike a projection — gets no subexpression
+  * elimination, so each reference would re-tokenize the document. */
+case class DupFraction(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case _ => TypeCheckResult.TypeCheckFailure(s"$prettyName requires array<string>")
+  }
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "dup_fraction"
+
+  protected override def nullSafeEval(input: Any): Any =
+    TextUtil.dupFraction(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.expressions.TextUtil.dupFraction($c);")
+
+  override protected def withNewChildInternal(newChild: Expression): DupFraction =
+    copy(child = newChild)
+}
+
 case class MinhashSig(child: Expression, k: Int) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -721,6 +785,40 @@ case class BpeEncode(child: Expression, merges: Seq[String])
   }
 
   override protected def withNewChildInternal(newChild: Expression): BpeEncode =
+    copy(child = newChild)
+}
+
+/** `shingle_overlap(text)`: the count of the document's distinct word
+  * n-grams found in a fixed reference set ([[TextUtil.shingleOverlap]]).
+  * The set rides a Spark broadcast: the plan and every task carry only
+  * the handle, each task reads its executor's one deserialized copy when
+  * its generated code initializes, and no join, explode or aggregate
+  * runs — the per-document overlap is row-local. */
+case class ShingleOverlap(child: Expression, n: Int,
+    set: org.apache.spark.broadcast.Broadcast[java.util.HashSet[String]])
+    extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a string argument")
+  override def dataType: DataType = LongType
+  override def prettyName: String = "shingle_overlap"
+
+  @transient private lazy val local = set.value
+
+  protected override def nullSafeEval(input: Any): Any =
+    TextUtil.shingleOverlap(input.asInstanceOf[UTF8String], n, local)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val handle = ctx.addReferenceObj("shingleSetHandle", set,
+      classOf[org.apache.spark.broadcast.Broadcast[_]].getName)
+    val local = ctx.addMutableState("java.util.HashSet", "shingleSet",
+      v => s"$v = (java.util.HashSet) $handle.value();")
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.expressions.TextUtil.shingleOverlap($c, $n, $local);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): ShingleOverlap =
     copy(child = newChild)
 }
 
@@ -833,6 +931,8 @@ object TextExpressions {
     ColumnBridge.column(PolyHash47(ColumnBridge.expression(arr)))
   def minhashSig(hashes: Column, k: Int): Column =
     ColumnBridge.column(MinhashSig(ColumnBridge.expression(hashes), k))
+  def dupFraction(grams: Column): Column =
+    ColumnBridge.column(DupFraction(ColumnBridge.expression(grams)))
   def charEntropy(s: Column): Column =
     ColumnBridge.column(CharEntropy(ColumnBridge.expression(s)))
   def deflateRatio(s: Column): Column =
@@ -843,6 +943,9 @@ object TextExpressions {
     ColumnBridge.column(MediaPhash(ColumnBridge.expression(media)))
   def bpeEncode(text: Column, merges: Seq[String]): Column =
     ColumnBridge.column(BpeEncode(ColumnBridge.expression(text), merges))
+  def shingleOverlap(text: Column, n: Int,
+      set: org.apache.spark.broadcast.Broadcast[java.util.HashSet[String]]): Column =
+    ColumnBridge.column(ShingleOverlap(ColumnBridge.expression(text), n, set))
   def winnowFp(text: Column, k: Int, w: Int): Column =
     ColumnBridge.column(WinnowFp(ColumnBridge.expression(text), k, w))
   def cdcChunks(text: Column, w: Int, divisor: Long): Column =

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StringType}
 import graft.functions.TextFunctions
 
 /** Training-data curation operators beyond cleaning: benchmark
@@ -10,8 +10,10 @@ import graft.functions.TextFunctions
   * token chunking, cluster dedup, deterministic source mixing.
   *
   * Shuffle discipline matches TextPipeline: eval sets and heavy lists are
-  * broadcast, per-document metrics are explode → hash-aggregate (map-side
-  * partial), and the only iterative operator (connected components) cuts
+  * broadcast, per-document metrics are row-local where the document
+  * alone decides them (repetition, benchmark overlap) and explode →
+  * hash-aggregate (map-side partial) where a corpus-side table is
+  * joined, and the only iterative operator (connected components) cuts
   * lineage per step and converges in diameter iterations over the
   * candidate graph — tiny relative to the corpus.
   */
@@ -20,35 +22,30 @@ object Curation {
   // ----- decontamination -------------------------------------------------
 
   /** Documents sharing ≥1 word n-gram with the benchmark set, with the
-    * overlap count: explode doc shingles → broadcast-join the distinct
-    * benchmark shingle set → per-doc count. Eval sets are MBs against a
-    * 100 TB corpus, so the benchmark side is always the broadcast side;
-    * the corpus side stays a linear explode + one hash aggregate.
-    *
-    * `bloomFpp` puts a [[graft.scale.Bloom]] probe in front of the join:
-    * each corpus shingle pays one codegen'd xxhash64 + bit-probe, and
-    * only the hits (matches + the fpp fraction) reach the broadcast hash
-    * relation. False negatives are impossible, so the result is exactly
-    * the un-pruned one (q_contamination_bloom shares q_contamination's
-    * oracle). Worth it when the eval set is large enough that hash-
-    * relation probes miss cache; mandatory if the bench side ever
-    * outgrows broadcast and the join must shuffle. */
-  def contamination(docs: DataFrame, benchmark: DataFrame, n: Int,
-                    bloomFpp: Option[Double] = None): DataFrame = {
-    val docShingles = docs.select(col("doc_id"),
-      explode(graft.expressions.TextExpressions
-        .wordShingles(col("text"), n, distinct = true)).as("shingle"))
-    val benchShingles = benchmark.select(
-      explode(graft.expressions.TextExpressions
-        .wordShingles(col("text"), n, distinct = true)).as("shingle"))
-      .distinct()
-    val pruned = bloomFpp.fold(docShingles) { fpp =>
-      docShingles.filter(graft.scale.Bloom.mightContain(
-        graft.scale.Bloom.build(benchShingles, col("shingle"), fpp = fpp),
-        col("shingle")))
-    }
-    pruned.join(broadcast(benchShingles), Seq("shingle"))
-      .groupBy("doc_id").agg(count(lit(1)).as("overlap_ngrams"))
+    * overlap count: how many of the document's distinct n-grams are in
+    * the benchmark's distinct n-gram set. Eval sets are MBs against a
+    * 100 TB corpus, so the benchmark side is collected to the driver
+    * once (one scan job, no shuffle) and rides a broadcast inside the
+    * native [[graft.expressions.ShingleOverlap]]; the corpus side is
+    * row-local — no shingle explode, join, aggregate or exchange. The
+    * set must fit in driver and executor memory, the bound the forced
+    * broadcast join this replaced had too. Like every curation stage,
+    * it treats a row as one document: `doc_id` unique and non-null. */
+  def contamination(docs: DataFrame, benchmark: DataFrame, n: Int): DataFrame =
+    docs.select(col("doc_id"), benchmarkOverlap(benchmark, n).as("overlap_ngrams"))
+      .filter(col("overlap_ngrams") > 0L)
+
+  /** [[contamination]]'s per-document overlap count as a row-local column
+    * over `text` (0 for null text). Collects the benchmark's shingle set
+    * now, on the calling thread. */
+  private def benchmarkOverlap(benchmark: DataFrame, n: Int): org.apache.spark.sql.Column = {
+    val set = new java.util.HashSet[String]
+    benchmark.select(explode(graft.expressions.TextExpressions
+        .wordShingles(col("text"), n, distinct = true)))
+      .collect().foreach(r => set.add(r.getString(0)))
+    val shared = benchmark.sparkSession.sparkContext.broadcast(set)
+    coalesce(graft.expressions.TextExpressions.shingleOverlap(col("text"), n, shared),
+      lit(0L))
   }
 
   /** Per-document n-gram novelty against a reference corpus — the
@@ -79,15 +76,13 @@ object Curation {
   }
 
   /** Decontaminated corpus: drop documents whose benchmark n-gram overlap
-    * exceeds `maxOverlap` (0 = any overlap removes). The anti-join
-    * strategy is left to AQE: the contaminated set is usually tiny (eval
-    * sets are MBs) but is NOT small by construction — a heavily
-    * contaminated corpus would OOM a forced broadcast. */
+    * exceeds `maxOverlap` (0 = any overlap removes). A row-local filter
+    * on [[contamination]]'s overlap column — no anti-join, so the
+    * decision never waits on a corpus-wide exchange. */
   def decontaminate(docs: DataFrame, benchmark: DataFrame, n: Int,
                     maxOverlap: Long = 0L): DataFrame = {
-    val bad = contamination(docs, benchmark, n)
-      .filter(col("overlap_ngrams") > maxOverlap).select("doc_id")
-    docs.join(bad, Seq("doc_id"), "left_anti")
+    require(maxOverlap >= 0L, s"maxOverlap $maxOverlap is negative")
+    docs.filter(benchmarkOverlap(benchmark, n) <= maxOverlap)
   }
 
   // ----- repetition metrics (Gopher rules 4-8 analogue) ------------------
@@ -98,8 +93,8 @@ object Curation {
     *
     * MAP-ONLY (r20): every output is a per-document function of that
     * document's token stream, so the stats are computed ROW-LOCALLY
-    * with array expressions — totals/uniques via size/array_distinct of
-    * the gram arrays, the top-2-gram count via a run-length fold over
+    * with array expressions — the repeat fractions via the native
+    * one-pass `dup_fraction`, the top-2-gram count via a run-length fold over
     * the SORTED 2-gram array (sorting groups equal grams adjacently;
     * only run lengths are read, so the sort order itself is
     * irrelevant). The previous form exploded grams into a corpus-wide
@@ -113,11 +108,8 @@ object Curation {
     * as the old left join did. Per-row cost is O(L log L) in doc
     * tokens — the same row-local class as tokenization itself. */
   def repetitionStats(docs: DataFrame): DataFrame = {
-    val empty = array().cast("array<string>")
-    val w = coalesce(
-      graft.expressions.TextExpressions.wordShingles(col("text"), 1), empty)
     val g = coalesce(
-      graft.expressions.TextExpressions.wordShingles(col("text"), 2), empty)
+      graft.expressions.TextExpressions.wordShingles(col("text"), 2), emptyGrams)
     // longest run of equal adjacent elements in the sorted array = the
     // max per-gram multiplicity (the old max(c)). The fold state is
     // (current run, best run, previous gram); x === null is false-ish
@@ -125,7 +117,7 @@ object Curation {
     def topCount(arr: org.apache.spark.sql.Column): org.apache.spark.sql.Column = aggregate(
       array_sort(arr),
       struct(lit(0L).as("run"), lit(0L).as("best"),
-        lit(null).cast("string").as("prev")),
+        lit(null).cast(StringType).as("prev")),
       (acc, x) => {
         val run = when(x === acc.getField("prev"),
           acc.getField("run") + 1L).otherwise(1L)
@@ -133,20 +125,34 @@ object Curation {
           greatest(acc.getField("best"), run).as("best"), x.as("prev"))
       },
       acc => acc.getField("best"))
-    val frac = (num: org.apache.spark.sql.Column, den: org.apache.spark.sql.Column) =>
-      round(when(den > 0, num.cast("double") / den).otherwise(0.0), 6)
-    // two-level select so the shingle arrays materialize once per row
-    // (CollapseProject keeps the split: the aliases are referenced more
-    // than once and are not cheap)
-    docs.select(col("doc_id"), w.as("__w"), g.as("__g"))
+    // two-level select so the 2-gram array materializes once per row
+    // (CollapseProject keeps the split: the alias is referenced more
+    // than once and is not cheap)
+    docs.select(col("doc_id"), dupWordFrac(col("text")).as("dup_word_frac"),
+        g.as("__g"))
       .select(
         col("doc_id"),
-        frac(size(col("__w")) - size(array_distinct(col("__w"))),
-          size(col("__w"))).as("dup_word_frac"),
-        frac(size(col("__g")) - size(array_distinct(col("__g"))),
-          size(col("__g"))).as("dup_2gram_frac"),
+        col("dup_word_frac"),
+        dupFrac(col("__g")).as("dup_2gram_frac"),
         frac(topCount(col("__g")), size(col("__g"))).as("top_2gram_frac"))
   }
+
+  /** [[repetitionStats]]'s `dup_word_frac` as a row-local column over
+    * `text` — the one definition the stats and [[curate]]'s repetition
+    * filter share. */
+  private def dupWordFrac(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    dupFrac(coalesce(
+      graft.expressions.TextExpressions.wordShingles(text, 1), emptyGrams))
+
+  private val emptyGrams = array().cast(ArrayType(StringType))
+
+  private def frac(num: org.apache.spark.sql.Column, den: org.apache.spark.sql.Column) =
+    round(when(den > 0, num.cast(DoubleType) / den).otherwise(0.0), 6)
+
+  /** Fraction of a gram array's entries that repeat an earlier entry,
+    * rounded like [[frac]]; reads the array once. */
+  private def dupFrac(grams: org.apache.spark.sql.Column) =
+    round(graft.expressions.TextExpressions.dupFraction(grams), 6)
 
   // ----- PII redaction ---------------------------------------------------
 
@@ -188,7 +194,7 @@ object Curation {
       .filter(size(col("toks")) > 0)
     // integer chunk count: 1 + ceil(max(n - chunkSize, 0) / stride)
     val extra = greatest(size(col("toks")) - chunkSize, lit(0))
-    val nChunks = ((extra + (stride - 1)) / lit(stride)).cast("int") + 1
+    val nChunks = ((extra + (stride - 1)) / lit(stride)).cast(IntegerType) + 1
     toks
       .select(col("doc_id"), col("toks"),
         posexplode(sequence(lit(0), nChunks - 1)))
@@ -445,6 +451,18 @@ object Curation {
     * when `requireConvergence` is set. */
   def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 20,
                               requireConvergence: Boolean = false): DataFrame = {
+    val edges = starForest(pairs, maxIter, requireConvergence)
+    // star forest: hi → lo(=center); centers label themselves
+    edges.select(col("hi").as("id"), col("lo").as("component"))
+      .union(edges.select(col("lo").as("id"), col("lo").as("component")))
+      .distinct()
+  }
+
+  /** [[connectedComponentsStar]]'s loop: the canonical (hi > lo) edge set
+    * at the fixpoint — a star forest, every `hi` linked to its
+    * component's minimum `lo` — as the last round's checkpoint. */
+  private def starForest(pairs: DataFrame, maxIter: Int,
+                         requireConvergence: Boolean): DataFrame = {
     // canonical undirected edges (hi > lo), self-loops dropped. The
     // count (and the order-independent xor content hash the fixpoint
     // test reads, see below) ride the checkpoint materialization as
@@ -529,10 +547,7 @@ object Curation {
       if (requireConvergence) throw new IllegalStateException(msg)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
     }
-    // star forest: hi → lo(=center); centers label themselves
-    edges.select(col("hi").as("id"), col("lo").as("component"))
-      .union(edges.select(col("lo").as("id"), col("lo").as("component")))
-      .distinct()
+    edges
   }
 
   /** Cluster-complete near-dup dedup: MinHash-LSH bucket graph →
@@ -559,6 +574,17 @@ object Curation {
       .select(col("doc_id"),
         coalesce(col("component"), col("doc_id")).as("component"))
   }
+
+  /** The near-duplicates the min-id rule removes: every document of the
+    * MinHash bucket graph that is not its component's minimum, i.e. the
+    * `hi` side of the star forest. Removing them from the corpus equals
+    * keeping [[clusterComponents]]' `doc_id == component` rows, without
+    * labelling the whole corpus. Even a non-converged forest never lists
+    * a component's minimum (hi > lo on every edge). */
+  private def nearDupMembers(docs: DataFrame, n: Int, k: Int,
+                             bands: Int): DataFrame =
+    starForest(TextPipeline.minhashBucketStarEdges(docs, n, k, bands),
+      maxIter = 20, requireConvergence = false).select(col("hi").as("doc_id"))
 
   /** Survivors only: one document (min id) per cluster. */
   def clusterDedup(docs: DataFrame, n: Int = 3, k: Int = 16,
@@ -738,13 +764,21 @@ object Curation {
     * repetition filter → cluster-complete near-dup dedup → benchmark
     * decontamination → deterministic source mixing → token chunking.
     *
-    * Stage order is the scale order: the repetition filter is one
-    * explode + hash-agg and prunes the corpus before any shingle/LSH
-    * work; dedup and decontamination then run over survivors only;
-    * sampling is a free filter; chunking (the only output-expanding
-    * stage) runs last over the smallest corpus. Every stage is one of
-    * the individually-oracle-checked operators above — this is pure
-    * composition, no new semantics. */
+    * One pass over the corpus: every stage but dedup keeps rows by a
+    * per-document predicate — [[repetitionStats]]' `dup_word_frac`, the
+    * benchmark overlap of [[decontaminate]], the sampling hash — and
+    * chunking explodes in place. Dedup runs connected components over
+    * the repetition survivors' MinHash bucket graph, and the corpus then
+    * meets it in ONE anti-join against the near-duplicate members the
+    * min-id rule removes (the `keepBest` rule instead joins the
+    * max-score member of each component, [[clusterDedupBest]]'s rule).
+    * Every stage keeps the rows of its individually oracle-checked
+    * operator; this is pure composition, no new semantics.
+    *
+    * Precondition: `doc_id` is unique and non-null — every stage keys
+    * on it, and a null-id row is dropped. The connected components and
+    * the benchmark's shingle set are computed when `curate` is called;
+    * nothing is left persisted. */
   def curate(docs: DataFrame, benchmark: DataFrame,
              maxDupWordFrac: Double = 0.55,
              n: Int = 3, k: Int = 16, bands: Int = 4,
@@ -752,31 +786,24 @@ object Curation {
              defaultPpm: Long = 1000000L,
              chunkSize: Int = 64, stride: Int = 48,
              keepBest: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    // keptIds is referenced from TWO branches (the dedup subtree and the
-    // final re-join); persisting the id column makes the repetition
-    // tokenize+gram chain run once instead of once per branch. Cache
-    // lifetime is the session (callers looping over corpora should
-    // clearCache between corpora — the same contract the index-building
-    // operators document); an id frame is the smallest thing worth
-    // pinning here, not the token arrays.
-    val keptIds = repetitionStats(docs)
-      .filter(col("dup_word_frac") <= maxDupWordFrac).select("doc_id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val kept = docs.join(keptIds, Seq("doc_id"))
-    // keepBest swaps the min-id survivor rule for the max-score member
-    // of each cluster ("keep the canonical copy") at the cost of one
-    // extra slim join — the component map is computed either way
-    val comp = clusterComponents(kept, n, k, bands)
-    val survivors = keepBest match {
-      case None => comp.filter(col("doc_id") === col("component"))
-        .select("doc_id")
-      case Some(score) => bestByComponent(comp, kept, score)
+    val kept = repetitionFilter(docs, maxDupWordFrac)
+    val deduped = keepBest match {
+      case None =>
+        kept.join(nearDupMembers(kept, n, k, bands), Seq("doc_id"), "left_anti")
+      case Some(score) =>
+        kept.join(bestByComponent(clusterComponents(kept, n, k, bands), kept, score),
+          Seq("doc_id"))
     }
-    val deduped = kept.join(survivors, Seq("doc_id"))
     val clean = decontaminate(deduped, benchmark, n)
     val mixed = sampleBySource(clean, ratesPpm, defaultPpm)
     chunk(mixed, chunkSize, stride)
   }
+
+  /** [[curate]]'s first stage: documents with a non-null id whose
+    * `dup_word_frac` is at most `maxDupWordFrac` — a row-local filter. */
+  private[graft] def repetitionFilter(docs: DataFrame,
+                                      maxDupWordFrac: Double): DataFrame =
+    docs.filter(col("doc_id").isNotNull && dupWordFrac(col("text")) <= maxDupWordFrac)
 
   // ----- deterministic source mixing -------------------------------------
 
@@ -855,7 +882,7 @@ object Curation {
     * it before the ppm reduction. */
   private def ppmHash(salt: String) =
     (pmod(TextFunctions.fingerprint(
-      concat(lit(s"$salt:"), col("doc_id").cast("string"))), lit(1048576L))
+      concat(lit(s"$salt:"), col("doc_id").cast(StringType))), lit(1048576L))
       * 2654435761L + 40503L) % 1000000L
 
   // ----- model-based quality signals --------------------------------------

@@ -565,15 +565,17 @@ object TextPipeline {
     * 8-byte bucket key; edge count ≤ docs × bands. */
   def minhashBucketStarEdges(docs: DataFrame, n: Int = 3, k: Int = 16,
                              bands: Int = 4): DataFrame = {
-    // DELIBERATELY not persisted, unlike minhashCandidatesCached: the
-    // keys subtree appears twice (hub aggregate + probe side of the
-    // join), but both consumers require the SAME hashpartitioning on
-    // `bucket`, so Catalyst's ReuseExchange computes the shingling +
-    // signature fold ONCE and both read the one exchange. Measured at
-    // 500k docs: unpersisted 55.7 MB shuffle; a persisted variant broke
-    // the exchange-subtree identity and ran BOTH exchanges — 106.4 MB
-    // (exactly 2×) plus the cache's own GC pressure. Declarative reuse
-    // beats manual caching here.
+    // Not persisted, and the keys subtree is planned TWICE: the hub side
+    // is partially aggregated (partial_min) below its
+    // hashpartitioning(bucket) exchange, while the probe side's exchange
+    // (or, when the hubs broadcast, no exchange at all) sits directly on
+    // the keys. The two subtrees differ below every exchange, so
+    // ReuseExchange never matches them and the shingling + signature
+    // fold runs once per side — the executed plan of curate's CC
+    // checkpoint shows two minhash_sig subtrees. An earlier 500k-doc
+    // measurement (55.7 MB shuffled unpersisted, 106.4 MB for a
+    // persisted variant) was credited to a reuse that does not happen,
+    // so re-measure it before choosing between the two.
     val keys = minhashLsh(docs, n, k, bands).select("doc_id", "bucket")
     val hubs = keys.groupBy("bucket").agg(min("doc_id").as("hub"))
     keys.join(hubs, Seq("bucket"))

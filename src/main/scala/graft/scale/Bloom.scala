@@ -16,17 +16,16 @@ import org.apache.spark.util.sketch.BloomFilter
   * shuffle joins (a `BloomFilterAggregate` subquery on the small side, a
   * `BloomFilterMightContain` filter on the big side) — exposed here as an
   * explicit operator, because the optimizer rule only fires on equi-joins
-  * it can see whole, and the pipeline's pruning opportunities (explode →
-  * join in decontamination, candidate confirm in dedup) are multi-step
-  * shapes the rule never matches.
+  * it can see whole, and multi-step pruning opportunities (a probe in
+  * front of an explode → join) are shapes the rule never matches.
   *
   * Both expressions are the native Catalyst ones (codegen'd, evaluated at
   * the scan): the filter is one xxhash64 + a few bit probes per row, so
   * at 100 TB the non-matching fraction of the corpus — almost all of it —
   * never reaches the exchange. False positives are possible (bounded by
   * `fpp`), false negatives are not, so composing prune → exact join keeps
-  * results EXACTLY equal to the un-pruned plan (oracle-checked via
-  * q_contamination_bloom).
+  * results EXACTLY equal to the un-pruned plan (ScaleSpec pins the
+  * semi/anti joins against the plain ones).
   *
   * The filter itself is built with one aggregate job on the small side
   * and carried as a binary literal (MBs — same size class a broadcast

@@ -37,8 +37,13 @@ object Skew {
     * the input plans fewer partitions than `parts` (a single parquet
     * row group is unsplittable, so a small file scans as ONE task no
     * matter how many cores idle), round-robin repartition it; otherwise
-    * return it unchanged. The check is driver-side planning only — no
-    * job runs. At corpus scale the scan is already wide, the guard is a
+    * return it unchanged. The check reads `df.rdd`: over a plan with no
+    * exchange (a scan and row-local derivations of it) that is
+    * driver-side planning only and no job runs, but under AQE it
+    * materializes every shuffle and broadcast stage below the final one,
+    * one job each, and the caller's own action later runs them again —
+    * so guard scans, not joins or aggregates. At corpus scale the scan
+    * is already wide, the guard is a
     * no-op, and the text shuffle it would imply never happens; at test
     * scale the shuffled bytes are megabytes and the downstream
     * per-row compute (shingling, hashing, chunking) is the cost being
@@ -54,7 +59,8 @@ object Skew {
     * input partition first (`spark.sql.execution.sortBeforeRepartition`,
     * needed for deterministic retries) — dead weight when a stable
     * partitioning key exists, since hash repartition is retry-safe
-    * without it. */
+    * without it. Same probe, so the same cost: no job over a plan with
+    * no exchange, one job per stage below the final one under AQE. */
   def ensureMinParallelism(df: DataFrame, parts: Int,
                            byCols: Seq[Column]): DataFrame =
     if (df.rdd.getNumPartitions >= math.min(parts,
@@ -63,8 +69,9 @@ object Skew {
 
   /** [[ensureMinParallelism]] with the input's partition count supplied
     * by the caller: the `.rdd.getNumPartitions` probe physically plans
-    * `df` (~60 ms of driver latency) for an answer callers over
-    * immutable files can memoize across calls. */
+    * `df` (~60 ms of driver latency) and, under AQE, runs every stage
+    * below the final one, for an answer callers over immutable files can
+    * memoize across calls. This form runs no probe and no job. */
   def ensureMinParallelismKnown(df: DataFrame, currentParts: Int,
                                 parts: Int, byCols: Seq[Column]): DataFrame =
     if (currentParts >= math.min(parts,

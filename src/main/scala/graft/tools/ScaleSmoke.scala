@@ -385,16 +385,11 @@ object ScaleSmoke {
         // LM corpus doesn't grow with the training corpus)
         "q_unigram_nll" -> (() =>
           Curation.unigramNll(docs, docs.filter(col("doc_id") < 2000))),
-        // exact contamination vs its bloom-pruned twin, same fixed eval
-        // set — the delta is the probe's saving on the corpus side
+        // contamination against a fixed eval set (see the note above)
         "q_contamination" -> (() =>
           Curation.contamination(docs,
             docs.filter(col("doc_id") % 50 === 0 && col("doc_id") < 5000),
             n = 3)),
-        "q_contamination_bloom" -> (() =>
-          Curation.contamination(docs,
-            docs.filter(col("doc_id") % 50 === 0 && col("doc_id") < 5000),
-            n = 3, bloomFpp = Some(0.01))),
         // contiguous ids: boundary-sample + bucket ranks + offset passes
         "q_assign_ids" -> (() =>
           graft.scale.Ids.assign(docs.select("doc_id", "source"),

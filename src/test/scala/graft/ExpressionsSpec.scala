@@ -358,6 +358,33 @@ class ExpressionsSpec extends SparkSpec {
     assert(r.getBoolean(0) && r.getBoolean(1) && !r.getBoolean(2))
   }
 
+  test("shingle_overlap and dup_fraction: hand-computed values, codegen and interpreted") {
+    import graft.expressions.TextExpressions
+    val texts = Seq((1, "The cat sat on the mat the cat"), (2, "  a b a b a  "),
+      (3, ""), (4, null), (5, "x"), (6, "Dog dog DOG")).toDF("id", "text")
+      // a Project over a LocalRelation would be folded on the driver
+      .repartition(1)
+    val set = new java.util.HashSet[String](
+      java.util.Arrays.asList("the cat", "cat sat", "a b", "dog dog", "on"))
+    def run(s: java.util.HashSet[String]) = texts.select(col("id"),
+        TextExpressions.shingleOverlap(col("text"), 2, spark.sparkContext.broadcast(s)),
+        TextExpressions.dupFraction(TextExpressions.wordShingles(col("text"), 1)))
+      .collect().sortBy(_.getInt(0)).map(r =>
+        (Option(r.get(1)), Option(r.get(2)))).toSeq
+    // distinct 2-grams in the set (a 1-gram entry never matches);
+    // repeated words / words (0 without words)
+    val want = Seq((Some(2L), Some(3.0 / 8)), (Some(1L), Some(3.0 / 5)),
+      (Some(0L), Some(0.0)), (None, None), (Some(0L), Some(0.0)),
+      (Some(1L), Some(2.0 / 3)))
+    assert(run(set) == want)
+    assert(run(new java.util.HashSet[String]).map(_._1) ==
+      want.map(_._1.map(_ => 0L)))
+    val prev = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try assert(run(set) == want)
+    finally spark.conf.set("spark.sql.codegen.factoryMode", prev)
+  }
+
   test("bpe_encode: greedy lowest-rank merges, round-trip, no merges = chars") {
     import spark.implicits._
     import graft.expressions.TextExpressions

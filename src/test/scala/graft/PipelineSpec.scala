@@ -1285,6 +1285,55 @@ class PipelineSpec extends SparkSpec {
     assert(out.count(_("doc_id") == 1L) == 3) // 10 tokens / size 4 stride 4
   }
 
+  /** A DocSynth corpus where every curate stage removes documents: at
+    * 0.3 the repetition filter drops about a quarter, 14 % of documents
+    * are (near-)copies for connected components, and the benchmark
+    * shares 3-grams with about a tenth of the corpus. */
+  private def dupHeavyCorpus() = (
+    graft.core.DocSynth.documents(spark, 800L, 11L, dupPpm = 60000L, nearDupPpm = 80000L),
+    graft.core.DocSynth.documents(spark, 20L, 3L))
+
+  test("contamination and decontaminate equal the explode-join-aggregate form") {
+    import graft.pipeline.Curation
+    val (corpus, bench) = dupHeavyCorpus()
+    def overlaps(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val want = overlaps(RefCurate.contamination(corpus, bench, 3))
+    assert(want.size > 50)
+    assert(overlaps(Curation.contamination(corpus, bench, 3)) == want)
+    val all = corpus.select("doc_id").collect().map(_.getLong(0)).toSet
+    for (maxOverlap <- Seq(0L, 2L)) {
+      val kept = Curation.decontaminate(corpus, bench, 3, maxOverlap)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(kept == all -- want.filter(_._2 > maxOverlap).keySet)
+    }
+    // null text has no n-grams: never contaminated, always kept
+    val nullText = Seq((1L, null: String)).toDF("doc_id", "text")
+    assert(Curation.contamination(nullText, bench, 3).count() == 0)
+    assert(Curation.decontaminate(nullText, bench, 3).count() == 1)
+  }
+
+  test("curate equals the join-form composition on a duplicate-heavy corpus, with and without keepBest") {
+    import graft.pipeline.Curation
+    val (corpus, bench) = dupHeavyCorpus()
+    val maxFrac = 0.3
+    val rates = Map("src0" -> 0L, "src1" -> 500000L)
+    // every stage has work to do on this corpus
+    val kept = corpus.join(Curation.repetitionStats(corpus)
+      .filter(col("dup_word_frac") <= maxFrac).select("doc_id"), Seq("doc_id"))
+    assert(kept.count() < 700)
+    assert(Curation.clusterDedup(kept).count() < kept.count() - 20)
+    assert(Curation.contamination(kept, bench, 3).count() > 30)
+    def chunks(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getString(3))).toSeq.sorted
+    for (keepBest <- Seq(None, Some(length(col("text"))))) {
+      val want = chunks(RefCurate.curate(corpus, bench, maxFrac, rates, keepBest))
+      assert(want.nonEmpty)
+      assert(chunks(Curation.curate(corpus, bench, maxDupWordFrac = maxFrac,
+        ratesPpm = rates, keepBest = keepBest)) == want, s"keepBest = $keepBest")
+    }
+  }
+
   test("sampleBySource: deterministic, rate 0 drops source, rate 1 keeps all") {
     import graft.pipeline.Curation
     val d = (0L until 60L).map(i => (i, s"text $i", s"src${i % 3}"))

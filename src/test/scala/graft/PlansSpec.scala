@@ -31,15 +31,22 @@ class PlansSpec extends SparkSpec {
 
   test("Curation plans: benchmark side broadcasts; chunk and mix are shuffle-free") {
     import graft.pipeline.Curation
-    val docs = (0L until 100L).map(i =>
-      (i, s"w${i % 7} w${(i + 1) % 7} w${(i + 2) % 7} w${(i + 3) % 7} tail$i",
-        s"src${i % 3}")).toDF("doc_id", "text", "source")
+    // a range source, not a LocalRelation: a Seq-backed frame's
+    // row-local plan would be folded into a LocalTableScan
+    val id = col("id")
+    val docs = spark.range(100L).select(id.as("doc_id"),
+      concat(lit("w"), id % 7, lit(" w"), (id + 1) % 7, lit(" w"), (id + 2) % 7,
+        lit(" w"), (id + 3) % 7, lit(" tail"), id).as("text"),
+      concat(lit("src"), id % 3).as("source"))
     val bench = docs.filter(col("doc_id") % 10 === 0)
-    val cont = Curation.contamination(docs, bench, 3)
-      .queryExecution.executedPlan.toString
-    // the eval set must never be the streamed side of a shuffle join
-    assert(cont.contains("BroadcastHashJoin"))
-    assert(!cont.contains("CartesianProduct"))
+    // the benchmark's shingle set rides a broadcast inside the overlap
+    // expression: no join, no aggregate, no exchange on the corpus side
+    for (df <- Seq(Curation.contamination(docs, bench, 3),
+                   Curation.decontaminate(docs, bench, 3))) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("shingle_overlap"), plan)
+      assert(!plan.contains("Exchange") && !plan.contains("Join"), plan)
+    }
     // chunking explodes in place — one pass, no shuffle
     assert(!Curation.chunk(docs, 8, 8)
       .queryExecution.executedPlan.toString.contains("Exchange"))

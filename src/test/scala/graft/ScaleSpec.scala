@@ -35,6 +35,51 @@ class ScaleSpec extends SparkSpec {
       .queryExecution.analyzed eq atCores.queryExecution.analyzed)
   }
 
+  /** Spark jobs started while `body` runs. Listener events arrive
+    * asynchronously but in order, so a marker job started after `body`
+    * returns is the barrier: once the listener sees it, it has seen
+    * every job `body` started. */
+  private def jobsRunBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-run-by-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case g if g == s"$group-marker" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "probe")
+      body
+      sc.setJobGroup(s"$group-marker", "barrier")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("ensureMinParallelism probe: no job over a scan or curate's repetition filter; AQE runs the stages below") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-probe-jobs").toString
+    graft.core.DocSynth.documents(spark, 200L).write.mode("overwrite").parquet(dir)
+    val scan = spark.read.parquet(dir)
+    val par = spark.sparkContext.defaultParallelism
+    assert(jobsRunBy(Skew.ensureMinParallelism(scan, par)) == 0)
+    val kept = graft.pipeline.Curation.repetitionFilter(scan, 0.55)
+    assert(jobsRunBy(Skew.ensureMinParallelism(kept, par, Seq(col("doc_id")))) == 0)
+    // control: over an aggregate the probe materializes its shuffle stage
+    assert(jobsRunBy(Skew.ensureMinParallelism(
+      scan.groupBy("source").count(), par)) >= 1)
+  }
+
   test("embeddingsSkewed: mega class collapses to ONE list/bucket; caps exempt it, benign survives") {
     import graft.core.DocSynth
     import graft.pipeline.{IvfPqIndex, Similarity}
