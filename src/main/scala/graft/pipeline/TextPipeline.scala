@@ -368,10 +368,12 @@ object TextPipeline {
   /** [[editDistancePairs]] with the release handle for the persisted
     * inverted index (three consumers: the per-doc meta aggregate and
     * both self-join sides) — same cache-lifetime contract as
-    * [[nearDupJaccardCached]]. */
+    * [[nearDupJaccardCached]]. The confirm is always the banded
+    * threshold form (`TextExpressions.levenshteinBanded`), which returns
+    * the same rows and distances as a thresholded full levenshtein
+    * matrix. */
   def editDistancePairsCached(docs: DataFrame, maxDist: Int, n: Int = 2,
-                              maxDf: Long = 50L,
-                              bandedConfirm: Boolean = true)
+                              maxDf: Long = 50L)
       : graft.core.Cached[DataFrame] = {
     require(maxDist >= 0, "maxDist >= 0")
     val base = graft.scale.Skew.ensureMinParallelism(
@@ -449,16 +451,12 @@ object TextPipeline {
       // byte-array loop (TextExpressions.levenshteinBanded — Spark's
       // own threshold form costs ~150-300 ns/band-cell on long ASCII
       // texts; the native loop measured 24× cheaper per 18 KB pair,
-      // value-identical by contract and spec). `bandedConfirm = false`
-      // keeps the full matrix — value-identical, exists ONLY so the
-      // long-document smoke (graft.tools.LevBandSmoke) can measure the
-      // band's win at production text lengths against the same
-      // blocking tier.
+      // value-identical by contract and spec). At ~18 KB texts the band
+      // measured 5.8× cheaper per pair than the full matrix, and the
+      // confirm was immaterial end to end (COVERAGE.md "Task 6").
       .withColumn("dist",
-        (if (bandedConfirm)
-           graft.expressions.TextExpressions.levenshteinBanded(
-             col("__ta"), col("__tb"), maxDist)
-         else levenshtein(col("__ta"), col("__tb"))).cast("long"))
+        graft.expressions.TextExpressions.levenshteinBanded(
+          col("__ta"), col("__tb"), maxDist).cast("long"))
       .filter(col("dist") >= 0 && col("dist") <= maxDist)
       .select("doc_a", "doc_b", "dist")
     graft.core.Cached(result, inv)

@@ -218,53 +218,16 @@ object ConcurrentBench {
   /** Concurrent-phase task-duration audit (`SPARK_GRAFT_TASK_AUDIT=1`):
     * the serving tail is slot-availability — an interactive query can
     * start only when a running task finishes, so the tail's size IS the
-    * duration of the longest tasks holding the box. This records, per
-    * stage completed while the concurrent phase runs, the max task
-    * duration, the count of tasks over one second, and the submitting
-    * pool — naming exactly which query shapes hold slots too long
-    * (the fix target), instead of inferring them from victim p95s. */
-  private final class TaskAudit extends org.apache.spark.scheduler.SparkListener {
-    private final class Cell {
-      var maxMs = 0L; var n = 0L; var over1s = 0L
-    }
-    private val stagePool = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    private val stageName = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    private val cells = new java.util.concurrent.ConcurrentHashMap[Int, Cell]()
-    @volatile var enabled = false
-    override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      val pool = Option(js.properties)
-        .map(_.getProperty("spark.scheduler.pool", "default"))
-        .getOrElse("default")
-      // streaming micro-batches overwrite the description with the
-      // multi-line query status — keep the first line only (valid JSON)
-      val desc = Option(js.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.description")))
-        .getOrElse("?")
-        .linesIterator.map(_.trim).find(_.nonEmpty).getOrElse("?")
-      js.stageInfos.foreach { si =>
-        stagePool.put(si.stageId, pool)
-        stageName.put(si.stageId, desc.take(80))
-      }
-    }
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      if (enabled && te.taskInfo != null) {
-        val ms = te.taskInfo.duration
-        val c = cells.computeIfAbsent(te.stageId, _ => new Cell)
-        c.synchronized {
-          c.maxMs = math.max(c.maxMs, ms); c.n += 1
-          if (ms >= 1000L) c.over1s += 1
-        }
-      }
-    def report(topK: Int): String = {
-      import scala.jdk.CollectionConverters._
-      cells.asScala.toSeq.sortBy { case (_, c) => -c.maxMs }.take(topK)
-        .map { case (sid, c) =>
-          val pool = stagePool.getOrDefault(sid, "?")
-          val nm = stageName.getOrDefault(sid, "?").replace("\"", "'")
-          s"""{"stage":$sid,"pool":"$pool","max_task_ms":${c.maxMs},"tasks_over_1s":${c.over1s},"n_tasks":${c.n},"query":"$nm"}"""
-        }.mkString("[", ",", "]")
-    }
-  }
+    * duration of the longest tasks holding the box. This lists, per
+    * stage the concurrent phase ran, the max task duration, the count of
+    * tasks over one second, and the submitting pool and query — naming
+    * exactly which query shapes hold slots too long (the fix target),
+    * instead of inferring them from victim p95s. */
+  private def auditReport(stages: Seq[StageMeter.Stage], topK: Int): String =
+    stages.sortBy(-_.maxTaskMs).take(topK).map { s =>
+      val nm = s.query.take(80).replace("\"", "'")
+      s"""{"stage":${s.id},"pool":"${s.pool}","max_task_ms":${s.maxTaskMs},"tasks_over_1s":${s.slowTasks},"n_tasks":${s.tasks},"query":"$nm"}"""
+    }.mkString("[", ",", "]")
 
   /** FAIR pool weights: interactive client pools outweigh the `stream`
     * drain pool 8:1 — a freed slot goes to a waiting interactive query
@@ -301,7 +264,6 @@ object ConcurrentBench {
   def main(args: Array[String]): Unit = {
     val nThreads = args.headOption.map(_.toInt).getOrElse(4)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Static confs reach the session the way spark-submit --conf does:
     // as spark.* system properties. FAIR across pools; each client
     // thread below claims its own pool, the standard shared-SparkSession
@@ -311,7 +273,7 @@ object ConcurrentBench {
     sys.props("spark.scheduler.mode") = "FAIR"
     sys.props("spark.scheduler.allocation.file") =
       allocationFile(math.max(nThreads, 16))
-    val spark = graft.core.Graft.session("graft-concurrentbench", s"local[$cpus]")
+    val spark = toolSession("graft-concurrentbench")
 
     val all = SparkEntry.queries
     // default rotation = the official headline set PLUS the heavy
@@ -333,9 +295,6 @@ object ConcurrentBench {
     // 5 gives 20 samples/query so p95 is a percentile, not the max.
     val rotations = sys.env.get("SPARK_GRAFT_ROTATIONS")
       .map(_.toInt).getOrElse(1)
-    val audit = new TaskAudit
-    if (sys.env.get("SPARK_GRAFT_TASK_AUDIT").exists(_.nonEmpty))
-      spark.sparkContext.addSparkListener(audit)
 
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val failedQueries =
@@ -379,36 +338,38 @@ object ConcurrentBench {
     // overlapping streams, not a stagger where the first-spawned thread
     // gets a head start while its siblings are still being constructed
     val gate = new java.util.concurrent.CountDownLatch(1)
-    val c0 = new java.util.concurrent.atomic.AtomicLong(0L)
-    audit.enabled = true
-    val threads = (0 until nThreads).map { i =>
-      val t = new Thread(() => {
-        // each client stream gets its own FAIR pool (local property is
-        // inherited by all jobs this thread submits)
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"client$i")
-        gate.await()
-        val rotated = {
-          val off = i * names.size / nThreads
-          names.drop(off) ++ names.take(off)
-        }
-        Seq.fill(rotations)(rotated).flatten.foreach { name =>
-          val t0 = System.nanoTime()
-          run(all, spark, sfDir, name).foreach { e =>
-            errs.add(s"conc$i/$name:$e"); failedQueries.add(name)
+    // one meter measurement over the phase, every job group included:
+    // the stream face's micro-batches run in their query's own group
+    val phase = StageMeter(spark).measure("concurrent", allGroups = true) {
+      val threads = (0 until nThreads).map { i =>
+        val t = new Thread(() => {
+          // each client stream gets its own FAIR pool (local property is
+          // inherited by all jobs this thread submits)
+          spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"client$i")
+          gate.await()
+          val rotated = {
+            val off = i * names.size / nThreads
+            names.drop(off) ++ names.take(off)
           }
-          val sec = (System.nanoTime() - t0) / 1e9
-          conc.merge(name, List(sec), (a, b) => b ::: a)
-        }
-      }, s"cbench-client-$i")
-      t.start(); t
+          Seq.fill(rotations)(rotated).flatten.foreach { name =>
+            val t0 = System.nanoTime()
+            run(all, spark, sfDir, name).foreach { e =>
+              errs.add(s"conc$i/$name:$e"); failedQueries.add(name)
+            }
+            val sec = (System.nanoTime() - t0) / 1e9
+            conc.merge(name, List(sec), (a, b) => b ::: a)
+          }
+        }, s"cbench-client-$i")
+        t.start(); t
+      }
+      val c0 = System.nanoTime()
+      gate.countDown()
+      threads.foreach(_.join())
+      (System.nanoTime() - c0) / 1e9
     }
-    c0.set(System.nanoTime())
-    gate.countDown()
-    threads.foreach(_.join())
-    val concWall = (System.nanoTime() - c0.get()) / 1e9
-    audit.enabled = false
+    val concWall = phase.value
     if (sys.env.get("SPARK_GRAFT_TASK_AUDIT").exists(_.nonEmpty))
-      println(s"""{"mode":"task_audit","top_stages":${audit.report(20)}}""")
+      println(s"""{"mode":"task_audit","top_stages":${auditReport(phase.stages, 20)}}""")
 
     def r3(d: Double) = math.rint(d * 1000) / 1000
     // Bench's rule, kept here: a query that crashed in ANY pass of

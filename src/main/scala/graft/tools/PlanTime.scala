@@ -14,8 +14,7 @@ object PlanTime {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Graft.session("graft-plantime", s"local[$cpus]")
+    val spark = toolSession("graft-plantime")
     val fn = graft.SparkEntry.queries(name)
     fn(spark, sfDir).count() // warm: codegen, JIT, footers
     for (_ <- 1 to reps) {

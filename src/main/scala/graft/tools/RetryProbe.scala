@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.TaskContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
@@ -31,31 +30,6 @@ import org.apache.spark.sql.functions._
   * `{"query":q,"rows":N,"task_failures":K,"identical":true}`.
   */
 object RetryProbe {
-
-  /** Counts failed-then-retried task attempts (the listener sees every
-    * task end, including failed attempts — unlike user accumulators,
-    * whose updates from failed tasks are discarded). */
-  private final class FailureMeter extends SparkListener {
-    val failures = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-      if (!te.taskInfo.successful) failures.incrementAndGet()
-
-    /** Task-end events arrive on the async listener bus AFTER the query
-      * action returns; reading the counter immediately can see 0 for a
-      * run whose injected failures simply haven't been delivered yet
-      * (spurious rc=1), or bleed one query's failures into the next's
-      * baseline. Read it only once it has gone quiet. */
-    def settled(): Long = {
-      var last = failures.get()
-      var quiet = 0
-      while (quiet < 3) { // 3×100 ms with no new events
-        Thread.sleep(100)
-        val now = failures.get()
-        if (now == last) quiet += 1 else { quiet = 0; last = now }
-      }
-      last
-    }
-  }
 
   /** Wraps `df` so the FIRST attempt of every `every`-th source task
     * throws after draining 20 rows (mid-stream). Later attempts pass
@@ -95,8 +69,7 @@ object RetryProbe {
     val spark = graft.core.Graft.session("graft-retryprobe", "local[8, 3]")
     spark.conf.set("spark.sql.shuffle.partitions", 8L)
     spark.sparkContext.setLogLevel("ERROR") // injected failures are noisy at WARN
-    val meter = new FailureMeter
-    spark.sparkContext.addSparkListener(meter)
+    val meter = StageMeter(spark)
 
     val scratch = sys.env.getOrElse("SPARK_GRAFT_SMOKE_SCRATCH",
       "/tmp/graft_retry_probe")
@@ -131,12 +104,15 @@ object RetryProbe {
     var rc = 0
     queries.foreach { case (name, faultSide) =>
       val clean = canon(mkFor(name, docs, emb))
-      val f0 = meter.settled()
-      val injected = canon(faultSide match {
+      // failed attempts of this run's own stages: the meter sees every
+      // task end, failed attempts included — unlike user accumulators,
+      // whose updates from failed tasks are discarded
+      val run = meter.measure(name)(canon(faultSide match {
         case "emb" => mkFor(name, docs, failFirstAttempt(emb, every = 4))
         case _ => mkFor(name, failFirstAttempt(docs, every = 4), emb)
-      })
-      val fired = meter.settled() - f0
+      }))
+      val injected = run.value
+      val fired = run.failed
       val ok = clean == injected
       // a probe where nothing failed proves nothing — fail loudly
       if (!ok || fired == 0) rc = 1

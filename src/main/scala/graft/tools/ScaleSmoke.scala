@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.analytics.{DnsExternalResolvers, HostDailyProfile, PatternFinder}
@@ -28,8 +27,8 @@ import graft.pipeline.{Curation, IncrementalDedup, IvfPqIndex, Similarity, TextP
   * Prints one JSON line per scale:
   * `{"n_docs":N,"queries":{q:{"sec":s,"rows":r,"shuffle_mb":m,
   * "mem_spill_mb":sm,"disk_spill_mb":sd},...}}` where shuffle_mb is the
-  * total shuffle WRITE across the query's stages (the listener
-  * snapshots between queries) — the number that decides whether a
+  * total shuffle WRITE across the query's stages ([[StageMeter]], one
+  * job group per query) — the number that decides whether a
   * shape survives a 100× scale-up — and the spill fields are the
   * memory-pressure smoke's signal: rerun the heavy tier with a
   * deliberately constrained heap (e.g. `-Xmx6g SPARK_GRAFT_CPUS=8`,
@@ -105,73 +104,6 @@ object ScaleSmoke {
         System.err.println(s"[scale] warmup($label) $name FAILED: $e") }
     }
 
-  /** Accumulates shuffle-write and spill bytes across completed stages.
-    * Spill counters are the memory-pressure smoke's core signal: at a
-    * constrained heap a healthy plan completes with NONZERO spill (the
-    * Tungsten operators degrade to disk) instead of OOMing. */
-  private final class ShuffleMeter extends SparkListener {
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val memSpill = new java.util.concurrent.atomic.AtomicLong(0L)
-    val diskSpill = new java.util.concurrent.atomic.AtomicLong(0L)
-    // longest single task since the last snapshot: the hot-partition
-    // straggler signal — a skewed plan can keep total shuffle linear
-    // while one task serializes the whole stage
-    val maxTaskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    // summed jvmGCTime across the cell's tasks: executorRunTime (and so
-    // wall) INCLUDES GC stalls, and on a shared 80 g local[32] JVM the
-    // heap debt a cell inherits is the dominant run-to-run variance on
-    // the heaviest cells (measured r16: q_edit_distance_capped at 5M
-    // swung 89 → 264 s between runs with IDENTICAL shuffle bytes).
-    // gc_sec makes that debt a recorded number instead of a mystery.
-    val gcMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    // raw event-ARRIVAL counter (every callback, even ones that leave
-    // the metric snapshot unchanged — e.g. a late task whose duration
-    // is below the current maxTaskMs): settle()'s quiet test is exact
-    // on arrivals, where snapshot equality was only heuristic
-    val events = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      events.incrementAndGet()
-      val m = sc.stageInfo.taskMetrics
-      bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      memSpill.addAndGet(m.memoryBytesSpilled)
-      diskSpill.addAndGet(m.diskBytesSpilled)
-      gcMs.addAndGet(m.jvmGCTime)
-    }
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      events.incrementAndGet()
-      if (te.taskInfo != null)
-        maxTaskMs.accumulateAndGet(te.taskInfo.duration, math.max)
-    }
-
-    /** Stage/task events arrive on the ASYNC listener bus after the
-      * query action returns; reading the counters immediately can miss
-      * a cell's own final-stage events — and worse, have them land
-      * AFTER the next cell's maxTaskMs reset, printing one cell's
-      * straggler as its neighbor's (RetryProbe.settled's rationale,
-      * applied to the meter). Wait until event ARRIVALS go quiet —
-      * bounded: zombie tasks of a failed/retried stage can trickle in
-      * indefinitely, and an unbounded wait would hang the smoke
-      * silently, so after ~30 s give up loudly (the deltas may then be
-      * cross-contaminated by late events, which the warning states). */
-    def settle(): Unit = {
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      var last = events.get()
-      var quiet = 0
-      while (quiet < 2) { // 2×100 ms with no new event arrivals
-        if (System.nanoTime() > deadline) {
-          System.err.println("[scale] WARNING: listener bus still " +
-            "receiving events after 30 s settle wait (zombie tasks of a " +
-            "retried stage?) — proceeding; this cell's deltas may " +
-            "include a neighbor's late events")
-          return
-        }
-        Thread.sleep(100)
-        val now = events.get()
-        if (now == last) quiet += 1 else { quiet = 0; last = now }
-      }
-    }
-  }
-
   /** Synthetic `events` rows at arbitrary scale, mirroring the driver
     * testdata's shape (TESTDATA.md: 1M rows/sf, 15k users/sf, 5 event
     * types, 30-day window; ts built as epoch-nanos and re-encoded to the
@@ -201,7 +133,7 @@ object ScaleSmoke {
 
   /** The flow-analytics tier: run the three heavy join/window shapes at
     * each scale, printing the same JSON rows as the doc tier. */
-  private def flowTier(spark: SparkSession, meter: ShuffleMeter,
+  private def flowTier(spark: SparkSession, meter: StageMeter,
                        scratch: String, scales: Seq[Long]): Unit = {
     def querySet(flows: DataFrame): Seq[(String, () => DataFrame)] = Seq(
       "q_host_daily_profile" -> (() => HostDailyProfile(flows)),
@@ -250,10 +182,16 @@ object ScaleSmoke {
   }
 
   /** One timed query cell: wall seconds, output rows, shuffle-write MB,
-    * and memory/disk spill MB (all deltas against the listener between
-    * queries). Spill fields read 0.0 on an ample heap and must be
-    * NONZERO-not-OOM under the constrained-heap memory-pressure smoke. */
-  private def timedCell(meter: ShuffleMeter, name: String, n: Long,
+    * memory/disk spill MB, the longest task and summed GC, all over the
+    * stages of the cell's own job group. Spill fields read 0.0 on an
+    * ample heap and must be NONZERO-not-OOM under the constrained-heap
+    * memory-pressure smoke; the longest task is the hot-partition
+    * straggler signal (a skewed plan can keep total shuffle linear while
+    * one task serializes the whole stage); gc_sec records the heap debt
+    * a cell inherits, because executor time (and so wall) INCLUDES GC
+    * stalls (measured r16: q_edit_distance_capped at 5M swung 89 → 264 s
+    * between runs with IDENTICAL shuffle bytes). */
+  private def timedCell(meter: StageMeter, name: String, n: Long,
                         mk: () => DataFrame): String = {
     // GC OUTSIDE the timed window (same isolation Bench.scala uses):
     // after a per-decade warm pass over the 5M tier the old gen is full
@@ -264,28 +202,24 @@ object ScaleSmoke {
     // the same ~78.8 s max task; with the pre-cell GC all three cells
     // return to their linear walls). The pause this System.gc() pays is
     // real work the JVM owes either way — the point is to charge it to
-    // the protocol, not to whichever query the collector preempts.
+    // the protocol, not to whichever query the collector preempts. The
+    // pause gives ContextCleaner's async thread a beat to reclaim what
+    // the GC freed (Bench's isolation protocol).
     System.gc()
     Thread.sleep(200)
-    meter.settle() // prior cell's async events must not cross the reset
-    val b0 = meter.bytes.get()
-    val m0 = meter.memSpill.get()
-    val d0 = meter.diskSpill.get()
-    val g0 = meter.gcMs.get()
-    meter.maxTaskMs.set(0L) // max, not a delta — reset per cell
-    val t0 = System.nanoTime()
-    val rows =
+    val run = meter.measure(name) {
       try mk().count()
       catch { case e: Throwable =>
         System.err.println(s"[scale] $name@$n FAILED: $e"); -1L }
-    val sec = (System.nanoTime() - t0) / 1e9
-    meter.settle() // this cell's own tail events, before the deltas read
-    val mb = (meter.bytes.get() - b0) / 1e6
-    val sm = (meter.memSpill.get() - m0) / 1e6
-    val sd = (meter.diskSpill.get() - d0) / 1e6
-    val mt = meter.maxTaskMs.get()
-    val gs = (meter.gcMs.get() - g0) / 1e3
-    f"""\"$name\":{\"sec\":$sec%.2f,\"rows\":$rows,\"shuffle_mb\":$mb%.1f,\"mem_spill_mb\":$sm%.1f,\"disk_spill_mb\":$sd%.1f,\"max_task_ms\":$mt%d,\"gc_sec\":$gs%.1f}"""
+    }
+    val st = run.stages
+    val sec = run.wallMs / 1e3
+    val mb = st.map(_.shuffleBytes).sum / 1e6
+    val sm = st.map(_.memSpill).sum / 1e6
+    val sd = st.map(_.diskSpill).sum / 1e6
+    val mt = st.map(_.maxTaskMs).maxOption.getOrElse(0L)
+    val gs = st.map(_.gcMs).sum / 1e3
+    f"""\"$name\":{\"sec\":$sec%.2f,\"rows\":${run.value},\"shuffle_mb\":$mb%.1f,\"mem_spill_mb\":$sm%.1f,\"disk_spill_mb\":$sd%.1f,\"max_task_ms\":$mt%d,\"gc_sec\":$gs%.1f}"""
   }
 
   /** The one bucketed-layout recipe (32 doc_id buckets, sorted) shared
@@ -512,7 +446,7 @@ object ScaleSmoke {
     * design), cluster dedup's star edges keep the 50k-member family at
     * 50k edges instead of 1.25 B, and connected components converges
     * with no hot-partition straggler. */
-  private def skewTier(spark: SparkSession, meter: ShuffleMeter,
+  private def skewTier(spark: SparkSession, meter: StageMeter,
                        scratch: String, scales: Seq[Long]): Unit = {
     val family = Seq(
       "q_minhash_candidates_capped", "q_simhash_candidates_capped",
@@ -567,7 +501,7 @@ object ScaleSmoke {
     * most once per probing query. A `mega_cluster` row proves the skew
     * corpus really holds the ~10% class (a silently-dropped cluster
     * would also time flat). */
-  private def embSkewTier(spark: SparkSession, meter: ShuffleMeter,
+  private def embSkewTier(spark: SparkSession, meter: StageMeter,
                           scratch: String, scales: Seq[Long]): Unit = {
     import graft.core.DocSynth
     def queries(emb: DataFrame, docs: DataFrame, n: Long, tag: String)
@@ -673,10 +607,8 @@ object ScaleSmoke {
         else if (skewMode) "500000"
         else if (embSkewMode) "1000000" else "5000,50000")
       .split(",").toSeq.filter(_.nonEmpty).map(_.toLong)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Graft.session("graft-scalesmoke", s"local[$cpus]")
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
+    val spark = toolSession("graft-scalesmoke")
+    val meter = StageMeter(spark)
     // SPARK_GRAFT_SMOKE_SCRATCH isolates concurrent smoke runs — two
     // JVMs sharing the default dir overwrite each other's materialized
     // corpora mid-read

@@ -439,12 +439,6 @@ class PipelineSpec extends SparkSpec {
     assert(got == Map(
       (1L, 2L) -> 3L, (1L, 3L) -> 3L, (1L, 5L) -> 0L,
       (2L, 5L) -> 3L, (3L, 5L) -> 3L))
-    // the full-matrix confirm (bandedConfirm = false — exists only for
-    // the LevBandSmoke A/B) is value-identical: same pairs, same dists
-    val full = rowsOf(TextPipeline.editDistancePairsCached(d, maxDist = 3,
-        n = 2, maxDf = 0, bandedConfirm = false).result)
-      .map(r => (r("doc_a"), r("doc_b")) -> r("dist")).toMap
-    assert(full == got)
   }
 
   test("corpusDrift: zero for identical snapshots, positive under drift, per-source isolation") {

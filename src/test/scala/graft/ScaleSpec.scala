@@ -35,37 +35,10 @@ class ScaleSpec extends SparkSpec {
       .queryExecution.analyzed eq atCores.queryExecution.analyzed)
   }
 
-  /** Spark jobs started while `body` runs. Listener events arrive
-    * asynchronously but in order, so a marker job started after `body`
-    * returns is the barrier: once the listener sees it, it has seen
-    * every job `body` started. */
-  private def jobsRunBy(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"jobs-run-by-${System.nanoTime}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet()
-          case g if g == s"$group-marker" => marker.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "probe")
-      body
-      sc.setJobGroup(s"$group-marker", "barrier")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
+  /** Spark jobs started while `body` runs, counted by the stage meter
+    * (its own job group, exact drain). */
+  private def jobsRunBy(body: => Unit): Int =
+    graft.tools.StageMeter(spark).measure("jobs-run-by")(body).jobs
 
   test("ensureMinParallelism probe: no job over a scan or curate's repetition filter; AQE runs the stages below") {
     val dir = java.nio.file.Files.createTempDirectory("graft-probe-jobs").toString
