@@ -82,8 +82,8 @@ object RefBpe {
     merges.toSeq
   }
 
-  /** Independent twin of
-    * [[graft.pipeline.TextPipeline.bpeTrainBatched]]: per round, count
+  /** Independent twin of [[graft.pipeline.TextPipeline.bpeTrain]] at
+    * any `batchSize`: per round, count
     * pairs once, truncate to the top 4·k candidates (count desc, pair
     * asc — the truncation is part of the algorithm contract), greedily
     * adopt up to k pairs with mutually disjoint symbols. */

@@ -210,13 +210,8 @@ object SparkEntry {
         (col("packets") + 1).as("packets"),
         (col("bytes") * 2).as("bytes")))
     // inline = explode straight to columns: one generator pass, no
-    // struct-expansion select after it. An input already carrying
-    // biflow_key keeps it alongside the fanout — BOTH legs share the
-    // key (it is symmetric under endpoint swap), which is what lets the
-    // grouped pairing reuse a pre-echo exchange (see q_pattern_finder)
-    val keep = if (f.columns.contains("biflow_key"))
-      Seq(col("biflow_key")) else Nil
-    f.filter(col("src_ip4").isNotNull).select(keep :+ inline(both): _*)
+    // struct-expansion select after it
+    f.filter(col("src_ip4").isNotNull).select(inline(both))
   }
 
   /** One per implemented operator from SURVEY.md §2. */
@@ -650,35 +645,15 @@ object SparkEntry {
       // self-join semantics). SHAPE SHOOTOUT (r18, bench protocol, 4
       // timed passes, sf0.1): join 0.425 s med / 0.379 min; broadcast-
       // pinned join 0.480/0.416; grouped collect_list pairing 0.738/
-      // 0.617 (r17's choice — its ObjectHashAggregate partial+final is
-      // object-path, ~8 µs/row, and absorbs the isolation protocol's
-      // GC/JIT disruption worst, while the join stays whole-stage
-      // codegen end to end). The join's duplicated upstream subtree —
-      // the r16 objection to this shape — costs nothing now: AQE reuses
-      // the widening exchange (ReusedExchange) and converts the rsp
-      // side to a runtime broadcast at this size, while at corpus scale
-      // the same declaration stays a skew-splittable shuffle join.
-      // biflowsGrouped remains the bounded-window streaming shape
-      // (one-shuffle, no build side), spec-pinned equal.
+      // 0.617 (its ObjectHashAggregate partial+final is object-path,
+      // ~8 µs/row, while the join stays whole-stage codegen end to
+      // end; at 10M events it took 5.75 s against the join's 3.41 s,
+      // COVERAGE.md "flow-tier third decade"). AQE reuses
+      // the widening exchange (ReusedExchange) and converts the rsp side
+      // to a runtime broadcast at this size, while at corpus scale the
+      // same declaration stays a skew-splittable shuffle join.
       PatternFinder.classify(
         PatternFinder.biflows(withBiflowEcho(flowsWide(s, dir)), 500L),
-        patterns, binThresholds,
-        keep = Seq("biflow_key", "req_id", "rsp_id", "client_ip",
-          "server_ip"))
-        .orderBy("req_id", "rsp_id")
-    }),
-
-    // the grouped-pairing twin (biflowsGrouped — the reference's own
-    // groupByKey execution shape, retained as the bounded-window
-    // STREAMING form after the r18 shootout made the join the batch
-    // default). Same rows by construction; registering it against the
-    // SAME oracle upgrades the spec-pinned equality to a hash gate, and
-    // ConcurrentBench carries it as a serving row so the streaming
-    // shape's cost sits on the record next to the join shape's
-    // (r18 verdict optional task 8)
-    "q_pattern_finder_grouped" -> ((s, dir) => {
-      PatternFinder.classify(
-        PatternFinder.biflowsGrouped(withBiflowEcho(flowsWide(s, dir)), 500L),
         patterns, binThresholds,
         keep = Seq("biflow_key", "req_id", "rsp_id", "client_ip",
           "server_ip"))
@@ -1755,7 +1730,7 @@ object SparkEntry {
     // the independent RefBpe.trainBatched twin, embedded at dump time
     "q_bpe_train_batched" -> ((s, dir) => {
       import s.implicits._
-      TextPipeline.bpeTrainBatched(Tables.documents(s, dir),
+      TextPipeline.bpeTrain(Tables.documents(s, dir),
           numMerges = 24, batchSize = 8)
         .zipWithIndex.map { case ((p, c), i) => (i, p, c) }
         .toDF("rank", "pair", "cnt").orderBy("rank")
@@ -2325,10 +2300,7 @@ object SparkEntry {
       baseOracles("q_edit_distance_pairs"), "df <= 20", "df <= 10")) +
     // persisted-index search must equal the monolithic IVF-PQ — same oracle
     ("q_embed_ann_ivfpq_idx" -> baseOracles("q_embed_ann_ivfpq")) +
-    // grouped pairing (the bounded-window streaming shape) must produce
-    // the join form's exact rows — same oracle, hash-gated
-    ("q_pattern_finder_grouped" -> baseOracles("q_pattern_finder")) +
-    // ...and so must the half-build + exactly-once batch-append path
+    // so must the half-build + exactly-once batch-append path
     ("q_embed_ann_ivfpq_batch" -> baseOracles("q_embed_ann_ivfpq")) +
     // frozen-table append must search exactly like the monolithic index
     ("q_embed_ann_ivfpq_append" -> baseOracles("q_embed_ann_ivfpq")) +

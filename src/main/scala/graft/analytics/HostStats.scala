@@ -12,8 +12,9 @@ import graft.functions.{BitFunctions, NetFunctions}
   * joins (:254-264). Restructured Spark-first into ONE groupBy(src_ip) with
   * multiple aggregates: a single shuffle instead of 5 shuffles + 4 joins
   * (SURVEY.md §2.3 J2). Distinct counts are exact here (the oracle needs
-  * determinism); [[applyApprox]] is the 100 TB path (HLL sketches, no extra
-  * shuffle for distinct expansion).
+  * determinism); the streaming form
+  * [[graft.streaming.StreamingAnalytics.hostStats]] uses HLL sketches
+  * (no extra shuffle for distinct expansion).
   *
   * TCP-flag vector (host_stats.py:54-71, 228-245): 8 bit-extract columns
   * summed — stays in whole-stage codegen, vs the reference's per-record
@@ -43,19 +44,6 @@ object HostStats {
       round(avg(col("end_ms") - col("start_ms")) / 1000.0d, 4).as("avg_duration_s"),
       count_distinct(col("dst_port")).as("dport_count"),
       count_distinct(col("dst_ip")).as("peer_number")) ++ flagAggs
-    base(flows).agg(count(lit(1)).as("flows"), aggs: _*)
-  }
-
-  /** Scale variant: HLL distinct counts (approx_count_distinct). Exact
-    * multi-column count_distinct forces an expand+second aggregate; HLL
-    * keeps the plan at one pass — the right trade at 100 TB. */
-  def applyApprox(flows: DataFrame, rsd: Double = 0.01): DataFrame = {
-    val aggs = Seq(
-      sum("packets").as("packets"),
-      sum("bytes").as("bytes"),
-      round(avg(col("end_ms") - col("start_ms")) / 1000.0d, 4).as("avg_duration_s"),
-      approx_count_distinct(col("dst_port"), rsd).as("dport_count"),
-      approx_count_distinct(col("dst_ip"), rsd).as("peer_number")) ++ flagAggs
     base(flows).agg(count(lit(1)).as("flows"), aggs: _*)
   }
 }

@@ -63,9 +63,7 @@ object PatternFinder {
   /** Canonical biflow key of ONE flow's endpoints: sorted "port:ip"
     * strings joined by "|" (pattern_finder.py:158). Symmetric under
     * endpoint swap, so a request and its echoed/observed response map to
-    * the SAME key — callers may compute it BEFORE a response-echo fanout
-    * and repartition on it once ([[biflowsGrouped]] then reuses that
-    * exchange for its groupBy instead of shuffling a second time). */
+    * the SAME key. */
   def biflowKey: Column = concat_ws("|", sort_array(array(
     concat_ws(":", col("src_port"), col("src_ip4")),
     concat_ws(":", col("dst_port"), col("dst_ip")))))
@@ -76,18 +74,11 @@ object PatternFinder {
     * must start within `toleranceMs` of each other (configuration.yml:110).
     *
     * Equi-join on the canonical key carries the shuffle; the time window is
-    * a post-join filter, so no cartesian blowup.
-    *
-    * `broadcastResponses = true` pins the response side as a broadcast
-    * build: for a BOUNDED flow window (the reference pairs within one
-    * 10 s batch — pattern_finder.py:168-194 — so the side is MBs, not
-    * the corpus) this removes both shuffles, the sort, and the AQE
-    * re-plan round. Leave it false when the input is an unbounded
-    * corpus slice — a corpus-sized broadcast is an OOM, and AQE
-    * already converts small sides at runtime. */
+    * a post-join filter, so no cartesian blowup. AQE converts a small
+    * response side to a runtime broadcast, while at corpus scale the same
+    * declaration stays a skew-splittable shuffle join. */
   def biflows(flows: DataFrame, toleranceMs: Long = 500L,
-              vector: Seq[Column] = Nil,
-              broadcastResponses: Boolean = false): DataFrame = {
+              vector: Seq[Column] = Nil): DataFrame = {
     val tagged = flows
       .filter(col("src_ip4").isNotNull && col("src_port").isNotNull &&
         col("dst_port").isNotNull)
@@ -111,82 +102,8 @@ object PatternFinder {
         col("start_ms").as("rsp_start_ms"), col("end_ms").as("rsp_end_ms"),
         col("packets").as("rsp_packets"), col("bytes").as("rsp_bytes"))
         ++ vecRsp: _*)
-    req.join(if (broadcastResponses) broadcast(rsp) else rsp,
-        Seq("biflow_key"))
+    req.join(rsp, Seq("biflow_key"))
       .filter(abs(col("req_start_ms") - col("rsp_start_ms")) <= toleranceMs)
-  }
-
-  /** [[biflows]] as grouped pairing — the reference's own execution shape
-    * (pattern_finder.py:168-194 pairs within a `groupByKey` of one batch
-    * window): ONE shuffle on the biflow key carries every flow once with
-    * req/rsp struct tags, each key cross-pairs its request and response
-    * lists in place, and the tolerance filter prunes the fanout. Output
-    * rows and columns are identical to the join form (spec-pinned).
-    *
-    * Use for bounded batch windows: no second exchange, no broadcast
-    * build, no materialization barrier — the whole pairing is
-    * scan → exchange → aggregate, three pipelined stages. The per-key
-    * lists live in one aggregation buffer, so flows-per-biflow-key must
-    * be window-bounded (the reference's contract); for unbounded corpus
-    * slices with possibly hot keys use the join form, whose shuffle join
-    * AQE can skew-split. */
-  def biflowsGrouped(flows: DataFrame, toleranceMs: Long = 500L,
-                     vector: Seq[Column] = Nil): DataFrame = {
-    // an input that ALREADY carries biflow_key (e.g. keyed upstream and
-    // repartitioned on it, so the groupBy below reuses that exchange —
-    // see SparkEntry's q_pattern_finder) keeps its attribute: recomputing
-    // would mint a new exprId and force a second, redundant shuffle
-    val hasKey = flows.columns.contains("biflow_key")
-    // fused: one filter + one select (each Dataset op is an analyzer
-    // pass; chained withColumns cost driver latency on sub-second plans)
-    val withVec = flows
-      .filter(col("src_ip4").isNotNull && col("src_port").isNotNull &&
-        col("dst_port").isNotNull)
-      .select(col("*") +:
-        ((if (hasKey) Nil
-          // the shared [[biflowKey]] definition — a local rebuild could
-          // silently drift from the pre-keyed path's construction
-          else Seq(biflowKey.as("biflow_key"))) ++
-         (if (vector.isEmpty) Nil
-          else Seq(array(vector.map(_.cast("double")): _*).as("_vec")))): _*)
-    val vecReq = if (vector.isEmpty) Nil else Seq(col("_vec").as("req_vec"))
-    val vecRsp = if (vector.isEmpty) Nil else Seq(col("_vec").as("rsp_vec"))
-    val isReq = col("src_port") > col("dst_port")
-    // `when` without otherwise is null on the other side, and
-    // collect_list drops nulls — each flow lands in exactly one list
-    val reqS = struct(Seq(col("flow_id").as("req_id"),
-      col("src_ip4").as("client_ip"), col("dst_ip").as("server_ip"),
-      col("start_ms").as("req_start_ms"), col("end_ms").as("req_end_ms"),
-      col("packets").as("req_packets"), col("bytes").as("req_bytes"))
-      ++ vecReq: _*)
-    val rspS = struct(Seq(col("flow_id").as("rsp_id"),
-      col("start_ms").as("rsp_start_ms"), col("end_ms").as("rsp_end_ms"),
-      col("packets").as("rsp_packets"), col("bytes").as("rsp_bytes"))
-      ++ vecRsp: _*)
-    val reqCols = Seq("req_id", "client_ip", "server_ip", "req_start_ms",
-      "req_end_ms", "req_packets", "req_bytes") ++
-      (if (vector.isEmpty) Nil else Seq("req_vec"))
-    val rspCols = Seq("rsp_id", "rsp_start_ms", "rsp_end_ms",
-      "rsp_packets", "rsp_bytes") ++
-      (if (vector.isEmpty) Nil else Seq("rsp_vec"))
-    withVec
-      .groupBy("biflow_key")
-      .agg(collect_list(when(isReq, reqS)).as("__reqs"),
-        collect_list(when(!isReq, rspS)).as("__rsps"))
-      .select(col("biflow_key"), explode(col("__reqs")).as("__rq"),
-        col("__rsps"))
-      // tolerance filter FUSED into the response explode's lambda: the
-      // generator never materializes out-of-window pairs (they were
-      // previously produced and then filtered), and one Dataset op
-      // replaces two (each op is a full analyzer pass — driver latency
-      // on sub-second plans)
-      .select(col("biflow_key"), col("__rq"),
-        explode(filter(col("__rsps"), rs =>
-          abs(col("__rq.req_start_ms") - rs.getField("rsp_start_ms")) <=
-            toleranceMs)).as("__rs"))
-      .select(col("biflow_key") +:
-        (reqCols.map(c => col(s"__rq.$c").as(c)) ++
-          rspCols.map(c => col(s"__rs.$c").as(c))): _*)
   }
 
   /** The biflow comparison vector for config-driven pairs: request values

@@ -6,14 +6,19 @@ import org.apache.spark.storage.StorageLevel
 /** A lazy operator result together with the persisted intermediates that
   * back it.
   *
-  * The index-building operators (TextPipeline.nearDupJaccard /
-  * minhashCandidates / simhashCandidates, Similarity.annLshBanded) persist
-  * an intermediate frame that several downstream joins re-read. Because the
-  * returned DataFrame is lazy, that cache necessarily outlives the call —
-  * Spark has no scope-based release point for it. The `*Cached` variants
-  * return this handle so a driver job looping over many corpora can release
-  * each corpus's index deterministically instead of letting MEMORY_AND_DISK
-  * residue accumulate until `spark.catalog.clearCache()`.
+  * The index-building operators persist an intermediate frame that several
+  * downstream joins re-read. Because the returned DataFrame is lazy, that
+  * cache necessarily outlives the call — Spark has no scope-based release
+  * point for it. The `*Cached` variants (TextPipeline.nearDupJaccard /
+  * editDistancePairs / minhashCandidates / simhashCandidates / dupSpans /
+  * removeDupSpans, Similarity.annLshBanded / semDedup, Curation.
+  * dsirWeights / dsirSelect) return this handle so a driver job looping
+  * over many corpora can release each corpus's index deterministically
+  * instead of letting MEMORY_AND_DISK residue accumulate until
+  * `spark.catalog.clearCache()`. An operator gets a `*Cached` variant only
+  * where a caller or spec releases the handle: Similarity.hybridDedup and
+  * Multimodal.phashCandidates ship the plain form alone, and their frames
+  * go with `spark.catalog.clearCache()`.
   *
   * `unpersist` does not invalidate `result`: a later action simply
   * recomputes the index (correct, just slower) — the same semantics as

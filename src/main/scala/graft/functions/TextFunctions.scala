@@ -68,11 +68,6 @@ object TextFunctions {
     round((lenScore + punctPen + stopScore) / 3.0d, 6)
   }
 
-  /** Composite document quality score in [0,1]: length band + low punct +
-    * some stopwords (heuristic quality filter for corpus cleaning). */
-  def qualityScore(text: Column, stopwords: Seq[String]): Column =
-    qualityFromRaw(length(text), punctRatio(text), stopwordRatio(text, stopwords))
-
   /** Deterministic 47-bit polynomial rolling-hash fingerprint of a string:
     * h = Σ h*31 + code(c), mod 2^47-115. Portable: same arithmetic is
     * expressible in ANSI SQL (list_reduce in DuckDB) for oracle checks. */
@@ -129,9 +124,4 @@ object TextFunctions {
         struct((-s0.getField("hits")).as("neg"), s0.getField("lang").as("lang"))): _*)),
       1).getField("lang")
   }
-
-  /** Simple language-ID heuristic: pick the language whose stopword list
-    * hits the most tokens; ties → lexicographically first language. */
-  def langIdHeuristic(text: Column, profiles: Map[String, Seq[String]]): Column =
-    langIdFromTokens(tokens(text), profiles)
 }

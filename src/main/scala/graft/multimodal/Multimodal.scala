@@ -79,16 +79,7 @@ object Multimodal {
     * shared) that is [[dedupMedia]]'s job, not a near-dup miss. Pass
     * `maxBucket = 0` to disable explicitly. */
   def phashCandidates(mediaDf: DataFrame, maxHamming: Int = 3,
-                      maxBucket: Long = 4096L): DataFrame =
-    phashCandidatesCached(mediaDf, maxHamming, maxBucket).result
-
-  /** [[phashCandidates]] with the release handle for the persisted
-    * phash frame (read by the band explode and both confirm-join
-    * sides) — the [[graft.core.Cached]] contract every other candidate
-    * generator follows, so a long session can unpersist it. */
-  def phashCandidatesCached(mediaDf: DataFrame, maxHamming: Int = 3,
-                            maxBucket: Long = 4096L)
-      : graft.core.Cached[DataFrame] = {
+                      maxBucket: Long = 4096L): DataFrame = {
     val ph = phashFrame(mediaDf)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // both 8-byte hash halves ride the band explode so the Hamming
@@ -110,7 +101,7 @@ object Multimodal {
           .agg(count(lit(1)).as("__n")).filter(col("__n") <= maxBucket)
           .select("band_idx", "band_val"),
         Seq("band_idx", "band_val"), "left_semi")
-    val confirmed = kept.as("a").join(kept.as("b"),
+    kept.as("a").join(kept.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_val") === col("b.band_val") &&
           col("a.media_id") < col("b.media_id"))
@@ -121,7 +112,6 @@ object Multimodal {
       .filter(col("hamming") <= maxHamming)
       .distinct()
       .select("media_a", "media_b", "hamming")
-    graft.core.Cached(confirmed, ph)
   }
 
   /** Byte values of a blob as array<long> via its hex dump. The hex string

@@ -36,7 +36,12 @@ import org.apache.spark.sql.functions._
   * [[graft.plans.AsOfJoinPlan]] is the native physical-operator tier of
   * the same semantics (sorted-merge exec, no unioned-schema
   * materialization); this Column form stays the default because its plan
-  * is pure built-ins (AQE, whole-stage codegen, oracle-portable).
+  * is pure built-ins (AQE, whole-stage codegen, oracle-portable). With
+  * every output column consumed (4 cores, same rows, medians of 12
+  * alternating passes) the native exec ran 1.22 s against this form's
+  * 1.46 s on 1M ScaleSmoke-shaped events, and 0.76 s against 0.85 s on
+  * 100k. A bare `count()` of this form prunes the window (no output
+  * column needs it), so a count-timed row does not time the join.
   *
   * @param key       equi-join key column names (present on both sides)
   * @param leftTs    left ordering column (numeric, e.g. epoch millis)

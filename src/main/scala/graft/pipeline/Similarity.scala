@@ -1056,7 +1056,7 @@ object Similarity {
 
   /** Nearest-centroid assignment over the deterministic scrambled-id
     * sample quantizer: (vec_id, vec, cid, csim) — the SemDeDup coarse
-    * stage, shared by [[semDedupCached]] and [[hybridDedupCached]]. The
+    * stage, shared by [[semDedupCached]] and [[hybridDedup]]. The
     * winner's centroid similarity is csim by construction — carried
     * for the keepOutlier rule at zero extra passes. MAP-ONLY via
     * [[assignByCentroids]] (centroids baked into the projection): no
@@ -1149,18 +1149,7 @@ object Similarity {
     * null for unclustered documents. */
   def hybridDedup(docs: DataFrame, embeddings: DataFrame, nlist: Int,
                   n: Int = 2, minJaccard: Double = 0.5,
-                  maxCluster: Long = 0L, tileTarget: Long = 0L): DataFrame =
-    hybridDedupCached(docs, embeddings, nlist, n, minJaccard, maxCluster,
-      tileTarget).result
-
-  /** [[hybridDedup]] with the release handle for the persisted
-    * per-doc hashed-gram frame (read by the pair join's two sides; the
-    * per-doc sizes ride the index rows through the pair join as a
-    * carried int) and the slim (doc_id, cid) assignment. */
-  def hybridDedupCached(docs: DataFrame, embeddings: DataFrame, nlist: Int,
-                        n: Int = 2, minJaccard: Double = 0.5,
-                        maxCluster: Long = 0L, tileTarget: Long = 0L)
-      : graft.core.Cached[DataFrame] = {
+                  maxCluster: Long = 0L, tileTarget: Long = 0L): DataFrame = {
     // the (doc_id, cid) assignment feeds BOTH the clustering join and the
     // final attach — persist the slim frame (2 longs/row) so the
     // O(N·nlist) assignment pass runs once, as semDedupCached does
@@ -1225,10 +1214,9 @@ object Similarity {
       .filter(round(col("shared").cast("double") /
         (col("size_a") + col("size_b") - col("shared")), 6) >= minJaccard)
       .select(col("doc_b").as("doc_id"))
-    val kept = docs.select("doc_id")
+    docs.select("doc_id")
       .join(losers, Seq("doc_id"), "left_anti")
       .join(cids, Seq("doc_id"), "left")
-    graft.core.Cached(kept, hashed, cids)
   }
 
   /** Per-plane hyperplane sign bits as a '0'/'1' string (plane 0 first).

@@ -893,70 +893,39 @@ object TextPipeline {
     * `numMerges` merges by repeatedly taking the corpus-wide most frequent
     * adjacent symbol pair. Runs on the WORD-FREQUENCY table, not the raw
     * corpus — the classic compression that makes BPE training tractable:
-    * one corpus scan builds (word, count), and every iteration after that
+    * one corpus scan builds (word, count), and every round after that
     * touches only the vocabulary (|V| rows, millions at worst at 100 TB —
-    * a per-iteration job of seconds, not a corpus pass).
+    * a per-round job of seconds, not a corpus pass).
     *
-    * Each iteration re-symbolizes words from scratch with the native
+    * Each round re-symbolizes words from scratch with the native
     * [[graft.expressions.BpeEncode]] under the merges learned so far —
     * O(len·merges) per word, but the plan stays ONE expression deep
     * instead of an iteration-deep lineage chain, so analysis cost and
-    * checkpoint pressure stay constant. The only driver-side data is one
-    * (pair, count) row per iteration — the argmax, same scalar-per-round
-    * pattern as [[Curation.connectedComponentsStar]]'s convergence probe.
-    * Training stops early when the best pair's count drops below
-    * `minPairCount` (merging noise pairs hurts downstream tokenization).
+    * checkpoint pressure stay constant. Pairs whose count is below
+    * `minPairCount` are never merged (merging noise pairs hurts
+    * downstream tokenization); training stops when none is left.
+    *
+    * `batchSize` merges are adopted per Spark job — the standard
+    * batched-BPE trick, which makes a 30k-merge vocab ~30k/batch jobs
+    * instead of 30k. Per round ONE pair-count job runs over the word
+    * table; the top `4·k` (count desc, pair asc) rows come back
+    * (metadata-sized), and a greedy in-order sweep adopts up to `k` pairs
+    * whose symbols are MUTUALLY DISJOINT — disjointness guarantees the
+    * adopted merges cannot interact, so applying them together is
+    * order-independent. The approximation vs one-at-a-time BPE: a pair
+    * CREATED by an earlier merge in the same batch (e.g. "x ab" right
+    * after "a b") cannot be adopted until the next round. The default
+    * `batchSize = 1` is exactly the sequential algorithm (the argmax per
+    * round, spec-pinned against [[graft.RefBpe.train]]); any batch
+    * matches the independent in-memory [[graft.RefBpe.trainBatched]]
+    * (oracle-checked via q_bpe_train_batched). The 4·k candidate
+    * truncation is part of the algorithm contract (both implementations
+    * apply it), keeping the driver exchange bounded.
     *
     * Returns merges in learned order with their counts at merge time. */
-  def bpeTrain(docs: DataFrame, numMerges: Int,
+  def bpeTrain(docs: DataFrame, numMerges: Int, batchSize: Int = 1,
                minPairCount: Long = 2L): Seq[(String, Long)] = {
-    val words = docs
-      .select(explode(graft.expressions.TextExpressions.wordShingles(col("text"), 1)).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    var go = true
-    while (go && merges.length < numMerges) {
-      val pairCol = transform(sequence(lit(1), size(col("syms")) - 1),
-        i => concat_ws(" ", element_at(col("syms"), i),
-          element_at(col("syms"), i + 1)))
-      val best = words
-        .withColumn("syms", graft.expressions.TextExpressions
-          .bpeEncode(col("word"), merges.map(_._1).toSeq))
-        .filter(size(col("syms")) > 1)
-        .select(col("cnt"), explode(pairCol).as("pair"))
-        .groupBy("pair").agg(sum("cnt").as("pcnt"))
-        .orderBy(col("pcnt").desc, col("pair").asc).limit(1)
-        .collect()
-      if (best.isEmpty || best(0).getLong(1) < minPairCount) go = false
-      else merges += ((best(0).getString(0), best(0).getLong(1)))
-    }
-    words.unpersist()
-    merges.toSeq
-  }
-
-  /** [[bpeTrain]] at production vocab scale: up to `batchSize` merges
-    * adopted per Spark job instead of one — the standard batched-BPE
-    * trick (used by every fast trainer), which makes a 30k-merge vocab
-    * ~30k/batch jobs instead of 30k. Per round, ONE pair-count job runs
-    * over the word table; the top `4·k` (count desc, pair asc) rows come
-    * back (metadata-sized), and a greedy in-order sweep adopts up to `k`
-    * pairs whose symbols are MUTUALLY DISJOINT — disjointness guarantees
-    * the adopted merges cannot interact (no adopted pair's count is
-    * changed by applying another), so applying them together is
-    * order-independent. The approximation vs sequential BPE: a pair
-    * CREATED by an earlier merge in the same batch (e.g. "x ab" right
-    * after "a b") cannot be adopted until the next round — rank order
-    * can differ from one-at-a-time training, which is the documented,
-    * universally-accepted trade. `batchSize = 1` reproduces [[bpeTrain]]
-    * exactly (spec-pinned), as does the independent in-memory
-    * [[graft.RefBpe.trainBatched]] twin for any batch (oracle-checked
-    * via q_bpe_train_batched). The 4·k candidate truncation is part of
-    * the algorithm contract (both implementations apply it), keeping
-    * the driver exchange bounded. */
-  def bpeTrainBatched(docs: DataFrame, numMerges: Int, batchSize: Int = 64,
-                      minPairCount: Long = 2L): Seq[(String, Long)] = {
-    require(batchSize >= 1, "bpeTrainBatched: batchSize must be >= 1")
+    require(batchSize >= 1, "bpeTrain: batchSize must be >= 1")
     val words = docs
       .select(explode(graft.expressions.TextExpressions.wordShingles(col("text"), 1)).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
@@ -1002,7 +971,7 @@ object TextPipeline {
                 minPairCount: Long = 2L): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    bpeTrain(docs, numMerges, minPairCount).zipWithIndex
+    bpeTrain(docs, numMerges, minPairCount = minPairCount).zipWithIndex
       .map { case ((pair, cnt), i) => (i, pair, cnt) }
       .toDF("rank", "pair", "cnt")
   }

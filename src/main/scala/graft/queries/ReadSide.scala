@@ -67,13 +67,6 @@ object ReadSide {
         Window.partitionBy(keys: _*).orderBy(tsMs.desc, tieBreak.desc)))
       .filter(col("__rn") === 1).drop("__rn")
 
-  /** T5: earliest document per group. */
-  def earliestPerGroup(df: DataFrame, keys: Seq[Column], tsMs: Column,
-                       tieBreak: Column): DataFrame =
-    df.withColumn("__rn", row_number().over(
-        Window.partitionBy(keys: _*).orderBy(tsMs.asc, tieBreak.asc)))
-      .filter(col("__rn") === 1).drop("__rn")
-
   /** Q12: distinct-count of one column per group key. */
   def distinctCount(df: DataFrame, key: Column, counted: Column): DataFrame =
     df.groupBy(key.as("key")).agg(count_distinct(counted).as("value"))

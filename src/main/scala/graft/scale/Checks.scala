@@ -70,10 +70,6 @@ object Checks {
   def minOf(c: String, lo: Double, hi: Double = Inf): Check =
     Check(s"min($c)", min(col(c).cast("double")), lo, hi)
 
-  /** max(c) in `[lo, hi]` (lo defaults open). */
-  def maxOf(c: String, hi: Double, lo: Double = -Inf): Check =
-    Check(s"max($c)", max(col(c).cast("double")), lo, hi)
-
   /** Fraction of ALL rows whose `c` matches `pattern` ≥ `minFrac`
     * (nulls count as non-conforming, so the fraction composes with
     * [[completeness]] instead of hiding behind it). Keep the pattern in

@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   * Relative error ≈ 1.04/√2^lgK (~1.6% at the default lgK=12); sketches
   * are exact in coupon mode until a bucket's cardinality approaches
   * ¾·2^(lgK−3) (≈384 at lgK=12), estimating beyond.
-  * Complements [[graft.analytics.HostStats.applyApprox]]
-  * (`approx_count_distinct`), whose HLL++ state is plan-internal and
+  * Complements `approx_count_distinct` (e.g.
+  * [[graft.streaming.StreamingAnalytics.hostStats]]), whose HLL++ state is plan-internal and
   * cannot be persisted or re-unioned across runs.
   */
 object Sketches {

@@ -284,9 +284,6 @@ object ConcurrentBench {
       .map(_.split(",").toSeq.filter(_.nonEmpty))
       .getOrElse((SparkEntry.benchQueries ++
         Seq("q_edit_distance_capped", "q_hybrid_dedup_bucketed",
-          // the bounded-window streaming pairing shape, on the serving
-          // record next to the join shape (r18 verdict optional task 8)
-          "q_pattern_finder_grouped",
           "s_pattern_finder_stream")).distinct)
 
     // rotations: passes PER THREAD in the concurrent phase (and the

@@ -137,17 +137,11 @@ object ScaleSmoke {
                        scratch: String, scales: Seq[Long]): Unit = {
     def querySet(flows: DataFrame): Seq[(String, () => DataFrame)] = Seq(
       "q_host_daily_profile" -> (() => HostDailyProfile(flows)),
-      // both biflow pairing modes at scale: the join form the registered
-      // query runs as of r18 (AQE skew-splittable) and the
-      // bounded-window grouped streaming shape
+      // the biflow self-join the registered query runs (AQE
+      // skew-splittable at scale)
       "q_pattern_finder" -> (() =>
         PatternFinder.classify(
           PatternFinder.biflows(
-            graft.SparkEntry.withBiflowEcho(flows), 500L),
-          graft.SparkEntry.patterns, graft.SparkEntry.binThresholds)),
-      "q_pattern_finder_grouped" -> (() =>
-        PatternFinder.classify(
-          PatternFinder.biflowsGrouped(
             graft.SparkEntry.withBiflowEcho(flows), 500L),
           graft.SparkEntry.patterns, graft.SparkEntry.binThresholds)),
       "q_dns_external_resolvers" -> (() =>

@@ -82,7 +82,7 @@ final class StageMeter private (private val sc: SparkContext) extends SparkListe
         id = si.stageId,
         // AQE query-stage names are all "withThreadLocalCaptured…"; the
         // RDD callsites inside the stage carry the operator names
-        ops = si.rddInfos.map(_.name).distinct.mkString(","),
+        ops = si.rddInfos.map(_.name).distinct.toSeq,
         ms = (for (s <- si.submissionTime; c <- si.completionTime) yield c - s)
           .getOrElse(-1L),
         tasks = si.numTasks,
@@ -153,8 +153,10 @@ object StageMeter {
     * `maxTaskMs` is the longest task attempt, `slowTasks` counts task
     * attempts of a second or more and `failed` the attempts that failed.
     * `pool` and `query` are the scheduler pool and first line of the
-    * job description of the job that ran it. */
-  final case class Stage(id: Int, ops: String, ms: Long, tasks: Int,
+    * job description of the job that ran it. `ops` are the names of the
+    * stage's RDDs; one built inside `AdaptiveSparkPlan` is a whole plan
+    * fragment. */
+  final case class Stage(id: Int, ops: Seq[String], ms: Long, tasks: Int,
                          execMs: Long, gcMs: Long,
                          shuffleBytes: Long, shuffleRecords: Long,
                          memSpill: Long, diskSpill: Long,
@@ -184,12 +186,20 @@ object StageMeter {
     current
   }
 
+  /** Each RDD name's leading operator token (`AdaptiveSparkPlan`,
+    * `MapPartitionsRDD`), distinct, in stage order: a plan fragment's
+    * tree and attribute lists stay out of the tables. */
+  def opNames(s: Stage): Seq[String] =
+    s.ops.flatMap(OpToken.findFirstIn(_)).distinct
+
+  private val OpToken = "[A-Za-z][A-Za-z0-9_$]*".r
+
   /** The per-stage table the tools print, slowest stage first. */
   def table(stages: Seq[Stage]): Seq[String] =
     stages.sortBy(-_.ms).map { s =>
       f"  stage ${s.id}%4d  wall ${s.ms}%7d ms  exec ${s.execMs}%8d ms  " +
         f"gc ${s.gcMs}%6d ms  ${s.shuffleBytes / 1e6}%9.1f MB  " +
         f"${s.shuffleRecords}%12d recs  ${s.tasks}%4d tasks  " +
-        s.ops.replaceAll("\\s+", " ").split(",").take(6).mkString(",")
+        opNames(s).take(6).mkString(",")
     }
 }

@@ -296,40 +296,6 @@ class AnalyticsSpec extends SparkSpec {
     assert(out.head("distance") == 0.0d && out.head("bin") == 0)
   }
 
-  test("biflowsGrouped == biflows join form on a multi-key, multi-pair window") {
-    // several biflow keys, keys with multiple requests AND multiple
-    // responses (the cross-pair case), unpaired flows, and
-    // out-of-tolerance responses — grouped pairing must emit exactly the
-    // join form's rows
-    val flows = (0L until 60L).flatMap { i =>
-      val req = Fx(flow_id = i, src_ip4 = s"10.0.0.${i % 5}",
-        dst_ip = s"192.0.2.${i % 3}", src_port = 40000 + (i % 4).toInt,
-        dst_port = 53, start_ms = 1000 * (i % 7), end_ms = 1000 * (i % 7) + 90,
-        packets = 2 + i % 3, bytes = 100 + i)
-      val rsp = Fx(flow_id = 1000 + i, src_ip4 = s"192.0.2.${i % 3}",
-        dst_ip = s"10.0.0.${i % 5}", src_port = 53,
-        dst_port = 40000 + (i % 4).toInt,
-        // every third response lands outside the 500 ms tolerance
-        start_ms = 1000 * (i % 7) + (if (i % 3 == 0) 900 else 200),
-        end_ms = 1000 * (i % 7) + 1000, packets = 3, bytes = 400 + i)
-      Seq(req, rsp)
-    }
-    val df = Fx.df(spark, flows: _*)
-    val joined = PatternFinder.biflows(df, 500L)
-    val grouped = PatternFinder.biflowsGrouped(df, 500L)
-    assert(joined.columns.toSeq == grouped.columns.toSeq)
-    assert(joined.count() > 0) // parity must not be vacuous
-    assert(joined.exceptAll(grouped).isEmpty &&
-      grouped.exceptAll(joined).isEmpty)
-    // the config-vector variant (YAML path) pairs identically too
-    val vec = Seq(col("packets"), col("bytes"))
-    val jv = PatternFinder.biflows(df, 500L, vector = vec)
-    val gv = PatternFinder.biflowsGrouped(df, 500L, vector = vec)
-    assert(jv.columns.toSeq == gv.columns.toSeq)
-    assert(jv.count() > 0)
-    assert(jv.exceptAll(gv).isEmpty && gv.exceptAll(jv).isEmpty)
-  }
-
   test("pattern report: per-key slot sums == explicit arraySum fold (A12)") {
     import spark.implicits._
     val pats = Seq(

@@ -162,7 +162,7 @@ class CurationStreamSpec extends SparkSpec {
     // as the batch path does over the same rows.
     implicit val sqlCtx = spark.sqlContext
     val corpus = (0L until 30L).map(i => (i, text(i))).toDF("doc_id", "text")
-    val merges = TextPipeline.bpeTrainBatched(corpus, numMerges = 24,
+    val merges = TextPipeline.bpeTrain(corpus, numMerges = 24,
       batchSize = 8).map(_._1)
     assert(merges.nonEmpty)
     def encode(df: org.apache.spark.sql.DataFrame) = df

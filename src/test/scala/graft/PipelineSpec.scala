@@ -2226,12 +2226,12 @@ class PipelineSpec extends SparkSpec {
       "interleave the rate of merge tables with more words")
     val d = docs(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }: _*)
     // batch=1 is EXACTLY the one-at-a-time algorithm
-    assert(TextPipeline.bpeTrainBatched(d, numMerges = 10, batchSize = 1) ==
-      TextPipeline.bpeTrain(d, numMerges = 10))
+    assert(RefBpe.train(texts, numMerges = 10) ==
+      TextPipeline.bpeTrain(d, numMerges = 10, batchSize = 1))
     // larger batches: distributed == independent in-memory twin (the
     // q_bpe_train_batched oracle contract), full vocab still learned
     for (b <- Seq(4, 8)) {
-      val got = TextPipeline.bpeTrainBatched(d, numMerges = 12, batchSize = b)
+      val got = TextPipeline.bpeTrain(d, numMerges = 12, batchSize = b)
       assert(got == RefBpe.trainBatched(texts, numMerges = 12, batchSize = b),
         s"batchSize=$b diverged from RefBpe twin")
       // adopted pairs within a round have disjoint symbols by

@@ -228,7 +228,7 @@ class PropertySpec extends SparkSpec {
       val d = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
       for (b <- Seq(1, 4)) {
-        val got = graft.pipeline.TextPipeline.bpeTrainBatched(
+        val got = graft.pipeline.TextPipeline.bpeTrain(
           d, numMerges = 8, batchSize = b)
         val ref = RefBpe.trainBatched(texts, numMerges = 8, batchSize = b)
         assert(got == ref, s"batchSize=$b corpus=$texts")

@@ -47,4 +47,21 @@ class StageMeterSpec extends SparkSpec {
       assert(sc.getLocalProperty("spark.jobGroup.id") == "caller")
     } finally sc.clearJobGroup()
   }
+
+  test("table: an AQE plan-fragment RDD name prints as its operator token") {
+    val fragment = "AdaptiveSparkPlan isFinalPlan=false\n" +
+      "+- Project [cid#633L, doc_id#12L, n_sh#640, h#641L]\n" +
+      "   +- BroadcastHashJoin [doc_id#12L], [doc_id#630L], Inner, BuildRight, false\n" +
+      "      :- *(2) Filter (isnotnull(doc_id#12L) AND (size(hs#635, true) > 0))\n" +
+      "      +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]),false)"
+    val stage = StageMeter.Stage(id = 7,
+      ops = Seq(fragment, "MapPartitionsRDD", "*(2) Project [a#1, b#2]", "MapPartitionsRDD"),
+      ms = 120L, tasks = 4, execMs = 300L, gcMs = 0L, shuffleBytes = 0L,
+      shuffleRecords = 0L, memSpill = 0L, diskSpill = 0L, maxTaskMs = 90L,
+      slowTasks = 0, failed = 0, pool = "default", query = "q")
+    assert(StageMeter.opNames(stage) == Seq("AdaptiveSparkPlan", "MapPartitionsRDD", "Project"))
+    val Seq(row) = StageMeter.table(Seq(stage))
+    assert(row.endsWith("  AdaptiveSparkPlan,MapPartitionsRDD,Project"), row)
+    assert(!row.contains("\n") && !row.contains("#"), row)
+  }
 }
