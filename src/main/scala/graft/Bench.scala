@@ -2,15 +2,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
 
-  /** count() over a left join of an aggregate lets Catalyst eliminate
-    * the join and skip the work being measured — force the computed
-    * column for the queries with that shape. Shared with
-    * [[graft.tools.ConcurrentBench]] so both benches measure the same
-    * work by construction (a second copy WOULD drift). */
-  private[graft] val forced: Map[String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame] =
-    Map("q_remove_dup_spans" -> (df => df.filter(
-      org.apache.spark.sql.functions.length(
-        org.apache.spark.sql.functions.col("text_clean")) >= 0)))
+  /** Run `df` to its full output through Spark's `noop` sink: every
+    * column is computed and dropped. A `count()` would let the optimizer
+    * prune whatever no output column needs (an as-of join's window, a
+    * left join onto an aggregate) and time a different plan. Shared with
+    * [[graft.tools.ConcurrentBench]] so both benches time the same work. */
+  private[graft] def consume(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
 
   /** Median over timing samples (even count → mean of the middle two).
     * Shared with [[graft.tools.ConcurrentBench]]. */
@@ -239,10 +237,8 @@ object Bench {
         if (SparkEntry.benchQueries.nonEmpty) SparkEntry.benchQueries
         else all.keys.toSeq)
     def run(name: String): Option[String] =
-      try {
-        forced.getOrElse(name, identity[org.apache.spark.sql.DataFrame] _)
-          .apply(all(name)(spark, sfDir)).count(); None
-      } catch {
+      try { consume(all(name)(spark, sfDir)); None }
+      catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: $e")
           Some(e.getClass.getSimpleName)

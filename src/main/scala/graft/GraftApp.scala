@@ -121,9 +121,8 @@ object GraftApp {
     // reference logged the same numbers with a per-batch driver count),
     // surfaced in StreamingQueryProgress.observedMetrics
     import org.apache.spark.sql.functions.{count, lit}
-    val src = FlowSource.withEventTime(flows)
-    val srcObs = if (!c.observe) src
-      else src.observe("flows_in", count(lit(1)).as("rows"))
+    val srcObs = if (!c.observe) flows
+      else flows.observe("flows_in", count(lit(1)).as("rows"))
     val result = analytic(c)(srcObs)
     val resObs = if (!c.observe) result
       else result.observe("reports_out", count(lit(1)).as("rows"))

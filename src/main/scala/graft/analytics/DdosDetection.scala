@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** DDoS detection via short-horizon vs long-horizon traffic-ratio compare.
@@ -21,16 +21,20 @@ import org.apache.spark.sql.functions._
   */
 object DdosDetection {
 
+  /** Flows into the watched network: the reference's regex network
+    * filter (detection_ddos.py:111-112 — F5) over flows with a protocol,
+    * a packet count and both endpoints — batch and
+    * [[graft.streaming.StreamingAnalytics.ddosKeyedState]]. */
+  def watched(dstFilter: String): Column =
+    col("protocol").isNotNull && col("packets").isNotNull &&
+      col("src_ip4").isNotNull && col("dst_ip").isNotNull &&
+      col("dst_ip").rlike(dstFilter)
+
   def apply(flows: DataFrame, splitMs: Long, ratioIncrease: Double = 50.0,
             minPackets: Long = 100000L, dstFilter: String = "192\\.168\\..*"): DataFrame = {
-    val f = flows.filter(
-      col("protocol").isNotNull && col("packets").isNotNull &&
-        col("src_ip4").isNotNull && col("dst_ip").isNotNull)
+    val f = flows.filter(watched(dstFilter))
 
-    // Direction classification relative to the watched network (reference
-    // uses a regex network filter, detection_ddos.py:111-112 — F5).
     def agg(df: DataFrame, suffix: String) = df
-      .filter(col("dst_ip").rlike(dstFilter))
       .groupBy(col("dst_ip"))
       .agg(
         sum(when(col("protocol") === 6, col("packets")).otherwise(0L)).as(s"tcp_packets_$suffix"),
@@ -40,7 +44,7 @@ object DdosDetection {
     val short = agg(f.filter(col("start_ms") >= splitMs), "short")
     val long  = agg(f.filter(col("start_ms") < splitMs), "long")
 
-    val attackers = f.filter(col("start_ms") >= splitMs && col("dst_ip").rlike(dstFilter))
+    val attackers = f.filter(col("start_ms") >= splitMs)
       .groupBy(col("dst_ip"))
       .agg(array_join(sort_array(collect_set(col("src_ip4"))), ",").as("attackers"))
 

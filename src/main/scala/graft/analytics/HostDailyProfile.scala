@@ -1,8 +1,7 @@
 package graft.analytics
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.NetFunctions
 
 /** Hierarchical temporal profile: hourly per-host aggregates rolled into a
   * 24-slot daily profile.
@@ -16,23 +15,26 @@ import graft.functions.NetFunctions
   *
   * Two-level aggregation = two shuffles (host×hour, then host×day); the
   * second input is already tiny. Emitted flat (one row per filled slot) —
-  * the array form is a collect_list away if the sink wants it.
+  * the array form is a collect_list away if the sink wants it. The hourly
+  * level is [[HostStats.profiled]] flows keyed by [[HostStats.srcIp]] with
+  * [[hourlyAggs]], shared with the streaming form
+  * [[graft.streaming.StreamingAnalytics.dailyProfile]].
   */
 object HostDailyProfile {
+
+  /** The hourly level's aggregates (batch and streaming). */
+  def hourlyAggs: Seq[Column] = Seq(
+    sum("packets").as("packets"),
+    sum("bytes").as("bytes"),
+    count(lit(1)).as("flows"))
 
   def apply(flows: DataFrame): DataFrame = {
     val hourMs = 3600000L
     val dayMs  = 86400000L
-    val hourly = flows
-      .filter(coalesce(col("src_ip4"), col("src_ip6")).isNotNull &&
-        col("packets").isNotNull && col("bytes").isNotNull)
-      .groupBy(
-        NetFunctions.ipCoalesce(col("src_ip4"), col("src_ip6")).as("src_ip"),
+    val hourly = HostStats.profiled(flows)
+      .groupBy(HostStats.srcIp,
         (col("start_ms") - (col("start_ms") % hourMs)).as("hour_start_ms"))
-      .agg(
-        sum("packets").as("packets"),
-        sum("bytes").as("bytes"),
-        count(lit(1)).as("flows"))
+      .agg(hourlyAggs.head, hourlyAggs.tail: _*)
     hourly
       .groupBy(
         col("src_ip"),

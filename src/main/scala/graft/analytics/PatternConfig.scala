@@ -229,7 +229,11 @@ object PatternConfig {
     * construction (biflow pairing or per-flow simple key) → per-pattern
     * distribution report (the process_input chain,
     * pattern_finder.py:394-422). Biflow reports key on (src_ip, dst_ip);
-    * simple reports key on the '-'.joined `key` column. */
+    * simple reports key on the '-'.joined `key` column.
+    *
+    * Only specs call it: it is the batch face of the S7 YAML pipeline
+    * ([[streamingReports]] is the streaming one), kept so AnalyticsSpec
+    * can pin the YAML-driven result against the hand-built pipeline. */
   def batchReport(flows: DataFrame, cfg: Config): DataFrame = {
     val filtered = flows.filter(PatternFinder.filterExpr(cfg.filters))
     cfg.keyType match {

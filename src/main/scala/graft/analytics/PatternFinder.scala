@@ -68,10 +68,45 @@ object PatternFinder {
     concat_ws(":", col("src_port"), col("src_ip4")),
     concat_ws(":", col("dst_port"), col("dst_ip")))))
 
-  /** Pair request/response flows of one biflow: canonical key = sorted
-    * endpoint strings ("port:ip", pattern_finder.py:158,168); the request
-    * is the flow with the higher src_port (ephemeral → service); pairs
-    * must start within `toleranceMs` of each other (configuration.yml:110).
+  /** The request and response sides of the biflow self-join, each tagged
+    * with [[biflowKey]]: the request is the flow with the higher src_port
+    * (ephemeral → service). The optional config-driven per-flow vector
+    * (X14) is evaluated once per flow BEFORE the join, so each side
+    * carries its array (`req_vec`/`rsp_vec`) instead of re-deriving
+    * features from carried raw columns. `carry` columns ride along on both
+    * sides, prefixed `req_`/`rsp_` (e.g. event_time for the streaming
+    * join's watermarks) — shared by [[biflows]] and
+    * [[graft.streaming.StreamingAnalytics.biflowPairs]]. */
+  def biflowSides(flows: DataFrame, vector: Seq[Column] = Nil,
+                  carry: Seq[String] = Nil): (DataFrame, DataFrame) = {
+    val tagged = flows
+      .filter(col("src_ip4").isNotNull && col("src_port").isNotNull &&
+        col("dst_port").isNotNull)
+      .withColumn("biflow_key", biflowKey)
+    val withVec =
+      if (vector.isEmpty) tagged
+      else tagged.withColumn("_vec", array(vector.map(_.cast("double")): _*))
+    def side(p: String) =
+      (if (vector.isEmpty) Nil else Seq(col("_vec").as(s"${p}_vec"))) ++
+        carry.map(c => col(c).as(s"${p}_$c"))
+    val req = withVec.filter(col("src_port") > col("dst_port"))
+      .select(Seq(col("biflow_key"), col("flow_id").as("req_id"),
+        col("src_ip4").as("client_ip"), col("dst_ip").as("server_ip"),
+        col("start_ms").as("req_start_ms"), col("end_ms").as("req_end_ms"),
+        col("packets").as("req_packets"), col("bytes").as("req_bytes"))
+        ++ side("req"): _*)
+    val rsp = withVec.filter(col("src_port") <= col("dst_port"))
+      .select(Seq(col("biflow_key"), col("flow_id").as("rsp_id"),
+        col("start_ms").as("rsp_start_ms"), col("end_ms").as("rsp_end_ms"),
+        col("packets").as("rsp_packets"), col("bytes").as("rsp_bytes"))
+        ++ side("rsp"): _*)
+    (req, rsp)
+  }
+
+  /** Pair request/response flows of one biflow ([[biflowSides]]): canonical
+    * key = sorted endpoint strings ("port:ip", pattern_finder.py:158,168);
+    * pairs must start within `toleranceMs` of each other
+    * (configuration.yml:110).
     *
     * Equi-join on the canonical key carries the shuffle; the time window is
     * a post-join filter, so no cartesian blowup. AQE converts a small
@@ -79,29 +114,7 @@ object PatternFinder {
     * declaration stays a skew-splittable shuffle join. */
   def biflows(flows: DataFrame, toleranceMs: Long = 500L,
               vector: Seq[Column] = Nil): DataFrame = {
-    val tagged = flows
-      .filter(col("src_ip4").isNotNull && col("src_port").isNotNull &&
-        col("dst_port").isNotNull)
-      .withColumn("biflow_key", biflowKey)
-    // optional config-driven per-flow vector (X14): evaluated once per flow
-    // BEFORE the self-join, so each side carries its array through the
-    // shuffle instead of re-deriving features from carried raw columns
-    val withVec =
-      if (vector.isEmpty) tagged
-      else tagged.withColumn("_vec", array(vector.map(_.cast("double")): _*))
-    val vecReq = if (vector.isEmpty) Nil else Seq(col("_vec").as("req_vec"))
-    val vecRsp = if (vector.isEmpty) Nil else Seq(col("_vec").as("rsp_vec"))
-    val req = withVec.filter(col("src_port") > col("dst_port"))
-      .select(Seq(col("biflow_key"), col("flow_id").as("req_id"),
-        col("src_ip4").as("client_ip"), col("dst_ip").as("server_ip"),
-        col("start_ms").as("req_start_ms"), col("end_ms").as("req_end_ms"),
-        col("packets").as("req_packets"), col("bytes").as("req_bytes"))
-        ++ vecReq: _*)
-    val rsp = withVec.filter(col("src_port") <= col("dst_port"))
-      .select(Seq(col("biflow_key"), col("flow_id").as("rsp_id"),
-        col("start_ms").as("rsp_start_ms"), col("end_ms").as("rsp_end_ms"),
-        col("packets").as("rsp_packets"), col("bytes").as("rsp_bytes"))
-        ++ vecRsp: _*)
+    val (req, rsp) = biflowSides(flows, vector)
     req.join(rsp, Seq("biflow_key"))
       .filter(abs(col("req_start_ms") - col("rsp_start_ms")) <= toleranceMs)
   }

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.BitFunctions
 
@@ -15,13 +15,18 @@ import graft.functions.BitFunctions
   */
 object PortScanDetection {
 
+  /** Scan candidates: pure-SYN TCP flows with both endpoints and a
+    * destination port — batch and
+    * [[graft.streaming.StreamingAnalytics.scanObservations]]. */
+  def synProbe: Column =
+    col("protocol") === 6 && col("tcp_flags").isNotNull &&
+      BitFunctions.pureSyn(col("tcp_flags")) &&
+      col("src_ip4").isNotNull && col("dst_ip").isNotNull &&
+      col("dst_port").isNotNull
+
   /** @param minTargets detection threshold (reference default 20). */
   def apply(flows: DataFrame, minTargets: Long): DataFrame = {
-    val syn = flows.filter(
-      col("protocol") === 6 && col("tcp_flags").isNotNull &&
-        BitFunctions.pureSyn(col("tcp_flags")) &&
-        col("src_ip4").isNotNull && col("dst_ip").isNotNull &&
-        col("dst_port").isNotNull)
+    val syn = flows.filter(synProbe)
 
     def scan(kind: String, key2: String, target: String) =
       syn.groupBy(col("src_ip4").as("src_ip"), col(key2).cast("string").as("key"))

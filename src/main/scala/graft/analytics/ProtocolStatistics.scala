@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.NetFunctions
 
@@ -15,7 +15,8 @@ import graft.functions.NetFunctions
   * map-side combine collapses the traffic).
   *
   * Batch form: callers bucket time via floor(start_ms / windowMs); the
-  * streaming form uses window() on event-time (graft.streaming).
+  * streaming form uses window() on event-time (graft.streaming) over the
+  * same [[counted]] flows, [[protocol]] key and [[aggs]].
   */
 object ProtocolStatistics {
 
@@ -25,15 +26,24 @@ object ProtocolStatistics {
     * loudly at analysis, and the oracle gate runs every query. */
   val inputCols: Seq[String] = Seq("protocol", "packets", "bytes", "start_ms")
 
+  /** Flows a protocol statistic counts (batch and streaming). */
+  def counted: Column =
+    col("protocol").isNotNull && col("packets").isNotNull && col("bytes").isNotNull
+
+  /** The grouping key: the protocol's name. */
+  def protocol: Column = NetFunctions.protocolName(col("protocol")).as("protocol")
+
+  /** The per-(window, protocol) aggregates (batch and streaming). */
+  def aggs: Seq[Column] = Seq(
+    count(lit(1)).as("flows"),
+    sum("packets").as("packets"),
+    sum("bytes").as("bytes"))
+
   def apply(flows: DataFrame, windowMs: Long): DataFrame =
     flows
-      .filter(col("protocol").isNotNull && col("packets").isNotNull &&
-        col("bytes").isNotNull && col("start_ms").isNotNull)
+      .filter(counted && col("start_ms").isNotNull)
       .groupBy(
         (col("start_ms") - (col("start_ms") % windowMs)).as("window_start_ms"),
-        NetFunctions.protocolName(col("protocol")).as("protocol"))
-      .agg(
-        count(lit(1)).as("flows"),
-        sum("packets").as("packets"),
-        sum("bytes").as("bytes"))
+        protocol)
+      .agg(aggs.head, aggs.tail: _*)
 }

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.NetFunctions
 
@@ -20,16 +20,21 @@ object SshAuthDetection {
       minBytes: Long = 1800, maxBytes: Long = 5000,
       maxDurationMs: Long = 12000)
 
+  /** Brute-force candidates: TCP to port 22 from an ephemeral port, with
+    * packets, bytes and duration inside `bands` (ssh_auth_simple.py
+    * :170-179) — batch and
+    * [[graft.streaming.StreamingAnalytics.sshAuthReports]]. */
+  def candidate(bands: Bands = Bands()): Column =
+    col("protocol") === 6 && col("dst_port") === 22 &&
+      col("src_port") > 1024 &&
+      col("packets") > bands.minPackets && col("packets") < bands.maxPackets &&
+      col("bytes") > bands.minBytes && col("bytes") < bands.maxBytes &&
+      col("end_ms") - col("start_ms") < bands.maxDurationMs
+
   def apply(flows: DataFrame, minFlows: Long,
             bands: Bands = Bands()): DataFrame = {
-    val dur = col("end_ms") - col("start_ms")
     flows
-      .filter(
-        col("protocol") === 6 && col("dst_port") === 22 &&
-          col("src_port") > 1024 &&
-          col("packets") > bands.minPackets && col("packets") < bands.maxPackets &&
-          col("bytes") > bands.minBytes && col("bytes") < bands.maxBytes &&
-          dur < bands.maxDurationMs)
+      .filter(candidate(bands))
       .groupBy(
         NetFunctions.ipCoalesce(col("src_ip4"), col("src_ip6")).as("src_ip"),
         col("dst_ip"))

@@ -34,24 +34,33 @@ object TlsClassification {
     array_join(filter(swapped, g => g =!= "0000"), ",")
   }
 
-  def apply(spark: SparkSession, flows: DataFrame, dict: Seq[DictEntry]): DataFrame = {
-    import spark.implicits._
-    val dictDf = dict.toDF()
+  /** Suite filter → broadcast dictionary join → 3-way (stat_type, key)
+    * fanout, one row per stat type per TLS flow; an unknown suite counts
+    * as "Unknown". `carry` columns (e.g. event_time for streaming windows)
+    * ride along — shared by the batch counts and
+    * [[graft.streaming.StreamingAnalytics.tlsClassification]]. */
+  def contributions(flows: DataFrame, dict: Seq[DictEntry],
+                    carry: Seq[String] = Nil): DataFrame = {
+    import flows.sparkSession.implicits._
     val withSuites = flows
       .filter(col("tls_cipher_suites").isNotNull &&
         col("tls_cipher_suites") =!= "0x00000000000000000000000000000000")
-      .select(formatCipherSuites(col("tls_cipher_suites")).as("suites"))
-    val joined = withSuites.join(broadcast(dictDf), Seq("suites"), "left")
-    joined
+      .select(formatCipherSuites(col("tls_cipher_suites")).as("suites") +:
+        carry.map(col): _*)
+    withSuites.join(broadcast(dict.toDF()), Seq("suites"), "left")
       .select(explode(array(
         struct(lit("operating_system").as("stat_type"),
           coalesce(col("operating_system"), lit("Unknown")).as("key")),
         struct(lit("browser").as("stat_type"),
           coalesce(col("browser"), lit("Unknown")).as("key")),
         struct(lit("application").as("stat_type"),
-          coalesce(col("application"), lit("Unknown")).as("key")))).as("c"))
-      .select(col("c.stat_type"), col("c.key"))
+          coalesce(col("application"), lit("Unknown")).as("key")))).as("c") +:
+        carry.map(col): _*)
+      .select(col("c.stat_type") +: col("c.key") +: carry.map(col): _*)
+  }
+
+  def apply(spark: SparkSession, flows: DataFrame, dict: Seq[DictEntry]): DataFrame =
+    contributions(flows, dict)
       .groupBy("stat_type", "key")
       .agg(count(lit(1)).as("value"))
-  }
 }

@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, functions}
 import org.apache.spark.sql.functions._
-import graft.functions.{BitFunctions, NetFunctions}
+import graft.analytics.{DnsStatistics, HostDailyProfile, HostStats, PatternFinder,
+  PortScanDetection, ProtocolStatistics, ReflectDdosDetection, SshAuthDetection,
+  TlsClassification, TopNHostStats}
+import graft.functions.BitFunctions
 
 /** Event-time windowed forms of the analytics (SURVEY.md §2.5).
   *
@@ -14,62 +17,56 @@ import graft.functions.{BitFunctions, NetFunctions}
   * Each builder takes a flow stream bearing `event_time` (see
   * [[FlowSource]]) and returns a streaming DataFrame ready for
   * `writeStream` (append mode works once the watermark passes the window).
+  *
+  * A builder with a batch twin in `graft.analytics` reuses that object's
+  * flow predicate, per-flow projection and aggregate list, and adds only
+  * the watermark and the event-time window (SURVEY §7.1: one analytic
+  * definition for static and streaming frames). The two DNS resolver
+  * builders are the exceptions; each says which batch rule it skips.
   */
 object StreamingAnalytics {
 
+  /** Event-time window over `event_time`: tumbling, or sliding by `slide`. */
+  private def eventWindow(window: String, slide: Option[String] = None): Column =
+    slide.fold(functions.window(col("event_time"), window))(
+      functions.window(col("event_time"), window, _))
+
+  /** The streaming half every windowed builder adds to an analytic's rows:
+    * the watermark, then a group by (window, `keys`) over the analytic's
+    * own aggregates. */
+  private def windowed(rows: DataFrame, watermark: String, window: Column,
+                       keys: Column*)(aggs: Seq[Column]): DataFrame =
+    rows.withWatermark("event_time", watermark)
+      .groupBy(window +: keys: _*)
+      .agg(aggs.head, aggs.tail: _*)
+
   /** W1: tumbling/sliding protocol stats (protocols_statistics.py:99-132;
-    * defaults 10 s window — BASELINE.md). */
+    * defaults 10 s window — BASELINE.md): [[ProtocolStatistics]]'s flows,
+    * key and aggregates per event-time window. */
   def protocolStatistics(flows: DataFrame, window: String = "10 seconds",
                          slide: Option[String] = None,
                          watermark: String = "30 seconds"): DataFrame =
-    flows
-      .filter(col("protocol").isNotNull && col("packets").isNotNull &&
-        col("bytes").isNotNull)
-      .withWatermark("event_time", watermark)
-      .groupBy(
-        slide.map(sl => org.apache.spark.sql.functions.window(col("event_time"), window, sl))
-          .getOrElse(org.apache.spark.sql.functions.window(col("event_time"), window)),
-        NetFunctions.protocolName(col("protocol")).as("protocol"))
-      .agg(
-        count(lit(1)).as("flows"),
-        sum("packets").as("packets"),
-        sum("bytes").as("bytes"))
+    windowed(flows.filter(ProtocolStatistics.counted), watermark,
+      eventWindow(window, slide), ProtocolStatistics.protocol)(ProtocolStatistics.aggs)
 
-  /** W2: sliding host stats (host_stats.py; 10 s/5 s defaults). Exact
-    * distincts are replaced by HLL — correct trade under unbounded state. */
+  /** W2: sliding host stats (host_stats.py; 10 s/5 s defaults):
+    * [[HostStats]] per sliding window. Exact distincts are replaced by HLL
+    * (`approx_count_distinct`) — correct trade under unbounded state, and
+    * Spark rejects distinct aggregates on streams. */
   def hostStats(flows: DataFrame, window: String = "10 seconds",
                 slide: String = "5 seconds",
-                watermark: String = "30 seconds"): DataFrame = {
-    val flagAggs = BitFunctions.tcpFlagCols(col("tcp_flags")).map {
-      case (n, c) => sum(when(col("protocol") === 6, c).otherwise(0L)).as(s"flag_${n.toLowerCase}")
-    }
-    val aggs = Seq(
-      sum("packets").as("packets"),
-      sum("bytes").as("bytes"),
-      round(avg(col("end_ms") - col("start_ms")) / 1000.0d, 4).as("avg_duration_s"),
-      approx_count_distinct(col("dst_port")).as("dport_count"),
-      approx_count_distinct(col("dst_ip")).as("peer_number")) ++ flagAggs
-    flows
-      .filter(coalesce(col("src_ip4"), col("src_ip6")).isNotNull)
-      .withWatermark("event_time", watermark)
-      .groupBy(
-        org.apache.spark.sql.functions.window(col("event_time"), window, slide),
-        NetFunctions.ipCoalesce(col("src_ip4"), col("src_ip6")).as("src_ip"))
-      .agg(count(lit(1)).as("flows"), aggs: _*)
-  }
+                watermark: String = "30 seconds"): DataFrame =
+    windowed(HostStats.profiled(flows), watermark,
+      eventWindow(window, Some(slide)), HostStats.srcIp)(
+      HostStats.aggs(approx_count_distinct(_)))
 
   /** W4: two-level temporal profile — hourly aggregate re-windowed daily
     * (host_daily_profile.py; ST3's global counter replaced by event-time
-    * hour index). The hourly stream feeds a second event-time window. */
+    * hour index): [[HostDailyProfile]]'s hourly level per event-time hour,
+    * emitted one row per (hour, host) with its hour-of-day slot. */
   def dailyProfile(flows: DataFrame, watermark: String = "2 hours"): DataFrame =
-    flows
-      .filter(coalesce(col("src_ip4"), col("src_ip6")).isNotNull)
-      .withWatermark("event_time", watermark)
-      .groupBy(
-        org.apache.spark.sql.functions.window(col("event_time"), "1 hour"),
-        NetFunctions.ipCoalesce(col("src_ip4"), col("src_ip6")).as("src_ip"))
-      .agg(sum("packets").as("packets"), sum("bytes").as("bytes"),
-        count(lit(1)).as("flows"))
+    windowed(HostStats.profiled(flows), watermark, eventWindow("1 hour"),
+      HostStats.srcIp)(HostDailyProfile.hourlyAggs)
       .select(col("window.start").as("hour_start"), col("src_ip"),
         col("packets"), col("bytes"), col("flows"),
         hour(col("window.start")).as("hour_slot"))
@@ -89,93 +86,47 @@ object StreamingAnalytics {
       .filter(coalesce(col("src_ip4"), col("src_ip6")).isNotNull &&
         col("dst_ip").isNotNull)
       .withWatermark("event_time", watermark)
-      .groupBy(
-        org.apache.spark.sql.functions.window(col("event_time"), window),
-        NetFunctions.ipCoalesce(col("src_ip4"), col("src_ip6")).as("src_ip"))
+      .groupBy(eventWindow(window), HostStats.srcIp)
       .agg(hll_sketch_agg(col("dst_ip"), lit(lgK)).as("sketch"))
       .select(col("window.start").as("window_start"), col("src_ip"),
         col("sketch"), hll_sketch_estimate(col("sketch")).as("peer_est"))
 
   /** S5/J7/A15 streaming: TLS suite normalization → broadcast dictionary
-    * join → 3-way stat fanout → windowed counts (tls_classification.py
-    * :142-221). Broadcast joins work unchanged on streaming frames. */
+    * join → 3-way stat fanout ([[TlsClassification.contributions]]) →
+    * windowed counts (tls_classification.py:142-221). Broadcast joins work
+    * unchanged on streaming frames. */
   def tlsClassification(flows: DataFrame,
-                        dict: Seq[graft.analytics.TlsClassification.DictEntry],
+                        dict: Seq[TlsClassification.DictEntry],
                         window: String = "60 seconds",
-                        watermark: String = "2 minutes"): DataFrame = {
-    val spark = flows.sparkSession
-    import spark.implicits._
-    val dictDf = dict.toDF()
-    val withSuites = flows
-      .filter(col("tls_cipher_suites").isNotNull &&
-        col("tls_cipher_suites") =!= "0x00000000000000000000000000000000")
-      .select(
-        graft.analytics.TlsClassification
-          .formatCipherSuites(col("tls_cipher_suites")).as("suites"),
-        col("event_time"))
-    withSuites.join(broadcast(dictDf), Seq("suites"), "left")
-      .select(explode(array(
-        struct(lit("operating_system").as("stat_type"),
-          coalesce(col("operating_system"), lit("Unknown")).as("key")),
-        struct(lit("browser").as("stat_type"),
-          coalesce(col("browser"), lit("Unknown")).as("key")),
-        struct(lit("application").as("stat_type"),
-          coalesce(col("application"), lit("Unknown")).as("key")))).as("c"),
-        col("event_time"))
-      .select(col("c.stat_type"), col("c.key"), col("event_time"))
-      .withWatermark("event_time", watermark)
-      .groupBy(
-        org.apache.spark.sql.functions.window(col("event_time"), window),
-        col("stat_type"), col("key"))
-      .agg(count(lit(1)).as("value"))
-  }
+                        watermark: String = "2 minutes"): DataFrame =
+    windowed(TlsClassification.contributions(flows, dict, carry = Seq("event_time")),
+      watermark, eventWindow(window), col("stat_type"), col("key"))(
+      Seq(count(lit(1)).as("value")))
 
   /** W1 + F12: windowed DNS statistics (dns_statistics.py:258-260, 60 s
-    * default). Emits per-window (stat_type, key) counts; the top-N cut is
-    * a read-side concern (ReadSide.nestedTopN / T2) since global ranking
-    * inside an append-mode stream is not expressible — the reference did
-    * the same sort driver-side per batch. */
-  /** Streaming sessionization via the native session_window operator:
-    * gap-based sessions per key with watermark-bounded state — the
-    * streaming face of the batch lag/cumsum sessionizer (q_sessionize).
-    * Sessions merge as events arrive; a session emits (append mode) once
-    * the watermark passes its end + gap. State is one open session per
-    * active key, watermark-evicted — bounded regardless of stream length.
-    * Input needs `user_id`, `event_time`. */
-  def sessionize(events: DataFrame, gap: String = "30 minutes",
-                 watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("event_time", watermark)
-      .groupBy(col("user_id"), session_window(col("event_time"), gap))
-      .agg(count(lit(1)).as("n_events"),
-        min(unix_millis(col("event_time"))).as("session_start_ms"),
-        max(unix_millis(col("event_time"))).as("session_end_ms"))
-      .select(col("user_id"), col("n_events"),
-        col("session_start_ms"), col("session_end_ms"))
-
+    * default). Emits per-window (stat_type, key) counts of
+    * [[DnsStatistics.contributions]]; the top-N cut is a read-side concern
+    * (ReadSide.nestedTopN / T2) since global ranking inside an append-mode
+    * stream is not expressible — the reference did the same sort
+    * driver-side per batch. */
   def dnsStatistics(flows: DataFrame, window: String = "60 seconds",
                     watermark: String = "2 minutes"): DataFrame =
-    graft.analytics.DnsStatistics.contributions(flows, carry = Seq("event_time"))
-      .withWatermark("event_time", watermark)
-      .groupBy(
-        org.apache.spark.sql.functions.window(col("event_time"), window),
-        col("stat_type"), col("key"))
-      .agg(count(lit(1)).as("value"))
+    windowed(DnsStatistics.contributions(flows, carry = Seq("event_time")),
+      watermark, eventWindow(window), col("stat_type"), col("key"))(
+      Seq(count(lit(1)).as("value")))
 
   /** T1 streaming (top_n_host_stats.py:155-202): per-window
-    * (src_ip, stat_type, key) flow counts — the windowed-counts half of
-    * the per-host top-N. The rank CUT is a read-side concern
+    * (src_ip, stat_type, key) flow counts of
+    * [[TopNHostStats.contributions]] — the windowed-counts half of the
+    * per-host top-N. The rank CUT is a read-side concern
     * (ReadSide.nestedTopN over the stored counts): ranking inside an
     * append-mode stream is not expressible, and the reference likewise
     * sorted driver-side per batch — same split as [[dnsStatistics]]. */
   def topNHostStats(flows: DataFrame, window: String = "10 seconds",
                     watermark: String = "30 seconds"): DataFrame =
-    graft.analytics.TopNHostStats.contributions(flows, carry = Seq("event_time"))
-      .withWatermark("event_time", watermark)
-      .groupBy(
-        org.apache.spark.sql.functions.window(col("event_time"), window),
-        col("src_ip"), col("stat_type"), col("key"))
-      .agg(count(lit(1)).as("flows"))
+    windowed(TopNHostStats.contributions(flows, carry = Seq("event_time")),
+      watermark, eventWindow(window), col("src_ip"), col("stat_type"), col("key"))(
+      Seq(count(lit(1)).as("flows")))
 
   /** ST1 end-to-end: SYN flows keyed by scan identity (horizontal =
     * src×dst_port, vertical = src×dst_ip — ports_scan.py:180-188).
@@ -186,9 +137,7 @@ object StreamingAnalytics {
     * reference's driver dict did exactly this accumulate-in-state anyway. */
   def scanObservations(flows: DataFrame): Dataset[ReportDedup.Observation] = {
     import flows.sparkSession.implicits._
-    val syn = flows.filter(col("protocol") === 6 && col("tcp_flags").isNotNull &&
-      col("tcp_flags").bitwiseAND(31) === 2 && col("src_ip4").isNotNull &&
-      col("dst_ip").isNotNull && col("dst_port").isNotNull)
+    val syn = flows.filter(PortScanDetection.synProbe)
     val h = syn.select(
       concat_ws("|", lit("horizontal"), col("src_ip4"), col("dst_port")).as("key"),
       col("start_ms").as("ts"), lit(1L).as("flows"))
@@ -205,68 +154,42 @@ object StreamingAnalytics {
                       gcMs: Long = 0L): Dataset[ReportDedup.Report] =
     ReportDedup(scanObservations(flows), reportIntervalMs, gcMs)
 
-  /** SSH brute-force candidates keyed src|dst through the same dedup
-    * state (ssh_auth_simple.py:170-179 band filter + :61-81 reporting).
-    * Bands are the reference defaults. */
+  /** SSH brute-force candidates ([[SshAuthDetection.candidate]] at the
+    * reference default bands) keyed src_ip4|dst_ip through the same dedup
+    * state (ssh_auth_simple.py:170-179 band filter + :61-81 reporting). */
   def sshAuthReports(flows: DataFrame, reportIntervalMs: Long = 300000L,
                      gcMs: Long = 0L): Dataset[ReportDedup.Report] = {
     import flows.sparkSession.implicits._
-    val cand = flows.filter(
-      col("protocol") === 6 && col("dst_port") === 22 && col("src_port") > 1024 &&
-      col("packets") > 10 && col("packets") < 20 &&
-      col("bytes") > 1800 && col("bytes") < 5000 &&
-      col("end_ms") - col("start_ms") < 12000 &&
-      col("src_ip4").isNotNull && col("dst_ip").isNotNull)
-    val obs = cand.select(
-      concat_ws("|", col("src_ip4"), col("dst_ip")).as("key"),
-      col("start_ms").as("ts"), lit(1L).as("flows"))
+    val obs = flows
+      .filter(SshAuthDetection.candidate() &&
+        col("src_ip4").isNotNull && col("dst_ip").isNotNull)
+      .select(concat_ws("|", col("src_ip4"), col("dst_ip")).as("key"),
+        col("start_ms").as("ts"), lit(1L).as("flows"))
       .as[ReportDedup.Observation]
     ReportDedup(obs, reportIntervalMs, gcMs)
   }
 
   /** J5 streaming form: biflow request/response pairing as a watermarked
-    * stream-stream self-join — equi-join on the canonical biflow key with
-    * an event-time range condition (pattern_finder.py:168-194;
-    * configuration.yml:110's ±tolerance). */
+    * stream-stream self-join of [[PatternFinder.biflowSides]] — equi-join
+    * on the canonical biflow key with an event-time range condition
+    * (pattern_finder.py:168-194; configuration.yml:110's ±tolerance),
+    * where the batch [[PatternFinder.biflows]] filters start times after
+    * the join. */
   def biflowPairs(flows: DataFrame, tolerance: String = "500 milliseconds",
                   watermark: String = "30 seconds",
                   vector: Seq[Column] = Nil): DataFrame = {
-    val key = sort_array(array(
-      concat_ws(":", col("src_port"), col("src_ip4")),
-      concat_ws(":", col("dst_port"), col("dst_ip"))))
-    val tagged = flows
-      .filter(col("src_ip4").isNotNull && col("src_port").isNotNull &&
-        col("dst_port").isNotNull)
-      .withColumn("biflow_key", concat_ws("|", key))
-    // optional config-driven per-flow vector (S7/X14) evaluated before the
-    // join so each side ships its array once through the stream-stream join
-    val withVec =
-      if (vector.isEmpty) tagged
-      else tagged.withColumn("_vec", array(vector.map(_.cast("double")): _*))
-    val vecReq = if (vector.isEmpty) Nil else Seq(col("_vec").as("req_vec"))
-    val vecRsp = if (vector.isEmpty) Nil else Seq(col("_vec").as("rsp_vec"))
-    val req = withVec.filter(col("src_port") > col("dst_port"))
-      .select(Seq(col("biflow_key"), col("flow_id").as("req_id"),
-        col("src_ip4").as("client_ip"), col("dst_ip").as("server_ip"),
-        col("event_time").as("req_time"),
-        col("start_ms").as("req_start_ms"), col("end_ms").as("req_end_ms"),
-        col("packets").as("req_packets"), col("bytes").as("req_bytes"))
-        ++ vecReq: _*)
-      .withWatermark("req_time", watermark)
-    val rsp = withVec.filter(col("src_port") <= col("dst_port"))
-      .select(Seq(col("biflow_key").as("rsp_key"), col("flow_id").as("rsp_id"),
-        col("event_time").as("rsp_time"),
-        col("packets").as("rsp_packets"), col("bytes").as("rsp_bytes"))
-        ++ vecRsp: _*)
-      .withWatermark("rsp_time", watermark)
+    val (req, rsp) = PatternFinder.biflowSides(flows, vector, carry = Seq("event_time"))
     // feature columns ride along so PatternFinder.classify composes
     // directly on the joined stream (full streaming pattern_finder)
-    req.join(rsp,
-      expr(s"biflow_key = rsp_key AND " +
-        s"rsp_time BETWEEN req_time - interval $tolerance " +
-        s"AND req_time + interval $tolerance"))
+    req.withWatermark("req_event_time", watermark)
+      .join(rsp.withColumnRenamed("biflow_key", "rsp_key")
+        .withWatermark("rsp_event_time", watermark),
+        expr(s"biflow_key = rsp_key AND " +
+          s"rsp_event_time BETWEEN req_event_time - interval $tolerance " +
+          s"AND req_event_time + interval $tolerance"))
       .select(Seq(col("biflow_key"), col("req_id"), col("rsp_id"),
-        col("client_ip"), col("server_ip"), col("req_time"), col("rsp_time"),
+        col("client_ip"), col("server_ip"),
+        col("req_event_time").as("req_time"), col("rsp_event_time").as("rsp_time"),
         col("req_start_ms"), col("req_end_ms"),
         col("req_packets"), col("req_bytes"),
         col("rsp_packets"), col("rsp_bytes"))
@@ -281,8 +204,8 @@ object StreamingAnalytics {
     * distribution (window sum + previously reported sums);
     * Documents.patternFinderDoc shapes them into @type=pattern_finder. */
   def patternFinderReports(flows: DataFrame,
-                           patterns: Seq[graft.analytics.PatternFinder.Pattern],
-                           cfg: graft.analytics.PatternFinder.DistConfig,
+                           patterns: Seq[PatternFinder.Pattern],
+                           cfg: PatternFinder.DistConfig,
                            reportIntervalMs: Long = 300000L,
                            tolerance: String = "500 milliseconds",
                            watermark: String = "30 seconds",
@@ -292,10 +215,10 @@ object StreamingAnalytics {
     val pairs = biflowPairs(flows, tolerance, watermark, vector)
     val vec =
       if (vector.isEmpty) None
-      else Some(graft.analytics.PatternFinder.biflowVector)
+      else Some(PatternFinder.biflowVector)
     val obs = vec.fold(
-      graft.analytics.PatternFinder.patternObservations(pairs, patterns, cfg))(
-      v => graft.analytics.PatternFinder.patternObservations(pairs, patterns, cfg, v))
+      PatternFinder.patternObservations(pairs, patterns, cfg))(
+      v => PatternFinder.patternObservations(pairs, patterns, cfg, v))
       .as[ReportDedup.PatternObservation]
     ReportDedup.patterns(obs, reportIntervalMs,
       cfg.intervals.size, cfg.mid, cfg.limit, gcMs)
@@ -304,7 +227,12 @@ object StreamingAnalytics {
   /** Windowed open-resolver inventory (dns_open_resolvers.py:51-68):
     * NoError A-record answers grouped per (resolver, data, query) with
     * first-seen (T5). CIDR/whitelist filtering composes upstream via
-    * NetFunctions.cidrMatch / rlike exactly as in the batch analytic. */
+    * NetFunctions.cidrMatch / rlike.
+    *
+    * Not the batch [[graft.analytics.DnsOpenResolvers]] rule: that keeps
+    * A, NS, CNAME and AAAA answers, decodes rdata per record type
+    * (`rdataDecode`, here `rdataToIpv4`) and applies the local→external
+    * CIDR direction filter itself. */
   def openResolvers(flows: DataFrame, window: String = "60 seconds",
                     watermark: String = "2 minutes"): DataFrame =
     flows
@@ -330,26 +258,6 @@ object StreamingAnalytics {
   final case class DdosDetection(dst_ip: String, short_ratio: Double,
                                  long_ratio: Double, packets: Long, flows: Long)
 
-  /** W3/J3 streaming: the DDoS short-vs-long-horizon comparison
-    * (detection_ddos.py:122-163) as keyed state. Joining two
-    * differently-windowed streaming aggregates is unsupported, so the
-    * long horizon lives as per-dst (packets, flows) counters in
-    * `flatMapGroupsWithState` — checkpointed by the state store (crash
-    * recovery for free), incrementally updated, never rewritten.
-    *
-    * Per microbatch and destination: fold the batch's flows into a short
-    * horizon (packets, flows); against the PRIOR profile, emit a
-    * detection when the short packet/flow ratio ≥ `ratioIncrease` × the
-    * profile ratio with at least `minPackets` short packets (no emission
-    * until a profile exists — the reference also warms up first); then
-    * fold the short horizon into the profile.
-    *
-    * Scale: one shuffle on dst_ip, state is 16 bytes per distinct
-    * destination, and per-batch work is proportional to the batch — no
-    * profile-table read/rewrite per trigger (the previous foreachBatch
-    * form rewrote the whole profile every 30 s batch and could lose the
-    * profile on a crash between report and overwrite). Emitted rows are
-    * final, so the operator runs in Append mode and file sinks work. */
   /** The DDoS keyed-state update, factored out so the timeout/eviction
     * branch is unit-testable with TestGroupState (a ProcessingTimeTimeout
     * keeps a local test query triggering sweep batches forever, so the
@@ -384,6 +292,27 @@ object StreamingAnalytics {
     }
   }
 
+  /** W3/J3 streaming: the DDoS short-vs-long-horizon comparison
+    * (detection_ddos.py:122-163) as keyed state over the batch form's
+    * watched flows ([[graft.analytics.DdosDetection.watched]]). Joining two
+    * differently-windowed streaming aggregates is unsupported, so the
+    * long horizon lives as per-dst (packets, flows) counters in
+    * `flatMapGroupsWithState` — checkpointed by the state store (crash
+    * recovery for free), incrementally updated, never rewritten.
+    *
+    * Per microbatch and destination: fold the batch's flows into a short
+    * horizon (packets, flows); against the PRIOR profile, emit a
+    * detection when the short packet/flow ratio ≥ `ratioIncrease` × the
+    * profile ratio with at least `minPackets` short packets (no emission
+    * until a profile exists — the reference also warms up first); then
+    * fold the short horizon into the profile.
+    *
+    * Scale: one shuffle on dst_ip, state is 16 bytes per distinct
+    * destination, and per-batch work is proportional to the batch — no
+    * profile-table read/rewrite per trigger (the previous foreachBatch
+    * form rewrote the whole profile every 30 s batch and could lose the
+    * profile on a crash between report and overwrite). Emitted rows are
+    * final, so the operator runs in Append mode and file sinks work. */
   def ddosKeyedState(flows: DataFrame, dstPattern: String,
                      ratioIncrease: Double, minPackets: Long,
                      stateTtlMs: Long = 0L): Dataset[DdosDetection] = {
@@ -396,9 +325,7 @@ object StreamingAnalytics {
       if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
     flows
-      .filter(col("protocol").isNotNull && col("packets").isNotNull &&
-        col("src_ip4").isNotNull && col("dst_ip").isNotNull &&
-        col("dst_ip").rlike(dstPattern))
+      .filter(graft.analytics.DdosDetection.watched(dstPattern))
       .select(col("dst_ip").as[String], col("packets").cast("long").as[Long])
       .groupByKey(_._1)
       .flatMapGroupsWithState[DdosProfile, DdosDetection](
@@ -409,46 +336,27 @@ object StreamingAnalytics {
   /** F6/J6/W1 streaming: reflected-DDoS detection as a windowed
     * conditional aggregation (reflectdos_main.py:140-199 — the reference's
     * 20 s processing-time window over a union of two keyed streams;
-    * restructured like the batch analytic to one scan where the victim is
-    * the non-server endpoint, with an event-time tumbling window).
+    * [[ReflectDdosDetection]]'s legs, aggregates and alert gates, with an
+    * event-time tumbling window).
     * `replies` sums reply PACKETS and gates strictly, matching
     * `stats[2] > minimal_replies` (:153,178). */
   def reflectDdos(flows: DataFrame, dnsServers: Seq[String],
                   ratioThreshold: Double = 3.0, minReplies: Long = 10L,
                   window: String = "20 seconds",
-                  watermark: String = "1 minute"): DataFrame = {
-    val toServer   = col("dst_ip").isin(dnsServers: _*)
-    val fromServer = col("src_ip4").isin(dnsServers: _*)
-    flows
-      .filter(col("protocol") === 17 && col("bytes").isNotNull &&
-        col("src_ip4").isNotNull && col("dst_ip").isNotNull &&
-        (toServer || fromServer))
-      .select(
-        when(fromServer, col("dst_ip")).otherwise(col("src_ip4")).as("src_ip"),
-        when(fromServer, col("src_ip4")).otherwise(col("dst_ip")).as("dns_ip"),
-        when(fromServer, col("bytes")).otherwise(0L).as("bytes_received"),
-        when(!fromServer, col("bytes")).otherwise(0L).as("bytes_sent"),
-        when(fromServer, coalesce(col("packets"), lit(0L))).otherwise(0L)
-          .as("replies"),
-        when(!fromServer, 1L).otherwise(0L).as("requests"),
-        col("event_time"))
-      .withWatermark("event_time", watermark)
-      .groupBy(
-        org.apache.spark.sql.functions.window(col("event_time"), window),
-        col("src_ip"), col("dns_ip"))
-      .agg(
-        sum("bytes_received").as("data_received"),
-        sum("bytes_sent").as("data_sent"),
-        sum("replies").as("replies"),
-        sum("requests").as("outgoing_connections"))
-      .filter(col("data_sent") =!= 0)
-      .withColumn("amplification",
-        round(col("data_received").cast("double") / col("data_sent"), 4))
-      .filter(col("amplification") > ratioThreshold && col("replies") > minReplies)
-  }
+                  watermark: String = "1 minute"): DataFrame =
+    ReflectDdosDetection.alerts(
+      windowed(ReflectDdosDetection.legs(flows, dnsServers, carry = Seq("event_time")),
+        watermark, eventWindow(window), col("src_ip"), col("dns_ip"))(
+        ReflectDdosDetection.aggs),
+      ratioThreshold, minReplies)
 
   /** J4 streaming form: stream-stream interval join with watermarks on
-    * both sides (dns_external_resolvers.py:158-166). */
+    * both sides (dns_external_resolvers.py:158-166).
+    *
+    * Not the batch [[graft.analytics.DnsExternalResolvers]] rule: the
+    * tolerance window here opens at the DNS flow's start (`event_time`),
+    * the batch one at its end (`end_ms`); and rows are emitted per pair,
+    * not aggregated per (client, resolver). */
   def externalResolvers(flows: DataFrame, tolerance: String = "5 seconds",
                         watermark: String = "1 minute"): DataFrame = {
     val dns = flows

@@ -192,8 +192,7 @@ object ConcurrentBench {
       spark.sparkContext.setJobDescription(name)
       streamFaces.get(name) match {
         case Some(face) => face(spark, sfDir)
-        case None => graft.Bench.forced.getOrElse(name, identity[DataFrame] _)
-          .apply(all(name)(spark, sfDir)).count()
+        case None => graft.Bench.consume(all(name)(spark, sfDir))
       }
       None
     }

@@ -444,34 +444,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming sessionize == batch gap sessionizer on the same events") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, Long)]
-    val events = mem.toDF().toDF("user_id", "ts_ms")
-      .withColumn("event_time", timestamp_millis(col("ts_ms")))
-    val q = StreamingAnalytics.sessionize(events, gap = "30 minutes",
-        watermark = "10 minutes")
-      .writeStream.format("memory").queryName("sess_out")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // u1: two sessions split by a >30 min gap; u2: one session
-      mem.addData(("u1", 0L), ("u1", 60000L), ("u1", 3000000L), ("u2", 500L))
-      q.processAllAvailable()
-      // watermark pusher far past every session end + gap
-      mem.addData(("wm", 100000000L))
-      q.processAllAvailable()
-      val got = spark.table("sess_out")
-        .select("user_id", "n_events", "session_start_ms", "session_end_ms")
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSet
-      assert(got == Set(
-        ("u1", 2L, 0L, 60000L),       // 0 and 60s merge (gap < 30 min)
-        ("u1", 1L, 3000000L, 3000000L), // 50 min later -> new session
-        ("u2", 1L, 500L, 500L)))
-    } finally q.stop()
-  }
-
   test("curateStream: dedup + quality gate + chunking in append mode with bounded state") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
@@ -1350,5 +1322,184 @@ class StreamingSpec extends SparkSpec {
         .map(_.getAs[Long]("doc_id")).toSet
       assert(docIds == Set(1L, 2L, 5L), docIds)
     } finally Seq(qDedup, qScan, qDdos, qDocs).foreach(_.stop())
+  }
+
+  // ----- stream == batch parity (SURVEY §5) -------------------------------
+  // Each case streams flows that all fall inside one event-time window
+  // through one MemoryStream batch and compares the sink with the batch
+  // analytic over the same flows: the two forms share one predicate,
+  // projection and aggregate list, so only the window column differs.
+
+  /** An hour boundary: every parity fixture starts here and stays inside
+    * the hour, so the streaming forms see exactly one window. */
+  private val hourT0 = 1502899200000L
+
+  /** `build` over `rows` streamed in one batch; the memory sink's rows. */
+  private def streamed(name: String, rows: Seq[Fx],
+                       mode: OutputMode = OutputMode.Complete())(
+      build: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Fx]
+    val q = build(FlowSource.withEventTime(mem.toDF())).writeStream
+      .format("memory").queryName(name).outputMode(mode).start()
+    try { mem.addData(rows: _*); q.processAllAvailable() } finally q.stop()
+    spark.table(name)
+  }
+
+  /** Host-profile fixture: three v4 hosts and one v6-only host, with a
+    * few flows missing `packets` or `bytes` (both forms drop them). */
+  private val hostFlows = (0 until 400).map(i => Fx(flow_id = i,
+    src_ip4 = if (i % 50 == 3) null else s"10.0.0.${i % 3}",
+    src_ip6 = if (i % 50 == 3) "2001:db8::1" else null,
+    dst_ip = s"192.0.2.${i % 97}", dst_port = 1000 + i % 61,
+    protocol = if (i % 4 == 0) 17 else 6, tcp_flags = i % 256L,
+    packets = 1L + i % 13, bytes = 100L + 7L * i,
+    start_ms = hourT0 + 60000L + 1000L * i,
+    end_ms = hourT0 + 60000L + 1000L * i + 250L * (i % 9)))
+
+  private def nullVolumes(flows: org.apache.spark.sql.DataFrame) = flows
+    .withColumn("packets", when(col("flow_id") % 50 === 7, lit(null)).otherwise(col("packets")))
+    .withColumn("bytes", when(col("flow_id") % 50 === 9, lit(null)).otherwise(col("bytes")))
+
+  test("parity: streaming hostStats == batch HostStats (HLL distincts near exact)") {
+    import graft.analytics.HostStats
+    val flows = nullVolumes(Fx.df(spark, hostFlows: _*))
+    val batch = HostStats(flows)
+    // the same HLL over the same rows, unwindowed: the stream's sketch must
+    // see exactly the flows the batch form keeps
+    val hll = HostStats.aggs(approx_count_distinct(_))
+    val batchHll = HostStats.profiled(flows).groupBy(HostStats.srcIp)
+      .agg(hll.head, hll.tail: _*)
+    val approx = Seq("dport_count", "peer_number")
+    val exact = batch.columns.filterNot(approx.contains)
+    val got = streamed("par_host_stats", hostFlows)(f =>
+      StreamingAnalytics.hostStats(nullVolumes(f), window = "1 hour", slide = "1 hour"))
+    def keyed(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getAs[String]("src_ip") -> r).toMap
+    val (b, h, s) = (keyed(batch), keyed(batchHll), keyed(got))
+    assert(b.size == 4 && s.keySet == b.keySet)
+    for ((ip, br) <- b; sr = s(ip)) {
+      exact.foreach(c => assert(sr.getAs[Any](c) == br.getAs[Any](c), s"$ip $c"))
+      approx.foreach { c =>
+        assert(sr.getAs[Long](c) == h(ip).getAs[Long](c), s"$ip $c")
+        // approx_count_distinct's default rsd is 5 %: allow 3 standard
+        // deviations (one estimate here reads 98 peers for 93)
+        val (e, a) = (br.getAs[Long](c).toDouble, sr.getAs[Long](c).toDouble)
+        assert(math.abs(a - e) <= 0.15 * e, s"$ip $c: approx $a vs exact $e")
+      }
+    }
+  }
+
+  test("parity: streaming dailyProfile hourly rows == batch HostDailyProfile") {
+    val batch = graft.analytics.HostDailyProfile(nullVolumes(Fx.df(spark, hostFlows: _*)))
+      .select(col("src_ip"), (col("day_start_ms") + col("hour_slot") * 3600000L),
+        col("hour_slot"), col("packets"), col("bytes"), col("flows"))
+    val got = streamed("par_daily", hostFlows)(f =>
+      StreamingAnalytics.dailyProfile(nullVolumes(f)))
+      .select(col("src_ip"), unix_millis(col("hour_start")), col("hour_slot"),
+        col("packets"), col("bytes"), col("flows"))
+    val b = batch.collect().map(_.toSeq).toSet
+    assert(b.size == 4)
+    assert(got.collect().map(_.toSeq).toSet == b)
+  }
+
+  test("parity: streaming tlsClassification == batch TlsClassification") {
+    val dict = Seq(
+      graft.analytics.TlsClassification.DictEntry("002f,0035", "d0", "os0", "app0", "br0"),
+      graft.analytics.TlsClassification.DictEntry("c02b", "d1", "os1", null, "br1"))
+    val suites = Seq("0x2f003500", "0x2bc0", "0xabcd1234", null,
+      "0x00000000000000000000000000000000", "0x2f0035000000")
+    val flows = (0 until 30).map(i => Fx(flow_id = i,
+      tls_cipher_suites = suites(i % suites.size), start_ms = hourT0 + 1000L * i))
+    val batch = graft.analytics.TlsClassification(spark, Fx.df(spark, flows: _*), dict)
+    val got = streamed("par_tls", flows)(f =>
+      StreamingAnalytics.tlsClassification(f, dict, window = "1 hour"))
+      .select("stat_type", "key", "value")
+    val b = batch.collect().map(_.toSeq).toSet
+    assert(b.contains(Seq("application", "Unknown", 10L)))
+    assert(got.collect().map(_.toSeq).toSet == b)
+  }
+
+  test("parity: streaming reflectDdos == batch ReflectDdosDetection") {
+    val servers = Seq("192.168.0.53", "192.168.0.54")
+    val flows = (0 until 120).map { i =>
+      val victim = s"10.7.0.${i % 5}"
+      val server = servers(i % 2)
+      val reply = i % 3 != 0
+      Fx(flow_id = i, protocol = if (i % 17 == 0) 6 else 17,
+        src_ip4 = if (reply) server else victim,
+        dst_ip = if (i % 23 == 0) "192.168.0.99" else if (reply) victim else server,
+        bytes = if (reply) 100L * (i % 5) else 100L, packets = 1L + i % 4,
+        start_ms = hourT0 + 1000L * i)
+    }
+    val batch = graft.analytics.ReflectDdosDetection(Fx.df(spark, flows: _*), servers,
+      ratioThreshold = 3.0, minReplies = 4L)
+    val got = streamed("par_reflect", flows)(f =>
+      StreamingAnalytics.reflectDdos(f, servers, ratioThreshold = 3.0, minReplies = 4L,
+        window = "1 hour"))
+      .select(batch.columns.map(col): _*)
+    val b = batch.collect().map(_.toSeq).toSet
+    assert(b.nonEmpty && b.size < 10) // some (victim, server) pairs gated out
+    assert(got.collect().map(_.toSeq).toSet == b)
+  }
+
+  test("parity: streaming biflowPairs == batch PatternFinder.biflows (req_id, rsp_id)") {
+    // response offsets around the ±500 ms tolerance, both directions
+    val offsets = Seq(0L, 100L, 499L, 500L, 501L, -300L, -500L, -501L, 2000L)
+    val flows = offsets.zipWithIndex.flatMap { case (off, k) =>
+      val t = hourT0 + 10000L * k
+      Seq(
+        Fx(flow_id = 2L * k, src_ip4 = s"10.7.0.$k", dst_ip = "192.0.2.9",
+          src_port = 40000L + k, dst_port = 53, start_ms = t),
+        Fx(flow_id = 2L * k + 1, src_ip4 = "192.0.2.9", dst_ip = s"10.7.0.$k",
+          src_port = 53L, dst_port = 40000 + k, start_ms = t + off))
+    } :+ Fx(flow_id = 99, src_ip4 = "10.7.0.0", dst_ip = "192.0.2.9",
+      src_port = 40000L, dst_port = 53, start_ms = hourT0 + 200L) // second request
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("req_id", "rsp_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val batch = ids(graft.analytics.PatternFinder.biflows(Fx.df(spark, flows: _*), 500L))
+    assert(batch == Set((0L, 1L), (99L, 1L), (2L, 3L), (4L, 5L), (6L, 7L),
+      (10L, 11L), (12L, 13L)))
+    assert(ids(streamed("par_biflow", flows, OutputMode.Append())(f =>
+      StreamingAnalytics.biflowPairs(f, tolerance = "500 milliseconds"))) == batch)
+  }
+
+  test("parity: streaming port-scan and SSH candidates == the batch detections") {
+    // port scan: pure-SYN test over the low 5 flag bits, TCP only, v4 source
+    val flags = Seq(2L, 18L, 34L, 3L, 0L, 66L)
+    val scan = (0 until 48).map(i => Fx(flow_id = i,
+      protocol = if (i % 11 == 0) 17 else 6, tcp_flags = flags(i % flags.size),
+      src_ip4 = if (i % 13 == 5) null else s"10.9.0.${i % 2}",
+      dst_ip = s"192.0.2.${i % 7}", dst_port = 20 + i % 3,
+      start_ms = hourT0 + 1000L * i))
+    val batchScan = graft.analytics.PortScanDetection(Fx.df(spark, scan: _*), 1L)
+      .collect().map(r => s"${r.getAs[String]("scan_type")}|${r.getAs[String]("src_ip")}|" +
+        r.getAs[String]("key") -> r.getAs[Long]("flows")).toMap
+    val streamScan = streamed("par_scan", scan, OutputMode.Append())(
+      StreamingAnalytics.scanObservations(_).toDF())
+      .groupBy("key").agg(sum("flows")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(batchScan.nonEmpty && streamScan == batchScan)
+
+    // ssh: each flow sits on one side of one band edge (own source host)
+    val inBand = Fx(protocol = 6, dst_port = 22, src_port = 40000L, packets = 15L,
+      bytes = 2000L, start_ms = hourT0, end_ms = hourT0 + 3000L)
+    val ssh = Seq[Fx => Fx](identity, _.copy(protocol = 17), _.copy(dst_port = 23),
+      _.copy(src_port = 1024L), _.copy(src_port = 1025L),
+      _.copy(packets = 10L), _.copy(packets = 11L), _.copy(packets = 19L),
+      _.copy(packets = 20L), _.copy(bytes = 1800L), _.copy(bytes = 1801L),
+      _.copy(bytes = 4999L), _.copy(bytes = 5000L),
+      _.copy(end_ms = hourT0 + 11999L), _.copy(end_ms = hourT0 + 12000L))
+      .zipWithIndex.map { case (edit, i) =>
+        edit(inBand).copy(flow_id = i, src_ip4 = s"10.5.0.$i",
+          start_ms = inBand.start_ms + i, end_ms = edit(inBand).end_ms + i)
+      }
+    val batchSsh = graft.analytics.SshAuthDetection(Fx.df(spark, ssh: _*), 1L)
+      .collect().map(r => s"${r.getAs[String]("src_ip")}|${r.getAs[String]("dst_ip")}").toSet
+    val streamSsh = streamed("par_ssh", ssh, OutputMode.Append())(
+      StreamingAnalytics.sshAuthReports(_).toDF())
+      .collect().map(_.getAs[String]("key")).toSet
+    assert(batchSsh.size == 7 && streamSsh == batchSsh)
   }
 }
