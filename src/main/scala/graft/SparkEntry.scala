@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{FlowSynth, Graft, Tables}
 import graft.analytics._
-import graft.functions.{DnsFunctions, NetFunctions, TextFunctions}
+import graft.expressions.GraftFunctions
+import graft.functions.{DnsFunctions, TextFunctions}
 import graft.multimodal.Multimodal
 import graft.pipeline.{Curation, Projection, Similarity, TextPipeline, UrlCuration}
 
@@ -70,7 +71,7 @@ object SparkEntry {
     // the other 8 carry the FAT expressions (typedLit suites, nested DNS
     // whens) — pruned from execution either way, but the narrow tree
     // halves the per-Dataset-op analyzer/optimizer walks that dominate
-    // this query's driver latency (PlanTime: build+optimize 0.4-0.9 s)
+    // this query's driver latency (StageProbe planning split: build+optimize 0.4-0.9 s)
     FlowSynth.fromEvents(graft.scale.Skew.ensureMinParallelismKnown(
       ev, scanParts,
       // quarter-width, measured r17 across widths under the bench
@@ -488,20 +489,6 @@ object SparkEntry {
       val left = ev.filter(col("event_type") === "purchase")
         .select("event_id", "user_id", "ts_ms")
       val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts_ms").as("click_ms"),
-          col("event_id"))
-        .groupBy("user_id", "click_ms")
-        .agg(max("event_id").as("click_id"))
-      graft.operators.AsOfJoin.backward(left, clicks, Seq("user_id"),
-          "ts_ms", "click_ms", Seq("click_id"))
-        .orderBy("event_id")
-    }),
-
-    "q_asof_join_native" -> ((s, dir) => {
-      val ev = eventsMs(s, dir)
-      val left = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts_ms")
-      val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id").as("r_user"), col("ts_ms").as("click_ms"),
           col("event_id"))
         .groupBy("r_user", "click_ms")
@@ -707,16 +694,7 @@ object SparkEntry {
 
     "q_cidr_filter" -> ((s, dir) =>
       flows(s, dir)
-        .filter(NetFunctions.cidrMatch(col("src_ip4"), "10.0.100.0/24"))
-        .groupBy("src_ip4")
-        .agg(count(lit(1)).as("flows"))
-        .orderBy("src_ip4")),
-
-    "q_cidr_filter_native" -> ((s, dir) =>
-      // same semantics as q_cidr_filter via the native Catalyst expression
-      flows(s, dir)
-        .filter(graft.expressions.GraftFunctions.cidrMatch(
-          col("src_ip4"), lit("10.0.100.0/24")))
+        .filter(GraftFunctions.cidrMatch(col("src_ip4"), lit("10.0.100.0/24")))
         .groupBy("src_ip4")
         .agg(count(lit(1)).as("flows"))
         .orderBy("src_ip4")),
@@ -2656,20 +2634,6 @@ object SparkEntry {
         |  ON p.user_id = c.user_id AND p.ts_ms >= c.click_ms
         |ORDER BY p.event_id""".stripMargin,
 
-    "q_asof_join_native" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, epoch_ms(ts) AS ts_ms, event_type FROM events
-        |), p AS (
-        |  SELECT event_id, user_id, ts_ms FROM e WHERE event_type = 'purchase'
-        |), c AS (
-        |  SELECT user_id, ts_ms AS click_ms, max(event_id) AS click_id
-        |  FROM e WHERE event_type = 'click' GROUP BY 1, 2
-        |)
-        |SELECT p.event_id, p.user_id, p.ts_ms, c.click_id, c.click_ms AS asof_ts
-        |FROM p ASOF LEFT JOIN c
-        |  ON p.user_id = c.user_id AND p.ts_ms >= c.click_ms
-        |ORDER BY p.event_id""".stripMargin,
-
     "q_range_join" ->
       """WITH e AS (
         |  SELECT event_id, epoch_ms(ts) AS start_ms,
@@ -3297,16 +3261,6 @@ object SparkEntry {
          |        WHEN distance >= 2 THEN 2 WHEN distance >= 1 THEN 1
          |        ELSE 0 END, 3) AS INT) AS bin
          |FROM best ORDER BY req_id, rsp_id""".stripMargin),
-
-    "q_cidr_filter_native" -> FlowSynth.oracle(
-      """SELECT src_ip4, count(*) AS flows
-        |FROM flows
-        |WHERE src_ip4 IS NOT NULL AND (
-        |  (CAST(string_split(src_ip4, '.')[1] AS BIGINT) * 16777216
-        |   + CAST(string_split(src_ip4, '.')[2] AS BIGINT) * 65536
-        |   + CAST(string_split(src_ip4, '.')[3] AS BIGINT) * 256
-        |   + CAST(string_split(src_ip4, '.')[4] AS BIGINT)) & 4294967040) = 167797760
-        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     "q_cidr_filter" -> FlowSynth.oracle(
       """SELECT src_ip4, count(*) AS flows

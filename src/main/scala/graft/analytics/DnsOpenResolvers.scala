@@ -2,17 +2,19 @@ package graft.analytics
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.{BitFunctions, DnsFunctions, NetFunctions}
+import graft.expressions.GraftFunctions
+import graft.functions.{BitFunctions, DnsFunctions}
 
 /** Open DNS resolver detection: local hosts answering external queries.
   *
   * Reference: applications/detection/dns_open_resolvers/spark/
   * dns_open_resolvers.py — successful answers (rcode NoError, :138-140)
   * with resource-record types A/NS/CNAME/AAAA (:134-137), local→external
-  * direction filter (:176-186 — F7, CIDR-based), rdata decoded per rrtype
-  * (:157, DNSResponseConverter), whitelist regex drop (:150-152 — X8),
-  * grouped per (resolver, decoded answer, query name) with flow counts
-  * (:51-68).
+  * direction filter (:176-186 — F7, CIDR-based; a flow with an address
+  * netaddr rejects, such as `10.0.100.300`, is dropped), rdata decoded
+  * per rrtype (:157, DNSResponseConverter), whitelist regex drop
+  * (:150-152 — X8), grouped per (resolver, decoded answer, query name)
+  * with flow counts (:51-68).
   */
 object DnsOpenResolvers {
 
@@ -25,8 +27,8 @@ object DnsOpenResolvers {
         col("dns_crr_type").isin(1, 2, 5, 28) &&
         col("dns_rdata").isNotNull &&
         col("src_ip4").isNotNull &&
-        NetFunctions.cidrMatch(col("src_ip4"), localCidr) &&
-        !NetFunctions.cidrMatch(col("dst_ip"), localCidr))
+        GraftFunctions.cidrMatch(col("src_ip4"), lit(localCidr)) &&
+        !GraftFunctions.cidrMatch(col("dst_ip"), lit(localCidr)))
     val cleaned = whitelistRegex match {
       case Some(re) => resp.filter(!col("dns_name").rlike(re))
       case None     => resp

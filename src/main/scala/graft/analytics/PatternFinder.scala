@@ -20,7 +20,8 @@ object PatternFinder {
     * items are AND-ed by [[filterExpr]]. A missing/null field contributes
     * false (reference semantics: pattern_finder.py:53-98 — the KeyError
     * branch — and configuration.yml:36-42).
-    * Ops: ip (CIDR membership), exists, int (set membership),
+    * Ops: ip (CIDR membership; an address netaddr rejects, such as
+    * `10.0.100.300`, never matches), exists, int (set membership),
     * eq, ne, gt, ge, lt, le, nin. */
   final case class FilterItem(fields: Seq[String], op: String, values: Seq[Any] = Nil)
 
@@ -38,7 +39,7 @@ object PatternFinder {
       vs.map { v =>
         // bare address = /32 (netaddr IPNetwork semantics)
         val cidr = if (v.toString.contains("/")) v.toString else v.toString + "/32"
-        graft.functions.NetFunctions.cidrMatch(c, cidr)
+        graft.expressions.GraftFunctions.cidrMatch(c, lit(cidr))
       }.reduce(_ || _)
     case "int" => c.isNotNull && c.isin(vs: _*)
     case "eq"  => c.isNotNull && vs.map(v => c === lit(v)).reduce(_ || _)

@@ -11,13 +11,15 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native Catalyst expressions for the hot network predicates (SURVEY.md
   * §4 "custom Catalyst work": cidr_match as an expression, F4).
   *
-  * The Column-composite versions in [[graft.functions.NetFunctions]] stay
-  * the default (they are oracle-portable); these native forms exist for
-  * the 100 TB hot path: a single byte-scan per row with no intermediate
-  * array allocation (the composite splits the IP into a string array and
-  * casts four octets per row), full whole-stage-codegen participation via
-  * `doGenCode`, and SQL availability through [[GraftExtensions]] /
-  * [[GraftFunctions.register]].
+  * These are the engine's one CIDR/IPv4 form (`GraftFunctions.cidrMatch`
+  * for DnsOpenResolvers, PatternFinder's `ip` filter op and
+  * q_cidr_filter): a single byte-scan per row with no intermediate array
+  * allocation, full whole-stage-codegen participation via `doGenCode`,
+  * and SQL availability through [[GraftExtensions]] /
+  * [[GraftFunctions.register]]. Reference semantics are netaddr's
+  * `IPAddress(ip) in IPNetwork(net)` (host_stats.py:152): an octet above
+  * 255, a missing octet or any other malformed address parses to NULL,
+  * so `10.0.100.300` matches no network.
   */
 object Ipv4Util {
 
@@ -282,19 +284,16 @@ object GraftFunctions {
   // Column API over the native expressions (no registration needed)
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
-  def ip4ToLong(ip: Column): Column = column(Ipv4ToLong(expression(ip)))
   def cidrMatch(ip: Column, cidr: Column): Column =
     column(CidrMatch(expression(ip), expression(cidr)))
 }
 
 /** `--conf spark.sql.extensions=graft.expressions.GraftExtensions` —
-  * registers the native functions, the opt-in count_distinct→HLL
-  * optimizer rewrite (flag `spark.graft.approxDistinct`), and the native
-  * as-of join planner strategy. */
+  * registers the native functions and the native as-of join planner
+  * strategy. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.functions.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => graft.plans.ApproxDistinctRewrite)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
 }

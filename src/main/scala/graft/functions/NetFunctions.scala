@@ -3,55 +3,16 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Network-address helpers (SURVEY.md §2.2 F4-F7, §2.8 X1-X2).
+/** Network-address helpers (SURVEY.md §2.8 X1-X2).
   *
-  * All pure `Column` composites over built-in functions — codegen'd by
+  * Pure `Column` composites over built-in functions — codegen'd by
   * Catalyst, no UDFs, so predicate pushdown and column pruning survive.
-  * Reference semantics: host_stats.py:152 (CIDR filter),
-  * ssh_auth_simple.py:139-150 (v4/v6 coalesce),
-  * protocols_statistics.py:82-96 (protocol names).
+  * Reference semantics: ssh_auth_simple.py:139-150 (v4/v6 coalesce),
+  * protocols_statistics.py:82-96 (protocol names). CIDR membership (F4)
+  * is the native [[graft.expressions.CidrMatch]]
+  * (`GraftFunctions.cidrMatch`).
   */
 object NetFunctions {
-
-  /** Dotted-quad IPv4 string → UInt32 as long (null for malformed). */
-  def ipv4ToLong(ip: Column): Column = {
-    val o = split(ip, "\\.")
-    when(size(o) === 4,
-      element_at(o, 1).cast("long") * 16777216L +
-      element_at(o, 2).cast("long") * 65536L +
-      element_at(o, 3).cast("long") * 256L +
-      element_at(o, 4).cast("long"))
-  }
-
-  /** UInt32 long → dotted-quad string. */
-  def longToIpv4(n: Column): Column =
-    concat_ws(".",
-      shiftright(n, 24).bitwiseAND(255).cast("string"),
-      shiftright(n, 16).bitwiseAND(255).cast("string"),
-      shiftright(n, 8).bitwiseAND(255).cast("string"),
-      n.bitwiseAND(255).cast("string"))
-
-  /** True iff `ip` (IPv4 dotted quad) is inside `cidr` ("a.b.c.d/len").
-    * Literal-cidr fast path: mask folding happens at plan time, the runtime
-    * work is one long-compare — pushdown-friendly (reference F4:
-    * IPAddress(ip) in IPNetwork(net), host_stats.py:152). */
-  def cidrMatch(ip: Column, cidr: String): Column = {
-    val Array(net, lenS) = cidr.split("/")
-    val len = lenS.toInt
-    val mask = if (len == 0) 0L else (0xFFFFFFFFL << (32 - len)) & 0xFFFFFFFFL
-    val netLong = net.split("\\.").map(_.toLong)
-      .foldLeft(0L)((a, o) => a * 256 + o) & mask
-    ipv4ToLong(ip).bitwiseAND(lit(mask)) === lit(netLong)
-  }
-
-  /** Column-cidr variant (both sides dynamic).
-    * mask = 2^32 - 2^(32-len); pow is exact for exponents ≤ 32. */
-  def cidrMatch(ip: Column, cidr: Column): Column = {
-    val net  = split(cidr, "/").getItem(0)
-    val len  = split(cidr, "/").getItem(1).cast("int")
-    val mask = (lit(4294967296L) - pow(lit(2.0d), lit(32) - len).cast("long"))
-    ipv4ToLong(ip).bitwiseAND(mask) === ipv4ToLong(net).bitwiseAND(mask)
-  }
 
   /** Prefer IPv4, fall back to IPv6 (reference get_ip pattern, X2). */
   def ipCoalesce(v4: Column, v6: Column): Column = coalesce(v4, v6)

@@ -56,10 +56,6 @@ object TextFunctions {
       size(filter(toks, t => t.isin(stopwords.map(lit): _*))).cast("double")
         / size(toks))
 
-  /** Fraction of whitespace tokens that are in `stopwords`. */
-  def stopwordRatio(s: Column, stopwords: Seq[String]): Column =
-    stopwordRatioFromTokens(tokens(s), stopwords)
-
   /** Quality score from pre-materialized raw ratios (hot-path form). */
   def qualityFromRaw(len: Column, punctRaw: Column, stopRaw: Column): Column = {
     val lenScore  = least(len.cast("double") / 500.0d, lit(1.0d))

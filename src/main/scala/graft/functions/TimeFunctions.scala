@@ -3,11 +3,10 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Time formatting helpers (SURVEY.md §2.8 X15, X16).
+/** Time formatting helpers (SURVEY.md §2.8 X15).
   *
   * Reference semantics: ports_scan.py:92-94 (+3 more apps) epoch-ms →
-  * `%Y-%m-%dT%H:%M:%S.%03dZ`; ports_scan web controller :254-256
-  * duration-ms → h:mm:ss divmod chain.
+  * `%Y-%m-%dT%H:%M:%S.%03dZ`.
   */
 object TimeFunctions {
 
@@ -28,15 +27,5 @@ object TimeFunctions {
         ColumnBridge.expression(timestamp_millis(ms)),
         TimestampNTZType, Some("UTC"))),
       "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
-  }
-
-  /** Duration-ms → "h:mm:ss" (hours unpadded and unbounded — NOT a
-    * time-of-day format, so > 24 h renders correctly). */
-  def durationHms(ms: Column): Column = {
-    val totalS = (ms / 1000).cast("long")
-    concat_ws(":",
-      (totalS / 3600).cast("long").cast("string"),
-      lpad(((totalS % 3600) / 60).cast("long").cast("string"), 2, "0"),
-      lpad((totalS % 60).cast("string"), 2, "0"))
   }
 }

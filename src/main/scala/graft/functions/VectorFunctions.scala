@@ -91,7 +91,4 @@ object VectorFunctions {
     aggregate(zip_with(votes, weights, (v, w) => when(v > 0, w).otherwise(0L)),
       lit(0L), (acc, x) => acc + x)
   }
-
-  /** SimHash of a token array under 47 planes. */
-  def simhash64(tokens: Column): Column = simhashFromHashes(tokenHashes(tokens))
 }

@@ -1225,16 +1225,6 @@ object Similarity {
   def lshSignBits(vec: org.apache.spark.sql.Column, planes: Int): org.apache.spark.sql.Column =
     Vec.lshSignBits(vec, planes)
 
-  /** Column-composite twin of [[lshSignBits]] (reference tier). */
-  def lshSignBitsComposite(vec: org.apache.spark.sql.Column, planes: Int): org.apache.spark.sql.Column =
-    concat((0 until planes).map { pl =>
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (v, i) => v * planeComponent(pl, i.cast("long"))),
-        lit(0.0d), (acc, x) => acc + x)
-      when(proj >= 0, lit("1")).otherwise(lit("0"))
-    }: _*)
-
   /** Banded multi-table sign-LSH candidate pairs with cosine score — the
     * minhash band shape applied to hyperplane signs. `planes` signs are
     * split into `bands` tables of planes/bands signs each; a pair is a

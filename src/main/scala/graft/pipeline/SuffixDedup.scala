@@ -57,45 +57,7 @@ object SuffixDedup {
   /** Duplicated-span starts in the [[TextPipeline.dupSpans]] contract:
     * (doc_id, pos, occurrences) — one row per position that starts a
     * duplicated substring of ≥ `minLen` tokens, with its class size. */
-  def exactDupSpans(docs: DataFrame, minLen: Int): DataFrame =
-    raw(docs, minLen)
-      .select((col("pos0") / Shift).cast("long").as("doc_id"),
-        (col("pos0") % Shift).cast("int").as("pos"),
-        col("occurrences"))
-
-  /** The removal half: every position covered by a NON-CANONICAL
-    * duplicated `minLen`-window (canonical = the class's minimum
-    * position) is cut from its document; same span-cut machinery and
-    * output contract as [[TextPipeline.removeDupSpans]]:
-    * (doc_id, text_clean, n_removed). */
-  def removeExactDupSpans(docs: DataFrame, minLen: Int): DataFrame = {
-    val rm = raw(docs, minLen)
-      .filter(col("pos0") =!= col("__rep"))
-      .select((col("pos0") / Shift).cast("long").as("doc_id"),
-        explode(sequence((col("pos0") % Shift).cast("int"),
-          (col("pos0") % Shift).cast("int") + (minLen - 1))).as("tp"))
-      // no distinct: collect_set dedups (doc_id, tp) itself, map-side —
-      // the extra exchange bought nothing (TextPipeline.removeDupSpans'
-      // r19 fix, same shape)
-      .groupBy("doc_id").agg(sort_array(collect_set("tp")).as("rm"))
-    docs.join(rm, Seq("doc_id"), "left")
-      .withColumn("__toks", TextFunctions.tokens(col("text")))
-      .withColumn("__rm", coalesce(col("rm"), array().cast("array<int>")))
-      .select(col("doc_id"),
-        when(size(col("__toks")) === 0, lit("")).otherwise(
-          array_join(transform(
-            filter(zip_with(col("__toks"),
-              sequence(lit(0), size(col("__toks")) - 1),
-              (t, i) => struct(t.as("t"), i.as("i"))),
-              s => !array_contains(col("__rm"), s.getField("i"))),
-            s => s.getField("t")), " ")).as("text_clean"),
-        size(col("__rm")).as("n_removed"))
-  }
-
-  /** Core pass: (pos0, __rep, occurrences) for duplicated starts, with
-    * the encoded position and the class representative kept for the
-    * removal composition. */
-  private def raw(docs: DataFrame, minLen: Int): DataFrame = {
+  def exactDupSpans(docs: DataFrame, minLen: Int): DataFrame = {
     require(minLen >= 1, "minLen must be >= 1")
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
@@ -143,10 +105,12 @@ object SuffixDedup {
         r.select(col("pos"), col("rank").as("ra"), lit(0L).as("rb"))
       else paired(minLen - k)
     val out = exact
-      .join(exact.groupBy("ra", "rb").agg(count(lit(1)).as("occurrences"),
-        min("pos").as("__rep")), Seq("ra", "rb"))
+      .join(exact.groupBy("ra", "rb").agg(count(lit(1)).as("occurrences")),
+        Seq("ra", "rb"))
       .filter(col("occurrences") > 1)
-      .select(col("pos").as("pos0"), col("__rep"), col("occurrences"))
+      .select((col("pos") / Shift).cast("long").as("doc_id"),
+        (col("pos") % Shift).cast("int").as("pos"),
+        col("occurrences"))
       .localCheckpoint(true)
     r.unpersist()
     out

@@ -833,16 +833,6 @@ object TextPipeline {
       .groupBy("ngram").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= minCount)
 
-  /** Sketch form of [[vocab]] for unbounded vocabularies: approx_top_k
-    * keeps a bounded per-partition summary instead of the full token
-    * table (counts approximate, tie order sketch-dependent — never
-    * assert a cut against the exact path). */
-  def vocabApprox(docs: DataFrame, topK: Int = 100): DataFrame =
-    docs.select(explode(graft.expressions.TextExpressions.wordShingles(col("text"), 1)).as("token"))
-      .agg(expr(s"approx_top_k(token, $topK)").as("top"))
-      .select(explode(col("top")).as("e"))
-      .select(col("e.item").as("token"), col("e.count").as("cnt"))
-
   /** TF-IDF keyword extraction: the top-`k` tokens per document ranked by
     * `tf · ln(N / df)` — the classic relevance weighting a curation
     * pipeline uses for topic tagging and per-document keyword features.

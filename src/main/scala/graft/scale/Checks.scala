@@ -115,11 +115,6 @@ object Checks {
         StructField("passed", BooleanType, nullable = false))))
   }
 
-  /** True iff every row of a [[report]] passed — the gate a pipeline
-    * calls before committing to a run. Collects #checks rows. */
-  def allPassed(reportDf: DataFrame): Boolean =
-    reportDf.agg(min(col("passed"))).collect().head.getBoolean(0)
-
   /** Zero-extra-pass variant: the same constraints ride a job that is
     * ALREADY running, via `Dataset.observe` (CollectMetrics — see
     * [[Observe]]). Batch: the metrics row arrives on the listener after
@@ -146,14 +141,6 @@ object Checks {
       (c.name, v, v >= c.lo && v <= c.hi)
     }
 
-  /** Append a [[report]] (or any `(check, value)`-shaped frame) to the
-    * run-over-run metric history at `dir`, tagged with `runId` — the
-    * metric layer the anomaly gate reads. Parquet append of #checks
-    * rows; the history stays metadata-sized forever (runs × checks). */
-  def historyAppend(reportDf: DataFrame, dir: String, runId: String): Unit =
-    reportDf.select(lit(runId).as("run_id"), col("check"), col("value"))
-      .coalesce(1).write.mode("append").parquet(dir)
-
   /** Run-over-run anomaly screen (the Deequ anomaly-detection model,
     * relative-rate-of-change strategy): compare `current` metrics
     * against the SAME check's value in the latest prior run (run ids
@@ -162,6 +149,8 @@ object Checks {
     * `|cur/prev - 1| > maxRelChange`. Fixed absolute bounds catch
     * corruption; this catches DRIFT — the corpus that silently shrank
     * 40% between crawls while every static constraint still passed.
+    * `history` holds one `(run_id, check, value)` row per check and
+    * prior run — each run's [[report]] appended with its id.
     *
     * All frames are metadata-sized (runs × checks); the one window is
     * PARTITIONED by check. A check with no prior run is emitted with

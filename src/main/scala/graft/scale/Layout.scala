@@ -81,16 +81,6 @@ object Layout {
       .sortWithinPartitions("zkey")
       .drop("zkey")
 
-  /** Per-partition [min,max] box of each dimension — the skipping
-    * statistics a parquet footer would carry, observable in-memory for
-    * specs and layout tuning. */
-  def partitionBoxes(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val aggs = cols.flatMap(c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    df.withColumn("__pid", spark_partition_id())
-      .groupBy("__pid").agg(aggs.head, aggs.tail: _*)
-  }
-
   /** One row per data file of a parquet table (recursive, skips
     * metadata): path, parent partition dir, bytes. Driver-side listing —
     * file metadata, not data. */

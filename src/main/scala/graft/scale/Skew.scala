@@ -1,37 +1,17 @@
 package graft.scale
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Scale utilities: skew-tolerant aggregation and shuffle-free
-  * co-partitioned joins.
+/** Scale utilities: parallelism guards for narrow scans, hot-key pair
+  * tiling and a shuffle-free-plan check.
   *
   * AQE (enabled in Graft.tune) already splits skewed SHUFFLE JOIN
-  * partitions at runtime; these helpers cover the two cases it doesn't:
-  * a groupBy whose hot key overwhelms one reducer, and repeated big-big
-  * joins on a stable key where the shuffle itself is the cost.
+  * partitions at runtime; these helpers cover the cases it doesn't: a
+  * scan too narrow for the per-row work behind it, and a same-key
+  * self-join whose hot key owns a quadratic share of the output.
   */
 object Skew {
-
-  /** Two-phase salted aggregation for hot-key groupBys: phase 1 groups on
-    * (key, salt) spreading a hot key over `buckets` reducers and runs the
-    * partial aggregates; phase 2 re-groups on the key and merges. Pass
-    * merge functions matching the partials (sum→sum, count→sum, min→min…).
-    *
-    * Use when one key holds a large fraction of all rows (the d² hot
-    * shingle in near-dup mining is the same phenomenon on a join).
-    * Partial aggregation already handles mild skew — salt only helps when
-    * per-group STATE is big or combine ratios are low. */
-  def saltedAgg(df: DataFrame, key: Column, buckets: Int,
-                partials: Seq[Column], merges: Seq[Column]): DataFrame =
-    df
-      .withColumn("__salt", pmod(spark_partition_id()
-        + monotonically_increasing_id(), lit(buckets)))
-      .groupBy(key.as("__key"), col("__salt"))
-      .agg(partials.head, partials.tail: _*)
-      .groupBy(col("__key"))
-      .agg(merges.head, merges.tail: _*)
-      .withColumnRenamed("__key", "key")
 
   /** Parallelism guard for CPU-heavy derivations over a NARROW scan: if
     * the input plans fewer partitions than `parts` (a single parquet
@@ -78,18 +58,9 @@ object Skew {
       df.sparkSession.sparkContext.defaultParallelism)) df
     else df.repartition(parts, byCols: _*)
 
-  /** Write a table bucketed+sorted by the join key. Joins between tables
-    * bucketed the same way need NO shuffle on either side (assert it with
-    * [[assertNoShuffleJoin]]); at 100 TB this converts every repeated
-    * fact-fact join on the key into a local zip of pre-sorted buckets. */
-  def writeBucketed(df: DataFrame, table: String, key: String,
-                    buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, key).sortBy(key)
-      .saveAsTable(table)
-
-  /** True iff the executed plan of `joined` contains no shuffle exchange —
-    * i.e. bucketing actually removed the join shuffle. */
+  /** True iff the executed plan of `joined` contains no hash-partitioning
+    * exchange — e.g. a join of tables bucketed the same way on its key
+    * (ScaleSpec asserts bucketed joins through it). */
   def hasNoShuffle(joined: DataFrame): Boolean =
     !joined.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning")
 

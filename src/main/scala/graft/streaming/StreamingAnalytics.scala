@@ -227,7 +227,7 @@ object StreamingAnalytics {
   /** Windowed open-resolver inventory (dns_open_resolvers.py:51-68):
     * NoError A-record answers grouped per (resolver, data, query) with
     * first-seen (T5). CIDR/whitelist filtering composes upstream via
-    * NetFunctions.cidrMatch / rlike.
+    * `GraftFunctions.cidrMatch` / rlike.
     *
     * Not the batch [[graft.analytics.DnsOpenResolvers]] rule: that keeps
     * A, NS, CNAME and AAAA answers, decodes rdata per record type

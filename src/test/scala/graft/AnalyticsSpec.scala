@@ -186,6 +186,15 @@ class AnalyticsSpec extends SparkSpec {
     assert(r("flows") == 1L)
   }
 
+  test("open resolvers: an octet above 255 matches no local network") {
+    // split-and-cast parsing reads 10.0.100.300 as 10.0.101.44; netaddr
+    // rejects it, so the flow is not a local resolver's answer
+    val row = Fx(flow_id = 1, src_ip4 = "10.0.100.300", dst_ip = "198.51.100.9",
+      dns_name = "x.example", dns_flags = Some(33152L), dns_crr_type = Some(1),
+      dns_rdata = "0x5db8d822")
+    assert(rowsOf(DnsOpenResolvers(Fx.df(spark, row), "10.0.101.0/24")).isEmpty)
+  }
+
   test("external resolvers: interval join pairs within tolerance (dns_external_resolvers.py:158-166)") {
     val dns = Seq(Fx(flow_id = 1, protocol = 17, src_ip4 = "10.6.0.1",
       dst_ip = "8.8.8.8", dns_flags = Some(33152L), end_ms = 10000))
@@ -275,6 +284,14 @@ class AnalyticsSpec extends SparkSpec {
       FilterItem("src_ip4", "ip", Seq("172.16.0.9")))))
       .collect().map(_.getAs[Long]("flow_id")).toSet
     assert(exact == Set(2L, 3L))
+  }
+
+  test("pattern finder: ip op rejects an octet above 255") {
+    import PatternFinder._
+    // split-and-cast parsing reads 10.0.100.300 as 10.0.101.44
+    val df = Fx.df(spark, Fx(flow_id = 1, src_ip4 = "10.0.100.300", dst_ip = "192.0.2.1"))
+    assert(df.filter(filterExpr(Seq(
+      FilterItem("src_ip4", "ip", Seq("10.0.101.0/24"))))).isEmpty)
   }
 
   test("pattern finder: biflow pairing + classification (pattern_finder.py:168-194)") {

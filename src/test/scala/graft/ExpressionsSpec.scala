@@ -1,8 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.expressions.{GraftFunctions, Ipv4Util}
-import graft.functions.NetFunctions
+import graft.expressions.{GraftFunctions, Ipv4ToLong, Ipv4Util}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.unsafe.types.UTF8String
 
 class ExpressionsSpec extends SparkSpec {
@@ -23,7 +23,8 @@ class ExpressionsSpec extends SparkSpec {
     val df = Seq("10.0.0.5", "10.0.1.5", "nonsense", null)
       .toDF("ip")
       .select(col("ip"),
-        GraftFunctions.ip4ToLong(col("ip")).as("n"),
+        ColumnBridge.column(Ipv4ToLong(ColumnBridge.expression(col("ip"))))
+          .as("n"),
         GraftFunctions.cidrMatch(col("ip"), lit("10.0.0.0/24")).as("m"))
     val r = df.collect()
     assert(r(0).getLong(1) == 167772165L && r(0).getBoolean(2))
@@ -129,7 +130,7 @@ class ExpressionsSpec extends SparkSpec {
     assert(viaSql == viaCol && viaSql > 0)
   }
 
-  test("spark.sql.extensions install path: functions, rewrite rule, strategy all active") {
+  test("spark.sql.extensions install: functions and strategy active") {
     import org.apache.spark.sql.classic.{SparkSession => CSparkSession}
     val shared = spark // force-init the spec session BEFORE creating s2
     val prevDefault = CSparkSession.getDefaultSession
@@ -150,13 +151,9 @@ class ExpressionsSpec extends SparkSpec {
       // injected SQL function
       assert(s2.sql("SELECT cidr_match('10.1.2.3', '10.0.0.0/8') AS m")
         .head().getBoolean(0))
-      // injected optimizer rule (flag-gated count_distinct -> HLL)
-      s2.conf.set("spark.graft.approxDistinct", "true")
-      s2.range(100).toDF("id").createOrReplaceTempView("ext_t")
-      val plan = s2.sql("SELECT count(DISTINCT id) FROM ext_t")
-        .queryExecution.optimizedPlan.toString
-      assert(plan.contains("approx_count_distinct"), plan)
-      s2.conf.set("spark.graft.approxDistinct", "false")
+      // injected planner strategy (the native as-of join)
+      assert(s2.sessionState.planner.strategies
+        .contains(graft.plans.AsOfJoinStrategy))
     } finally {
       prevDefault.foreach(CSparkSession.setDefaultSession)
       prevActive.foreach(CSparkSession.setActiveSession)
@@ -205,12 +202,15 @@ class ExpressionsSpec extends SparkSpec {
         (i.toLong, Seq.fill(64)(rnd.nextDouble() * 2 - 1))).toDF("id", "vec")
     val both = df.select(
       Similarity.lshSignBits(col("vec"), 16).as("ns"),
-      Similarity.lshSignBitsComposite(col("vec"), 16).as("cs"),
       Similarity.lshBucket(col("vec"), 16).as("nb"),
       Similarity.lshBucketComposite(col("vec"), 16).as("cb")).collect()
     both.foreach { r =>
-      assert(r.getString(0) == r.getString(1), s"sign mismatch: $r")
-      assert(r.getLong(2) == r.getLong(3), s"bucket mismatch: $r")
+      // the composite key's bit `pl` is plane pl's sign
+      val cb = r.getLong(2)
+      val compositeSigns =
+        (0 until 16).map(pl => if ((cb >> pl & 1L) == 1L) '1' else '0').mkString
+      assert(r.getString(0) == compositeSigns, s"sign mismatch: $r")
+      assert(r.getLong(1) == cb, s"bucket mismatch: $r")
     }
   }
 
@@ -256,14 +256,6 @@ class ExpressionsSpec extends SparkSpec {
       assert(r.getString(7) == r.getString(8), s"sign bits: $r")
       assert(r.getLong(9) == r.getLong(10), s"bucket key: $r")
     }
-  }
-
-  test("native cidr_match agrees with the composite NetFunctions version") {
-    val ips = (0 until 256).map(i => s"10.0.${i % 8}.$i").toDF("ip")
-    val both = ips.select(
-      GraftFunctions.cidrMatch(col("ip"), lit("10.0.4.0/22")).as("native"),
-      NetFunctions.cidrMatch(col("ip"), "10.0.4.0/22").as("composite"))
-    assert(both.filter(col("native") =!= col("composite")).count() == 0)
   }
 
   test("native word_shingles/poly_hash47/minhash_sig equal the Column composites") {

@@ -7,21 +7,14 @@ import graft.functions._
   * (SURVEY.md §2.8). Reference semantics cited per test. */
 class FunctionsSpec extends SparkSpec {
 
-  test("time: ISO8601 emission + h:mm:ss durations (X15/X16)") {
+  test("time: ISO8601 emission (X15)") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val df = Seq(
-      (1502900000000L, 3661000L),     // 1h 1m 1s
-      (1700000000123L, 90000000L))    // 25h — beyond time-of-day formats
-      .toDF("ts_ms", "dur_ms")
-      .select(
-        graft.functions.TimeFunctions.isoTimestamp(col("ts_ms")).as("iso"),
-        graft.functions.TimeFunctions.durationHms(col("dur_ms")).as("hms"))
-    val r = df.collect()
+    val r = Seq(1502900000000L, 1700000000123L).toDF("ts_ms")
+      .select(TimeFunctions.isoTimestamp(col("ts_ms")).as("iso"))
+      .collect()
     assert(r(0).getString(0) == "2017-08-16T16:13:20.000Z")
     assert(r(1).getString(0) == "2023-11-14T22:13:20.123Z")
-    assert(r(0).getString(1) == "1:01:01")
-    assert(r(1).getString(1) == "25:00:00")
   }
 
   test("time: ISO8601 renders UTC regardless of session time zone (X15)") {
@@ -43,20 +36,18 @@ class FunctionsSpec extends SparkSpec {
   private def eval1(c: org.apache.spark.sql.Column): Any =
     Seq(1).toDF("x").select(c.as("r")).collect()(0).get(0)
 
-  test("ipv4ToLong / longToIpv4 roundtrip") {
-    assert(eval1(NetFunctions.ipv4ToLong(lit("10.0.0.1"))) == 10L * 16777216 + 1)
-    assert(eval1(NetFunctions.ipv4ToLong(lit("255.255.255.255"))) == 4294967295L)
-    assert(eval1(NetFunctions.longToIpv4(lit(167772161L))) == "10.0.0.1")
-    assert(eval1(NetFunctions.ipv4ToLong(lit("not-an-ip"))) == null)
-  }
-
   test("cidrMatch literal and column variants (host_stats.py:152)") {
-    assert(eval1(NetFunctions.cidrMatch(lit("10.10.1.5"), "10.10.0.0/16")) == true)
-    assert(eval1(NetFunctions.cidrMatch(lit("10.11.1.5"), "10.10.0.0/16")) == false)
-    assert(eval1(NetFunctions.cidrMatch(lit("192.168.3.7"), "192.168.3.0/24")) == true)
-    assert(eval1(NetFunctions.cidrMatch(lit("1.2.3.4"), "0.0.0.0/0")) == true)
-    assert(eval1(NetFunctions.cidrMatch(lit("10.10.1.5"), lit("10.10.0.0/16"))) == true)
-    assert(eval1(NetFunctions.cidrMatch(lit("10.11.1.5"), lit("10.10.0.0/16"))) == false)
+    import graft.expressions.GraftFunctions.cidrMatch
+    assert(eval1(cidrMatch(lit("10.10.1.5"), lit("10.10.0.0/16"))) == true)
+    assert(eval1(cidrMatch(lit("10.11.1.5"), lit("10.10.0.0/16"))) == false)
+    assert(eval1(cidrMatch(lit("192.168.3.7"), lit("192.168.3.0/24"))) == true)
+    assert(eval1(cidrMatch(lit("1.2.3.4"), lit("0.0.0.0/0"))) == true)
+    // netaddr rejects an octet above 255: no network holds the address
+    assert(eval1(cidrMatch(lit("10.0.100.300"), lit("10.0.101.0/24"))) == null)
+    // both sides read from columns
+    val rows = Seq(("10.10.1.5", "10.10.0.0/16"), ("10.11.1.5", "10.10.0.0/16"))
+      .toDF("ip", "net").select(cidrMatch(col("ip"), col("net"))).collect()
+    assert(rows.map(_.getBoolean(0)).toSeq == Seq(true, false))
   }
 
   test("protocolName mapping (protocols_statistics.py:82-96)") {
@@ -123,7 +114,8 @@ class FunctionsSpec extends SparkSpec {
     assert(eval1(TextFunctions.tokenCount(lit(""))) == 0)
     assert(eval1(TextFunctions.subwordCount(lit("ab12,cd"))) == 4)
     assert(eval1(TextFunctions.punctRatio(lit("a,b!"))) == 0.5)
-    assert(eval1(TextFunctions.stopwordRatio(lit("the cat"), Seq("the"))) == 0.5)
+    assert(eval1(TextFunctions.stopwordRatioFromTokens(
+      TextFunctions.tokens(lit("the cat")), Seq("the"))) == 0.5)
   }
 
   test("fingerprint is deterministic polynomial hash") {
@@ -170,9 +162,11 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("simhash: identical inputs equal, disjoint inputs differ") {
-    val a = eval1(VectorFunctions.simhash64(typedLit(Seq("alpha", "beta", "gamma"))))
-    val b = eval1(VectorFunctions.simhash64(typedLit(Seq("alpha", "beta", "gamma"))))
-    val c = eval1(VectorFunctions.simhash64(typedLit(Seq("delta", "epsilon", "zeta"))))
+    def simhash(tokens: Seq[String]) = eval1(VectorFunctions.simhashFromHashes(
+      VectorFunctions.tokenHashes(typedLit(tokens))))
+    val a = simhash(Seq("alpha", "beta", "gamma"))
+    val b = simhash(Seq("alpha", "beta", "gamma"))
+    val c = simhash(Seq("delta", "epsilon", "zeta"))
     assert(a == b)
     assert(a != c)
   }

@@ -3,12 +3,13 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{AsOfJoin, RangeJoin}
+import graft.operators.RangeJoin
 import graft.plans.{AsOfJoinExec, AsOfJoinPlan}
 
 /** Generic relational operators Spark lacks natively: backward as-of join
-  * (Column composition + native sorted-merge exec) and the bucketed
-  * interval-overlap range join. */
+  * (native sorted-merge exec, checked against the union + window
+  * reference [[RefAsOfJoin]]) and the bucketed interval-overlap range
+  * join. */
 class OperatorsSpec extends SparkSpec {
 
   private def quotes: DataFrame = {
@@ -31,9 +32,18 @@ class OperatorsSpec extends SparkSpec {
     ).toDF("sym", "tts", "size")
   }
 
+  // the exec takes the last right row at a duplicated (key, ts) in sort
+  // order, not the greatest payload: dedupe (key, ts) first, keeping the
+  // greatest quote, as q_asof_join does
+  private def asOf(tolerance: Long = 0L): DataFrame =
+    AsOfJoinPlan.backward(trades,
+        quotes.groupBy(col("sym").as("q_sym"), col("qts"))
+          .agg(max("quote").as("quote")),
+        Seq("sym"), Seq("q_sym"), "tts", "qts", tolerance)
+      .withColumnRenamed("qts", "asof_ts")
+
   test("as-of join: backward match, ties, missing keys") {
-    val out = AsOfJoin.backward(trades, quotes, Seq("sym"),
-        "tts", "qts", Seq("quote"))
+    val out = asOf()
       .orderBy("sym", "tts")
       .select("sym", "tts", "quote", "asof_ts")
       .collect().map(r => (r.getString(0), r.getLong(1),
@@ -48,8 +58,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("as-of join: tolerance bounds the lag") {
-    val out = AsOfJoin.backward(trades, quotes, Seq("sym"),
-        "tts", "qts", Seq("quote"), tolerance = 10L)
+    val out = asOf(tolerance = 10L)
       .orderBy("sym", "tts")
       .select("sym", "tts", "quote")
       .collect().map(r => (r.getString(0), r.getLong(1), Option(r.get(2))))
@@ -73,7 +82,7 @@ class OperatorsSpec extends SparkSpec {
         col("event_id").as("click_id"))
       // dedupe (key, ts) so both forms' tie-resolution agrees
       .groupBy("r_user", "click_ms").agg(max("click_id").as("click_id"))
-    val viaColumns = AsOfJoin.backward(
+    val viaColumns = RefAsOfJoin.backward(
         left, right.withColumnRenamed("r_user", "user_id"), Seq("user_id"),
         "ts_ms", "click_ms", Seq("click_id"))
       .select("event_id", "user_id", "ts_ms", "click_id", "asof_ts")
@@ -106,7 +115,7 @@ class OperatorsSpec extends SparkSpec {
     val right = right0.groupBy("rg", "rh", "rts")
       .agg(max("payload").as("payload"))
 
-    val reference = AsOfJoin.backward(
+    val reference = RefAsOfJoin.backward(
         left,
         right.withColumnRenamed("rg", "g").withColumnRenamed("rh", "h"),
         Seq("g", "h"), "lts", "rts", Seq("payload"))

@@ -267,14 +267,6 @@ class PipelineSpec extends SparkSpec {
     val pairs = rowsOf(TextPipeline.bpePairCounts(docs(1L -> "abab ab x"), 3))
     // "abab": ab ba ab; "ab": ab; "x": too short -> ab=3, ba=1
     assert(pairs.map(r => (r("pair"), r("cnt"))) == Seq(("ab", 3L), ("ba", 1L)))
-    // sketch path: counts exact when the vocab fits the sketch (compare
-    // uncut maps, never the sketch's tie-dependent cut order)
-    val d = docs(2L -> "a a a b b c")
-    val exact = rowsOf(TextPipeline.vocab(d, 10))
-      .map(r => r("token") -> r("cnt")).toMap
-    val approx = rowsOf(TextPipeline.vocabApprox(d, 10))
-      .map(r => r("token") -> r("cnt")).toMap
-    assert(approx == exact)
   }
 
   test("pqCodes/annPq: identical vectors share codes; ADC ranks the duplicate first") {

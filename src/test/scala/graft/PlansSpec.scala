@@ -1,33 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.plans.ApproxDistinctRewrite
 
 class PlansSpec extends SparkSpec {
   import spark.implicits._
-
-  test("ApproxDistinctRewrite: count_distinct becomes HLL only under the flag") {
-    val df = (0 until 500).map(i => (i % 7, s"v${i % 40}")).toDF("g", "x")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ ApproxDistinctRewrite
-    try {
-      def planOf() = df.groupBy("g").agg(count_distinct(col("x")).as("d"))
-        .queryExecution.optimizedPlan.toString
-      // flag off: exact distinct survives
-      spark.conf.set("spark.graft.approxDistinct", "false")
-      assert(!planOf().contains("approx_count_distinct"))
-      // flag on: rewritten to the sketch, values within rsd on small data
-      spark.conf.set("spark.graft.approxDistinct", "true")
-      assert(planOf().contains("approx_count_distinct"))
-      val approx = df.groupBy("g").agg(count_distinct(col("x")).as("d"))
-        .collect().map(_.getLong(1))
-      assert(approx.forall(d => d >= 36 && d <= 44)) // 40 distinct, 5% rsd
-    } finally {
-      spark.conf.set("spark.graft.approxDistinct", "false")
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == ApproxDistinctRewrite)
-    }
-  }
 
   test("Curation plans: benchmark side broadcasts; chunk and mix are shuffle-free") {
     import graft.pipeline.Curation
@@ -69,21 +45,5 @@ class PlansSpec extends SparkSpec {
       Seq((1L, "a b c")).toDF("doc_id", "text"), 10)
       .queryExecution.executedPlan.toString
     assert(vocabPlan.contains("TakeOrderedAndProject")) // no corpus-wide sort
-  }
-
-  test("ApproxDistinctRewrite leaves filtered and multi-arg distincts alone") {
-    val df = (0 until 100).map(i => (i % 3, i % 10, i % 5)).toDF("g", "x", "y")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ ApproxDistinctRewrite
-    try {
-      spark.conf.set("spark.graft.approxDistinct", "true")
-      val multi = df.groupBy("g").agg(count_distinct(col("x"), col("y")).as("d"))
-      assert(!multi.queryExecution.optimizedPlan.toString.contains("approx_count_distinct"))
-      assert(multi.collect().map(_.getLong(1)).max == 10L) // still exact
-    } finally {
-      spark.conf.set("spark.graft.approxDistinct", "false")
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == ApproxDistinctRewrite)
-    }
   }
 }

@@ -1,47 +1,29 @@
-package graft.operators
+package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Backward as-of join: attach to every left row the most recent right row
-  * with the same key and `rightTs <= leftTs` (optionally within a
-  * tolerance). The operator Spark's Scala Dataset API lacks (pandas-on-
-  * Spark rewrites `merge_asof` into an aggregate; Flink/kdb expose it
-  * natively); reference analogue: the time-proximity joins of
-  * `dns_external_resolvers.py:103-116` generalized to a reusable operator.
+/** Union + running-last as-of join reference — a verification fixture
+  * for [[graft.plans.AsOfJoinPlan]], NOT part of the engine. Attaches to
+  * every left row the most recent right row with the same key and
+  * `rightTs <= leftTs` (optionally within a tolerance), built from
+  * built-ins only:
   *
-  * Implementation is the UNION + running-last form, chosen for scale:
-  *
-  *   - both inputs are tagged and unioned — ONE shuffle, keyed by the join
-  *     key, instead of the naive range join's key-shuffle AND a second
-  *     pass (a range join on (key, ts <= ts) explodes to
-  *     O(left × right-per-key) intermediate pairs before its top-1 cut;
-  *     this form never materializes a pair);
-  *   - within each key partition a single window sort by (ts, side) feeds
-  *     `last(payload, ignoreNulls)` over the unbounded-preceding frame —
-  *     the running "most recent right row seen so far", O(n log n) per
-  *     key and spill-safe (window sort spills; no state beyond one row);
+  *   - both inputs are tagged and unioned, keyed by the join key;
+  *   - one window sorted by (ts, side) feeds `last(payload, ignoreNulls)`
+  *     over the unbounded-preceding frame, the running "most recent right
+  *     row seen so far";
   *   - right rows sort BEFORE left rows at equal ts, so a right row
   *     timestamped exactly at `leftTs` matches (the `>=` convention of
-  *     DuckDB/pandas ASOF).
+  *     DuckDB/pandas ASOF); at equal (ts, side) the greatest payload
+  *     struct wins.
   *
-  * At 100 TB both sides shuffle once on the key — the same cost as any
-  * equi-join on that key — and skew behaves like any keyed window (salt
-  * the key upstream via [[graft.scale.Skew]] if one key dominates). The
-  * left row rides the union as a single struct column, so the unioned
-  * schema stays three columns wide regardless of either side's width and
-  * no join-back is needed.
-  *
-  * [[graft.plans.AsOfJoinPlan]] is the native physical-operator tier of
-  * the same semantics (sorted-merge exec, no unioned-schema
-  * materialization); this Column form stays the default because its plan
-  * is pure built-ins (AQE, whole-stage codegen, oracle-portable). With
-  * every output column consumed (4 cores, same rows, medians of 12
-  * alternating passes) the native exec ran 1.22 s against this form's
-  * 1.46 s on 1M ScaleSmoke-shaped events, and 0.76 s against 0.85 s on
-  * 100k. A bare `count()` of this form prunes the window (no output
-  * column needs it), so a count-timed row does not time the join.
+  * The left row rides the union as one struct column, so no join-back is
+  * needed. With every output column consumed the native exec ran 1.22 s
+  * against this form's 1.46 s on 1M events (4 cores, 12 alternating
+  * passes), which is why the exec ships and this form is the parity
+  * reference.
   *
   * @param key       equi-join key column names (present on both sides)
   * @param leftTs    left ordering column (numeric, e.g. epoch millis)
@@ -52,7 +34,7 @@ import org.apache.spark.sql.functions._
   * @return left rows + matched `payload` columns + `asof_ts` (matched
   *         right timestamp), all NULL when no right row qualifies
   */
-object AsOfJoin {
+object RefAsOfJoin {
 
   def backward(left: DataFrame, right: DataFrame, key: Seq[String],
                leftTs: String, rightTs: String, payload: Seq[String],

@@ -89,20 +89,6 @@ class ScaleSpec extends SparkSpec {
     assert(megaSet.forall(kept), "maxCluster must exempt-and-keep the mega class")
   }
 
-  test("saltedAgg equals plain groupBy on skewed data") {
-    // hot key: 90% of rows on one key
-    val rows = (0 until 1000).map(i =>
-      (if (i < 900) "hot" else s"k${i % 17}", i.toLong))
-    val df = rows.toDF("k", "v").repartition(8)
-    val plain = df.groupBy("k").agg(sum("v").as("total"), count(lit(1)).as("cnt"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val salted = Skew.saltedAgg(df, col("k"), buckets = 4,
-      Seq(sum("v").as("s"), count(lit(1)).as("c")),
-      Seq(sum("s").as("total"), sum("c").as("cnt")))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    assert(salted == plain)
-  }
-
   test("tiledPairs equals the naive same-key self-join, hot and cold keys") {
     // one degenerate key with 57 rows (tiled into ceil(57/8)=8 tiles),
     // several cold keys (pass through untiled), ids deliberately NOT
@@ -237,7 +223,9 @@ class ScaleSpec extends SparkSpec {
     // skipping power: count partitions whose [min,max] box intersects a
     // small query box, for z-order vs linear sort on id (append order)
     def touched(frame: org.apache.spark.sql.DataFrame): Long =
-      Layout.partitionBoxes(frame, Seq("x", "y"))
+      frame.groupBy(spark_partition_id())
+        .agg(min("x").as("min_x"), max("x").as("max_x"),
+          min("y").as("min_y"), max("y").as("max_y"))
         .filter(col("min_x") <= 256 && col("max_x") >= 0 &&
           col("min_y") <= 256 && col("max_y") >= 0)
         .count()
@@ -324,8 +312,9 @@ class ScaleSpec extends SparkSpec {
     try {
       val left = (0L until 500L).map(i => (i, s"l$i")).toDF("id", "l")
       val right = (0L until 500L).map(i => (i, i * 2)).toDF("id", "r")
-      Skew.writeBucketed(left, "bk_left", "id", 8)
-      Skew.writeBucketed(right, "bk_right", "id", 8)
+      for ((df, table) <- Seq(left -> "bk_left", right -> "bk_right"))
+        df.write.mode("overwrite").bucketBy(8, "id").sortBy("id")
+          .saveAsTable(table)
       // force sort-merge (tiny inputs would broadcast, which has no hash
       // exchange either and would prove nothing about bucketing)
       val joined = spark.table("bk_left").hint("merge")
@@ -915,8 +904,9 @@ class ScaleSpec extends SparkSpec {
     assert(byName("min(n)") == ((10.0, true)))
     assert(byName("pattern(text)") == ((0.5, true)))
     assert(byName("in_set(text)") == ((0.1, true)))
-    assert(!Checks.allPassed(rep))
-    assert(Checks.allPassed(Checks.report(spark, df, Seq(Checks.size(1)))))
+    def allPassed(r: org.apache.spark.sql.DataFrame) = r.filter(!col("passed")).isEmpty
+    assert(!allPassed(rep))
+    assert(allPassed(Checks.report(spark, df, Seq(Checks.size(1)))))
   }
 
   test("Checks: every metric rides ONE scan; approx uniqueness avoids Expand") {
@@ -982,7 +972,7 @@ class ScaleSpec extends SparkSpec {
     assert(byName("completeness(text)") == ((0.0, false)))
     val (mv, mp) = byName("min(doc_id)")
     assert(mv.isNaN && !mp) // no rows -> no min -> NaN, never passes
-    assert(!Checks.allPassed(rep))
+    assert(!rep.filter(!col("passed")).isEmpty)
   }
 
   test("Checks: history layer + run-over-run anomaly screen") {
@@ -990,10 +980,13 @@ class ScaleSpec extends SparkSpec {
     val checks = Seq(Checks.size(1), Checks.meanOf("v", 0.0, 1e9))
     val dir = java.nio.file.Files.createTempDirectory("qhist").toString + "/h"
     val prevRun = Checks.report(spark, (1 to 100).toDF("v"), checks)
-    Checks.historyAppend(prevRun, dir, "2026-02-01")
+    // the history layer: one (run_id, check, value) row per check and run
+    def historyAppend(report: org.apache.spark.sql.DataFrame, runId: String): Unit =
+      report.select(lit(runId).as("run_id"), col("check"), col("value"))
+        .write.mode("append").parquet(dir)
+    historyAppend(prevRun, "2026-02-01")
     // an older, wilder run that must NOT win latest-prior selection
-    Checks.historyAppend(
-      prevRun.withColumn("value", col("value") * lit(100.0)), dir, "2026-01-01")
+    historyAppend(prevRun.withColumn("value", col("value") * lit(100.0)), "2026-01-01")
     // current run shrank 70%; also carries a check with no history
     val cur = Checks.report(spark, (1 to 30).toDF("v"),
       checks :+ Checks.minOf("v", 0.0))

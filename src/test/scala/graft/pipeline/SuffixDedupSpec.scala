@@ -64,22 +64,6 @@ class SuffixDedupSpec extends SparkSpec {
     assert(got == Set((1L, 0, 3L), (2L, 0, 3L), (3L, 0, 3L)))
   }
 
-  test("removeExactDupSpans matches removeDupSpans; canonical occurrence survives") {
-    val d = docs(
-      (1L, "alpha beta gamma delta unique1"),
-      (2L, "unique2 alpha beta gamma delta"),
-      (3L, "nothing shared here at all"))
-    val a = SuffixDedup.removeExactDupSpans(d, minLen = 3)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
-    val b = TextPipeline.removeDupSpans(d, k = 3)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
-    assert(a == b, s"$a vs $b")
-    // doc 1 holds the canonical occurrence → untouched
-    assert(a.exists(t => t._1 == 1L && t._2 == "alpha beta gamma delta unique1"
-      && t._3 == 0))
-    assert(a.exists(t => t._1 == 2L && t._3 > 0))
-  }
-
   test("empty and token-poor documents are safe at every power-of-two path") {
     val d = docs((1L, ""), (2L, "solo"), (3L, "two words"),
       (4L, "two words"), (5L, "   "))
