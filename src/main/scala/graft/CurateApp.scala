@@ -96,7 +96,7 @@ object CurateApp {
     // version — Curation.corpusDiff) before any other stage, so every
     // downstream scan/shuffle is delta-sized instead of corpus-sized;
     // removed doc_ids go to --retired for the store owner to apply
-    // (Documents.upsertDaily / incremental-dedup key retirement)
+    // (Documents.deleteDaily / incremental-dedup key retirement)
     val base = c.diffPrev match {
       case None => raw
       case Some(prevPath) =>
@@ -313,7 +313,7 @@ object CurateApp {
         Checks.uniquenessApprox(r.toDouble, 0.02,
           cols.split(',').toIndexedSeq: _*)
       case Array("mean", c, lo, hi)  => Checks.meanOf(c, lo.toDouble, hi.toDouble)
-      case other => throw new IllegalArgumentException(
+      case _ => throw new IllegalArgumentException(
         s"--gate: unrecognized constraint '$s' " +
           "(size:LO[:HI] | complete:COL:FRAC | unique:COLS:RATIO | mean:COL:LO:HI)")
     })

@@ -54,17 +54,4 @@ object DnsStatistics {
       .filter(col("rank") <= topN)
       .drop("rank")
   }
-
-  /** Sketch-based top-N (T2 at 100 TB): `approx_top_k` keeps a bounded
-    * DataSketches frequent-items summary per stat type instead of the
-    * exact per-key counts — one aggregation, state O(k), no full key-space
-    * shuffle. Exact on key spaces smaller than the sketch capacity. */
-  def applyApprox(flows: DataFrame, topN: Int = 100): DataFrame = {
-    contributions(flows)
-      .groupBy("stat_type")
-      .agg(expr(s"approx_top_k(key, $topN)").as("top"))
-      .select(col("stat_type"), explode(col("top")).as("kv"))
-      .select(col("stat_type"), col("kv.item").as("key"),
-        col("kv.count").as("value"))
-  }
 }

@@ -193,8 +193,8 @@ object PatternFinder {
     * The element-wise distribution-array sum (A12, sum_distributions at
     * pattern_finder.py:238-247) is expressed as one per-bin conditional
     * SUM inside a single hash aggregate — the map-side-combinable form of
-    * [[graft.functions.VectorFunctions.arraySum]] (spec-pinned equal to
-    * the explicit array fold), so one shuffle on (src_ip, dst_ip) carries
+    * the element-wise array fold (spec-pinned equal to it), so one
+    * shuffle on (src_ip, dst_ip) carries
     * fixed-width partial sums, never per-pair arrays. */
   def patternReport(pairs: DataFrame, patterns: Seq[Pattern],
                     cfg: DistConfig): DataFrame =

@@ -27,22 +27,6 @@ object Graft {
     spark
   }
 
-  /** Opt into the RocksDB state store for streaming state. The default
-    * HDFS-backed provider keeps every version of every key on the executor
-    * HEAP — at 100 TB-scale key spaces (per-host profiles, corpus-wide
-    * streaming dedup keys) that is an OOM, not a tuning problem. RocksDB
-    * holds state off-heap + on local disk, and changelog checkpointing
-    * ships per-batch deltas instead of full SST snapshots. Runtime-settable;
-    * applies to queries STARTED after this call. */
-  def useRocksDbState(spark: SparkSession, changelog: Boolean = true): SparkSession = {
-    val c = spark.conf
-    c.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    c.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      changelog.toString)
-    spark
-  }
-
   private val ShufflePartitions = "spark.sql.shuffle.partitions"
 
   /** The master a session starts on: the one the submitter put in the

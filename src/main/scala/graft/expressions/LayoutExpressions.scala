@@ -10,11 +10,11 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** `z_key(bits; c0, c1, …)` — Morton interleave of the low `bits` bits
-  * of each child, first child at bit position 0. Native twin of
-  * [[graft.scale.Layout.interleaveBits]]'s composed shift/or tree: the
-  * composite spells bits·n Column nodes (the oracle-portable form, kept
-  * as the reference); this is ONE expression node with a tight two-level
-  * loop in both interpreted eval and generated code — the hot-path form
+  * of each child, first child at bit position 0. The composed shift/or
+  * tree spells bits·n Column nodes (the oracle-portable form, kept in the
+  * tests as `RefColumns.interleaveBits`); this is ONE expression node
+  * with a tight two-level loop in both interpreted eval and generated
+  * code — the hot-path form
   * a full-corpus layout pass wants, since the z-key is computed for
   * every row of the table being rewritten. Children must already be
   * LongType (cast upstream) and non-negative scaled values; NULL in any

@@ -142,8 +142,9 @@ object TextUtil {
   }
 
   /** 47-bit polynomial hash of each element: fold (acc*31 + codepoint)
-    * mod 2^47-115 — identical to TextFunctions.fingerprint /
-    * VectorFunctions.tokenHashes (BMP codepoints = UTF-16 chars). */
+    * mod 2^47-115 — identical to TextFunctions.fingerprint and to the
+    * tests' Column composite `RefColumns.tokenHashes` (BMP codepoints =
+    * UTF-16 chars). */
   def polyHash47(arr: ArrayData): ArrayData = {
     val nEl = arr.numElements()
     val out = new Array[Long](nEl)
@@ -363,10 +364,10 @@ object TextUtil {
 
   /** SimHash vote fold over token hashes — bit k set iff Σ sign(bit k)
     * of the hashes > 0, byte-identical to the `aggregate`+`zip_with`
-    * Column composite in VectorFunctions.simhashFromHashes (including
-    * its null-element convention: a null hash votes −1 on every bit,
-    * the CASE/ELSE branch the composite takes). One tight loop instead
-    * of 47 interpreted lambda CASEs per token. */
+    * Column composite the tests keep as `RefColumns.simhashFromHashes`
+    * (including its null-element convention: a null hash votes −1 on
+    * every bit, the CASE/ELSE branch the composite takes). One tight
+    * loop instead of 47 interpreted lambda CASEs per token. */
   def simhashFold(hashes: ArrayData): Long = {
     val votes = new Array[Long](47)
     val n = hashes.numElements()

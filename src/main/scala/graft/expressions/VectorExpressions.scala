@@ -141,15 +141,29 @@ object VectorUtil {
 }
 
 /** Sign-of-projection LSH kernels shared by [[LshSignBits]] and
-  * [[LshBucketKey]] — the same deterministic hyperplane formula as the
-  * Column composite in Similarity (h1 = (i·2654435761 + pl·40503 + 12345)
-  * mod 2^20, h = h1·(h1+1)/2 mod 2^20, component = h/2^19 − 1, left-fold
-  * projection), one tight
-  * loop instead of planes × dims interpreted lambda calls. A null element
-  * nulls that plane's projection, which the composite's when() maps to
-  * sign 0 — replicated here. (Whole-NULL input is null under these
-  * expressions, where the composite degenerates to all-zero signs; no
-  * data path feeds null embeddings.) */
+  * [[LshBucketKey]]. Hyperplane pl's component at dim i is a fixed
+  * integer hash mapped to [-1, 1): h1 = (i·2654435761 + pl·40503 + 12345)
+  * mod 2^20, h = h1·(h1+1)/2 mod 2^20, component = h/2^19 − 1; the
+  * projection is a left fold, so the formula is SQL-expressible for the
+  * oracles and the tests keep its Column composite (`RefColumns.lshBucket`)
+  * as the reference. One tight loop instead of planes × dims interpreted
+  * lambda calls.
+  *
+  * The quadratic second round matters: the affine draw alone makes
+  * adjacent planes differ by the SAME constant at every dim, so
+  * projections drift smoothly across planes and a band's sign-substring
+  * collapses into ~planes monotone run patterns instead of 2^perBand keys
+  * (measured r18: top benign 16-bit band buckets held 1.5-2.4k of 100k
+  * vectors, keys like 0000000011111111). The triangular number is
+  * non-affine in (i, pl) and overflow-safe (h1 < 2^20 → product < 2^40,
+  * always even so /2 is exact); without the /2 the hash took only the
+  * 2^19 even values. Any change here must land IN LOCK-STEP on the three
+  * oracle-SQL sites in SparkEntry (grep 40503).
+  *
+  * A null element nulls that plane's projection, which the composite's
+  * when() maps to sign 0 — replicated here. (Whole-NULL input is null
+  * under these expressions, where the composite degenerates to all-zero
+  * signs; no data path feeds null embeddings.) */
 object LshUtil {
   private def planeSign(a: ArrayData, aF: Boolean, pl: Int): Boolean = {
     val n = a.numElements()
@@ -157,11 +171,7 @@ object LshUtil {
     var i = 0
     while (i < n) {
       if (a.isNullAt(i)) return false // null proj → when() else-branch
-      // affine draw + triangular-number round: the affine hash alone is
-      // linear in pl, collapsing band sign-substrings into run patterns,
-      // and the un-halved product h1·(h1+1) is always even — half the
-      // component resolution (see Similarity.planeComponent — the two
-      // faces and the three oracle-SQL sites must stay identical)
+      // affine draw + triangular-number round (see the object's doc)
       val h1 = (i.toLong * 2654435761L + pl.toLong * 40503L + 12345L) % 1048576L
       val h = (h1 * (h1 + 1L) / 2L) % 1048576L
       val x = if (aF) a.getFloat(i).toDouble else a.getDouble(i)

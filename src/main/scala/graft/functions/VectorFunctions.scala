@@ -30,19 +30,15 @@ object VectorFunctions {
     when(n === 0.0d, 0.0d).otherwise(d / n)
   }
 
-  /** Reference quadratic-form distance sqrt(Σ((v-p)/p)^2)
-    * (simple_quadratic_form.py:30-41). */
-  def quadraticFormDistance(v: Column, p: Column): Column =
-    sqrt(aggregate(zip_with(v, p, (a, b) => pow((a - b) / b, 2.0d)),
-      lit(0.0d), (acc, x) => acc + x))
-
-  /** [[quadraticFormDistance]] unrolled for a STATICALLY-known feature
-    * list and pattern: plain arithmetic instead of
-    * `aggregate`/`zip_with`, because Spark's higher-order functions are
-    * `CodegenFallback` — interpreted per row, and their presence knocks
-    * the enclosing projection out of whole-stage codegen. The fold order
-    * matches the HOF form exactly (left-to-right sum from 0.0), so the
-    * doubles are bit-identical. */
+  /** Quadratic-form distance sqrt(Σ((x-w)/w)²) between a STATICALLY-known
+    * feature list and pattern (simple_quadratic_form.py:30-41), unrolled
+    * to plain arithmetic instead of `aggregate`/`zip_with`, because
+    * Spark's higher-order functions are `CodegenFallback` — interpreted
+    * per row, and their presence knocks the enclosing projection out of
+    * whole-stage codegen. The sum folds left to right from 0.0, the
+    * order of the array form over the same values (kept in the tests as
+    * `RefColumns.quadraticFormDistance`), so the doubles are
+    * bit-identical. */
   def quadraticFormDistanceUnrolled(xs: Seq[Column], w: Seq[Double]): Column = {
     require(xs.size == w.size, "feature/pattern length mismatch")
     sqrt(xs.zip(w).map { case (x, wi) =>
@@ -59,36 +55,5 @@ object VectorFunctions {
     val idx = thresholds.map(t =>
       when(lit(t) <= dist, 1).otherwise(0)).reduce(_ + _)
     least(idx, lit(thresholds.size - 1))
-  }
-
-  /** Element-wise sum of two equal-length long arrays (A12 array agg). */
-  def arraySum(a: Column, b: Column): Column = zip_with(a, b, (x, y) => x + y)
-
-  /** Portable 47-bit polynomial hash of each token in an array. */
-  def tokenHashes(tokens: Column): Column = {
-    val mod = 140737488355213L
-    transform(tokens, t =>
-      aggregate(
-        transform(sequence(lit(1), length(t)), i => ascii(substr(t, i, lit(1))).cast("long")),
-        lit(0L), (acc, c) => (acc * 31 + c) % mod))
-  }
-
-  /** SimHash from token hashes: bit k set iff Σ_tokens sign(bit k) > 0.
-    *
-    * Single pass over `hashes`: each token hash expands to its 47 ±1 votes
-    * (the hash is a lambda value there — O(1) access), votes are summed
-    * element-wise with one `aggregate`+`zip_with` fold, then folded into a
-    * long against a literal 2^k weight array. The input column is
-    * referenced exactly once — 47 separate vote aggregates would
-    * re-evaluate it 47× per row (see TextFunctions.tokens). */
-  def simhashFromHashes(hashes: Column): Column = {
-    val perTok = transform(hashes, h =>
-      array((0 until 47).map(k =>
-        when(shiftright(h, k).bitwiseAND(1L) === 1L, 1L).otherwise(-1L)): _*))
-    val votes = aggregate(perTok, array_repeat(lit(0L), 47),
-      (acc, b) => zip_with(acc, b, (x, y) => x + y))
-    val weights = array((0 until 47).map(k => lit(1L << k)): _*)
-    aggregate(zip_with(votes, weights, (v, w) => when(v > 0, w).otherwise(0L)),
-      lit(0L), (acc, x) => acc + x)
   }
 }

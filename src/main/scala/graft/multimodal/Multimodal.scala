@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Multimodal (image/audio/video) column handling for training-data
@@ -13,14 +13,13 @@ import org.apache.spark.sql.functions._
   * the blobs; predicate pushdown on `meta.*` prunes row groups before any
   * byte is read.
   *
-  * DECODE IS A DETERMINISTIC STUB: this container has no codec libraries,
-  * so the "decode" step ([[decodeFeatures]], [[frameSample]], the
-  * [[decodePartitions]] batch path) computes deterministic byte-level
-  * features (length, md5, byte sums) instead of pixels/samples. The
-  * Spark-side plumbing — schema, partitioning, frame explode shape, the
-  * per-partition batched decode signature — is real and oracle-tested;
-  * a production deployment swaps [[stubDecoder]] for a codec call with
-  * no change to the surrounding plan.
+  * DECODE IS A DETERMINISTIC STUB: the engine ships no codec libraries,
+  * so the "decode" step ([[decodeFeatures]], [[frameSample]]) computes
+  * deterministic byte-level features (length, md5, byte sums) instead of
+  * pixels/samples. The Spark-side plumbing — schema, partitioning, frame
+  * explode shape — is real and oracle-tested; a production deployment
+  * swaps the feature expression for a codec call with no change to the
+  * surrounding plan.
   */
 object Multimodal {
 
@@ -231,36 +230,4 @@ object Multimodal {
       .select(col("unique_chunks"), col("total_chunks"),
         col("logical_bytes"), col("stored_bytes"),
         round(col("logical_bytes") / col("stored_bytes"), 4).as("dedup_ratio"))
-
-  // --- batched decode path (mapPartitions tier) -------------------------
-
-  /** One media row for the typed batch-decode path. */
-  case class MediaRow(media_id: Long, media: Array[Byte], mime: String)
-
-  /** Decoder output: what a real codec would produce per blob. */
-  case class Decoded(media_id: Long, n_bytes: Int, checksum: String)
-
-  /** STUB decoder — a real deployment replaces this one function with a
-    * codec call (libjpeg/ffmpeg); everything around it is unchanged. */
-  val stubDecoder: MediaRow => Decoded = { row =>
-    val md = java.security.MessageDigest.getInstance("MD5")
-    Decoded(row.media_id, row.media.length,
-      md.digest(row.media).map("%02x".format(_)).mkString)
-  }
-
-  /** Per-partition batched decode — the Scala analog of a pandas-UDF
-    * `mapInPandas` decode stage. The decoder initializes once per
-    * partition (amortizing codec setup), rows stream through without
-    * collecting the partition. Repartition by media_id upstream to bound
-    * partition memory at scale. */
-  def decodePartitions(mediaDf: DataFrame,
-                       decoder: MediaRow => Decoded = stubDecoder): Dataset[Decoded] = {
-    val ds = mediaDf
-      .select(col("media_id"), col("media"), col("meta.mime").as("mime"))
-      .as[MediaRow](Encoders.product[MediaRow])
-    ds.mapPartitions { rows =>
-      // per-partition init happens here in a real decoder
-      rows.map(decoder)
-    }(Encoders.product[Decoded])
-  }
 }

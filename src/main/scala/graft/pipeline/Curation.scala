@@ -586,13 +586,6 @@ object Curation {
     starForest(TextPipeline.minhashBucketStarEdges(docs, n, k, bands),
       maxIter = 20, requireConvergence = false).select(col("hi").as("doc_id"))
 
-  /** Survivors only: one document (min id) per cluster. */
-  def clusterDedup(docs: DataFrame, n: Int = 3, k: Int = 16,
-                   bands: Int = 4): DataFrame =
-    clusterComponents(docs, n, k, bands)
-      .filter(col("doc_id") === col("component"))
-      .select("doc_id")
-
   /** Survivors with a quality keep rule: per near-dup cluster, keep the
     * document maximizing `score` (ties → min doc_id) instead of the
     * arbitrary min-id member — "keep the canonical copy" (the longest /
@@ -603,9 +596,8 @@ object Curation {
     * One `max_by` hash aggregate over (component) — map-side
     * combinable, single shuffle on the component id; no per-cluster
     * window, no ordering. The component map itself is
-    * [[clusterComponents]] (candidate-edge CC), so the corpus-side cost
-    * is identical to [[clusterDedup]] plus one slim join to attach the
-    * score. */
+    * [[clusterComponents]] (candidate-edge CC), plus one slim join to
+    * attach the score. */
   def clusterDedupBest(docs: DataFrame, score: org.apache.spark.sql.Column,
                        n: Int = 3, k: Int = 16, bands: Int = 4): DataFrame =
     bestByComponent(clusterComponents(docs, n, k, bands), docs, score)
@@ -620,29 +612,6 @@ object Curation {
       .agg(max_by(col("doc_id"),
         struct(col("__score"), -col("doc_id"))).as("doc_id"))
       .select("doc_id")
-
-  // ----- streaming ingestion ---------------------------------------------
-
-  /** Streaming corpus ingestion: exact dedup within the watermark horizon
-    * (16-byte md5 keys in the state store, watermark-evicted — see
-    * TextPipeline.dedupStreaming), an inline token-count quality gate,
-    * then chunking. Every stage is stateless or watermark-bounded, so the
-    * pipeline runs in APPEND mode with bounded state — the shape for
-    * curating a continuously-arriving corpus instead of re-batching it.
-    * Near-dup/cluster stages stay out of the stream: corpus-wide
-    * self-joins have no bounded-state streaming form — run
-    * [[IncrementalDedup.ingest]] per micro-batch (foreachBatch) instead,
-    * which emits each candidate pair exactly once against an append-only
-    * band-key store (see its Scaladoc; parity with the batch operator is
-    * spec- and oracle-pinned). Input must carry an `event_time`
-    * column. */
-  def curateStream(docs: DataFrame, watermark: String = "1 hour",
-                   minTokens: Int = 1, chunkSize: Int = 64,
-                   stride: Int = 48): DataFrame =
-    chunk(
-      TextPipeline.dedupStreaming(docs, watermark)
-        .filter(TextFunctions.tokenCount(col("text")) >= minTokens),
-      chunkSize, stride)
 
   // ----- corpus composition report ---------------------------------------
 
@@ -1164,29 +1133,6 @@ object Curation {
       .filter(col("__pr") <= keepFrac)
       .drop("__pr", "avg_nll")
 
-  /** The 100 TB form of [[qualityGate]]: one
-    * `percentile_approx(avg_nll, keepFrac)` aggregate per source
-    * (map-side combinable, t-digest-style sketch, no per-source total
-    * order) yields the NLL threshold, then a broadcast join applies
-    * `avg_nll <= threshold`. Same cut as the exact gate up to sketch
-    * error at the boundary — keep-set agreement vs the exact form is
-    * spec-pinned at sf0.01. Not oracle-checked (approx sketches are not
-    * engine-portable), which is why [[qualityGate]] stays the checked
-    * twin. `accuracy` is percentile_approx's inverse-error knob. */
-  def qualityGateApprox(docs: DataFrame, reference: DataFrame,
-                        keepFrac: Double = 0.9,
-                        accuracy: Int = 10000): DataFrame = {
-    val scored = docs
-      .join(unigramNll(docs, reference).select("doc_id", "avg_nll"),
-        Seq("doc_id"))
-    val thresholds = scored.groupBy("source")
-      .agg(percentile_approx(col("avg_nll"), lit(keepFrac),
-        lit(accuracy)).as("__thr"))
-    scored.join(broadcast(thresholds), Seq("source"))
-      .filter(col("avg_nll") <= col("__thr"))
-      .select(docs.columns.map(col).toIndexedSeq: _*)
-  }
-
   /** CCNet's perplexity bucketing (Wenzek et al. 2020 §4): per source,
     * rank documents by [[unigramNll]] score and label the most-fluent
     * `headFrac` fraction "head", the next `middleFrac` "middle", the
@@ -1197,10 +1143,10 @@ object Curation {
     *
     * Exact form: `percent_rank` per source (avg_nll asc, doc_id
     * tie-break) — the same per-source total order as the exact quality
-    * gate, and the same 100 TB caveat: at scale swap to
-    * [[perplexityBucketsApprox]], whose two `percentile_approx`
-    * thresholds per source are map-side combinable and never impose a
-    * per-source ordering. The exact form is the oracle-checked twin. */
+    * gate, and the same 100 TB caveat: two per-source `percentile_approx`
+    * thresholds are map-side combinable and impose no per-source order,
+    * at the cost of sketch error at the boundaries and of the oracle
+    * check. */
   def perplexityBuckets(docs: DataFrame, reference: DataFrame,
                         headFrac: Double = 1.0 / 3,
                         middleFrac: Double = 1.0 / 3): DataFrame =
@@ -1215,33 +1161,6 @@ object Curation {
           .when(col("__pr") <= headFrac + middleFrac, "middle")
           .otherwise("tail"))
       .select(col("doc_id"), col("source"), col("avg_nll"), col("bucket"))
-
-  /** The 100 TB form of [[perplexityBuckets]]: per source, two
-    * `percentile_approx` thresholds (at `headFrac` and
-    * `headFrac + middleFrac`) replace the per-source total order; the
-    * label is two broadcast-joined comparisons. Same buckets as the
-    * exact form up to sketch error at the two boundaries — agreement is
-    * spec-pinned; not oracle-checked (sketches are not engine-portable),
-    * same trade as [[qualityGateApprox]]. */
-  def perplexityBucketsApprox(docs: DataFrame, reference: DataFrame,
-                              headFrac: Double = 1.0 / 3,
-                              middleFrac: Double = 1.0 / 3,
-                              accuracy: Int = 10000): DataFrame = {
-    val scored = docs
-      .join(unigramNll(docs, reference).select("doc_id", "avg_nll"),
-        Seq("doc_id"))
-    val thresholds = scored.groupBy("source")
-      .agg(percentile_approx(col("avg_nll"), lit(headFrac),
-             lit(accuracy)).as("__head_thr"),
-           percentile_approx(col("avg_nll"), lit(headFrac + middleFrac),
-             lit(accuracy)).as("__mid_thr"))
-    scored.join(broadcast(thresholds), Seq("source"))
-      .withColumn("bucket",
-        when(col("avg_nll") <= col("__head_thr"), "head")
-          .when(col("avg_nll") <= col("__mid_thr"), "middle")
-          .otherwise("tail"))
-      .select(col("doc_id"), col("source"), col("avg_nll"), col("bucket"))
-  }
 
   /** C4-style line-level cleaning (Raffel et al. 2020 §2.2, restated):
     * keep a line only if it ends in terminal punctuation, has at least
@@ -1328,8 +1247,8 @@ object Curation {
           graft.expressions.TextExpressions.wordShingles(col("text"), n)))
         .as("g"))
     // Source dictionary, collected once: bounded by #sources — the same
-    // metadata-sized driver state class as Ids.prefixSum's offsets and
-    // Bloom's filter build, NOT a data collect. NOTE this collect is an
+    // metadata-sized driver state class as Ids.prefixSum's offsets,
+    // NOT a data collect. NOTE this collect is an
     // EAGER job at DataFrame-construction time (building the query scans
     // `source` off the corpus once — column-pruned, ReadSchema is the
     // one string column); measured at sf0.1 it is job-launch floor, not
@@ -1414,7 +1333,8 @@ object Curation {
     * added, removed, or changed between two corpus versions — the
     * work-list that lets a recrawl re-curate the DELTA instead of the
     * world (re-score/re-chunk `added`+`changed`, retire `removed` from
-    * the stores via the incremental-dedup/upsert tier).
+    * the stores via the incremental-dedup tier and
+    * `Documents.deleteDaily`).
     *
     * Scale: each side is reduced map-side to (doc_id, 16-byte md5) — the
     * text column never reaches the shuffle — then one full-outer

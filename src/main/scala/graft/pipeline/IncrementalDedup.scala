@@ -5,8 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-/** Incremental near-dup candidate maintenance — the compaction path
-  * [[Curation.curateStream]] defers to batch. A streaming corpus cannot
+/** Incremental near-dup candidate maintenance for a corpus that arrives
+  * in increments (a stream's micro-batches). A streaming corpus cannot
   * run corpus-wide LSH self-joins with bounded state, but it does not
   * need to: candidate pairs against everything ALREADY INGESTED only
   * require the historical band-key table, which is an append-only

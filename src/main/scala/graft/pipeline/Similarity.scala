@@ -108,48 +108,11 @@ object Similarity {
       .select("query_id", "nbr_id", "cosine", "rank")
   }
 
-  /** Deterministic pseudo-random hyperplane component for (plane, dim):
-    * a fixed integer hash mapped to [-1, 1). Portable arithmetic (same
-    * formula is SQL-expressible for oracles).
-    *
-    * The quadratic second round matters: the affine draw alone
-    * (i·K1 + pl·K2 mod 2²⁰) makes adjacent planes differ by the SAME
-    * constant at every dim, so projections drift smoothly across planes
-    * and a band's sign-substring collapses into ~planes monotone run
-    * patterns instead of 2^perBand keys (measured r18: top benign
-    * 16-bit band buckets held 1.5-2.4k of 100k vectors, keys like
-    * 0000000011111111 — a quadratic candidate blowup at corpus scale).
-    * The triangular number h1·(h1+1)/2 mod 2²⁰ is non-affine in
-    * (i, pl), overflow-safe (h1 < 2²⁰ → product < 2⁴⁰, and the product
-    * is always even so /2 is exact), and keeps both engine faces exact.
-    * The /2 matters for resolution: h1·(h1+1) is always even, so
-    * WITHOUT it the hash mod 2²⁰ only ever took 2¹⁹ even values —
-    * half the intended component resolution (r18 ADVICE). Any change
-    * here must land IN LOCK-STEP on LshUtil.planeSign (native codegen)
-    * and the three oracle-SQL sites in SparkEntry (grep 40503). */
-  private def planeComponent(plane: Int, dim: org.apache.spark.sql.Column) = {
-    val h1 = pmod(dim * 2654435761L + lit(plane.toLong) * 40503L + 12345L, lit(1048576L))
-    val h = pmod(shiftright(h1 * (h1 + 1L), 1), lit(1048576L))
-    (h.cast("double") / 524288.0d) - 1.0d
-  }
-
   /** Sign-of-projection LSH bucket key under `planes` hyperplanes —
-    * native codegen'd kernel; [[lshBucketComposite]] is the spec-pinned
-    * portable twin of the same formula. */
+    * native codegen'd kernel ([[graft.expressions.LshUtil]] holds the
+    * hyperplane formula). */
   def lshBucket(vec: org.apache.spark.sql.Column, planes: Int): org.apache.spark.sql.Column =
     Vec.lshBucketKey(vec, planes)
-
-  /** Column-composite twin of [[lshBucket]] (reference tier). */
-  def lshBucketComposite(vec: org.apache.spark.sql.Column, planes: Int): org.apache.spark.sql.Column = {
-    val signs = (0 until planes).map { pl =>
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (v, i) => v * planeComponent(pl, i.cast("long"))),
-        lit(0.0d), (acc, x) => acc + x)
-      when(proj >= 0, lit(1L << pl)).otherwise(lit(0L))
-    }
-    signs.reduce((a, b) => a + b)
-  }
 
   /** Deterministic id scramble used to draw a pseudo-random fixed-size
     * corpus sample: a linear-congruential hash on the id, bounded by a
@@ -351,49 +314,6 @@ object Similarity {
       .select("query_id", "nbr_id", "cosine", "rank")
   }
 
-  /** IVF with a TRAINED coarse quantizer (MLlib k-means) — the production
-    * form of [[annIvf]] (which uses a deterministic corpus sample so the
-    * oracle can replay it). Same plan shape: broadcast assignment pass,
-    * probe-limited candidate join on the list id. k-means runs on a
-    * sample (`trainFraction`) — at 100 TB you never train on the corpus. */
-  def annIvfKmeans(embeddings: DataFrame, queries: DataFrame, nlist: Int,
-                   nprobe: Int, k: Int, trainFraction: Double = 1.0,
-                   seed: Long = 7L): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("vec"))
-      .withColumn("features", array_to_vector(col("vec")))
-    val train = if (trainFraction >= 1.0) e else e.sample(trainFraction, seed)
-    val model = new KMeans().setK(nlist).setSeed(seed).setFeaturesCol("features")
-      .fit(train)
-    val assigned = model.transform(e)
-      .select(col("vec_id").as("nbr_id"), col("vec").as("nbr_vec"),
-        col("prediction").as("cid"))
-    val q = queries.select(col("vec_id").as("query_id"),
-        asDouble(col("embedding")).as("query_vec"))
-      .withColumn("features", array_to_vector(col("query_vec")))
-    // rank all centroids per query by distance, keep nprobe nearest
-    val cents = model.clusterCenters.zipWithIndex.map { case (c, i) =>
-      (i, c.toArray.toSeq)
-    }.toSeq
-    val centDf = broadcast(embeddings.sparkSession.createDataFrame(cents)
-      .toDF("cid", "cvec"))
-    val probes = q.crossJoin(centDf)
-      .withColumn("csim", Vec.cosine(col("query_vec"), col("cvec")))
-      .withColumn("crn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("csim").desc, col("cid").asc)))
-      .filter(col("crn") <= nprobe)
-      .select(col("query_id"), col("query_vec"), col("cid"))
-    probes.join(assigned, Seq("cid"))
-      .filter(col("query_id") =!= col("nbr_id"))
-      .withColumn("cosine",
-        round(Vec.cosine(col("query_vec"), col("nbr_vec")), 4))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("nbr_id").asc)))
-      .filter(col("rank") <= k)
-      .select("query_id", "nbr_id", "cosine", "rank")
-  }
-
   /** Margin-based cross-corpus pair mining (Artetxe & Schwenk 2019, the
     * CCMatrix/LASER bitext-mining scorer): for every query vector in `a`
     * find its best candidate in `b` by the RATIO margin
@@ -506,13 +426,12 @@ object Similarity {
     *
     * Init is the k lowest-vec_id vectors (deterministic and
     * engine-portable, so a fixed-iteration run is oracle-checkable end
-    * to end; [[annIvfKmeans]]'s MLlib k-means|| is the production init —
-    * this is its replayable twin). Centroid dims are rounded to 6 dp
-    * after every update so cross-engine aggregation-order drift (~1e-13)
-    * dies against the rounding grid and assignments can't flip between
-    * engines. Distance is the portable left-fold L2²
-    * ([[VectorFunctions.l2Squared]]); ties break to the lowest cid. A
-    * cluster left empty by an update keeps its previous centroid.
+    * to end). Centroid dims are rounded to 6 dp after every update so
+    * cross-engine aggregation-order drift (~1e-13) dies against the
+    * rounding grid and assignments can't flip between engines. Distance
+    * is the portable left-fold L2² ([[VectorFunctions.l2Squared]]); ties
+    * break to the lowest cid. A cluster left empty by an update keeps its
+    * previous centroid.
     *
     * Returns (vec_id, cid, dist): the assignment under the final
     * centroids, dist = L2² rounded to 6 dp. */
@@ -862,8 +781,7 @@ object Similarity {
     // a local relation — serves both broadcast sides. Deriving each
     // separately costs a second full-corpus scan (ReuseExchange can't
     // unify broadcasts with different limits). Codebooks are tiny
-    // driver-side artifacts by construction, the same shape
-    // [[annIvfKmeans]] ships its trained centers in.
+    // driver-side artifacts by construction.
     val sample = collectedSample(e, math.max(nlist, ksub))
     val cents = sample.limit(nlist)
     val codebook = pqCodebook(sample.limit(ksub), m)
@@ -1029,8 +947,7 @@ object Similarity {
     * The coarse quantizer is [[annIvf]]'s deterministic scrambled-id
     * corpus sample (fixed `nlist`, TakeOrderedAndProject, task-free
     * local relation) standing in for trained k-means: identical plan,
-    * oracle-checkable ([[annIvfKmeans]] shows the `model.transform`
-    * swap when trained centroids are wanted). Assignment is one
+    * oracle-checkable. Assignment is one
     * broadcast O(N·nlist) max_by pass — no corpus-wide window.
     *
     * Keep rule: lowest `vec_id` per confirmed pair by default (the

@@ -616,16 +616,15 @@ object TextPipeline {
   /** SimHash per document over whitespace tokens (47 planes). Tokens,
     * their hashes AND the vote fold all run as native tight-loop
     * expressions inside the scan ([[graft.expressions.SimhashFold]] —
-    * byte-identical to the VectorFunctions Column composite,
-    * spec-pinned). */
+    * byte-identical to the Column composite, spec-pinned). */
   def simhash(docs: DataFrame): DataFrame =
     widenDocs(docs.select(col("doc_id"), col("text")))
       .select(col("doc_id"), graft.expressions.TextExpressions
         .wordShingles(col("text"), 1, distinct = false).as("toks"))
       .withColumn("hashes", graft.expressions.TextExpressions.polyHash47(col("toks")))
       .select(col("doc_id"),
-        // native vote fold (byte-identical to the VectorFunctions
-        // composite, spec-pinned) — the composite pays 47 interpreted
+        // native vote fold (byte-identical to the Column composite,
+        // spec-pinned) — the composite pays 47 interpreted
         // lambda CASEs per token in the signature scan
         graft.expressions.TextExpressions.simhashFold(col("hashes")).as("simhash"))
 
@@ -813,8 +812,8 @@ object TextPipeline {
     * with map-side partial counts; the top-k is a TakeOrderedAndProject
     * (per-partition heads, no corpus-wide sort) — the exact form of the
     * token-frequency table tokenizer training starts from. For unbounded
-    * vocabularies at 100 TB use the approx_top_k sketch path
-    * (DnsStatistics.applyApprox shows the swap). */
+    * vocabularies at 100 TB, Spark's `approx_top_k` aggregate keeps a
+    * bounded frequent-items sketch instead of the exact counts. */
   def vocab(docs: DataFrame, topK: Int = 100): DataFrame =
     docs.select(explode(graft.expressions.TextExpressions.wordShingles(col("text"), 1)).as("token"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))

@@ -170,12 +170,12 @@ object Funnel {
     * emits NOTHING further. The price is state proportional to the
     * all-time emitted-user dimension — a long (+flag) per user, not the
     * event buffer — which is exactly the growth session mode exists to
-    * avoid: run it on RocksDB state
-    * ([[graft.core.Graft.useRocksDbState]]) when the user dimension is
-    * large, and/or bound it with `tombstoneTtlMs`: when set, a resolved
-    * user's tombstone is kept only until the watermark passes
-    * `maxTs + horizonMs + ttl` of that user's LAST activity (activity
-    * while tombstoned re-arms it), then dropped — state becomes
+    * avoid: run it on RocksDB state (`RocksDBStateStoreProvider` as
+    * `spark.sql.streaming.stateStore.providerClass`) when the user
+    * dimension is large, and/or bound it with `tombstoneTtlMs`: when
+    * set, a resolved user's tombstone is kept only until the watermark
+    * passes `maxTs + horizonMs + ttl` of that user's LAST activity
+    * (activity while tombstoned re-arms it), then dropped — state becomes
     * proportional to the TTL-active user dimension, and the contract
     * weakens, explicitly, to once-per-TTL-window (a multi-week query
     * can bound state without restarting; a user returning after a full

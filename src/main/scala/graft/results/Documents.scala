@@ -226,76 +226,27 @@ object Documents {
     spark.read.parquet(path)
       .filter(col("day") >= fromDay && col("day") <= toDay)
 
-  /** Upsert into the date-partitioned store: a row in `updates` replaces
-    * any stored row with the same `key` in the same day partition; rows
-    * with new keys append. ONLY the day partitions present in `updates`
-    * are read (partition-pruned scan) and rewritten — at 100 TB an
-    * incremental refresh touches a handful of recent days, never the
-    * archive, and untouched partitions keep their files byte-for-byte
-    * (spec-asserted on the file listing). The merged frame is written
-    * to a TEMP SIBLING and swapped in per day
+  /** Partition-scoped retirement, the store-side consumer of a snapshot
+    * diff's `removed` list (`CurateApp --retired`): drop every stored row
+    * whose `key` appears in `retired`. Day discovery is ONE
+    * column-pruned scan of (key, day) semi-joined against the retired
+    * keys (the rest of the row never leaves the files); only day
+    * partitions that actually hold a retired key are read in full,
+    * written to a TEMP SIBLING and swapped in per day
     * ([[graft.scale.Stores.swapPartition]]) — the write reads the
     * still-intact current files, so an executor loss mid-write can
-    * always recompute; the in-place dynamic-overwrite + localCheckpoint
-    * shape could not. */
-  def upsertDaily(spark: org.apache.spark.sql.SparkSession, path: String,
-                  updates: DataFrame, key: String): Unit = {
-    val up = updates
-      .withColumn("day", date_format(col("@timestamp"), "yyyy-MM-dd"))
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) {
-      up.write.mode("append").partitionBy("day").parquet(path)
-    } else {
-      // A prior run that crashed mid-swap leaves a day partition
-      // stranded at .old_day=<d>; the root read below would silently
-      // miss it and this rewrite would bake the loss in. Roll back
-      // first so the read sees every pre-crash row.
-      graft.scale.Stores.recoverInterruptedSwaps(fs, root)
-      val days = up.select("day").distinct()
-        .collect().map(_.getString(0)).toSeq // metadata-sized
-      val existing = spark.read.parquet(path)
-        // partition inference types day as DATE; pin the store contract
-        // back to the yyyy-MM-dd string writeDaily produces
-        .withColumn("day", col("day").cast("string"))
-        .filter(col("day").isin(days: _*)) // pruned: only affected days
-      val merged = existing
-        .join(up.select(col(key), col("day")).distinct(),
-          Seq(key, "day"), "left_anti")
-        .unionByName(up)
-      val tmp = new org.apache.hadoop.fs.Path(
-        root.getParent, s".upsert_${root.getName}")
-      fs.delete(tmp, true)
-      merged.write.mode("overwrite").partitionBy("day").parquet(tmp.toString)
-      days.foreach { d =>
-        val src = new org.apache.hadoop.fs.Path(tmp, s"day=$d")
-        if (fs.exists(src))
-          graft.scale.Stores.swapPartition(fs,
-            new org.apache.hadoop.fs.Path(root, s"day=$d"), src)
-      }
-      fs.delete(tmp, true)
-    }
-  }
-
-  /** Partition-scoped retirement — [[upsertDaily]]'s delete twin, the
-    * store-side consumer of a snapshot diff's `removed` list
-    * (`CurateApp --retired`): drop every stored row whose `key` appears
-    * in `retired`. Day discovery is ONE column-pruned scan of
-    * (key, day) semi-joined against the retired keys (the rest of the
-    * row never leaves the files); only day partitions that actually
-    * hold a retired key are read in full and rewritten via the same
-    * temp-sibling + per-day swap as [[upsertDaily]] (crash-safe: the
-    * write reads the still-intact current files). A day whose every
-    * row is retired produces NO temp partition and its store directory
-    * is removed outright. Untouched partitions keep their files
-    * byte-for-byte. */
+    * always recompute. A day whose every row is retired produces NO
+    * temp partition and its store directory is removed outright.
+    * Untouched partitions keep their files byte-for-byte. */
   def deleteDaily(spark: org.apache.spark.sql.SparkSession, path: String,
                   retired: DataFrame, key: String): Unit = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return
-    // Same interrupted-swap rollback as upsertDaily: a stranded
-    // .old_day= sibling must be restored before the store read.
+    // A prior run that crashed mid-swap leaves a day partition
+    // stranded at .old_day=<d>; the root read below would silently miss
+    // it and this rewrite would bake the loss in. Roll back first so
+    // the read sees every pre-crash row.
     graft.scale.Stores.recoverInterruptedSwaps(fs, root)
     val keys = retired.select(col(key)).distinct()
     val store = spark.read.parquet(path)

@@ -1,6 +1,6 @@
 package graft.scale
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multi-dimensional data layout: Z-order (Morton) clustering so parquet
@@ -21,24 +21,6 @@ import org.apache.spark.sql.functions._
   * every query stays correct whether or not the table was z-ordered.
   */
 object Layout {
-
-  /** Morton key: interleave the low `bits` bits of each column, first
-    * column at the lowest bit position. Inputs must already be
-    * non-negative and fit `bits` bits (use [[zorderKey]] for the general
-    * min-max-scaled form); `bits * cols.size` must stay under 64. Pure
-    * shift/mask composition — whole-stage codegen keeps it in the scan. */
-  def interleaveBits(cols: Seq[Column], bits: Int): Column = {
-    require(cols.nonEmpty, "interleaveBits needs at least one column")
-    require(bits > 0 && bits * cols.size <= 63,
-      s"bits=$bits over ${cols.size} columns exceeds a long")
-    val n = cols.size
-    (0 until bits).foldLeft(lit(0L)) { (acc, b) =>
-      cols.zipWithIndex.foldLeft(acc) { case (a, (c, i)) =>
-        a.bitwiseOR(shiftleft(
-          shiftright(c.cast("long"), b).bitwiseAND(lit(1L)), b * n + i))
-      }
-    }
-  }
 
   /** Add a `zkey` Morton key over numeric `cols`, min-max scaled to
     * `bits` bits per dimension. The min/max pass is one metadata-sized
@@ -63,8 +45,7 @@ object Layout {
         floor((col(c).cast("double") - lit(lo)) / lit(hi - lo) * span)
           .cast("long"))
     }
-    // hot path: the native z_key expression (one node, tight codegen
-    // loop) — spec-pinned equal to the composed interleaveBits
+    // the native z_key expression: one node, a tight codegen loop
     df.withColumn("zkey",
       graft.expressions.LayoutExpressions.zKey(scaled, bits))
   }
@@ -80,87 +61,4 @@ object Layout {
       .repartitionByRange(partitions, col("zkey"))
       .sortWithinPartitions("zkey")
       .drop("zkey")
-
-  /** One row per data file of a parquet table (recursive, skips
-    * metadata): path, parent partition dir, bytes. Driver-side listing —
-    * file metadata, not data. */
-  def fileInventory(spark: org.apache.spark.sql.SparkSession,
-                    dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(new Path(dir))
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
-      if (st.isDirectory) walk(st.getPath)
-      else if (st.getPath.getName.endsWith(".parquet"))
-        out += ((st.getPath.toString,
-          st.getPath.getParent.toString.stripPrefix(root.toString)
-            .stripPrefix("/"), st.getLen))
-    }
-    walk(root)
-    import spark.implicits._
-    out.toSeq.toDF("path", "partition", "bytes")
-  }
-
-  /** Small-file report per partition dir: how many files sit under
-    * `smallBytes`, their total volume, and the target file count a
-    * compaction to `targetBytes` would produce. The operational trigger
-    * for [[compactPartitions]] — a store that accumulates streaming
-    * micro-batch or upsert output degrades scan throughput long before
-    * it degrades correctness. */
-  def compactionReport(spark: org.apache.spark.sql.SparkSession, dir: String,
-                       smallBytes: Long = 32L << 20,
-                       targetBytes: Long = 128L << 20): DataFrame = {
-    val inv = fileInventory(spark, dir)
-    inv.groupBy("partition")
-      .agg(count(lit(1)).as("files"),
-        sum(when(col("bytes") < smallBytes, 1L).otherwise(0L)).as("small_files"),
-        sum("bytes").as("total_bytes"),
-        greatest(lit(1L), ceil(sum("bytes") / targetBytes.toDouble))
-          .as("target_files"))
-      .filter(col("small_files") > 1)
-  }
-
-  /** Rewrite the listed partition dirs with ~`targetBytes` files each:
-    * read ONLY those partitions' files, coalesce to the target count,
-    * write to a temp sibling, then swap atomically per partition (rename
-    * away, rename in, delete). Value-neutral; partitions not listed are
-    * untouched. Pair with [[compactionReport]] for the candidate list. */
-  def compactPartitions(spark: org.apache.spark.sql.SparkSession, dir: String,
-                        partitions: Seq[String],
-                        targetBytes: Long = 128L << 20): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // If a prior compaction crashed between swap renames, the partition
-    // dir is missing and .old_<name> holds the rows — restore before
-    // listing (listStatus on the missing dir would fail loudly, but
-    // resumably rolling back is strictly better). Recovery is scoped to
-    // THIS store: the whole-store entry (part = "") recovers only its
-    // own .old_<root> sibling — sweeping the root's PARENT would rename
-    // or delete .old_* entries of unrelated sibling stores, racing any
-    // concurrent rewriteAtomically between its two renames — and the
-    // partitioned entries sweep each distinct parent dir INSIDE the
-    // store once, not once per partition.
-    val pdirOf = (part: String) =>
-      if (part.isEmpty) root else new Path(root, part)
-    val (wholeStore, subParts) = partitions.partition(_.isEmpty)
-    if (wholeStore.nonEmpty) Stores.recoverOwnSwap(fs, root)
-    subParts.map(p => pdirOf(p).getParent).distinct
-      .foreach(d => Stores.recoverInterruptedSwaps(fs, d))
-    partitions.foreach { part =>
-      val pdir = pdirOf(part)
-      val files = fs.listStatus(pdir).filter(s =>
-        !s.isDirectory && s.getPath.getName.endsWith(".parquet"))
-      if (files.length > 1) {
-        val n = math.max(1L,
-          math.ceil(files.map(_.getLen).sum / targetBytes.toDouble).toLong).toInt
-        val tmp = new Path(pdir.getParent, s".compact_${pdir.getName}")
-        spark.read.parquet(files.map(_.getPath.toString): _*)
-          .coalesce(n)
-          .write.mode("overwrite").parquet(tmp.toString)
-        Stores.swapPartition(fs, pdir, tmp) // rename-checked atomic swap
-      }
-    }
-  }
 }

@@ -5,20 +5,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Crash-safe rewrite primitives for on-disk parquet stores.
   *
-  * The compact/upsert/delete paths rewrite a store FROM its own current
-  * contents. Pinning the read with `localCheckpoint` before an in-place
-  * `mode("overwrite")` is NOT fault-tolerant: localCheckpoint blocks
-  * live in executor memory/disk with the lineage truncated, so an
-  * executor loss mid-write leaves the result unrecomputable while the
-  * target files are already deleted — unrecoverable loss of exactly the
-  * store these layers exist to persist. The safe shape (the one
-  * [[Layout.compactPartitions]] always used) is: write the full result
-  * to a TEMP SIBLING directory (the source files are still intact and
-  * re-readable on any task retry or executor loss), then swap via
-  * renames. A crash before the swap leaves the store untouched plus a
-  * stale temp dir that the next run clears; a crash between the two
-  * renames leaves the `.old_` copy recoverable by hand — at no point do
-  * the only bytes live in volatile executor state.
+  * The sketch-store rollups and the daily document store's retirement
+  * rewrite a store FROM its own current contents. Pinning the read with
+  * `localCheckpoint` before an in-place `mode("overwrite")` is NOT
+  * fault-tolerant: localCheckpoint blocks live in executor memory/disk
+  * with the lineage truncated, so an executor loss mid-write leaves the
+  * result unrecomputable while the target files are already deleted —
+  * unrecoverable loss of exactly the store these layers exist to
+  * persist. The safe shape is: write the full result to a TEMP SIBLING
+  * directory (the source files are still intact and re-readable on any
+  * task retry or executor loss), then swap via renames. A crash before
+  * the swap leaves the store untouched plus a stale temp dir that the
+  * next run clears; a crash between the two renames leaves the `.old_`
+  * copy recoverable by hand — at no point do the only bytes live in
+  * volatile executor state.
   */
 object Stores {
 
@@ -99,24 +99,6 @@ object Stores {
       s"partition contents now live ONLY under $old — rename it back to " +
         s"$storePart (or $tmpPart in) to recover")
     fs.delete(old, true)
-  }
-
-  /** Roll back an interrupted swap of `dir` ITSELF: if `dir` is missing
-    * and its `.old_<name>` sibling exists, the prior swap crashed between
-    * its two renames — rename the pre-crash copy back. Unlike
-    * [[recoverInterruptedSwaps]] this never LISTS the parent directory,
-    * so it cannot touch `.old_*` entries belonging to unrelated sibling
-    * stores (which may be mid-rename in a concurrent
-    * [[rewriteAtomically]] — the r14 ADVICE race). A leftover `.old_`
-    * whose live dir exists is left alone here: [[swapPartition]] clears
-    * it itself before the next swap. Returns true if a recovery ran. */
-  def recoverOwnSwap(fs: FileSystem, dir: Path): Boolean = {
-    val old = new Path(dir.getParent, s".old_${dir.getName}")
-    if (!fs.exists(dir) && fs.exists(old)) {
-      renameOrThrow(fs, old, dir,
-        s"recovery of interrupted swap failed; pre-crash rows remain at $old")
-      true
-    } else false
   }
 
   /** Roll back any swap a prior run left half-done under `dir`: a child

@@ -137,7 +137,6 @@ object ConcurrentBench {
   private val streamFaces: Map[String, (SparkSession, String) => Unit] = Map(
     "s_pattern_finder_stream" -> ((spark: SparkSession, sfDir: String) =>
       inStreamPool(spark) {
-      import org.apache.spark.sql.functions._
       // Width cap (SPARK_GRAFT_STREAM_WIDTH, default 8): the r19 task
       // audit showed the ENTIRE serving tail is this drain's stateful
       // stage — 32 uniform 4.4–6.5 s state-commit tasks holding every

@@ -122,20 +122,6 @@ class AnalyticsSpec extends SparkSpec {
     assert(flows("tcp") == 60L && flows("udp") == 40L && flows("other") == 20L)
   }
 
-  test("dns statistics: sketch top-N equals exact on a small key space") {
-    val rows = (0 until 60).map(i =>
-      Fx(flow_id = i, dns_name = s"d${i % 7}.example", dns_qtype = Some(1),
-        dns_flags = Some(256L)))
-    // topN >= distinct keys: counts must be exact (tie ORDER at a cut is
-    // sketch-arbitrary, so no cut here)
-    val exact = rowsOf(DnsStatistics(Fx.df(spark, rows: _*), topN = 10))
-      .map(r => (r("stat_type"), r("key"), r("value"))).toSet
-    val approx = rowsOf(DnsStatistics.applyApprox(Fx.df(spark, rows: _*), topN = 10))
-      .map(r => (r("stat_type"), r("key"), r("value"))).toSet
-    assert(approx.filter(_._1 == "queried_domain") ==
-      exact.filter(_._1 == "queried_domain"))
-  }
-
   test("ddos: short-window packet spike vs long profile (detection_ddos.py)") {
     val long = (0 until 10).map(i => Fx(flow_id = i, src_ip4 = "10.3.0.1",
       dst_ip = "192.168.1.1", packets = 10, start_ms = 1000))
@@ -331,12 +317,12 @@ class AnalyticsSpec extends SparkSpec {
     val report = rowsOf(PatternFinder.patternReport(pairs, pats, cfg))
     assert(report.size == 1)
     // independent fold: sum the flattened per-pair one-hot vectors with the
-    // explicit VectorFunctions.arraySum element-wise fold
+    // explicit RefColumns.arraySum element-wise fold
     val folded = PatternFinder.patternObservations(pairs, pats, cfg)
       .groupBy("key")
       .agg(aggregate(collect_list(col("dist")),
         array_repeat(lit(0L), 2 * cfg.intervals.size),
-        (acc, d) => graft.functions.VectorFunctions.arraySum(acc, d)).as("dist"))
+        (acc, d) => RefColumns.arraySum(acc, d)).as("dist"))
       .collect().head.getSeq[Long](1)
     val (d0, d1) = folded.splitAt(cfg.intervals.size)
     val arr = report.head("data_array")

@@ -155,7 +155,7 @@ class CurationStreamSpec extends SparkSpec {
     assert(got.contains((0L, 1L)), got)
   }
 
-  test("streaming BPE encode with a bpeTrainBatched vocab == batch encode (r13 parity)") {
+  test("streaming BPE encode with a bpeTrain vocab == batch encode (r13 parity)") {
     // Training is inherently batch (iterative corpus scans); the
     // streaming face is ENCODING with the frozen merge list — a
     // stateless codegen projection that must tokenize a stream exactly

@@ -203,7 +203,7 @@ class ExpressionsSpec extends SparkSpec {
     val both = df.select(
       Similarity.lshSignBits(col("vec"), 16).as("ns"),
       Similarity.lshBucket(col("vec"), 16).as("nb"),
-      Similarity.lshBucketComposite(col("vec"), 16).as("cb")).collect()
+      RefColumns.lshBucket(col("vec"), 16).as("cb")).collect()
     both.foreach { r =>
       // the composite key's bit `pl` is plane pl's sign
       val cb = r.getLong(2)
@@ -260,7 +260,7 @@ class ExpressionsSpec extends SparkSpec {
 
   test("native word_shingles/poly_hash47/minhash_sig equal the Column composites") {
     import graft.expressions.TextExpressions
-    import graft.functions.{TextFunctions, VectorFunctions}
+    import graft.functions.TextFunctions
     val docs = Seq(
       "The quick brown fox  jumps over the lazy dog",
       "a a a a b", "single", "", "  ", "Tabs and  Spaces mixed")
@@ -278,7 +278,7 @@ class ExpressionsSpec extends SparkSpec {
     val hNative = toks.select(col("doc_id"),
       TextExpressions.polyHash47(col("toks")).as("h"))
     val hComposite = toks.select(col("doc_id"),
-      VectorFunctions.tokenHashes(col("toks")).cast("array<bigint>").as("h"))
+      RefColumns.tokenHashes(col("toks")).cast("array<bigint>").as("h"))
     assert(hNative.exceptAll(hComposite).count() == 0, "polyHash47")
     val sigNative = hNative.select(TextExpressions.minhashSig(col("h"), 8).as("sig"))
       .collect().map(_.getSeq[Long](0)).toSeq
@@ -315,17 +315,16 @@ class ExpressionsSpec extends SparkSpec {
 
   test("native z_key equals the composed interleave; nulls and SQL registration") {
     import graft.expressions.LayoutExpressions
-    import graft.scale.Layout
     val rows = (for (x <- 0L until 32L; y <- 0L until 32L) yield (x, y))
       .toDF("x", "y")
     val both = rows.select(
       LayoutExpressions.zKey(Seq(col("x"), col("y")), 5).as("native"),
-      Layout.interleaveBits(Seq(col("x"), col("y")), 5).as("composed"))
+      RefColumns.interleaveBits(Seq(col("x"), col("y")), 5).as("composed"))
     assert(both.filter(col("native") =!= col("composed")).count() == 0)
     // three columns, wider keys
     val wide = Seq((1000L, 65535L, 12345L)).toDF("a", "b", "c").select(
       LayoutExpressions.zKey(Seq(col("a"), col("b"), col("c")), 16).as("n"),
-      Layout.interleaveBits(Seq(col("a"), col("b"), col("c")), 16).as("m"))
+      RefColumns.interleaveBits(Seq(col("a"), col("b"), col("c")), 16).as("m"))
       .head
     assert(wide.getLong(0) == wide.getLong(1))
     // NULL in any child nulls the key

@@ -132,9 +132,12 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("quadratic-form distance (simple_quadratic_form.py:30-41)") {
-    val d = eval1(VectorFunctions.quadraticFormDistance(
-      typedLit(Seq(2.0, 4.0)), typedLit(Seq(1.0, 2.0)))).asInstanceOf[Double]
+    val d = eval1(VectorFunctions.quadraticFormDistanceUnrolled(
+      Seq(lit(2.0), lit(4.0)), Seq(1.0, 2.0))).asInstanceOf[Double]
     assert(math.abs(d - math.sqrt(2.0)) < 1e-12)
+    // bit-identical to the array form: same left fold from 0.0
+    assert(eval1(RefColumns.quadraticFormDistance(
+      typedLit(Seq(2.0, 4.0)), typedLit(Seq(1.0, 2.0)))) == d)
   }
 
   test("binIndex thresholds (pattern_finder.py:200-223)") {
@@ -157,13 +160,14 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("arraySum element-wise (A12)") {
-    assert(eval1(VectorFunctions.arraySum(
+    assert(eval1(RefColumns.arraySum(
       typedLit(Seq(1L, 2L)), typedLit(Seq(10L, 20L)))) == Seq(11L, 22L))
   }
 
   test("simhash: identical inputs equal, disjoint inputs differ") {
-    def simhash(tokens: Seq[String]) = eval1(VectorFunctions.simhashFromHashes(
-      VectorFunctions.tokenHashes(typedLit(tokens))))
+    import graft.expressions.TextExpressions
+    def simhash(tokens: Seq[String]) = eval1(TextExpressions.simhashFold(
+      TextExpressions.polyHash47(typedLit(tokens))))
     val a = simhash(Seq("alpha", "beta", "gamma"))
     val b = simhash(Seq("alpha", "beta", "gamma"))
     val c = simhash(Seq("delta", "epsilon", "zeta"))
@@ -183,7 +187,7 @@ class FunctionsSpec extends SparkSpec {
       (1 to 7).map(i => (i * 77777L) % (1L << 47))).toDF("hashes")
     val both = rows.select(
       graft.expressions.TextExpressions.simhashFold(col("hashes")).as("native"),
-      VectorFunctions.simhashFromHashes(col("hashes")).as("composite"))
+      RefColumns.simhashFromHashes(col("hashes")).as("composite"))
       .collect()
     both.foreach(r => assert(r.getLong(0) == r.getLong(1), r.toString))
   }

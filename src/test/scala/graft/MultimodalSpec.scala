@@ -53,15 +53,6 @@ class MultimodalSpec extends SparkSpec {
     assert(r(1)("frame_md5") == expect)
   }
 
-  test("decodePartitions: batched stub decode preserves rows and values") {
-    val m = Multimodal.mediaTable(docs(1L -> "abc", 2L -> "defg")).repartition(2)
-    val out = Multimodal.decodePartitions(m).collect().sortBy(_.media_id)
-    assert(out.map(_.n_bytes).toSeq == Seq(3, 4))
-    assert(out(0).checksum ==
-      java.security.MessageDigest.getInstance("MD5")
-        .digest("abc".getBytes).map("%02x".format(_)).mkString)
-  }
-
   test("dedupMedia: identical blobs collapse to the smallest id, digests shuffle, blobs don't") {
     import graft.multimodal.Multimodal
     val docs = Seq(

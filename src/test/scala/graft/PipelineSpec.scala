@@ -180,21 +180,6 @@ class PipelineSpec extends SparkSpec {
     assert(ivf.toSet == bf.toSet)
   }
 
-  test("annIvfKmeans: trained quantizer separates clusters; full probe == brute force") {
-    // two tight clusters around the axes
-    val emb = ((0 until 6).map(i => (i.toLong, Array(1.0f + i * 0.01f, 0.0f))) ++
-      (6 until 12).map(i => (i.toLong, Array(0.0f, 1.0f + i * 0.01f)))).toDF("vec_id", "embedding")
-    val q = emb.filter($"vec_id" === 0L)
-    val one = rowsOf(Similarity.annIvfKmeans(emb, q, nlist = 2, nprobe = 1, k = 20))
-    // nprobe=1: only the x-cluster list is searched
-    assert(one.map(_("nbr_id").asInstanceOf[Long]).toSet == Set(1L, 2L, 3L, 4L, 5L))
-    val all = rowsOf(Similarity.annIvfKmeans(emb, q, nlist = 2, nprobe = 2, k = 5))
-      .map(r => (r("rank"), r("nbr_id")))
-    val bf = rowsOf(Similarity.knnBruteForce(emb, q, 5))
-      .map(r => (r("rank"), r("nbr_id")))
-    assert(all.toSet == bf.toSet)
-  }
-
   test("annLsh: identical vectors share bucket and score 1") {
     val emb = Seq(
       (0L, Array.fill(8)(0.5f)),
@@ -1208,7 +1193,7 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  test("clusterDedup: one survivor per near-dup chain (pairwise would keep the middle)") {
+  test("clusterComponents: one survivor per near-dup chain (pairwise would keep the middle)") {
     import graft.pipeline.Curation
     // a~b and b~c share 3-gram bands, a vs c drift further apart — the
     // chain must still collapse to ONE survivor
@@ -1220,7 +1205,7 @@ class PipelineSpec extends SparkSpec {
       .map(r => r("doc_id") -> r("component")).toMap
     assert(comp(9L) == 9L) // unpaired doc keeps its own id
     if (comp(2L) == 1L && comp(3L) == 1L) { // chain recalled by LSH
-      val kept = rowsOf(Curation.clusterDedup(corpus)).map(_("doc_id")).toSet
+      val kept = comp.collect { case (d, c) if d == c => d }.toSet
       assert(kept == Set(1L, 9L))
     }
   }
@@ -1308,7 +1293,8 @@ class PipelineSpec extends SparkSpec {
     val kept = corpus.join(Curation.repetitionStats(corpus)
       .filter(col("dup_word_frac") <= maxFrac).select("doc_id"), Seq("doc_id"))
     assert(kept.count() < 700)
-    assert(Curation.clusterDedup(kept).count() < kept.count() - 20)
+    assert(Curation.clusterComponents(kept)
+      .filter(col("doc_id") === col("component")).count() < kept.count() - 20)
     assert(Curation.contamination(kept, bench, 3).count() > 30)
     def chunks(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getString(3))).toSeq.sorted
@@ -1482,29 +1468,7 @@ class PipelineSpec extends SparkSpec {
     assert(kept == Set(1L, 2L, 3L, 4L, 6L))
   }
 
-  test("qualityGateApprox: sf0.01 keep-set agrees with the exact gate") {
-    import graft.pipeline.Curation
-    // the documented 100 TB swap (percentile_approx threshold instead of
-    // a per-source percent_rank total order) must make the SAME cut up
-    // to sketch error at the boundary — pinned here, since the approx
-    // sketch has no engine-portable oracle
-    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.01")
-    val ref = docs.filter(col("doc_id") % 2 === 0)
-    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
-      df.select("doc_id").collect().map(_.getLong(0)).toSet
-    val exact = ids(Curation.qualityGate(docs, ref, keepFrac = 0.8))
-    val approx = ids(Curation.qualityGateApprox(docs, ref, keepFrac = 0.8))
-    val jaccard =
-      (exact & approx).size.toDouble / (exact | approx).size.toDouble
-    assert(jaccard >= 0.98, s"approx/exact keep-set Jaccard = $jaccard")
-    // the approx keep-rate must sit at the requested fraction, not
-    // collapse or pass-through
-    val total = docs.count().toDouble
-    val rate = approx.size / total
-    assert(rate >= 0.7 && rate <= 0.9, s"approx keep-rate = $rate")
-  }
-
-  test("perplexityBuckets: per-source head/middle/tail split; approx twin agrees") {
+  test("perplexityBuckets: per-source head/middle/tail split") {
     import graft.pipeline.Curation
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
     val ref = docs.filter(col("doc_id") % 2 === 0)
@@ -1539,15 +1503,6 @@ class PipelineSpec extends SparkSpec {
         }
     }
     assert(got.map { case (id, (_, b)) => id -> b } == expect)
-    // the 100 TB twin (percentile_approx thresholds, no per-source total
-    // order) must agree up to sketch error at the two boundaries
-    val approx = rowsOf(Curation.perplexityBucketsApprox(docs, ref,
-      headFrac = 0.25, middleFrac = 0.5))
-      .map(r => r("doc_id").asInstanceOf[Long] ->
-        r("bucket").asInstanceOf[String]).toMap
-    val agree = got.count { case (id, (_, b)) => approx(id) == b }
-    assert(agree >= got.size * 0.98,
-      s"approx/exact bucket agreement = $agree/${got.size}")
   }
 
   test("clusterDedupBest: keeps the best-scoring member per cluster") {
@@ -2211,7 +2166,7 @@ class PipelineSpec extends SparkSpec {
     assert(deduped.count() == 3)
   }
 
-  test("bpeTrainBatched: batch=1 reproduces sequential; any batch matches RefBpe twin") {
+  test("bpeTrain: batch=1 reproduces sequential; any batch matches RefBpe twin") {
     val texts = Seq(
       "the merge rate of the merge table", "rate the table the merge",
       "aaab aaab aab zz zz zzz", "singleton words here only once",

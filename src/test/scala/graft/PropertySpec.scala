@@ -217,7 +217,7 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("property: bpeTrainBatched matches RefBpe twin on random corpora") {
+  test("property: bpeTrain matches RefBpe twin on random corpora") {
     import spark.implicits._
     val word = Gen.choose(1, 5).flatMap(n =>
       Gen.listOfN(n, Gen.oneOf('a', 'b', 'c')).map(_.mkString))

@@ -51,49 +51,6 @@ class ResultsSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters") && plan.contains("day"))
   }
 
-  test("upsertDaily: same-key rows replaced per day, untouched partitions keep their files") {
-    import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("upsert").toString + "/store"
-    def doc(key: String, v: Long, tsMs: Long) =
-      Seq((key, v)).toDF("key", "value")
-        .withColumn("@timestamp",
-          org.apache.spark.sql.functions.timestamp_millis(lit(tsMs)))
-    val day1 = 1700000000000L // 2023-11-14
-    val day2 = 1700100000000L // 2023-11-16
-    Documents.writeDaily(doc("a", 1L, day1).unionByName(doc("b", 2L, day1)), dir)
-    Documents.writeDaily(doc("a", 3L, day2), dir)
-    def files(day: String) = {
-      val d = new java.io.File(s"$dir/day=$day")
-      if (!d.exists) Set.empty[String] else d.listFiles.map(_.getName).toSet
-    }
-    val day1Files = files("2023-11-14")
-    // a crashed prior upsert leaves a stale temp sibling — cleared, not fatal
-    new java.io.File(new java.io.File(dir).getParentFile,
-      ".upsert_store/day=2023-11-16").mkdirs()
-    // replace key "a" on day 2, add new key "c" on day 2 and a new day 3
-    val updates = doc("a", 30L, day2)
-      .unionByName(doc("c", 5L, day2))
-      .unionByName(doc("d", 7L, day2 + 200000000L)) // 2023-11-18
-    Documents.upsertDaily(spark, dir, updates, key = "key")
-    val got = spark.read.parquet(dir)
-      .select(col("key"), col("value"), col("day").cast("string")).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
-    assert(got == Set(
-      ("a", 1L, "2023-11-14"), ("b", 2L, "2023-11-14"), // untouched day
-      ("a", 30L, "2023-11-16"), ("c", 5L, "2023-11-16"), // replaced + added
-      ("d", 7L, "2023-11-18"))) // new partition
-    // the untouched day partition was not rewritten: identical file names
-    assert(files("2023-11-14") == day1Files)
-    // crash-safe rewrite hygiene: no temp sibling or .old_ leftovers
-    val parent = new java.io.File(dir).getParentFile
-    assert(!parent.listFiles.exists(_.getName.startsWith(".upsert_")))
-    assert(!new java.io.File(dir).listFiles.exists(_.getName.startsWith(".old_")))
-    // fresh-store path: upsert into a nonexistent dir just writes
-    val dir2 = java.nio.file.Files.createTempDirectory("upsert2").toString + "/s2"
-    Documents.upsertDaily(spark, dir2, doc("z", 9L, day1), key = "key")
-    assert(spark.read.parquet(dir2).count() == 1)
-  }
-
   test("deleteDaily: scoped retirement, fully-retired day removed, others untouched") {
     import org.apache.spark.sql.functions.col
     val dir = java.nio.file.Files.createTempDirectory("retire").toString + "/store"
@@ -112,6 +69,9 @@ class ResultsSpec extends SparkSpec {
       if (!d.exists) Set.empty[String] else d.listFiles.map(_.getName).toSet
     }
     val day3Files = files("2023-11-18")
+    // a crashed prior retire leaves a stale temp sibling — cleared, not fatal
+    new java.io.File(new java.io.File(dir).getParentFile,
+      ".delete_store/day=2023-11-16").mkdirs()
     // retire "a" (present on day1 and day2) and "c" — day2 loses ALL rows
     Documents.deleteDaily(spark, dir,
       Seq("a", "c").toDF("key"), key = "key")
@@ -133,7 +93,7 @@ class ResultsSpec extends SparkSpec {
     assert(!new java.io.File(dir).listFiles.exists(_.getName.startsWith(".old_")))
   }
 
-  test("upsertDaily/deleteDaily: a day stranded at .old_ by a mid-swap crash is recovered, not silently lost") {
+  test("deleteDaily: a day stranded at .old_ by a mid-swap crash is recovered, not silently lost") {
     import org.apache.spark.sql.functions.col
     val dir = java.nio.file.Files.createTempDirectory("upcrash").toString + "/store"
     def doc(key: String, v: Long, tsMs: Long) =
@@ -150,22 +110,20 @@ class ResultsSpec extends SparkSpec {
       val live = new java.io.File(s"$dir/day=2023-11-14")
       assert(live.renameTo(new java.io.File(s"$dir/.old_day=2023-11-14")))
     }
-    strandDay1()
-    // the natural retry: upsert the same day again. Without recovery the
-    // root read silently misses day1, the rewrite is built WITHOUT b,
-    // and the swap's .old_ cleanup destroys the only pre-crash copy.
-    Documents.upsertDaily(spark, dir, doc("a", 10L, day1), key = "key")
     def got() = spark.read.parquet(dir)
       .select(col("key"), col("value"), col("day").cast("string")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
-    assert(got() == Set(
-      ("a", 10L, "2023-11-14"), ("b", 2L, "2023-11-14"), // b survived
-      ("c", 3L, "2023-11-16")))
-    assert(!new java.io.File(dir).listFiles.exists(_.getName.startsWith(".old_")))
-    // same interleaving against the delete path
+    // the natural retry: retire a key of the stranded day. Without
+    // recovery the root read silently misses day1, and b stays stranded
+    // where no read finds it.
     strandDay1()
     Documents.deleteDaily(spark, dir, Seq("a").toDF("key"), key = "key")
-    assert(got() == Set(("b", 2L, "2023-11-14"), ("c", 3L, "2023-11-16")))
+    assert(got() == Set(("b", 2L, "2023-11-14"), ("c", 3L, "2023-11-16"))) // b survived
+    assert(!new java.io.File(dir).listFiles.exists(_.getName.startsWith(".old_")))
+    // a stranded day that holds no retired key is restored as it was
+    strandDay1()
+    Documents.deleteDaily(spark, dir, Seq("c").toDF("key"), key = "key")
+    assert(got() == Set(("b", 2L, "2023-11-14")))
     assert(!new java.io.File(dir).listFiles.exists(_.getName.startsWith(".old_")))
   }
 

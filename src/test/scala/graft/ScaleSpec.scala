@@ -153,42 +153,7 @@ class ScaleSpec extends SparkSpec {
       ndPlain.count() > 0)
   }
 
-  test("bloom prune: no false negatives, codegen'd probe, real pruning") {
-    import graft.scale.Bloom
-    val small = (0L until 500L).map(i => i * 7 + 3).toDF("k")
-    // range source, not a LocalRelation — ConvertToLocalRelation would
-    // constant-fold the probe out of a Seq-backed frame's plan
-    val large = spark.range(20000L).toDF("key")
-    val pruned = Bloom.prune(large, col("key"), small, col("k"))
-    // the probe is the native Catalyst expression, evaluated in the plan
-    assert(pruned.queryExecution.executedPlan.toString
-      .contains("might_contain"))
-    val exact = large.join(small.withColumnRenamed("k", "key"),
-      Seq("key"), "left_semi")
-    // superset (no false negatives) …
-    assert(exact.exceptAll(pruned).isEmpty)
-    // … and genuinely pruning: ~500 matches + fpp·20000 stragglers
-    val n = pruned.count()
-    assert(n >= 500 && n < 2000, s"pruned to $n rows")
-  }
-
-  test("bloom semi/anti joins equal the plain joins exactly") {
-    import graft.scale.Bloom
-    val small = ((0L until 300L).map(i => i * 3) :+ 5L).toDF("k")
-    val large = (0L until 5000L).map(i => (i, s"p$i")).toDF("key", "payload")
-    val semi = Bloom.semiJoin(large, small, "key", "k")
-    val semiRef = large.join(small.withColumnRenamed("k", "key"),
-      Seq("key"), "left_semi")
-    assert(semi.exceptAll(semiRef).isEmpty && semiRef.exceptAll(semi).isEmpty)
-    val anti = Bloom.antiJoin(large, small, "key", "k")
-    val antiRef = large.join(small.withColumnRenamed("k", "key"),
-      Seq("key"), "left_anti")
-    assert(anti.exceptAll(antiRef).isEmpty && antiRef.exceptAll(anti).isEmpty)
-    assert(semi.count() + anti.count() == 5000)
-  }
-
   test("interleaveBits matches a bit-for-bit reference") {
-    import graft.scale.Layout
     def ref(xs: Seq[Long], bits: Int): Long =
       (0 until bits).foldLeft(0L) { (acc, b) =>
         xs.zipWithIndex.foldLeft(acc) { case (a, (x, i)) =>
@@ -197,13 +162,13 @@ class ScaleSpec extends SparkSpec {
       }
     val rows = for (x <- 0L until 16L; y <- 0L until 16L) yield (x, y)
     val out = rows.toDF("x", "y")
-      .withColumn("z", Layout.interleaveBits(Seq(col("x"), col("y")), 4))
+      .withColumn("z", RefColumns.interleaveBits(Seq(col("x"), col("y")), 4))
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
     for ((x, y) <- rows)
       assert(out((x, y)) == ref(Seq(x, y), 4), s"($x,$y)")
     // three columns, wider keys
     val z3 = Seq((1000L, 65535L, 12345L)).toDF("a", "b", "c")
-      .select(Layout.interleaveBits(Seq(col("a"), col("b"), col("c")), 16))
+      .select(RefColumns.interleaveBits(Seq(col("a"), col("b"), col("c")), 16))
       .head.getLong(0)
     assert(z3 == ref(Seq(1000L, 65535L, 12345L), 16))
   }
@@ -237,13 +202,8 @@ class ScaleSpec extends SparkSpec {
       s"z-order should skip most partitions: $zTouched vs $linTouched")
   }
 
-  test("bloom edge cases: empty small side, zorder constant column") {
-    import graft.scale.{Bloom, Layout}
-    val large = (0L until 100L).map(i => (i, s"p$i")).toDF("key", "payload")
-    val empty = Seq.empty[Long].toDF("k")
-    // empty membership set: semi keeps nothing, anti keeps everything
-    assert(Bloom.semiJoin(large, empty, "key", "k").count() == 0)
-    assert(Bloom.antiJoin(large, empty, "key", "k").count() == 100)
+  test("zorder edge cases: constant column, empty frame") {
+    import graft.scale.Layout
     // a constant z-order column scales to 0 and the key degrades to the
     // remaining dimension's interleave — rows still all preserved
     val const = (0L until 64L).map(i => (i, 7L)).toDF("x", "c")
@@ -536,62 +496,6 @@ class ScaleSpec extends SparkSpec {
     assert(got == Seq(1L, 2L, 3L, 4L))
     assert(!new java.io.File(s"$base/.old_store").exists)
     assert(!new java.io.File(s"$base/.rewrite_store").exists)
-  }
-
-  test("Layout compaction: report finds small-file partitions; rewrite is value-neutral and scoped") {
-    import graft.scale.Layout
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString + "/t"
-    // day=a written in 8 tiny files, day=b in 1 — only a needs compaction
-    (0 until 800).map(i => (i.toLong, s"p$i", "a")).toDF("id", "v", "day")
-      .repartition(8).write.partitionBy("day").mode("overwrite").parquet(dir)
-    (0 until 100).map(i => (1000L + i, s"q$i", "b")).toDF("id", "v", "day")
-      .coalesce(1).write.partitionBy("day").mode("append").parquet(dir)
-    val report = rowsOf(Layout.compactionReport(spark, dir,
-      smallBytes = 1L << 20, targetBytes = 1L << 20))
-    assert(report.map(_("partition")) == Seq("day=a"))
-    assert(report.head("files") == 8L && report.head("target_files") == 1L)
-    val before = spark.read.parquet(dir).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-    def bFiles = new java.io.File(s"$dir/day=b").listFiles.map(_.getName).toSet
-    val bBefore = bFiles
-    Layout.compactPartitions(spark, dir, Seq("day=a"), targetBytes = 1L << 20)
-    // value-neutral, day=a now one file, day=b untouched
-    val after = spark.read.parquet(dir).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-    assert(after == before)
-    assert(new java.io.File(s"$dir/day=a").listFiles
-      .count(_.getName.endsWith(".parquet")) == 1)
-    assert(bFiles == bBefore)
-  }
-
-  test("Layout compaction: whole-store recovery never touches sibling stores' .old_ entries") {
-    import graft.scale.Layout
-    import org.apache.hadoop.fs.Path
-    val base = java.nio.file.Files.createTempDirectory("siblings").toString
-    val storeA = s"$base/storeA"
-    val storeB = s"$base/storeB"
-    (0 until 100).map(i => (i.toLong, s"a$i")).toDF("id", "v")
-      .repartition(4).write.parquet(storeA)
-    (0 until 10).map(i => (i.toLong, s"b$i")).toDF("id", "v")
-      .coalesce(1).write.parquet(storeB)
-    val fs = new Path(base).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // simulate a SIBLING store (storeB) mid-rewriteAtomically: its rows
-    // renamed away to .old_storeB between the two renames. Whole-store
-    // compaction of storeA lists partitions = Seq("") — its recovery
-    // must be scoped to .old_storeA and leave the sibling's crash
-    // evidence exactly as found (the r14 ADVICE race: sweeping base
-    // would rename .old_storeB -> storeB under the concurrent rewriter)
-    fs.rename(new Path(storeB), new Path(base, ".old_storeB"))
-    Layout.compactPartitions(spark, storeA, Seq(""), targetBytes = 1L << 20)
-    assert(fs.exists(new Path(base, ".old_storeB")))
-    assert(!fs.exists(new Path(storeB)))
-    assert(spark.read.parquet(storeA).count() == 100L)
-    // and the whole-store case still recovers ITS OWN interrupted swap
-    fs.rename(new Path(storeA), new Path(base, ".old_storeA"))
-    Layout.compactPartitions(spark, storeA, Seq(""), targetBytes = 1L << 20)
-    assert(spark.read.parquet(storeA).count() == 100L)
-    assert(fs.exists(new Path(base, ".old_storeB"))) // still untouched
   }
 
   test("Graphs.pageRank: nano-unit iterations match an in-memory reference; plan stays bounded") {

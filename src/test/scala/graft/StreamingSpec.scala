@@ -444,30 +444,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("curateStream: dedup + quality gate + chunking in append mode with bounded state") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val docs = mem.toDF().toDF("doc_id", "text", "event_time")
-    val out = graft.pipeline.Curation.curateStream(docs,
-      watermark = "10 minutes", minTokens = 3, chunkSize = 4, stride = 4)
-    val q = out.writeStream.format("memory").queryName("curate_stream")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      val t0 = new java.sql.Timestamp(1000L)
-      mem.addData(
-        (1L, "one two three four five six", t0),
-        (2L, "one two three four five six", t0), // exact dup of 1 -> dropped
-        (3L, "too short", t0))                   // quality gate
-      q.processAllAvailable()
-      val rows = spark.table("curate_stream")
-        .select("doc_id", "chunk_id", "chunk_text").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
-      assert(rows.map(_._1).toSet == Set(1L))
-      assert(rows.sortBy(_._2).map(_._3).toSeq
-        == Seq("one two three four", "five six"))
-    } finally q.stop()
-  }
-
   test("streaming unigram NLL == batch scorer on the same docs (stream-static LM join)") {
     implicit val sqlCtx = spark.sqlContext
     val ref = Seq((100L, "aa bb cc dd aa bb cc dd"), (101L, "aa bb ee"))
@@ -500,41 +476,42 @@ class StreamingSpec extends SparkSpec {
 
   test("RocksDB state store: keyed dedup state runs under the RocksDB provider") {
     implicit val sqlCtx = spark.sqlContext
-    graft.core.Graft.useRocksDbState(spark)
-    val mem = MemoryStream[ReportDedup.Observation]
-    val out = ReportDedup(mem.toDS(), reportIntervalMs = 60000L)
-    val q = out.writeStream.format("memory").queryName("rocks_out")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(ReportDedup.Observation("k1", 1000L, 5L),
-        ReportDedup.Observation("k1", 2000L, 3L))
-      q.processAllAvailable()
-      mem.addData(ReportDedup.Observation("k1", 70000L, 2L))
-      q.processAllAvailable()
-      // same increment semantics as under the default provider
-      val rows = spark.table("rocks_out").as[ReportDedup.Report]
-        .collect().sortBy(_.ts)
-      assert(rows.map(r => (r.flows_total, r.flows_increment)).toSeq
-        == Seq((5L, 5L), (10L, 5L)))
-      // and the state really lives in RocksDB: provider-specific metrics
-      // appear on the state operator progress
-      val metrics = q.lastProgress.stateOperators(0).customMetrics
-      assert(scala.jdk.CollectionConverters.SetHasAsScala(metrics.keySet)
-        .asScala.exists(_.startsWith("rocksdb")))
-    } finally {
-      q.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      spark.conf.unset(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+    withRocksDb {
+      val mem = MemoryStream[ReportDedup.Observation]
+      val out = ReportDedup(mem.toDS(), reportIntervalMs = 60000L)
+      val q = out.writeStream.format("memory").queryName("rocks_out")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        mem.addData(ReportDedup.Observation("k1", 1000L, 5L),
+          ReportDedup.Observation("k1", 2000L, 3L))
+        q.processAllAvailable()
+        mem.addData(ReportDedup.Observation("k1", 70000L, 2L))
+        q.processAllAvailable()
+        // same increment semantics as under the default provider
+        val rows = spark.table("rocks_out").as[ReportDedup.Report]
+          .collect().sortBy(_.ts)
+        assert(rows.map(r => (r.flows_total, r.flows_increment)).toSeq
+          == Seq((5L, 5L), (10L, 5L)))
+        // and the state really lives in RocksDB: provider-specific metrics
+        // appear on the state operator progress
+        assertRocksDbMetrics(q)
+      } finally q.stop()
     }
   }
 
-  /** Run `body` with streaming state on the RocksDB provider, restoring
-    * the default (HDFS-backed heap) provider after — the 100 TB posture
-    * for keyed state that outgrows executor heaps (COVERAGE §2.6). */
+  /** Run `body` with streaming state on the RocksDB provider (off-heap,
+    * changelog checkpointing), restoring the default (HDFS-backed heap)
+    * provider after — the 100 TB posture for keyed state that outgrows
+    * executor heaps (COVERAGE §2.6). Applies to queries started in
+    * `body`. */
   private def withRocksDb[A](body: => A): A =
-    try { graft.core.Graft.useRocksDbState(spark); body }
-    finally {
+    try {
+      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      spark.conf.set(
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+      body
+    } finally {
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       spark.conf.unset(
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
@@ -1022,8 +999,13 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       val ids = spark.table("dedup_stream").collect()
         .map(_.getAs[Long]("doc_id")).toSet
-      // duplicates of "alpha" (ids 3, 4) dropped, including across batches
+      // duplicates of "alpha" (ids 3, 4) dropped, including across
+      // batches: within the horizon, the batch operator's survivors
       assert(ids == Set(1L, 2L, 5L))
+      val batch = Seq((1L, "alpha"), (2L, "beta"), (3L, "alpha"), (4L, "alpha"),
+        (5L, "gamma")).toDF("doc_id", "text")
+      assert(graft.pipeline.TextPipeline.dedupExactByHash(batch).collect()
+        .map(_.getAs[Long]("doc_id")).toSet == ids)
       // bounded state: the operator is the watermark-evicting one
       assert(q.lastProgress.stateOperators.exists(
         _.operatorName == "dedupeWithinWatermark"),
@@ -1095,8 +1077,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming near-dup compaction: foreachBatch ingest equals batch candidates") {
-    // the compaction path curateStream documents: per micro-batch,
-    // IncrementalDedup.ingest emits each candidate pair exactly once
+    // near-dup stages have no bounded-state streaming form; per
+    // micro-batch, IncrementalDedup.ingest emits each candidate pair exactly once
     // (at the ingest of its later member) against the append-only store
     implicit val sqlCtx = spark.sqlContext
     import graft.pipeline.{IncrementalDedup, TextPipeline}
