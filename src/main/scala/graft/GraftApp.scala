@@ -37,7 +37,7 @@ object GraftApp {
       dstPattern: String = ".*",      // ddos network filter regex (-nf arg)
       ratioIncrease: Double = 50.0,   // ddos threshold (detection_ddos.py:186)
       minPackets: Long = 100000L,     // ddos minimal_incoming (:187)
-      stateTtlMs: Long = 86400000L,   // ddos profile GC horizon (1 day)
+      stateTtlMs: Long = 86400000L,   // ddos profile expiry, event time (1 day)
       reflectRatio: Double = 3.0,     // reflect_ddos threshold_change (reflectdos_main.py:186)
       minReplies: Long = 10L,         // reflect_ddos minimal_replies (:185)
       observe: Boolean = false)       // per-batch in/out counters and state on the stream
@@ -72,9 +72,9 @@ object GraftApp {
     case "biflow_pairs" =>
       StreamingAnalytics.biflowPairs(_, watermark = c.watermark)
     case "ports_scan" =>
-      flows => StreamingAnalytics.portScanReports(flows).toDF()
+      StreamingAnalytics.portScanReports(_, watermark = c.watermark).toDF()
     case "ssh_auth" =>
-      flows => StreamingAnalytics.sshAuthReports(flows).toDF()
+      StreamingAnalytics.sshAuthReports(_, watermark = c.watermark).toDF()
     case "dns_open_resolvers" =>
       StreamingAnalytics.openResolvers(_, c.window, c.watermark)
     case "tls_classification" =>
@@ -86,10 +86,10 @@ object GraftApp {
       // the report window all come from the configuration file
       val cfg = graft.analytics.PatternConfig.load(c.config.getOrElse(
         throw new IllegalArgumentException("pattern_finder needs --config <yaml>")))
-      flows => graft.analytics.PatternConfig.streamingReports(flows, cfg).toDF()
+      graft.analytics.PatternConfig.streamingReports(_, cfg, c.watermark).toDF()
     case "ddos" =>
-      flows => StreamingAnalytics.ddosKeyedState(flows, c.dstPattern,
-        c.ratioIncrease, c.minPackets, c.stateTtlMs).toDF()
+      StreamingAnalytics.ddosKeyedState(_, c.dstPattern,
+        c.ratioIncrease, c.minPackets, c.stateTtlMs, c.watermark).toDF()
     case "reflect_ddos" =>
       if (c.dnsServers.isEmpty)
         throw new IllegalArgumentException("reflect_ddos needs --dns-servers a,b,c")

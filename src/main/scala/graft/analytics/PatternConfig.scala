@@ -258,8 +258,8 @@ object PatternConfig {
     * keyed report state with distribution carry. Requires a uniform
     * distribution config across patterns (the flattened state array is
     * fixed-width); configs with per-pattern interval overrides must run
-    * the batch form. */
-  def streamingReports(flows: DataFrame, cfg: Config)
+    * the batch form. Rows behind `watermark` are dropped. */
+  def streamingReports(flows: DataFrame, cfg: Config, watermark: String)
       : org.apache.spark.sql.Dataset[graft.streaming.ReportDedup.PatternReport] = {
     val dists = cfg.patterns.map(_._2).distinct
     require(dists.size == 1,
@@ -271,16 +271,16 @@ object PatternConfig {
           filtered, cfg.patterns.map(_._1), dists.head,
           reportIntervalMs = cfg.reportIntervalMs,
           tolerance = s"${cfg.biflowKey.map(_.toleranceMs).getOrElse(500L)} milliseconds",
-          vector = vectorCols(cfg))
+          watermark = watermark, vector = vectorCols(cfg))
       case "simple" =>
         import flows.sparkSession.implicits._
         val obs = PatternFinder.patternObservationsKeyed(filtered,
-          concat_ws("-", cfg.simpleKey.map(col): _*), col("start_ms"),
+          concat_ws("-", cfg.simpleKey.map(col): _*), col("event_time"),
           cfg.patterns.map(_._1), dists.head,
           array(vectorCols(cfg).map(_.cast("double")): _*))
           .as[graft.streaming.ReportDedup.PatternObservation]
         graft.streaming.ReportDedup.patterns(obs, cfg.reportIntervalMs,
-          dists.head.intervals.size, dists.head.mid, dists.head.limit)
+          dists.head.intervals.size, dists.head.mid, dists.head.limit, watermark)
       case other =>
         throw new IllegalArgumentException(s"vector key type $other")
     }

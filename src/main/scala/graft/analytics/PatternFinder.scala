@@ -264,19 +264,20 @@ object PatternFinder {
 
   /** Per-pair streaming observations for the stateful report path: key =
     * "src-dst" (the reference's result_key, pattern_finder.py:317-318),
-    * ts = request start, dist = the per-pattern one-hot weighted bin
-    * vectors FLATTENED patterns-major (pattern 0 bins, pattern 1 bins, …)
+    * event_time = request start, dist = the per-pattern one-hot weighted
+    * bin vectors FLATTENED patterns-major (pattern 0 bins, pattern 1 bins, …)
     * so the keyed state carries one fixed-width Array[Long]. */
   def patternObservations(pairs: DataFrame, patterns: Seq[Pattern],
                           cfg: DistConfig,
                           vec: Column = featureVector): DataFrame =
     patternObservationsKeyed(pairs,
       concat_ws("-", col("client_ip"), col("server_ip")),
-      col("req_start_ms"), patterns, cfg, vec)
+      col("req_time"), patterns, cfg, vec)
 
   /** [[patternObservations]] over an arbitrary report key / event-time
-    * column — the `simple` per-flow key is the other instance. */
-  def patternObservationsKeyed(rows: DataFrame, key: Column, ts: Column,
+    * column — the `simple` per-flow key is the other instance. The
+    * event-time column keeps its watermark (a stream-stream join's). */
+  def patternObservationsKeyed(rows: DataFrame, key: Column, eventTime: Column,
                                patterns: Seq[Pattern], cfg: DistConfig,
                                vec: Column): DataFrame = {
     val nBins = cfg.intervals.size
@@ -287,7 +288,7 @@ object PatternFinder {
     }
     rows.select(
       key.as("key"),
-      ts.as("ts"),
+      eventTime.as("event_time"),
       flatten(array(oneHots: _*)).as("dist"))
   }
 

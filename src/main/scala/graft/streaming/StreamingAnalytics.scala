@@ -22,7 +22,12 @@ import graft.functions.BitFunctions
   * flow predicate, per-flow projection and aggregate list, and adds only
   * the watermark and the event-time window (SURVEY §7.1: one analytic
   * definition for static and streaming frames). The two DNS resolver
-  * builders are the exceptions; each says which batch rule it skips.
+  * builders and the port-scan and SSH report builders are the
+  * exceptions; each says which batch rule it skips.
+  *
+  * The four stateful detectors (ports_scan, ssh_auth, pattern_finder,
+  * ddos) share one keyed-state wiring, [[ReportDedup.keyed]]: rows behind
+  * `watermark` are dropped and a key's state expires on event time.
   */
 object StreamingAnalytics {
 
@@ -140,33 +145,40 @@ object StreamingAnalytics {
     val syn = flows.filter(PortScanDetection.synProbe)
     val h = syn.select(
       concat_ws("|", lit("horizontal"), col("src_ip4"), col("dst_port")).as("key"),
-      col("start_ms").as("ts"), lit(1L).as("flows"))
+      col("event_time"), lit(1L).as("flows"))
     val v = syn.select(
       concat_ws("|", lit("vertical"), col("src_ip4"), col("dst_ip")).as("key"),
-      col("start_ms").as("ts"), lit(1L).as("flows"))
+      col("event_time"), lit(1L).as("flows"))
     h.unionByName(v).as[ReportDedup.Observation]
   }
 
-  /** Streaming port-scan reports with increment semantics + state GC —
-    * the full ports_scan.py pipeline shape (filter → key → stateful
-    * dedup → report stream). */
+  /** Streaming port-scan reports with increment semantics and
+    * event-time state expiry — the full ports_scan.py pipeline shape
+    * (filter → key → stateful dedup → report stream).
+    *
+    * Not the batch [[PortScanDetection]] rule: every pure-SYN key
+    * reports on first sight, with no `minTargets` distinct-target
+    * threshold (reference 20). */
   def portScanReports(flows: DataFrame, reportIntervalMs: Long = 60000L,
-                      gcMs: Long = 0L): Dataset[ReportDedup.Report] =
-    ReportDedup(scanObservations(flows), reportIntervalMs, gcMs)
+                      watermark: String = "30 seconds"): Dataset[ReportDedup.Report] =
+    ReportDedup(scanObservations(flows), reportIntervalMs, watermark)
 
   /** SSH brute-force candidates ([[SshAuthDetection.candidate]] at the
     * reference default bands) keyed src_ip4|dst_ip through the same dedup
-    * state (ssh_auth_simple.py:170-179 band filter + :61-81 reporting). */
+    * state (ssh_auth_simple.py:170-179 band filter + :61-81 reporting).
+    *
+    * Not the batch [[SshAuthDetection]] rule: every candidate key reports
+    * on first sight, with no `minFlows` threshold. */
   def sshAuthReports(flows: DataFrame, reportIntervalMs: Long = 300000L,
-                     gcMs: Long = 0L): Dataset[ReportDedup.Report] = {
+                     watermark: String = "30 seconds"): Dataset[ReportDedup.Report] = {
     import flows.sparkSession.implicits._
     val obs = flows
       .filter(SshAuthDetection.candidate() &&
         col("src_ip4").isNotNull && col("dst_ip").isNotNull)
       .select(concat_ws("|", col("src_ip4"), col("dst_ip")).as("key"),
-        col("start_ms").as("ts"), lit(1L).as("flows"))
+        col("event_time"), lit(1L).as("flows"))
       .as[ReportDedup.Observation]
-    ReportDedup(obs, reportIntervalMs, gcMs)
+    ReportDedup(obs, reportIntervalMs, watermark)
   }
 
   /** J5 streaming form: biflow request/response pairing as a watermarked
@@ -209,7 +221,6 @@ object StreamingAnalytics {
                            reportIntervalMs: Long = 300000L,
                            tolerance: String = "500 milliseconds",
                            watermark: String = "30 seconds",
-                           gcMs: Long = 0L,
                            vector: Seq[Column] = Nil): Dataset[ReportDedup.PatternReport] = {
     import flows.sparkSession.implicits._
     val pairs = biflowPairs(flows, tolerance, watermark, vector)
@@ -221,7 +232,7 @@ object StreamingAnalytics {
       v => PatternFinder.patternObservations(pairs, patterns, cfg, v))
       .as[ReportDedup.PatternObservation]
     ReportDedup.patterns(obs, reportIntervalMs,
-      cfg.intervals.size, cfg.mid, cfg.limit, gcMs)
+      cfg.intervals.size, cfg.mid, cfg.limit, watermark)
   }
 
   /** Windowed open-resolver inventory (dns_open_resolvers.py:51-68):
@@ -258,38 +269,24 @@ object StreamingAnalytics {
   final case class DdosDetection(dst_ip: String, short_ratio: Double,
                                  long_ratio: Double, packets: Long, flows: Long)
 
-  /** The DDoS keyed-state update, factored out so the timeout/eviction
-    * branch is unit-testable with TestGroupState (a ProcessingTimeTimeout
-    * keeps a local test query triggering sweep batches forever, so the
-    * eviction path can't be driven through processAllAvailable). */
-  def ddosUpdate(ratioIncrease: Double, minPackets: Long, stateTtlMs: Long)(
-      dst: String, rows: Iterator[(String, Long)],
-      state: org.apache.spark.sql.streaming.GroupState[DdosProfile])
-      : Iterator[DdosDetection] = {
-    if (state.hasTimedOut) { // TTL eviction: idle profile dropped
-      state.remove()
-      Iterator.empty
-    } else {
-      var pk = 0L
-      var fl = 0L
-      rows.foreach { r => pk += r._2; fl += 1 }
-      val prior = state.getOption
-      val out = prior match {
-        case Some(p) if fl > 0 && p.flows > 0 && pk >= minPackets =>
-          val shortRatio = pk.toDouble / fl
-          val longRatio = p.packets.toDouble / p.flows
-          if (shortRatio >= longRatio * ratioIncrease)
-            Iterator.single(DdosDetection(dst, shortRatio, longRatio, pk, fl))
-          else Iterator.empty
-        case _ => Iterator.empty
-      }
-      if (fl > 0) state.update(prior match {
-        case Some(p) => DdosProfile(p.packets + pk, p.flows + fl)
-        case None    => DdosProfile(pk, fl)
-      })
-      if (stateTtlMs > 0 && state.exists) state.setTimeoutDuration(stateTtlMs)
-      out
+  /** The DDoS keyed-state step: fold one destination's batch of
+    * (dst, packets, event_time) rows into a short horizon, compare it with
+    * the prior profile, then fold it into the profile. */
+  private def ddosUpdate(ratioIncrease: Double, minPackets: Long)(
+      dst: String, prior: Option[DdosProfile],
+      rows: Iterator[(String, Long, java.sql.Timestamp)])
+      : (DdosProfile, Iterator[DdosDetection]) = {
+    var pk = 0L
+    var fl = 0L
+    rows.foreach { r => pk += r._2; fl += 1 }
+    val out = prior match {
+      case Some(p) if pk >= minPackets &&
+          pk.toDouble / fl >= p.packets.toDouble / p.flows * ratioIncrease =>
+        Iterator.single(DdosDetection(dst, pk.toDouble / fl,
+          p.packets.toDouble / p.flows, pk, fl))
+      case _ => Iterator.empty
     }
+    (prior.fold(DdosProfile(pk, fl))(p => DdosProfile(p.packets + pk, p.flows + fl)), out)
   }
 
   /** W3/J3 streaming: the DDoS short-vs-long-horizon comparison
@@ -297,7 +294,7 @@ object StreamingAnalytics {
     * watched flows ([[graft.analytics.DdosDetection.watched]]). Joining two
     * differently-windowed streaming aggregates is unsupported, so the
     * long horizon lives as per-dst (packets, flows) counters in
-    * `flatMapGroupsWithState` — checkpointed by the state store (crash
+    * [[ReportDedup.keyed]] — checkpointed by the state store (crash
     * recovery for free), incrementally updated, never rewritten.
     *
     * Per microbatch and destination: fold the batch's flows into a short
@@ -305,7 +302,10 @@ object StreamingAnalytics {
     * detection when the short packet/flow ratio ≥ `ratioIncrease` × the
     * profile ratio with at least `minPackets` short packets (no emission
     * until a profile exists — the reference also warms up first); then
-    * fold the short horizon into the profile.
+    * fold the short horizon into the profile. A destination idle for
+    * `stateTtlMs` of event time is dropped and warms up again when seen
+    * (the reference GC'd its driver dict daily; an unfiltered /0 watch
+    * pattern would otherwise grow state forever).
     *
     * Scale: one shuffle on dst_ip, state is 16 bytes per distinct
     * destination, and per-batch work is proportional to the batch — no
@@ -315,22 +315,15 @@ object StreamingAnalytics {
     * final, so the operator runs in Append mode and file sinks work. */
   def ddosKeyedState(flows: DataFrame, dstPattern: String,
                      ratioIncrease: Double, minPackets: Long,
-                     stateTtlMs: Long = 0L): Dataset[DdosDetection] = {
+                     stateTtlMs: Long,
+                     watermark: String = "30 seconds"): Dataset[DdosDetection] = {
     import flows.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    // stateTtlMs > 0 bounds the profile map: a destination idle past the
-    // TTL is dropped (the reference GC'd its driver dict daily; an
-    // unfiltered /0 watch pattern would otherwise grow state forever)
-    val timeout =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    flows
+    val rows = flows
       .filter(graft.analytics.DdosDetection.watched(dstPattern))
-      .select(col("dst_ip").as[String], col("packets").cast("long").as[Long])
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[DdosProfile, DdosDetection](
-        OutputMode.Append, timeout)(
-        ddosUpdate(ratioIncrease, minPackets, stateTtlMs))
+      .select(col("dst_ip").as[String], col("packets").cast("long").as[Long],
+        col("event_time").as[java.sql.Timestamp])
+    ReportDedup.keyed(rows, watermark, stateTtlMs)(_._1, _._3)(
+      ddosUpdate(ratioIncrease, minPackets))
   }
 
   /** F6/J6/W1 streaming: reflected-DDoS detection as a windowed

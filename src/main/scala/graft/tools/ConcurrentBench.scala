@@ -48,68 +48,6 @@ import graft.SparkEntry
   */
 object ConcurrentBench {
 
-  /** Time-ordered chunk copy of `events.parquet`, built AT MOST ONCE per
-    * (process, sfDir) and shared by every pass and thread: the single
-    * testdata file would otherwise drain as ONE monolithic micro-batch
-    * (~19 s at sf0.1) during which all task slots are held and a
-    * concurrent 0.3 s interactive query waits behind it (the r18 serving
-    * record's q_minhash_candidates p95_ratio 19.1). Split into N files
-    * by event-time range (approxQuantile cut points; files written in
-    * time order so modification-time pickup preserves arrival order and
-    * the watermark advances exactly as a live stream's would),
-    * AvailableNow + maxFilesPerTrigger=1 drains in N bounded
-    * micro-batches — between batches the slots free and FAIR gives
-    * waiting interactive queries their share.
-    *
-    * N defaults to 1 (monolithic): each extra micro-batch of this
-    * stateful plan costs ~8 s of driver planning + per-batch state-store
-    * commit at sf0.1 (measured r19: an 8-chunk drain ran 81 s serial vs
-    * 19 s monolithic and made every p95 WORSE). The serving-tail fix is
-    * pool priority ([[inStreamPool]]), not batch granularity; the chunk
-    * machinery stays for bounded-trigger experiments via
-    * SPARK_GRAFT_STREAM_CHUNKS. */
-  private val splitLock = new Object
-  private val splitDirs = collection.mutable.Map.empty[String, String]
-  private def splitEvents(spark: SparkSession, sfDir: String): String =
-    splitLock.synchronized {
-      splitDirs.getOrElseUpdate(sfDir, {
-        import org.apache.spark.sql.functions._
-        val n = sys.env.get("SPARK_GRAFT_STREAM_CHUNKS")
-          .map(_.toInt).getOrElse(1)
-        val dir = java.nio.file.Files
-          .createTempDirectory("cbench_events_split").toString
-        val rawNoT = spark.read.parquet(s"$sfDir/events.parquet")
-        // ts encoding varies across driver regenerations (long nanos /
-        // TIMESTAMP / TIMESTAMP_NTZ) — normalize like every other reader
-        val raw = rawNoT.withColumn("__t",
-          graft.core.Tables.normalizeTsNanos(rawNoT.schema("ts").dataType))
-        val bounds =
-          if (n <= 1) Array(Double.MinValue, Double.MaxValue)
-          else {
-            val probs = (1 until n).map(_.toDouble / n).toArray
-            val cuts = raw.stat.approxQuantile("__t", probs, 0.001)
-            (Double.MinValue +: cuts) :+ Double.MaxValue
-          }
-        bounds.sliding(2).foreach { w =>
-          raw.filter(col("__t") >= w(0) && col("__t") < w(1)).drop("__t")
-            .coalesce(1).write.mode("append").parquet(dir)
-        }
-        dir
-      })
-    }
-
-  /** Streaming serving faces: every heavy BATCH face is in the rotation,
-    * but a shared engine also hosts micro-batch streams — this runs the
-    * full streaming pattern_finder (file-source events → flow synth →
-    * biflow stream-stream join → keyed report state) as a bounded
-    * AvailableNow drain per invocation, with a fresh checkpoint so every
-    * pass replays the same work. The drain runs in the low-weight
-    * `stream` scheduler pool ([[inStreamPool]]); the input reads the
-    * [[splitEvents]] copy (chunkable via SPARK_GRAFT_STREAM_CHUNKS for
-    * bounded-trigger experiments — default 1, see the measured numbers
-    * on [[inStreamPool]]). Each client thread runs its own
-    * StreamingQuery (distinct checkpoint + queryName), the documented
-    * multi-stream-per-session posture. */
   /** Scheduler-pool isolation for the stream face (the r19 fix for the
     * r18 serving tail — q_minhash_candidates p95_ratio 19.1 sampled
     * behind the drain): the drain runs in the low-weight `stream` pool
@@ -134,6 +72,17 @@ object ConcurrentBench {
     try body finally sc.setLocalProperty("spark.scheduler.pool", prev)
   }
 
+  /** Streaming serving faces: every heavy BATCH face is in the rotation,
+    * but a shared engine also hosts micro-batch streams — this runs the
+    * full streaming pattern_finder (file-source events → flow synth →
+    * biflow stream-stream join → keyed report state) as a bounded
+    * AvailableNow drain per invocation, with a fresh checkpoint so every
+    * pass replays the same work. The drain runs in the low-weight
+    * `stream` scheduler pool ([[inStreamPool]]) and reads a copy of
+    * `events.parquet` as one micro-batch (an 8-way time-chunked drain
+    * measured worse, see [[inStreamPool]]). Each client thread runs its
+    * own StreamingQuery (distinct checkpoint + queryName), the documented
+    * multi-stream-per-session posture. */
   private val streamFaces: Map[String, (SparkSession, String) => Unit] = Map(
     "s_pattern_finder_stream" -> ((spark: SparkSession, sfDir: String) =>
       inStreamPool(spark) {
@@ -157,11 +106,14 @@ object ConcurrentBench {
       session.conf.set("spark.sql.shuffle.partitions", width)
       val path = s"$sfDir/events.parquet"
       val rawSchema = session.read.parquet(path).schema
-      val ck = java.nio.file.Files
-        .createTempDirectory("cbench_pf_stream").toString
+      // the file stream source reads a directory: a one-file copy, with
+      // the checkpoint beside it, both deleted after the drain
+      val work = java.nio.file.Files.createTempDirectory("cbench_pf_stream")
+      val in = java.nio.file.Files.createDirectory(work.resolve("in"))
+      java.nio.file.Files.copy(java.nio.file.Paths.get(path),
+        in.resolve("events.parquet"))
       val events = session.readStream.schema(rawSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(splitEvents(spark, sfDir))
+        .parquet(in.toString)
         .withColumn("ts", graft.core.Tables.normalizeTsNanos(
           rawSchema("ts").dataType))
       val flows = graft.SparkEntry.withBiflowEcho(
@@ -172,13 +124,12 @@ object ConcurrentBench {
         graft.SparkEntry.patterns, graft.SparkEntry.pfDist,
         reportIntervalMs = 60000L)
       val q = out.writeStream.format("noop")
-        .option("checkpointLocation", ck)
+        .option("checkpointLocation", work.resolve("ckpt").toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       try { q.awaitTermination() } finally {
         if (q.isActive) q.stop()
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(ck))
+        org.apache.commons.io.FileUtils.deleteQuietly(work.toFile)
       }
     }: Unit))
 

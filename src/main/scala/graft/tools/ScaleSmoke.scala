@@ -212,7 +212,7 @@ object ScaleSmoke {
     val sm = st.map(_.memSpill).sum / 1e6
     val sd = st.map(_.diskSpill).sum / 1e6
     val mt = st.map(_.maxTaskMs).maxOption.getOrElse(0L)
-    val gs = st.map(_.gcMs).sum / 1e3
+    val gs = st.map(_.jvmGcMs).sum / 1e3
     f"""\"$name\":{\"sec\":$sec%.2f,\"rows\":${run.value},\"shuffle_mb\":$mb%.1f,\"mem_spill_mb\":$sm%.1f,\"disk_spill_mb\":$sd%.1f,\"max_task_ms\":$mt%d,\"gc_sec\":$gs%.1f}"""
   }
 

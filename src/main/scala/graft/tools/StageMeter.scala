@@ -87,7 +87,7 @@ final class StageMeter private (private val sc: SparkContext) extends SparkListe
           .getOrElse(-1L),
         tasks = si.numTasks,
         execMs = metric(_.executorRunTime),
-        gcMs = metric(_.jvmGCTime),
+        jvmGcMs = metric(_.jvmGCTime),
         shuffleBytes = metric(_.shuffleWriteMetrics.bytesWritten),
         shuffleRecords = metric(_.shuffleWriteMetrics.recordsWritten),
         memSpill = metric(_.memoryBytesSpilled),
@@ -149,7 +149,7 @@ object StageMeter {
   private val JobKeys = Seq(GroupKey, "spark.job.description", "spark.job.interruptOnCancel")
 
   /** One completed stage attempt. Times are milliseconds; `ms` is
-    * submission to completion, `execMs`/`gcMs` are summed over tasks,
+    * submission to completion, `execMs`/`jvmGcMs` are summed over tasks,
     * `maxTaskMs` is the longest task attempt, `slowTasks` counts task
     * attempts of a second or more and `failed` the attempts that failed.
     * `pool` and `query` are the scheduler pool and first line of the
@@ -157,7 +157,7 @@ object StageMeter {
     * stage's RDDs; one built inside `AdaptiveSparkPlan` is a whole plan
     * fragment. */
   final case class Stage(id: Int, ops: Seq[String], ms: Long, tasks: Int,
-                         execMs: Long, gcMs: Long,
+                         execMs: Long, jvmGcMs: Long,
                          shuffleBytes: Long, shuffleRecords: Long,
                          memSpill: Long, diskSpill: Long,
                          maxTaskMs: Long, slowTasks: Int, failed: Int,
@@ -198,7 +198,7 @@ object StageMeter {
   def table(stages: Seq[Stage]): Seq[String] =
     stages.sortBy(-_.ms).map { s =>
       f"  stage ${s.id}%4d  wall ${s.ms}%7d ms  exec ${s.execMs}%8d ms  " +
-        f"gc ${s.gcMs}%6d ms  ${s.shuffleBytes / 1e6}%9.1f MB  " +
+        f"gc ${s.jvmGcMs}%6d ms  ${s.shuffleBytes / 1e6}%9.1f MB  " +
         f"${s.shuffleRecords}%12d recs  ${s.tasks}%4d tasks  " +
         opNames(s).take(6).mkString(",")
     }

@@ -318,7 +318,8 @@ class AnalyticsSpec extends SparkSpec {
     assert(report.size == 1)
     // independent fold: sum the flattened per-pair one-hot vectors with the
     // explicit RefColumns.arraySum element-wise fold
-    val folded = PatternFinder.patternObservations(pairs, pats, cfg)
+    val folded = PatternFinder.patternObservations(
+        pairs.withColumn("req_time", timestamp_millis(col("req_start_ms"))), pats, cfg)
       .groupBy("key")
       .agg(aggregate(collect_list(col("dist")),
         array_repeat(lit(0L), 2 * cfg.intervals.size),

@@ -590,14 +590,9 @@ class GraftAppSpec extends SparkSpec {
         lines.mkString("\n").getBytes)
     write("b1.json", (0 until 10).map(i =>
       flowJson2(s"10.1.0.$i", "192.168.1.1", 17, 4000 + i, 53, 1000L * i, 10, 500)))
-    // stateTtlMs = 0 here: a processing-time timeout keeps the engine
-    // scheduling timeout-sweep batches, which processAllAvailable never
-    // drains (TTL eviction itself is spec'd in StreamingSpec via
-    // Trigger.AvailableNow restarts)
     val q = GraftApp.build(spark, GraftApp.Config(
       analytic = "ddos", inputJson = Some(in), output = out, checkpoint = ckpt,
-      dstPattern = "192\\.168\\..*", ratioIncrease = 5.0, minPackets = 100L,
-      stateTtlMs = 0L))
+      dstPattern = "192\\.168\\..*", ratioIncrease = 5.0, minPackets = 100L))
     try {
       q.processAllAvailable()
       write("b2.json", (0 until 5).map(i =>
@@ -608,6 +603,31 @@ class GraftAppSpec extends SparkSpec {
       assert(rows.head.getAs[String]("dst_ip") == "192.168.1.1")
       assert(rows.head.getAs[Double]("long_ratio") == 10.0d)
       assert(rows.head.getAs[String]("type") == "ddos")
+    } finally q.stop()
+  }
+
+  test("GraftApp ddos at its shipped defaults goes quiet once its input is drained") {
+    // an idle query runs no micro-batch unless the watermark moves: a
+    // processing-time state timeout would run empty batches back to back
+    val in = java.nio.file.Files.createTempDirectory("ddosidlein").toString
+    val out = java.nio.file.Files.createTempDirectory("ddosidleout").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("ddosidleckpt").toString
+    java.nio.file.Files.write(java.nio.file.Paths.get(in, "b1.json"), Seq(
+      flowJson2("10.1.0.1", "192.168.1.1", 17, 4000, 53, 1502900000000L, 10, 500),
+      flowJson2("10.1.0.2", "192.168.1.1", 17, 4001, 53, 1502900001000L, 10, 500))
+      .mkString("\n").getBytes)
+    val q = GraftApp.build(spark, GraftApp.Config(
+      analytic = "ddos", inputJson = Some(in), output = out, checkpoint = ckpt))
+    def commits = Option(new java.io.File(ckpt, "commits").list()).toSeq.flatten
+      .count(_.forall(_.isDigit))
+    try {
+      val deadline = System.nanoTime + 120L * 1000000000L
+      while (!q.recentProgress.exists(_.numInputRows > 0) && System.nanoTime < deadline)
+        Thread.sleep(100)
+      assert(q.recentProgress.exists(_.numInputRows > 0), "the input batch never committed")
+      val first = commits
+      Thread.sleep(5000)
+      assert(commits - first <= 2, s"${commits - first} micro-batches while idle")
     } finally q.stop()
   }
 

@@ -2253,7 +2253,7 @@ class PipelineSpec extends SparkSpec {
         }.sortBy { case (m, ni) => (-m, ni) }.head
         Some((qi, best._2, best._1))
       }
-    }.filter(_._3 >= 1.0).map { case (q, n, m) => (q, n) }.toSet
+    }.filter(_._3 >= 1.0).map { case (q, n, _) => (q, n) }.toSet
     val got = Similarity.marginNeighbors(
       as.map { case (i, v) => (i, v.map(_.toFloat)) }.toDF("vec_id", "embedding"),
       bs.map { case (i, v) => (i, v.map(_.toFloat)) }.toDF("vec_id", "embedding"),

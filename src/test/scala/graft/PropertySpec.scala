@@ -17,7 +17,7 @@ class PropertySpec extends SparkSpec {
 
   /** Draw n samples from a generator (scalatestplus bridge isn't on the
     * offline classpath, so sampling is explicit). */
-  private def forAll[T](g: Gen[T], n: Int = 20)(f: T => Unit): Unit =
+  private def forAll[T](g: Gen[T], n: Int)(f: T => Unit): Unit =
     Iterator.continually(g.sample).flatten.take(n).foreach(f)
 
   private val ipGen: Gen[String] = for {

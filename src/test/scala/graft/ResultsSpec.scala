@@ -142,7 +142,6 @@ class ResultsSpec extends SparkSpec {
 
   test("full chain: streaming host stats -> nested doc -> daily store -> read-side query") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
     implicit val sqlCtx = spark.sqlContext
     val store = java.nio.file.Files.createTempDirectory("chain").toString
     val mem = MemoryStream[Fx]

@@ -56,7 +56,7 @@ class StageMeterSpec extends SparkSpec {
       "      +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]),false)"
     val stage = StageMeter.Stage(id = 7,
       ops = Seq(fragment, "MapPartitionsRDD", "*(2) Project [a#1, b#2]", "MapPartitionsRDD"),
-      ms = 120L, tasks = 4, execMs = 300L, gcMs = 0L, shuffleBytes = 0L,
+      ms = 120L, tasks = 4, execMs = 300L, jvmGcMs = 0L, shuffleBytes = 0L,
       shuffleRecords = 0L, memSpill = 0L, diskSpill = 0L, maxTaskMs = 90L,
       slowTasks = 0, failed = 0, pool = "default", query = "q")
     assert(StageMeter.opNames(stage) == Seq("AdaptiveSparkPlan", "MapPartitionsRDD", "Project"))

@@ -13,6 +13,16 @@ import graft.streaming.{FlowSource, ReportDedup, StreamingAnalytics}
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
+  private def obs(key: String, ms: Long, flows: Long) =
+    ReportDedup.Observation(key, new java.sql.Timestamp(ms), flows)
+  private def patternObs(key: String, ms: Long, dist: Seq[Long]) =
+    ReportDedup.PatternObservation(key, new java.sql.Timestamp(ms), dist)
+  /** The ddos state TTL GraftApp ships (one day of event time). */
+  private val dayMs = 86400000L
+  /** The keyed-state row count after each micro-batch `q` has run. */
+  private def stateRowsSeen(q: org.apache.spark.sql.streaming.StreamingQuery) =
+    q.recentProgress.flatMap(_.stateOperators.headOption).map(_.numRowsTotal).toSeq
+
   test("FlowSource.parse maps ipfix.* wire JSON to engine columns") {
     val json =
       """{"ipfix.sourceIPv4Address":"10.10.1.5","ipfix.destinationIPv4Address":"192.0.2.7",
@@ -100,11 +110,11 @@ class StreamingSpec extends SparkSpec {
     try {
       // batch 1: first sighting reports, quick repeat is throttled
       mem.addData(
-        ReportDedup.Observation("a|b|22", 1000L, 5L),
-        ReportDedup.Observation("a|b|22", 2000L, 3L))
+        obs("a|b|22", 1000L, 5L),
+        obs("a|b|22", 2000L, 3L))
       q.processAllAvailable()
       // batch 2: past the interval → reports the increment since last
-      mem.addData(ReportDedup.Observation("a|b|22", 70000L, 7L))
+      mem.addData(obs("a|b|22", 70000L, 7L))
       q.processAllAvailable()
       val rows = spark.table("dedup_out").as[ReportDedup.Report]
         .collect().sortBy(_.ts)
@@ -118,7 +128,8 @@ class StreamingSpec extends SparkSpec {
   test("streaming port-scan pipeline: SYN flows -> keyed state -> increment reports") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Fx]
-    val out = StreamingAnalytics.portScanReports(mem.toDF(), reportIntervalMs = 60000L)
+    val out = StreamingAnalytics.portScanReports(
+      FlowSource.withEventTime(mem.toDF()), reportIntervalMs = 60000L)
     val q = out.writeStream.format("memory").queryName("pscan_out")
       .outputMode(OutputMode.Append()).start()
     try {
@@ -151,6 +162,36 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streaming port-scan: a key idle past 10x the interval is evicted and re-reports from a fresh total") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Fx]
+    val q = StreamingAnalytics.portScanReports(FlowSource.withEventTime(mem.toDF()),
+        reportIntervalMs = 1000L, watermark = "1 second")
+      .writeStream.format("memory").queryName("pscan_evict")
+      .outputMode(OutputMode.Append()).start()
+    def syn(id: Long, src: String, ms: Long) = Fx(flow_id = id, src_ip4 = src,
+      dst_ip = "192.0.2.1", dst_port = 22, tcp_flags = 2L, start_ms = ms)
+    try {
+      // 10.9.0.1 opens a horizontal and a vertical key at t = 1 s; its
+      // second flow, inside the interval, only adds to the total
+      mem.addData(syn(1, "10.9.0.1", 1000L), syn(2, "10.9.0.1", 1500L))
+      q.processAllAvailable()
+      assert(stateRowsSeen(q).last == 2)
+      // 10.9.0.2 at t = 100 s: the watermark passes 1.5 s + 10 x 1 s
+      mem.addData(syn(3, "10.9.0.2", 100000L))
+      q.processAllAvailable()
+      // 10.9.0.1's two keys gone, 10.9.0.2's two held
+      assert(stateRowsSeen(q).max == 4 && stateRowsSeen(q).last == 2)
+      mem.addData(syn(4, "10.9.0.1", 100500L))
+      q.processAllAvailable()
+      val h = spark.table("pscan_evict").as[ReportDedup.Report].collect()
+        .filter(_.key == "horizontal|10.9.0.1|22").sortBy(_.ts)
+      // the second report starts from 1, not from the evicted total of 2
+      assert(h.map(r => (r.ts, r.flows_total, r.flows_increment)).toSeq ==
+        Seq((1000L, 1L, 1L), (100500L, 1L, 1L)))
+    } finally q.stop()
+  }
+
   test("ReportDedup state survives a query restart from checkpoint (SURVEY §7.4.4)") {
     // memory sources are not checkpoint-recoverable; use a replayable
     // file source like a real deployment would
@@ -163,6 +204,7 @@ class StreamingSpec extends SparkSpec {
     def start() = {
       val obs = spark.readStream
         .schema("key STRING, ts BIGINT, flows BIGINT").json(in)
+        .select(col("key"), timestamp_millis(col("ts")).as("event_time"), col("flows"))
         .as[ReportDedup.Observation]
       // parquet sink: the memory sink is not checkpoint-recoverable
       ReportDedup(obs, reportIntervalMs = 60000L)
@@ -194,7 +236,8 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[Fx]
     val det = StreamingAnalytics.ddosKeyedState(
       FlowSource.withEventTime(mem.toDF()),
-      dstPattern = "192\\.168\\..*", ratioIncrease = 5.0, minPackets = 100L)
+      dstPattern = "192\\.168\\..*", ratioIncrease = 5.0, minPackets = 100L,
+      stateTtlMs = dayMs)
     val q = det.toDF().writeStream.format("memory").queryName("ddos_keyed")
       .outputMode(OutputMode.Append()).start()
     try {
@@ -222,36 +265,30 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming ddos: state TTL evicts idle profiles (bounded state)") {
-    // a ProcessingTimeTimeout keeps the engine scheduling timeout-sweep
-    // batches, which neither processAllAvailable nor AvailableNow drains
-    // in-process — so drive the factored-out update function directly
-    // with TestGroupState (Spark's harness for exactly this)
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    import StreamingAnalytics.{DdosProfile, ddosUpdate}
-    val update = ddosUpdate(ratioIncrease = 5.0, minPackets = 100L,
-      stateTtlMs = 200L) _
-    // fresh key: profile stored and the TTL registered
-    val fresh = TestGroupState.create[DdosProfile](
-      org.apache.spark.api.java.Optional.empty[DdosProfile](), GroupStateTimeout.ProcessingTimeTimeout,
-      1000L, org.apache.spark.api.java.Optional.empty[Long](), false)
-    assert(update("192.168.5.5",
-      Iterator.fill(10)(("192.168.5.5", 10L)), fresh).isEmpty)
-    assert(fresh.get == DdosProfile(100L, 10L))
-    assert(fresh.getTimeoutTimestampMs.get() == 1200L) // batchTs + TTL
-    // timed-out invocation: the idle profile is evicted, nothing emitted
-    val expired = TestGroupState.create[DdosProfile](
-      org.apache.spark.api.java.Optional.of(DdosProfile(100L, 10L)),
-      GroupStateTimeout.ProcessingTimeTimeout,
-      5000L, org.apache.spark.api.java.Optional.empty[Long](), true)
-    assert(update("192.168.5.5", Iterator.empty, expired).isEmpty)
-    assert(expired.isRemoved)
-    // post-eviction spike: no prior profile -> warm-up only, no detection
-    val after = TestGroupState.create[DdosProfile](
-      org.apache.spark.api.java.Optional.empty[DdosProfile](), GroupStateTimeout.ProcessingTimeTimeout,
-      6000L, org.apache.spark.api.java.Optional.empty[Long](), false)
-    assert(update("192.168.5.5",
-      Iterator.fill(5)(("192.168.5.5", 1000L)), after).isEmpty)
-    assert(after.get == DdosProfile(5000L, 5L))
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Fx]
+    val q = StreamingAnalytics.ddosKeyedState(FlowSource.withEventTime(mem.toDF()),
+        dstPattern = "192\\.168\\..*", ratioIncrease = 5.0, minPackets = 100L,
+        stateTtlMs = 60000L, watermark = "10 seconds")
+      .toDF().writeStream.format("memory").queryName("ddos_ttl")
+      .outputMode(OutputMode.Append()).start()
+    try {
+      // .5 builds a benign profile at t = 1 s; its TTL ends at 61 s
+      mem.addData((0 until 10).map(i => Fx(flow_id = i, src_ip4 = s"10.1.0.$i",
+        dst_ip = "192.168.5.5", packets = 10, start_ms = 1000L)): _*)
+      q.processAllAvailable()
+      assert(stateRowsSeen(q).last == 1)
+      // another destination at t = 200 s moves the watermark to 190 s
+      mem.addData(Fx(flow_id = 50, dst_ip = "192.168.6.6", start_ms = 200000L))
+      q.processAllAvailable()
+      assert(stateRowsSeen(q).max == 2 && stateRowsSeen(q).last == 1) // .5 evicted, .6 kept
+      // a spike on .5 finds no profile: it only warms up again
+      mem.addData((0 until 5).map(i => Fx(flow_id = 100 + i, src_ip4 = s"10.2.0.$i",
+        dst_ip = "192.168.5.5", packets = 1000, start_ms = 200500L)): _*)
+      q.processAllAvailable()
+      assert(spark.table("ddos_ttl").isEmpty)
+      assert(stateRowsSeen(q).last == 2)
+    } finally q.stop()
   }
 
   test("streaming reflect_ddos: windowed conditional agg flags amplification") {
@@ -308,7 +345,8 @@ class StreamingSpec extends SparkSpec {
         lines.mkString("\n").getBytes)
     def start() = StreamingAnalytics.ddosKeyedState(
         FlowSource.files(spark, in),
-        dstPattern = "192\\.168\\..*", ratioIncrease = 5.0, minPackets = 100L)
+        dstPattern = "192\\.168\\..*", ratioIncrease = 5.0, minPackets = 100L,
+        stateTtlMs = dayMs)
       .toDF().writeStream.format("parquet").option("path", out)
       .option("checkpointLocation", ckpt).outputMode(OutputMode.Append()).start()
     // run 1 builds the benign profile (10 pkt/flow), then dies
@@ -358,7 +396,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming ssh auth: band-filtered candidates report through dedup state") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Fx]
-    val out = StreamingAnalytics.sshAuthReports(mem.toDF())
+    val out = StreamingAnalytics.sshAuthReports(FlowSource.withEventTime(mem.toDF()))
     val q = out.writeStream.format("memory").queryName("ssh_out")
       .outputMode(OutputMode.Append()).start()
     try {
@@ -415,19 +453,19 @@ class StreamingSpec extends SparkSpec {
       // batch 1: the first sighting only opens the throttle window — its
       // evidence accumulates but is NOT an immediate report boundary
       mem.addData(
-        ReportDedup.PatternObservation("a-b", 1000L, Seq(2L, 0L, 0L, 0L)),
-        ReportDedup.PatternObservation("a-b", 2000L, Seq(0L, 1L, 0L, 0L)))
+        patternObs("a-b", 1000L, Seq(2L, 0L, 0L, 0L)),
+        patternObs("a-b", 2000L, Seq(0L, 1L, 0L, 0L)))
       q.processAllAvailable()
       assert(spark.table("pat_out").isEmpty)
       // batch 2: past the interval -> report = full accumulated window
       // (including the first observation's evidence)
-      mem.addData(ReportDedup.PatternObservation("a-b", 70000L, Seq(2L, 0L, 0L, 0L)))
+      mem.addData(patternObs("a-b", 70000L, Seq(2L, 0L, 0L, 0L)))
       q.processAllAvailable()
       // batch 3: a below-limit boundary (left=1 < limit) must KEEP its
       // window — the next boundary reports the accumulated two singles
-      mem.addData(ReportDedup.PatternObservation("a-b", 140000L, Seq(1L, 0L, 0L, 0L)))
+      mem.addData(patternObs("a-b", 140000L, Seq(1L, 0L, 0L, 0L)))
       q.processAllAvailable()
-      mem.addData(ReportDedup.PatternObservation("a-b", 210000L, Seq(1L, 0L, 0L, 0L)))
+      mem.addData(patternObs("a-b", 210000L, Seq(1L, 0L, 0L, 0L)))
       q.processAllAvailable()
       val rows = spark.table("pat_out").as[ReportDedup.PatternReport]
         .collect().sortBy(_.ts)
@@ -436,8 +474,11 @@ class StreamingSpec extends SparkSpec {
       // second report: carried [4,1,0,0] + kept window ([1,0,0,0]+[1,0,0,0])
       // — element-wise sum_with_previous_distributions over BOTH slices
       assert(rows(1).dist == Seq(6L, 1L, 0L, 0L))
-      // right-heavy key never passes the anomaly filter -> never reported
-      mem.addData(ReportDedup.PatternObservation("c-d", 1000L, Seq(0L, 0L, 0L, 9L)))
+      // right-heavy key never passes the anomaly filter -> never reported,
+      // not even at its report boundary
+      mem.addData(patternObs("c-d", 220000L, Seq(0L, 0L, 0L, 9L)))
+      q.processAllAvailable()
+      mem.addData(patternObs("c-d", 290000L, Seq(0L, 0L, 0L, 9L)))
       q.processAllAvailable()
       assert(!spark.table("pat_out").as[ReportDedup.PatternReport]
         .collect().exists(_.key == "c-d"))
@@ -482,10 +523,10 @@ class StreamingSpec extends SparkSpec {
       val q = out.writeStream.format("memory").queryName("rocks_out")
         .outputMode(OutputMode.Append()).start()
       try {
-        mem.addData(ReportDedup.Observation("k1", 1000L, 5L),
-          ReportDedup.Observation("k1", 2000L, 3L))
+        mem.addData(obs("k1", 1000L, 5L),
+          obs("k1", 2000L, 3L))
         q.processAllAvailable()
-        mem.addData(ReportDedup.Observation("k1", 70000L, 2L))
+        mem.addData(obs("k1", 70000L, 2L))
         q.processAllAvailable()
         // same increment semantics as under the default provider
         val rows = spark.table("rocks_out").as[ReportDedup.Report]
@@ -532,7 +573,8 @@ class StreamingSpec extends SparkSpec {
       val mem = MemoryStream[Fx]
       val det = StreamingAnalytics.ddosKeyedState(
         FlowSource.withEventTime(mem.toDF()),
-        dstPattern = "192\\.168\\..*", ratioIncrease = 5.0, minPackets = 100L)
+        dstPattern = "192\\.168\\..*", ratioIncrease = 5.0, minPackets = 100L,
+        stateTtlMs = dayMs)
       val q = det.toDF().writeStream.format("memory").queryName("ddos_rocks")
         .outputMode(OutputMode.Append()).start()
       try {
@@ -627,6 +669,7 @@ class StreamingSpec extends SparkSpec {
       def start() = {
         val obs = spark.readStream
           .schema("key STRING, ts BIGINT, flows BIGINT").json(in)
+          .select(col("key"), timestamp_millis(col("ts")).as("event_time"), col("flows"))
           .as[ReportDedup.Observation]
         ReportDedup(obs, reportIntervalMs = 60000L)
           .writeStream.format("parquet")
@@ -1238,13 +1281,13 @@ class StreamingSpec extends SparkSpec {
       .writeStream.format("memory").queryName("cc_dedup")
       .outputMode(OutputMode.Append()).start()
     val qScan = StreamingAnalytics.portScanReports(
-        memScan.toDF(), reportIntervalMs = 60000L)
+        FlowSource.withEventTime(memScan.toDF()), reportIntervalMs = 60000L)
       .writeStream.format("memory").queryName("cc_scan")
       .outputMode(OutputMode.Append()).start()
     val qDdos = StreamingAnalytics.ddosKeyedState(
         FlowSource.withEventTime(memDdos.toDF()),
         dstPattern = "192\\.168\\..*", ratioIncrease = 5.0,
-        minPackets = 100L)
+        minPackets = 100L, stateTtlMs = dayMs)
       .toDF().writeStream.format("memory").queryName("cc_ddos")
       .outputMode(OutputMode.Append()).start()
     val qDocs = graft.pipeline.TextPipeline.dedupStreaming(
@@ -1254,8 +1297,8 @@ class StreamingSpec extends SparkSpec {
     def ts(s: Long) = new java.sql.Timestamp(s * 1000L)
     try {
       // round 1, interleaved feeds across all four sources
-      memDedup.addData(ReportDedup.Observation("a|b|22", 1000L, 5L),
-        ReportDedup.Observation("a|b|22", 2000L, 3L))
+      memDedup.addData(obs("a|b|22", 1000L, 5L),
+        obs("a|b|22", 2000L, 3L))
       memScan.addData((1 to 3).map(i => Fx(flow_id = i,
         src_ip4 = "10.9.0.1", dst_ip = s"192.0.2.$i", dst_port = 22,
         tcp_flags = 2L, start_ms = i * 1000L)): _*)
@@ -1278,7 +1321,7 @@ class StreamingSpec extends SparkSpec {
       }
       driveAll()
       // round 2: advance each query's state machine
-      memDedup.addData(ReportDedup.Observation("a|b|22", 70000L, 7L))
+      memDedup.addData(obs("a|b|22", 70000L, 7L))
       memScan.addData(Fx(flow_id = 5, src_ip4 = "10.9.0.1",
         dst_ip = "192.0.2.9", dst_port = 22, tcp_flags = 2L,
         start_ms = 70000L))

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** SuffixDedup: truncated prefix-doubling exact duplicate-span
